@@ -2,10 +2,11 @@
 """Headline benchmark: prints ONE JSON line with per-query seconds.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS].  Queries cover the engine's main cost centres:
-the full KG build (triples/sec headline), the web pipeline (extraction +
-AC mentions + linking), closure/star/kNN workload queries, and the
-training-data operators (minhash dedup, embedding kNN).
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on).
+Queries cover the engine's main cost centres: the full KG build
+(triples/sec headline), the web pipeline (extraction + AC mentions +
+linking), closure/star/kNN workload queries, and the training-data
+operators (minhash dedup, embedding kNN).
 
 Methodology: the suite runs ``BENCH_REPS`` (default 2) FULL passes,
 INTERLEAVED — every query of pass 1, then every query of pass 2 — and
@@ -28,7 +29,7 @@ from geonames_rdf_spark import oracle  # noqa: E402
 from geonames_rdf_spark.operators import build, dedup, similarity  # noqa: E402
 from geonames_rdf_spark.pipeline import materialize  # noqa: E402
 from geonames_rdf_spark.plans import workload  # noqa: E402
-from geonames_rdf_spark.session import get_spark  # noqa: E402
+from geonames_rdf_spark.session import cpus, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_PAGES = int(os.environ.get("BENCH_PAGES", "20000"))
@@ -368,7 +369,7 @@ def main() -> None:
         "reps": reps,
         "triples_per_sec": round(counts["kg_full_build"] / timings["kg_full_build"]),
         "pages_per_sec": round(N_PAGES / timings["web_pipeline"]),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": cpus(),
         "host": {"start": host_start, "end": _host_load()},
     }
     if steady:

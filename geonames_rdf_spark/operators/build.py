@@ -8,6 +8,8 @@ Catalyst prunes/pushes across stage boundaries the reference couldn't.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from geonames_rdf_spark import synth
@@ -28,8 +30,28 @@ from geonames_rdf_spark.operators import altnames, places, preshape
 # futures across actions (stage skipping) — which would turn a repeated,
 # timed build into a shuffle replay instead of a recomputation from the
 # parquet inputs.  Entries are validated against the owning session and
-# keyed by every argument that shapes the plan.
+# keyed by every argument that shapes the plan plus the identity of the
+# input files (``_listing``): a file replaced under ``sf_dir`` mid-session
+# is a miss, never a stale plan.
 _PLAN_MEMO: dict = {}
+
+
+def _listing(sf_dir: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file under ``sf_dir`` —
+    one directory walk, the input-identity part of the memo keys.  Empty
+    for a location this process cannot list (a remote URI), where the key
+    falls back to the path alone."""
+    out = []
+    for root, _dirs, files in os.walk(sf_dir):
+        for name in files:
+            path = os.path.join(root, name)
+            try:
+                st = os.stat(path)
+            except OSError:  # removed between listing and stat
+                continue
+            out.append((os.path.relpath(path, sf_dir), st.st_size,
+                        st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def _fresh_over(df: DataFrame) -> DataFrame:
@@ -59,17 +81,23 @@ def gazetteer_tables(spark: SparkSession, sf_dir: str,
     tables are cache-sized by definition (GeoNames ~13M rows vs 10^12
     pages).
 
-    The derived PLAN dict is memoized per (session, sf_dir, replicate,
-    cache_dims) — see ``_PLAN_MEMO``; a shallow copy is returned so
-    callers that swap entries (``run_pipeline`` re-binds ``features`` to
-    a cached frame) cannot leak into later calls.
+    The derived PLAN dict is memoized per (session, sf_dir, input files,
+    replicate, cache_dims) — see ``_PLAN_MEMO``; a shallow copy is
+    returned so callers that swap entries (``run_pipeline`` re-binds
+    ``features`` to a cached frame) cannot leak into later calls.
     """
     key = ("gaz", sf_dir, replicate, cache_dims)
+    listing = _listing(sf_dir)
     hit = _PLAN_MEMO.get(key)
     if hit is not None and hit[0] is spark and _memo_session_ok(spark):
-        out = dict(hit[1])
-        out["admin_lookups"] = dict(out["admin_lookups"])
-        return out
+        if hit[1] == listing:
+            out = dict(hit[2])
+            out["admin_lookups"] = dict(out["admin_lookups"])
+            return out
+        # an input changed under sf_dir: the cached raw features (and any
+        # other cached scan of the old files) would be matched by plan
+        # and served again — refresh them before rebuilding
+        spark.catalog.refreshByPath(sf_dir)
     gaz = synth.register_gazetteer(spark, sf_dir, replicate=replicate)
     if cache_dims:
         raw = gaz["features"].cache()
@@ -91,7 +119,7 @@ def gazetteer_tables(spark: SparkSession, sf_dir: str,
         "hierarchy": hierarchy,
         "ags_map": gaz["ags_map"],
     }
-    _PLAN_MEMO[key] = (spark, tables)
+    _PLAN_MEMO[key] = (spark, listing, tables)
     return {**tables, "admin_lookups": dict(lookups)}
 
 
@@ -159,10 +187,11 @@ def build_kg(
     pre-shaping chain isn't re-derived per consumer (run_pipeline used to
     pay it twice).
 
-    The assembled PLAN is memoized per (session, sf_dir, flags) when
-    ``tables`` is None — see ``_PLAN_MEMO``: the returned DataFrame is an
-    immutable lazy plan, and re-assembling it costs ~2 s of driver-side
-    analysis per call; execution always recomputes from the parquet."""
+    The assembled PLAN is memoized per (session, sf_dir, input files,
+    flags) when ``tables`` is None — see ``_PLAN_MEMO``: the returned
+    DataFrame is an immutable lazy plan, and re-assembling it costs ~2 s
+    of driver-side analysis per call; execution always recomputes from
+    the parquet."""
     memo_key = None
     if tables is not None:
         if replicate != 1:
@@ -171,9 +200,11 @@ def build_kg(
     else:
         memo_key = ("kg", sf_dir, consolidate, include_docs, include_alt,
                     include_ags, include_ontology, ags_country, replicate)
+        listing = _listing(sf_dir)
         hit = _PLAN_MEMO.get(memo_key)
-        if hit is not None and hit[0] is spark and _memo_session_ok(spark):
-            return _fresh_over(hit[1])
+        if (hit is not None and hit[0] is spark and hit[1] == listing
+                and _memo_session_ok(spark)):
+            return _fresh_over(hit[2])
         t = gazetteer_tables(spark, sf_dir, replicate=replicate)
     wide = places.feature_entities(
         t["features"], t["country_codes"], t["admin_lookups"], t["hierarchy"]
@@ -191,7 +222,7 @@ def build_kg(
 
         out = out.unionByName(ontology.ontology_triples(spark))
     if memo_key is not None:
-        _PLAN_MEMO[memo_key] = (spark, out)
+        _PLAN_MEMO[memo_key] = (spark, listing, out)
         # the stored Dataset is the PLAN holder only — hand out a fresh
         # wrapper so no caller's execution state is pinned by the memo
         return _fresh_over(out)

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark.session import ensure_parallel
+
 M64 = (1 << 64) - 1
 # 2^31-1: keeps a*x inside uint64 for the numpy-vectorized hash family
 MERSENNE = (1 << 31) - 1
@@ -25,23 +27,6 @@ MERSENNE = (1 << 31) - 1
 
 def _h64(s: str) -> int:
     return struct.unpack("<Q", hashlib.md5(s.encode("utf-8")).digest()[:8])[0]
-
-
-def _ensure_parallel(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Parallelism floor for the Python-vectorized signature stages.
-
-    A dimension-small input (one parquet file == one split) would run the
-    whole ``mapInPandas`` hashing stage on a single core; repartitioning
-    to the session's default parallelism spreads it.  Scale-adaptive
-    no-op: any input already at >= the floor (the corpus-scale case —
-    real corpora arrive in thousands of splits) passes through untouched,
-    so no shuffle is ever added where it wouldn't pay for itself.
-    """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -95,7 +80,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
                 out_ids.append(did)
             yield pd.DataFrame({"id": out_ids, "sig": sigs})
 
-    return _ensure_parallel(
+    return ensure_parallel(
         docs.select(F.col(id_col), F.col(text_col))
     ).mapInPandas(sig, schema="id bigint, sig array<bigint>")
 
@@ -371,7 +356,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
                 out.append(v)
             yield pd.DataFrame({"id": ids, "simhash": out})
 
-    return _ensure_parallel(
+    return ensure_parallel(
         docs.select(F.col(id_col), F.col(text_col))
     ).mapInPandas(sig, schema="id bigint, simhash bigint")
 

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark.session import ensure_parallel
+
 # tiny per-language stopword heads for the n-gram heuristic
 LANG_MARKERS = {
     "en": [" the ", " and ", " of "],
@@ -319,9 +321,7 @@ def lm_perplexity(docs: DataFrame, lm: dict,
             yield pd.DataFrame({"doc_id": ids, "n_grams": cnt,
                                 "avg_nll": nll, "ppl": ppl})
 
-    from geonames_rdf_spark.operators.dedup import _ensure_parallel
-
-    return _ensure_parallel(
+    return ensure_parallel(
         docs.select("doc_id", F.col(text_col).alias("text"))
     ).mapInPandas(
         score, schema="doc_id bigint, n_grams int, avg_nll double, ppl double")

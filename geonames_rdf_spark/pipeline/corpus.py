@@ -104,7 +104,7 @@ def synthesize_pages(
         # §4.2: batch work in native code, not per-row Python) — the _mix
         # LCG, surface selection and string assembly run as array ops.
         # Byte-identical output is pinned by
-        # test_pipeline.py::test_synthesize_pages_vectorized_parity.
+        # test_r09_optimizations.py::test_synthesize_pages_vectorized_parity.
         import numpy as np
 
         surf = np.array(surfaces, dtype=object)

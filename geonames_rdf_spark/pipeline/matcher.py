@@ -151,26 +151,13 @@ class _PyAhoCorasickMatcher:
         return res
 
 
-def surface_fingerprint(patterns) -> tuple[int, int]:
-    """Cheap content fingerprint of a pattern-KEY set: (count,
-    order-independent sum of per-key hashes).  Built-in ``hash`` is
-    process-seeded, which is exactly right here — the stale-broadcast
-    guards compare a fingerprint computed at ``build_matcher`` time with
-    one computed at scan-call time IN THE SAME DRIVER PROCESS.  No sort,
-    no md5: ~50 ns/key keeps the per-scan guard sub-second even at the
-    13M-surface gazetteer."""
-    n, acc = 0, 0
-    for k in patterns:
-        if k:
-            n += 1
-            acc = (acc + hash(k)) & 0xFFFFFFFFFFFFFFFF
-    return (n, acc)
-
-
-def scored_fingerprint(scored_map: dict[str, list[tuple]]) -> tuple[int, int]:
-    """Fingerprint covering keys AND candidate payloads — two scored maps
-    with identical surfaces but different priors must not compare equal
-    (the linker would silently score from the stale broadcast)."""
+def scored_fingerprint(scored_map: dict[str, list]) -> tuple[int, int]:
+    """Content fingerprint of a surface map: (count, order-independent sum
+    of per-(key, payload) hashes).  Covers keys AND payloads — two maps
+    with identical surfaces but different candidate ids or priors must not
+    compare equal (a scan would silently match from the stale broadcast).
+    Built-in ``hash`` is process-seeded, which is right here: both sides
+    of a comparison are computed in the same driver process."""
     n, acc = 0, 0
     for k, v in scored_map.items():
         if k:
@@ -182,31 +169,22 @@ def scored_fingerprint(scored_map: dict[str, list[tuple]]) -> tuple[int, int]:
 def build_matcher(patterns: dict[str, list], backend: str = "auto"):
     """Best available matcher: C extension > trie-regex > pure Python.
 
-    Every backend carries ``.fingerprint`` (``surface_fingerprint`` of its
-    pattern keys, stamped at build time) so scan-time guards can detect a
-    matcher broadcast that no longer matches the caller's surface map.
-
     An empty (or all-empty-key) pattern set short-circuits to the regex
     backend, whose scan returns [] — pyahocorasick leaves a wordless
     automaton un-constructed and its iter() raises at scan time."""
-    m = None
     if not any(patterns):
-        m = TrieRegexMatcher({})
-    elif backend in ("auto", "c"):
+        return TrieRegexMatcher({})
+    if backend in ("auto", "c"):
         try:
-            m = _PyAhoCorasickMatcher(patterns)
+            return _PyAhoCorasickMatcher(patterns)
         except ImportError:
             if backend == "c":
                 raise
-    if m is None:
-        if backend in ("auto", "regex") and len(patterns) <= REGEX_MAX_PATTERNS:
-            m = TrieRegexMatcher(patterns)
-        elif backend == "regex":
-            raise ValueError(
-                f"{len(patterns)} patterns exceed REGEX_MAX_PATTERNS"
-                f" ({REGEX_MAX_PATTERNS}); use backend='python'"
-            )
-        else:
-            m = AhoCorasick(patterns)
-    m.fingerprint = surface_fingerprint(patterns)
-    return m
+    if backend in ("auto", "regex") and len(patterns) <= REGEX_MAX_PATTERNS:
+        return TrieRegexMatcher(patterns)
+    if backend == "regex":
+        raise ValueError(
+            f"{len(patterns)} patterns exceed REGEX_MAX_PATTERNS"
+            f" ({REGEX_MAX_PATTERNS}); use backend='python'"
+        )
+    return AhoCorasick(patterns)

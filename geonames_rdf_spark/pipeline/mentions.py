@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geonames_rdf_spark.pipeline.matcher import build_matcher
+from geonames_rdf_spark.pipeline.matcher import build_matcher, scored_fingerprint
 
 MENTION_SCHEMA = (
     "url string, surface string, begin int, end int, candidate bigint"
@@ -40,7 +40,6 @@ def detect_mentions(
     surface_map: dict[str, list[int]],
     carry_lang: bool = False,
     from_html: bool = False,
-    matcher_bc=None,
 ) -> DataFrame:
     """(url, surface, begin, end, candidate[, lang]) — one row per candidate.
 
@@ -55,35 +54,12 @@ def detect_mentions(
     anti-scales (see BENCH.md).  Extraction semantics are byte-identical
     (same ``extract.extract_text_py`` pure function).
 
-    ``matcher_bc``: a pre-broadcast matcher (``sc.broadcast(
-    build_matcher(surface_map))``) to reuse across scans — each NEW
-    broadcast makes every worker unpickle (and, for the regex backend,
-    recompile) its copy, a per-job fixed cost that belongs outside any
-    repeated/incremental scan loop.
+    The matcher broadcast is reused across calls with equal map content
+    (``_memoized_broadcast``).
     """
-    spark = pages.sparkSession
-    if matcher_bc is not None:
-        # the broadcast matcher supersedes ``surface_map`` — guard against
-        # a caller passing a DIFFERENT map than the one bundled (results
-        # would silently come from the stale broadcast).  CONTENT
-        # fingerprint, not just count: an equal-size map of different
-        # surfaces is exactly the failure the guard exists for.
-        from geonames_rdf_spark.pipeline.matcher import surface_fingerprint
-
-        fp_bc = getattr(matcher_bc.value, "fingerprint", None)
-        fp_map = surface_fingerprint(surface_map)
-        if fp_bc != fp_map:
-            raise ValueError(
-                f"detect_mentions: matcher_bc fingerprint {fp_bc} !="
-                f" surface_map fingerprint {fp_map} (count, key-hash) —"
-                " stale/mismatched broadcast")
-        bc = matcher_bc
-    else:
-        from geonames_rdf_spark.pipeline.matcher import surface_fingerprint
-
-        bc = _memoized_broadcast(
-            spark, "matcher", surface_fingerprint(surface_map),
-            lambda: build_matcher(surface_map))
+    bc = _memoized_broadcast(pages.sparkSession, "matcher",
+                             scored_fingerprint(surface_map),
+                             lambda: build_matcher(surface_map))
     text_col = "html" if from_html else "text"
     cols = ["url", text_col] + (["lang"] if carry_lang else [])
     if from_html:
@@ -118,7 +94,10 @@ def detect_mentions(
                     rows["candidates"].append(payload)
                     if carry_lang:
                         rows["lang"].append(lang)
-            yield pd.DataFrame(rows)
+            # a batch without a match has nothing to send: an empty
+            # object column cannot convert to array<bigint>
+            if rows["url"]:
+                yield pd.DataFrame(rows)
 
     match_schema = ("url string, surface string, begin int, end int,"
                     " candidates array<bigint>")
@@ -174,17 +153,18 @@ def detect_mentions_sharded(
 # content is reloaded; hit = zero per-job cost after the first task.
 _BUNDLE_CACHE: dict = {}
 
-# Driver-side broadcast memo (optimization r09): building the automaton +
-# broadcasting it is a per-CALL fixed cost — driver trie/regex compile +
-# pickle, then every Python worker unpickles AND recompiles the regex
-# program once per broadcast id.  Repeated scans over the same gazetteer
-# (bench passes, incremental micro-batches, the per-bucket resume loop)
-# paid it every time.  Memoized on the CONTENT fingerprint (count +
-# per-item hash — the same fingerprint the stale-broadcast guards already
-# use, computed in this same driver process), so a changed gazetteer
-# broadcasts fresh; one live entry per kind bounds memory.  This reuses a
-# *dimension* broadcast, never results: every scan still computes from
-# its input pages.
+# Driver-side broadcast memo — the ONE way a matcher broadcast is reused:
+# building the automaton + broadcasting it is a per-CALL fixed cost —
+# driver trie/regex compile + pickle, then every Python worker unpickles
+# AND recompiles the regex program once per broadcast id.  Repeated scans
+# over the same gazetteer (bench passes, incremental micro-batches, the
+# per-bucket resume loop) would pay it every time.  Memoized per kind
+# ("matcher" for detect_mentions, "bundle" for detect_and_link) on
+# ``scored_fingerprint`` — keys AND payloads, so a map whose candidate ids
+# or priors changed broadcasts fresh even when its surfaces did not; one
+# live entry per kind bounds memory.  This reuses a *dimension*
+# broadcast, never results: every scan still computes from its input
+# pages.
 _BC_MEMO: dict = {}
 
 
@@ -265,7 +245,7 @@ def build_scored_surface_map(features) -> dict[str, list[tuple[int, float, str]]
 def detect_and_link(pages,
                     scored_map: dict[str, list[tuple[int, float, str]]] | None,
                     lang_bonus: float = 2.0, from_html: bool = False,
-                    bundle_bc=None, bundle_file: str | None = None):
+                    bundle_file: str | None = None):
     """Mention detection + candidate scoring + per-mention argmax, all
     inside the Arrow batch — the candidate fan-out for hot toponyms never
     materializes, so NOTHING shuffles per candidate (the downstream
@@ -279,21 +259,11 @@ def detect_and_link(pages,
     from geonames_rdf_spark.pipeline.link import LANG_COUNTRY
 
     spark = pages.sparkSession
-    # ``bundle_bc``: pre-broadcast (matcher, scored_map) pair — reuse it
-    # across scans so workers unpickle/compile the matcher once per job.
-    # When supplied it SUPERSEDES ``scored_map``; the guard catches a
-    # caller passing a different map than the bundled one (which would
-    # silently score from the stale broadcast).  Identity short-circuits
-    # (the per-bucket loop passes the same object); otherwise a CONTENT
-    # fingerprint over keys AND scored payloads — same surfaces with
-    # different priors must not slip through either.
     if bundle_file is not None:
         # SparkFiles path: the bundle was written by save_matcher_bundle;
         # ship the FILE (torrent-style, once per executor) instead of
         # collecting + broadcasting per job.  scored_map may be None —
         # the bundle is the source of truth here.
-        if bundle_bc is not None:
-            raise ValueError("pass bundle_bc or bundle_file, not both")
         name = os.path.basename(bundle_file)
         path = os.path.abspath(bundle_file)
         # keyed by BASENAME, not path: SparkFiles resolves files by
@@ -318,22 +288,7 @@ def detect_and_link(pages,
                 " Write bundles under unique filenames (e.g. embed a"
                 " content hash).")
         bc = None
-    elif bundle_bc is not None:
-        bundled_map = bundle_bc.value[1]
-        if bundled_map is not scored_map:
-            from geonames_rdf_spark.pipeline.matcher import scored_fingerprint
-
-            fp_b, fp_m = (scored_fingerprint(bundled_map),
-                          scored_fingerprint(scored_map))
-            if fp_b != fp_m:
-                raise ValueError(
-                    f"detect_and_link: bundle_bc fingerprint {fp_b} !="
-                    f" scored_map fingerprint {fp_m} (count, item-hash) —"
-                    " stale/mismatched broadcast")
-        bc = bundle_bc
     else:
-        from geonames_rdf_spark.pipeline.matcher import scored_fingerprint
-
         bc = _memoized_broadcast(
             spark, "bundle", scored_fingerprint(scored_map),
             lambda: (build_matcher({k: [] for k in scored_map}), scored_map))

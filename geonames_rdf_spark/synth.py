@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from geonames_rdf_spark.session import ensure_parallel
+
 # ---------------------------------------------------------------------------
 # Engine-portable SQL fragments. Rules for portability (validated by
 # tests/test_synth_parity.py): only  %  ||  CASE  CAST(x AS STRING/INT/BIGINT)
@@ -184,21 +186,6 @@ def register_base(spark: SparkSession, sf_dir: str, tables=BASE_TABLES) -> None:
         spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
 
 
-def _parallel_scan(spark: SparkSession, path: str):
-    """Parquet scan with a scale-adaptive parallelism floor: a
-    dimension-small table (one file == one split, and one parquet row
-    group cannot be subdivided by maxPartitionBytes) would otherwise run
-    the whole downstream narrow chain — the CASE derivations, broadcast
-    joins and the melt — as ONE task.  No-op for inputs already at >=
-    default parallelism (the at-scale case), so no coalescing or extra
-    exchange is introduced where the scan parallelizes naturally."""
-    df = spark.read.parquet(path)
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    return df
-
-
 def register_gazetteer(spark: SparkSession, sf_dir: str,
                        replicate: int = 1) -> dict[str, DataFrame]:
     """Build the derived gazetteer views; returns name -> DataFrame.
@@ -209,10 +196,12 @@ def register_gazetteer(spark: SparkSession, sf_dir: str,
     stay unique — the world gains places, not conflicting dimensions.
     Not used by the oracle path (the driver compares at replicate=1).
     """
-    # parallelism floor on the two derivation inputs (see _parallel_scan)
-    _parallel_scan(spark, f"{sf_dir}/customer.parquet") \
+    # parallelism floor on the two derivation inputs: a single-split
+    # dimension table would run the CASE derivations, broadcast joins and
+    # the melt downstream of it as ONE task
+    ensure_parallel(spark.read.parquet(f"{sf_dir}/customer.parquet")) \
         .createOrReplaceTempView("customer")
-    _parallel_scan(spark, f"{sf_dir}/orders.parquet") \
+    ensure_parallel(spark.read.parquet(f"{sf_dir}/orders.parquet")) \
         .createOrReplaceTempView("orders")
     if replicate > 1:
         from pyspark.sql import functions as F

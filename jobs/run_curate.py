@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """spark-submit entry point: corpus curation + packing job.
 
+    ./scripts/package.sh        # builds pipeline.zip (not tracked)
     spark-submit --master local[32] --py-files pipeline.zip jobs/run_curate.py \
         --docs /root/testdata/sf0.01/documents.parquet --out /tmp/curated \
         --min-quality 0.4 --max-dup-line-frac 0.3 --max-top-bigram-share 0.2 \

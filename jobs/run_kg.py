@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """spark-submit entry point: full KG construction job.
 
+    ./scripts/package.sh        # builds pipeline.zip (not tracked)
     spark-submit --master local[32] --py-files pipeline.zip jobs/run_kg.py \
         --sf-dir /root/testdata/sf0.01 --out /tmp/kg_out \
         --pages 10000 --buckets 32
@@ -79,7 +80,7 @@ def main() -> None:
                                     replicate=args.replicate)
     feats = tables["features"].cache()
     surfaces = corpus.gazetteer_surfaces(feats)
-    smap, bundle_bc, bundle_file = None, None, None
+    smap, bundle_file = None, None
     t_prep = time.perf_counter()
     if args.matcher_bundle and os.path.exists(args.matcher_bundle):
         # build-once path: ship the pre-built bundle file (SparkFiles,
@@ -93,16 +94,9 @@ def main() -> None:
             info = mentions.save_matcher_bundle(smap, args.matcher_bundle)
             print(json.dumps({"matcher_bundle_written": args.matcher_bundle,
                               **info}))
-        # matcher + scored map broadcast ONCE for the whole bucket loop
-        # (BENCH.md: a fresh broadcast per scan re-pays the per-worker
-        # unpickle/compile); extraction is FUSED into the scan (one
-        # Python hop per task slot — the measured production shape)
-        from geonames_rdf_spark.pipeline.matcher import build_matcher
-
-        bundle_bc = spark.sparkContext.broadcast(
-            (build_matcher({k: [] for k in smap}), smap))
     # matcher-prep = everything a SECOND job would skip with a prebuilt
-    # bundle (driver collect + dict build + broadcast); printed so the
+    # bundle (driver collect + dict build; the broadcast itself is made at
+    # the first bucket's scan); printed so the
     # BENCH.md A/B is read off the job output, not stopwatched
     matcher_prep_s = round(time.perf_counter() - t_prep, 3)
 
@@ -126,8 +120,12 @@ def main() -> None:
             canonicalize.sameas_edges(feats)).cache()
 
     def triples_for(subset):
+        # every bucket passes the same ``smap``, so detect_and_link's
+        # content memo broadcasts the matcher ONCE for the whole loop
+        # (a fresh broadcast per scan re-pays the per-worker
+        # unpickle/compile); extraction is FUSED into the scan (one
+        # Python hop per task slot — the measured production shape)
         linked = mentions.detect_and_link(subset, smap, from_html=True,
-                                          bundle_bc=bundle_bc,
                                           bundle_file=bundle_file)
         if mapping is not None:
             from geonames_rdf_spark.pipeline import canonicalize

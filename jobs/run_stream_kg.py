@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """spark-submit entry point: live-crawl streaming KG maintenance.
 
+    ./scripts/package.sh        # builds pipeline.zip (not tracked)
     spark-submit --master local[32] --py-files pipeline.zip \
         jobs/run_stream_kg.py --drop-dir /data/crawl_drop \
         --out /data/kg_stream --sf-dir /root/testdata/sf0.01 \

@@ -74,12 +74,11 @@ def main() -> None:
     feats.count()
     surfaces = corpus.gazetteer_surfaces(feats)
     smap = mentions.build_surface_map(feats)
-    # matcher built + broadcast ONCE (as a production job does): a fresh
-    # broadcast per scan would make every rep re-pay the driver build and
-    # the per-worker unpickle/regex-compile — a fixed per-job cost, not
-    # steady-state scan throughput
-    from geonames_rdf_spark.pipeline.matcher import build_matcher
-    matcher_bc = spark.sparkContext.broadcast(build_matcher(smap))
+    # every scan below passes the same map, so detect_mentions' content
+    # memo builds + broadcasts the matcher ONCE (as a production job
+    # does): a fresh broadcast per scan would make every rep re-pay the
+    # driver build and the per-worker unpickle/regex-compile — a fixed
+    # per-job cost, not steady-state scan throughput
     # cache key carries the gazetteer (sf_dir) too — a corpus synthesized
     # from one gazetteer must never be reused for another scale factor.
     # tmpfs cache persists across the interleaved levels of one evidence
@@ -103,16 +102,14 @@ def main() -> None:
     # scan phase: storage scan -> fused extract+match (zero shuffles)
     scan_sec, n_mentions = best_of(
         lambda: mentions.detect_mentions(
-            pages_df(), smap, carry_lang=True, from_html=True,
-            matcher_bc=matcher_bc).count()
+            pages_df(), smap, carry_lang=True, from_html=True).count()
     )
 
     # full STAGED phase: + link argmax + mention-triple dedup (two
     # shuffles); materializes the candidate fan-out (~25 rows/page here)
     def full():
         ment = mentions.detect_mentions(
-            pages_df(), smap, carry_lang=True, from_html=True,
-            matcher_bc=matcher_bc)
+            pages_df(), smap, carry_lang=True, from_html=True)
         linked = link.link_mentions(ment, feats)
         return materialize.mention_triples(linked).count()
 
@@ -123,13 +120,10 @@ def main() -> None:
     # never crosses the Python/JVM boundary, so the only corpus-sized
     # exchange is the mention-triple dedup
     smap_scored = mentions.build_scored_surface_map(feats)
-    from geonames_rdf_spark.pipeline.matcher import build_matcher as _bm
-    bundle_bc = spark.sparkContext.broadcast(
-        (_bm({k: [] for k in smap_scored}), smap_scored))
 
     def fused():
         linked = mentions.detect_and_link(
-            pages_df(), smap_scored, from_html=True, bundle_bc=bundle_bc)
+            pages_df(), smap_scored, from_html=True)
         return materialize.mention_triples(linked).count()
 
     fused_sec, fused_triples = best_of(fused)

@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from geonames_rdf_spark.operators import skew  # noqa: E402
-from geonames_rdf_spark.session import get_spark  # noqa: E402
+from geonames_rdf_spark.session import cpus, get_spark  # noqa: E402
 
 N_BIG = int(os.environ.get("SKEW_ROWS", "16000000"))
 N_KEYS = 10_000
@@ -112,7 +112,7 @@ def main() -> None:
         "seconds": {k: round(v, 2) for k, v in timings.items()},
         "speedup_vs_plain": {
             k: round(timings["plain"] / v, 2) for k, v in timings.items()},
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": cpus(),
     }))
     spark.stop()
 

@@ -108,27 +108,53 @@ except ImportError:  # pragma: no cover - hypothesis is baked in here
     pass
 
 
-def test_broadcast_guard_content_fingerprint(spark):
-    """The stale-broadcast guards must catch a DIFFERENT map of EQUAL
-    size (keys for the matcher; keys+priors for the scored bundle) — the
-    exact failure a count-only guard waves through."""
+def test_detect_mentions_sees_changed_candidate_ids(spark):
+    """Same surface, new candidate ids: the matcher memo must not serve
+    the first map's payload to the second scan."""
+    from geonames_rdf_spark.pipeline import mentions
+
+    pages = spark.createDataFrame([("u", "Paris today")],
+                                  "url string, text string")
+
+    def candidates(smap):
+        return [r["candidate"] for r in
+                mentions.detect_mentions(pages, smap).collect()]
+
+    assert candidates({"Paris": [111]}) == [111]
+    assert candidates({"Paris": [222]}) == [222]
+
+
+def test_broadcast_memo_content_keyed(spark):
+    """The broadcast memo reuses a broadcast only for equal content: an
+    equal-size map of a different surface (matcher) and the same keys
+    with a different prior (scored bundle) each get a fresh broadcast
+    and scan with their own content."""
     from geonames_rdf_spark.pipeline import mentions
 
     pages = spark.createDataFrame(
         [("u", "Alpha visited", "en")], "url string, text string, lang string")
+
+    def memo(kind):
+        return mentions._BC_MEMO[kind][1]
+
     map_a = {"Alpha": [1]}
     map_b = {"Betaa": [1]}  # same size, different surface
-    bc = spark.sparkContext.broadcast(build_matcher(map_a))
-    with pytest.raises(ValueError, match="fingerprint"):
-        mentions.detect_mentions(pages, map_b, matcher_bc=bc)
-    assert mentions.detect_mentions(pages, map_a, matcher_bc=bc).count() == 1
+    assert mentions.detect_mentions(pages, map_a).count() == 1
+    bc_a = memo("matcher")
+    assert mentions.detect_mentions(pages, dict(map_a)).count() == 1
+    assert memo("matcher") is bc_a  # equal content in a new dict: reused
+    assert mentions.detect_mentions(pages, map_b).count() == 0
+    assert memo("matcher") is not bc_a
+
+    def scores(smap):
+        return [r["score"] for r in
+                mentions.detect_and_link(pages, smap).collect()]
 
     scored_a = {"Alpha": [(1, 0.5, "C0")]}
     scored_b = {"Alpha": [(1, 0.9, "C0")]}  # same keys, different prior
-    bundle = spark.sparkContext.broadcast(
-        (build_matcher({k: [] for k in scored_a}), scored_a))
-    with pytest.raises(ValueError, match="fingerprint"):
-        mentions.detect_and_link(pages, scored_b, bundle_bc=bundle)
-    # equal content in a DIFFERENT dict object passes the content check
-    assert mentions.detect_and_link(
-        pages, dict(scored_a), bundle_bc=bundle).count() == 1
+    assert scores(scored_a) == [2.5]  # prior + "en" bonus
+    bundle_a = memo("bundle")
+    assert scores(dict(scored_a)) == [2.5]
+    assert memo("bundle") is bundle_a
+    assert scores(scored_b) == [2.9]
+    assert memo("bundle") is not bundle_a

@@ -26,6 +26,41 @@ def test_kg_build_all_joins_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_kg_build_has_no_window(spark):
+    """Winner elections in the KG build (best names, admin lookups) are
+    min_by aggregates: a row_number window would sort every partition of
+    the alternate-name table."""
+    assert "Window" not in plan_of(build.build_kg(spark, SF))
+
+
+def test_fused_web_pipeline_has_no_arrow_eval(spark):
+    """Text extraction rides inside the mention scan's MapInPandas: the
+    web pipeline plan has no separate ArrowEvalPython hop (a second
+    Arrow round-trip of the whole corpus)."""
+    from geonames_rdf_spark.pipeline import materialize
+
+    stages = materialize.run_pipeline(spark, SF, n_pages=200,
+                                      include_feature_triples=False)
+    try:
+        plan = plan_of(stages["triples"])
+        assert "MapInPandas" in plan, plan
+        assert "ArrowEvalPython" not in plan, plan
+    finally:
+        stages.unpersist()
+
+
+def test_c8_hierarchy_report_exchange_budget(spark, tmp_path):
+    """c8 over a stored KG plans at most four exchanges — two shuffles
+    (the per-node aggregate, the final sort) and two broadcasts."""
+    from geonames_rdf_spark import oracle
+
+    path = str(tmp_path / "kg")
+    build.build_kg(spark, SF).write.parquet(path)
+    kg = spark.read.parquet(path)
+    plan = plan_of(workload.q_hierarchy_report(kg, oracle.SEED_PLACE))
+    assert sum("Exchange" in line for line in plan.splitlines()) <= 4, plan
+
+
 def test_triple_scan_predicate_pushdown(spark, tmp_path):
     path = str(tmp_path / "triples_parquet")
     build.build_kg(spark, SF).write.parquet(path)

@@ -4,6 +4,7 @@ round's contract — speed may change, results may not)."""
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import Window
@@ -95,6 +96,39 @@ def test_build_kg_plan_memo_returns_fresh_datasets(spark):
     assert df1 is not df2
     assert df1.schema == df2.schema
     assert df1.count() == df2.count()
+
+
+def test_build_kg_plan_memo_sees_replaced_input(spark, tmp_path):
+    """A parquet input replaced under ``sf_dir`` mid-session must not be
+    served from the memoized plan: the next build reflects the new file
+    (counts checked against the DuckDB oracle on the same files)."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from geonames_rdf_spark import oracle
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF, sf)
+
+    def expected():
+        con = duckdb.connect()
+        for t in ("customer", "orders"):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM"
+                        f" read_parquet('{sf}/{t}.parquet')")
+        return con.execute(
+            f"SELECT count(*) FROM ({oracle.kg_sql()})").fetchone()[0]
+
+    before = build.build_kg(spark, sf).count()
+    assert before == expected()
+    path = os.path.join(sf, "customer.parquet")
+    table = pq.read_table(path)
+    os.chmod(path, 0o644)
+    pq.write_table(table.slice(0, table.num_rows // 2), path)
+    after = build.build_kg(spark, sf).count()
+    assert after == expected()
+    assert after < before
 
 
 def test_gazetteer_tables_memo_isolated_from_caller_mutation(spark):

@@ -1,11 +1,11 @@
-"""Training-data-pipeline operators: dedup, similarity, text, multimodal."""
+"""Training-data-pipeline operators: dedup, similarity, text."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from geonames_rdf_spark.operators import dedup, multimodal, similarity, textstats
+from geonames_rdf_spark.operators import dedup, similarity, textstats
 from tests.conftest import SF, assert_df_parity
 
 
@@ -247,27 +247,6 @@ def test_quality_and_langid(docs, duck):
     assert score.filter((F.col("quality") < 0) | (F.col("quality") > 1)).count() == 0
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media(spark, 30)
-    feats = multimodal.extract_features(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r["feature"]) == multimodal.FEATURE_DIM for r in rows)
-    # deterministic across runs
-    again = multimodal.extract_features(media, fake=True).collect()
-    assert {r["media_id"]: r["feature"] for r in rows} == {
-        r["media_id"]: r["feature"] for r in again
-    }
-    # real mode is an explicit stub
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        multimodal.extract_features(media, fake=False).collect()
-    rp = multimodal.resize_plan(media, max_px=100)
-    bad = rp.filter((F.col("dst_width") > 100) | (F.col("dst_height") > 100))
-    assert bad.count() == 0
-    fs = multimodal.frame_sample_plan(media, every_ms=400)
-    assert fs.count() > 0
-
-
 def test_ivf_ann(emb):
     centroids = similarity.train_ivf_centroids(emb, k=8, iters=2)
     assert len(centroids) == 8 and len(centroids[0]) == 64
@@ -359,104 +338,6 @@ def test_lsh_candidate_pairs_width_guard(spark):
                                  "id bigint, sig array<bigint>")
     with _pt.raises(Exception, match="expected 64-hash signatures"):
         dedup.lsh_candidate_pairs(sigs, bands=16).collect()
-
-
-def test_multimodal_real_decode_end_to_end(spark):
-    """fake=False runs REAL decoders for the uncompressed containers:
-    PPM pixels, WAV PCM samples, raw frame-stacks — bytes to features
-    with no codec library."""
-    media = multimodal.synth_raw_media(spark, 24)
-    # the container rotation must actually fire for all three image
-    # codecs (r08 review: a rotation keyed on the media-type modulus
-    # silently produced PPM-only images)
-    codecs = {r["meta"]["codec"] for r in media.collect()
-              if r["media_type"] == "image"}
-    assert {"ppm", "png", "gif"} <= codecs
-    rows = multimodal.extract_features(media, fake=False).collect()
-    assert len(rows) == 24
-    assert all(len(r["feature"]) == multimodal.FEATURE_DIM for r in rows)
-    # image features are content-derived: channel means are in [0, 1]
-    img = [r for r in rows if r["media_type"] == "image"]
-    assert img and all(0.0 <= v <= 1.0 for r in img for v in r["feature"][:3])
-    # audio features: rms > 0 for the sine payloads
-    aud = [r for r in rows if r["media_type"] == "audio"]
-    assert aud and all(r["feature"][0] > 0.1 for r in aud)
-    # deterministic
-    again = multimodal.extract_features(media, fake=False).collect()
-    assert {r["media_id"]: r["feature"] for r in rows} == {
-        r["media_id"]: r["feature"] for r in again}
-
-
-def test_multimodal_gif_roundtrip_and_feature_parity():
-    """GIF LZW codec: decode(encode(px)) == px including the clear-reset
-    path (an image big enough to overflow the 4096-entry dictionary),
-    the palette-format edge (1 distinct color), and the >256-color
-    refusal; identical pixels through GIF and PPM yield identical
-    features (the codec is invisible to the feature layer)."""
-    import numpy as np
-    import pytest as _pt
-
-    px = (np.arange(9 * 7 * 3) % 256).astype(np.uint8).reshape(9, 7, 3)
-    assert (multimodal.decode_gif(multimodal.encode_gif(px)) == px).all()
-    # 1-color image (minimum palette / minimum code size branch)
-    flat = np.full((3, 4, 3), 7, dtype=np.uint8)
-    assert (multimodal.decode_gif(multimodal.encode_gif(flat)) == flat).all()
-    # dictionary overflow -> encoder emits Clear, decoder resets
-    rng = np.random.default_rng(5)
-    pal = rng.integers(0, 256, size=(256, 3), dtype=np.uint8)
-    big = pal[rng.integers(0, 256, size=(90, 90))]
-    assert (multimodal.decode_gif(multimodal.encode_gif(big)) == big).all()
-    # the format's own palette limit is enforced, never silently quantized
-    many = np.arange(17 * 16 * 3, dtype=np.int64) % 255
-    many = (many + np.arange(17 * 16 * 3) // 255).astype(np.uint8) \
-        .reshape(17, 16, 3)
-    if len(np.unique(many.reshape(-1, 3), axis=0)) > 256:
-        with _pt.raises(ValueError, match="256"):
-            multimodal.encode_gif(many)
-    # codec-invisibility: same pixels, same features
-    assert (multimodal.image_features(
-        multimodal.decode_gif(multimodal.encode_gif(px)))
-        == multimodal.image_features(
-            multimodal.decode_ppm(multimodal.encode_ppm(px))))
-
-
-try:
-    from hypothesis import given as _g2
-    from hypothesis import settings as _s2
-    from hypothesis import strategies as _st2
-
-    @_s2(max_examples=80, deadline=None)
-    @_g2(h=_st2.integers(min_value=1, max_value=14),
-         w=_st2.integers(min_value=1, max_value=14),
-         ncol=_st2.integers(min_value=1, max_value=256),
-         seed=_st2.integers(min_value=0, max_value=2**31 - 1))
-    def test_gif_roundtrip_property(h, w, ncol, seed):
-        """decode(encode(px)) == px for every shape/palette-size/content
-        combination — the variable-width LZW boundaries (code-width
-        growth points, KwKwK self-reference, sub-block splits) must be
-        exact at every dictionary size, which hand-picked fixtures
-        cannot sweep."""
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        pal = rng.integers(0, 256, size=(ncol, 3), dtype=np.uint8)
-        px = pal[rng.integers(0, ncol, size=(h, w))]
-        assert (multimodal.decode_gif(multimodal.encode_gif(px)) == px).all()
-except ImportError:  # pragma: no cover - hypothesis is baked in here
-    pass
-
-
-def test_multimodal_decode_roundtrip_and_resize():
-    import numpy as np
-
-    px = (np.arange(10 * 7 * 3) % 256).astype(np.uint8).reshape(10, 7, 3)
-    assert (multimodal.decode_ppm(multimodal.encode_ppm(px)) == px).all()
-    small = multimodal.resize_nearest(px, 5, 4)
-    assert small.shape == (5, 4, 3)
-    assert (small[0, 0] == px[0, 0]).all()
-    s = (np.sin(np.arange(800) * 0.02) * 20000).astype(np.int16)
-    out, rate = multimodal.decode_wav_pcm16(multimodal.encode_wav_pcm16(s))
-    assert rate == 16000 and (out == s).all()
 
 
 def test_sample_stratified_deterministic_and_rate_correct(docs, spark):
@@ -774,75 +655,6 @@ def test_operators_survive_pathological_corpus(spark):
     curate.curate_corpus(d, min_quality=0.0).count()
 
 
-def test_png_golden_bytes_decode():
-    """GOLDEN: a 2x2 RGB PNG whose filtered scanlines were computed BY
-    HAND (row 0 Sub, row 1 Up) and whose chunks are assembled here
-    without encode_png — checks the decoder against independently
-    derived bytes, not its own inverse."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    px = np.array([[[10, 20, 30], [40, 50, 60]],
-                   [[70, 80, 90], [100, 110, 120]]], dtype=np.uint8)
-    # Sub:  [10,20,30, 40-10,50-20,60-30] ; Up: line - recon(row0)
-    raw = (b"\x01" + bytes([10, 20, 30, 30, 30, 30])
-           + b"\x02" + bytes([60, 60, 60, 60, 60, 60]))
-
-    def chunk(t, d):
-        return (struct.pack(">I", len(d)) + t + d
-                + struct.pack(">I", zlib.crc32(t + d)))
-
-    golden = (b"\x89PNG\r\n\x1a\n"
-              + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0))
-              + chunk(b"IDAT", zlib.compress(raw))
-              + chunk(b"IEND", b""))
-    assert (multimodal.decode_png(golden) == px).all()
-
-
-def test_png_roundtrip_all_filters_and_colortypes():
-    """encode_png forcing every filter type (None/Sub/Up/Avg/Paeth) must
-    invert exactly; grayscale broadcasts to 3 channels and RGBA drops
-    alpha."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    px = ((np.arange(11 * 9 * 3) * 37 + 5) % 256).astype(
-        np.uint8).reshape(11, 9, 3)
-    for ft in range(5):
-        got = multimodal.decode_png(
-            multimodal.encode_png(px, filters=[ft] * 11))
-        assert (got == px).all(), f"filter {ft}"
-    mixed = multimodal.decode_png(
-        multimodal.encode_png(px, filters=[y % 5 for y in range(11)]))
-    assert (mixed == px).all()
-
-    def chunk(t, d):
-        return (struct.pack(">I", len(d)) + t + d
-                + struct.pack(">I", zlib.crc32(t + d)))
-
-    def build(color, ch, body):
-        return (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR",
-                        struct.pack(">IIBBBBB", 3, 2, 8, color, 0, 0, 0))
-                + chunk(b"IDAT", zlib.compress(body))
-                + chunk(b"IEND", b""))
-
-    gray = build(0, 1, b"\x00\x05\x06\x07" + b"\x00\x08\x09\x0a")
-    g = multimodal.decode_png(gray)
-    assert g.shape == (2, 3, 3) and (g[0, 1] == [6, 6, 6]).all()
-    rgba = build(6, 4, b"\x00" + bytes(range(12)) + b"\x00" + bytes(range(12, 24)))
-    r = multimodal.decode_png(rgba)
-    assert r.shape == (2, 3, 3) and (r[0, 1] == [4, 5, 6]).all()
-
-    import pytest as _pt
-    with _pt.raises(ValueError, match="unsupported PNG"):
-        multimodal.decode_png(build(3, 1, b"\x00\x00\x00\x00"))
-
-
 def test_redact_pii_duck_parity(spark, duck):
     """redact_pii == the RE2 twin (same literal patterns, privacy.py
     keeps both sides in one file) on adversarial planted rows AND on
@@ -957,36 +769,6 @@ def test_curate_pii_gate(spark):
              curate.curate_corpus(d, min_quality=0.0,
                                   max_pii=4).collect()}
     assert loose == base
-
-
-# --- property-based PNG codec round-trip (pure numpy, no Spark) ------------
-
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=120, deadline=None)
-    @given(
-        h=st.integers(min_value=1, max_value=12),
-        w=st.integers(min_value=1, max_value=12),
-        seed=st.integers(min_value=0, max_value=2**31 - 1),
-        filters=st.lists(st.integers(min_value=0, max_value=4),
-                         min_size=12, max_size=12),
-    )
-    def test_png_roundtrip_property(h, w, seed, filters):
-        """decode(encode(px, any per-row filter choice)) == px for every
-        image shape — the five filter transforms must be exact inverses
-        at every byte value, including the uint8 wraparound cases a
-        hand-picked fixture can miss."""
-        import numpy as np
-
-        px = ((np.arange(h * w * 3, dtype=np.int64) * (seed | 1) + seed)
-              % 256).astype(np.uint8).reshape(h, w, 3)
-        got = multimodal.decode_png(
-            multimodal.encode_png(px, filters=filters[:h]))
-        assert (got == px).all()
-except ImportError:  # pragma: no cover - hypothesis is baked in here
-    pass
 
 
 def test_chunk_then_pack_composition_margin_1x(spark):
