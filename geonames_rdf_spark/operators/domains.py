@@ -47,6 +47,7 @@ from pyspark.sql import Window
 
 from geonames_rdf_spark.operators.psl_snapshot import (
     EXCEPTION2, SUFFIX2, SUFFIX3, WILDCARD_TLD)
+from geonames_rdf_spark.session import local_frame
 
 # backwards-compat alias (pre-r07 the 20-entry table lived here)
 _SUFFIX2 = SUFFIX2
@@ -278,8 +279,8 @@ def cap_per_domain(pages: DataFrame, max_docs: int,
             # the three route sets as local-relation frames — zero cache
             # residue, zero re-aggregation in the consuming subtrees
             spark = pages.sparkSession
-            over = spark.createDataFrame(
-                over.toPandas(), schema="domain string, _n bigint")
+            over = local_frame(spark, over.toPandas(),
+                               "domain string, _n bigint")
         else:
             # monster over-set: too big to collect; truncate lineage so
             # the subtrees never re-run the counts aggregate, then drop

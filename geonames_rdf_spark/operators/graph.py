@@ -13,6 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark.session import local_frame
+
+# Largest edge list the 'local' closure holds on the driver.  Past it the
+# closure runs distributed.  The driver keeps each edge as two Python
+# strings plus an adjacency-list slot, a few hundred bytes, so the bound
+# caps that copy at a few hundred MB beside the JVM heap.
+LOCAL_EDGE_BOUND = 1_000_000
+
 
 class FixpointNotConverged(RuntimeError):
     """An iterative graph operator exhausted ``max_iter`` with work left.
@@ -58,17 +66,23 @@ def transitive_closure(
     per-level distributed loop pays several scheduler round-trips per
     level regardless of data size:
 
-    * ``'local'`` (default) — pull the edge list once (one Arrow
-      ``toPandas`` job), run the BFS itself on the driver, return the
-      (node, depth) closure as a local relation.  ONE Spark job total
-      instead of 4-5 per level; measured ~4x faster end-to-end on the
-      hierarchy queries.  Driver memory bounds the EDGE LIST size —
-      fine for gazetteer-dimension graphs, wrong for corpus-scale
-      graphs, hence:
+    * ``'local'`` (default) — pull at most ``LOCAL_EDGE_BOUND + 1``
+      edges in one Arrow ``toPandas`` job, run the BFS itself on the
+      driver, and return the (node, depth) closure as a local relation
+      (``session.local_frame``, a ``LocalTableScan``).  That pull is the
+      only Spark job: the seeds are collected from their own relation
+      (no job when they are local rows, as the workload's seeds are),
+      and consumers re-read the closure without starting Python
+      workers.  When the pull comes back with more than
+      ``LOCAL_EDGE_BOUND`` rows the edge list is not driver-sized, and
+      the call runs ``'shuffle'`` instead.
     * ``'shuffle'`` — fully distributed join-to-fixpoint with per-level
       ``localCheckpoint`` lineage cuts: the mode for graphs too large
       to hold on the driver (general reachability at corpus scale).
       Equivalence is pytest-pinned.
+
+    Both routes return ``node`` with the seed column's type and
+    ``depth`` as a non-null int.
 
     Raises :class:`FixpointNotConverged` if the frontier is still
     non-empty after ``max_iter`` rounds (a deeper-than-expected hierarchy
@@ -86,9 +100,9 @@ def _closure_local(edges: DataFrame, seeds: DataFrame, max_iter: int,
                    on_max_iter: str) -> DataFrame:
     from pyspark.sql import types as T
 
-    spark = edges.sparkSession
-    node_type = seeds.schema["node"].dataType
-    pdf = edges.select("src", "dst").toPandas()
+    pdf = edges.select("src", "dst").limit(LOCAL_EDGE_BOUND + 1).toPandas()
+    if len(pdf) > LOCAL_EDGE_BOUND:
+        return _closure_shuffle(edges, seeds, max_iter, on_max_iter)
     adj: dict = {}
     for s, d in zip(pdf["src"], pdf["dst"]):
         adj.setdefault(s, []).append(d)
@@ -114,9 +128,9 @@ def _closure_local(edges: DataFrame, seeds: DataFrame, max_iter: int,
                          if d not in depth_of}
     if not converged:
         _handle_nonconverged("transitive_closure", max_iter, on_max_iter)
-    return spark.createDataFrame(
-        [(n, d) for n, d in depth_of.items()],
-        T.StructType([T.StructField("node", node_type),
+    return local_frame(
+        edges.sparkSession, list(depth_of.items()),
+        T.StructType([T.StructField("node", seeds.schema["node"].dataType),
                       T.StructField("depth", T.IntegerType(), False)]))
 
 

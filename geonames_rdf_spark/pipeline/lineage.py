@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark.session import local_frame
+
 LINEAGE_SCHEMA = (
     "bucket int, n_pages bigint, n_mentions bigint, n_triples bigint, status string"
 )
@@ -64,8 +66,8 @@ def _process_bucket(spark: SparkSession, pages_b: DataFrame,
     t.write.mode("overwrite").parquet(f"{out_dir}/triples/bucket={b}")
     # bucket rides the DIRECTORY name (partition discovery), not the file
     # — a data column duplicating the partition column is a read error
-    row = spark.createDataFrame(
-        [(obs_pages.get["n"], None, obs_triples.get["n"], "done")],
+    row = local_frame(
+        spark, [(obs_pages.get["n"], None, obs_triples.get["n"], "done")],
         "n_pages bigint, n_mentions bigint, n_triples bigint, status string",
     )
     row.coalesce(1).write.mode("overwrite").parquet(
@@ -151,7 +153,8 @@ def write_guard_metrics(spark: SparkSession, out_dir: str, name: str,
     safety as the lineage rows.  Returns the metrics dict written.
     """
     got = dict(observation.get)
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(int(got.get("oversized_rows", 0)), int(got.get("total_rows", 0)))],
         "oversized_rows bigint, total_rows bigint")
     row.coalesce(1).write.mode("overwrite").parquet(
@@ -180,7 +183,7 @@ def write_stage_counters(spark: SparkSession, out_dir: str, stage: str,
     the schemas differ.
     """
     rows = [(str(k), int(v)) for k, v in counters.items() if v is not None]
-    df = spark.createDataFrame(rows, "metric string, value bigint")
+    df = local_frame(spark, rows, "metric string, value bigint")
     df.coalesce(1).write.mode("overwrite").parquet(
         f"{out_dir}/stage_metrics/stage={stage}")
 

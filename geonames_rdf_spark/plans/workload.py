@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from geonames_rdf_spark import vocab
 from geonames_rdf_spark.functions.terms import haversine_m
 from geonames_rdf_spark.operators import graph
+from geonames_rdf_spark.session import local_frame
 
 
 def entity_table(triples: DataFrame, preds: dict[str, str]) -> DataFrame:
@@ -107,7 +108,7 @@ def q_municipalities(triples: DataFrame, parent_uri: str) -> DataFrame:
 def q_ancestors(triples: DataFrame, seed_uri: str) -> DataFrame:
     """C4 (hierarchy.rq:9-12): seed + its transitive parents with depth."""
     edges = graph.parent_edges(triples, vocab.GN_PARENT_FEATURE)
-    seeds = triples.sparkSession.createDataFrame([(seed_uri,)], ["node"])
+    seeds = local_frame(triples.sparkSession, [(seed_uri,)], "node string")
     return graph.transitive_closure(edges, seeds).select(
         F.col("node").alias("feature"), "depth"
     )
@@ -118,7 +119,7 @@ def q_descendants(triples: DataFrame, seed_uri: str) -> DataFrame:
     edges = graph.parent_edges(triples, vocab.GN_PARENT_FEATURE).select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
-    seeds = triples.sparkSession.createDataFrame([(seed_uri,)], ["node"])
+    seeds = local_frame(triples.sparkSession, [(seed_uri,)], "node string")
     return graph.transitive_closure(edges, seeds).select(
         F.col("node").alias("feature"), "depth"
     )
@@ -383,8 +384,8 @@ def code_label_table(spark) -> DataFrame:
     (sources/ontology.py, mirroring ontology_v3.3 skos:prefLabel@en)."""
     from geonames_rdf_spark.sources import ontology
 
-    return spark.createDataFrame(
-        ontology.concept_labels(), ["code_iri", "label"])
+    return local_frame(spark, ontology.concept_labels(),
+                       "code_iri string, label string")
 
 
 def q_code_labels_in_kg(triples: DataFrame) -> DataFrame:

@@ -97,6 +97,43 @@ def get_spark(
     return spark
 
 
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """A relation built from driver-side rows, planned as a ``LocalTableScan``.
+
+    ``data`` is a sequence of row tuples or a pandas DataFrame; ``schema``
+    a ``StructType`` or DDL string, whose types and nullability the
+    result keeps.  The rows become one pyarrow Table, handed to Spark
+    whole: the plan holds them as a local relation, so no job that reads
+    it starts Python workers.  ``createDataFrame(<rows>)`` would instead
+    plan ``Scan ExistingRDD`` over a pickled Python RDD, and the pandas
+    route silently falls back to that when Arrow conversion fails.  The
+    Arrow-table route has no fallback: a value that does not convert to
+    its column's type, or a null in a NOT NULL column, raises here.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data, schema=arrow_schema,
+                                     preserve_index=False)
+    else:
+        columns = list(zip(*data)) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema)
+    for f, col in zip(schema.fields, table.columns):
+        # pyarrow does not enforce a field's non-null flag; Spark trusts it
+        if not f.nullable and col.null_count:
+            raise ValueError(f"local_frame: column {f.name!r} is declared"
+                             f" NOT NULL but holds {col.null_count} null(s)")
+    return spark.createDataFrame(table, schema=schema)
+
+
 def ensure_parallel(df: DataFrame) -> DataFrame:
     """Parallelism floor: repartition ``df`` to the session's default
     parallelism when it has fewer partitions.

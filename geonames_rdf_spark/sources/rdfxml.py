@@ -16,8 +16,8 @@ It is NOT a general RDF/XML implementation (no reification, no
 raise rather than mis-parse.
 
 Ontology files are dimension-sized (thousands of triples), so a
-driver-side parse + ``createDataFrame`` / parquet fixture is the right
-scale shape; page-scale RDF stays on the N-Triples path
+driver-side parse + local relation (``session.local_frame``) / parquet
+fixture is the right scale shape; page-scale RDF stays on the N-Triples path
 (``sources/ntriples.py``), which is line-splittable and fully
 distributed.
 """
@@ -192,5 +192,6 @@ def read_rdfxml_file(path: str, base: str | None = None) -> list[tuple]:
 
 def rdfxml_to_df(spark, path: str, base: str | None = None):
     """Parse an RDF/XML file into a (dimension-sized) triple DataFrame."""
-    return spark.createDataFrame(read_rdfxml_file(path, base=base),
-                                 schema=TRIPLE_SCHEMA)
+    from geonames_rdf_spark.session import local_frame
+
+    return local_frame(spark, read_rdfxml_file(path, base=base), TRIPLE_SCHEMA)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark import vocab
 from geonames_rdf_spark.operators import build
 from geonames_rdf_spark.plans import workload
 from tests.conftest import SF
@@ -49,16 +50,92 @@ def test_fused_web_pipeline_has_no_arrow_eval(spark):
         stages.unpersist()
 
 
-def test_c8_hierarchy_report_exchange_budget(spark, tmp_path):
+@pytest.fixture(scope="module")
+def stored_kg(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("plans") / "kg")
+    build.build_kg(spark, SF).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_c8_hierarchy_report_exchange_budget(stored_kg):
     """c8 over a stored KG plans at most four exchanges — two shuffles
     (the per-node aggregate, the final sort) and two broadcasts."""
     from geonames_rdf_spark import oracle
 
-    path = str(tmp_path / "kg")
-    build.build_kg(spark, SF).write.parquet(path)
-    kg = spark.read.parquet(path)
-    plan = plan_of(workload.q_hierarchy_report(kg, oracle.SEED_PLACE))
+    plan = plan_of(workload.q_hierarchy_report(stored_kg, oracle.SEED_PLACE))
     assert sum("Exchange" in line for line in plan.splitlines()) <= 4, plan
+
+
+def test_hierarchy_queries_read_no_python_rdd(spark, stored_kg):
+    """The hierarchy queries over a stored KG plan no ``Scan ExistingRDD``
+    (a pickled Python RDD: every job reading it starts Python workers);
+    the seeds and the closure are ``LocalTableScan`` relations."""
+    from geonames_rdf_spark import oracle
+    from geonames_rdf_spark.operators import graph
+    from geonames_rdf_spark.session import local_frame
+
+    kg = stored_kg
+    for df in (workload.q_ancestors(kg, oracle.SEED_PLACE),
+               workload.q_descendants(kg, oracle.SEED_ADM1),
+               workload.q_hierarchy_report(kg, oracle.SEED_PLACE)):
+        plan = plan_of(df)
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+    closure = graph.transitive_closure(
+        graph.parent_edges(kg, vocab.GN_PARENT_FEATURE),
+        local_frame(spark, [(oracle.SEED_PLACE,)], "node string"))
+    assert plan_of(closure).startswith("LocalTableScan"), plan_of(closure)
+
+
+def test_local_frame_is_a_local_relation_that_fails_loudly(spark):
+    """``local_frame`` plans a LocalTableScan from rows or pandas, keeps
+    the declared types and nullability, and raises where the pickled
+    fallback would have carried on."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from geonames_rdf_spark.session import local_frame
+
+    schema = "k string, n bigint not null"
+    for data in ([("a", 1), ("b", 2)],
+                 pd.DataFrame({"k": ["a", "b"], "n": [1, 2]})):
+        df = local_frame(spark, data, schema)
+        assert plan_of(df).startswith("LocalTableScan"), plan_of(df)
+        assert df.schema.simpleString() == "struct<k:string,n:bigint>"
+        assert not df.schema["n"].nullable
+        assert sorted(df.collect()) == [("a", 1), ("b", 2)]
+    assert local_frame(spark, [], schema).collect() == []
+    with pytest.raises(pa.ArrowInvalid):
+        local_frame(spark, [("a", "x")], schema)
+    with pytest.raises(ValueError, match="NOT NULL"):
+        local_frame(spark, [("a", None)], schema)
+
+
+def test_package_builds_no_relation_outside_local_frame():
+    """Every relation the package builds from driver rows goes through
+    ``session.local_frame``: a ``createDataFrame`` call anywhere else
+    would plan a pickled Python RDD (or fall back to one)."""
+    import ast
+    import pathlib
+
+    import geonames_rdf_spark
+
+    root = pathlib.Path(geonames_rdf_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        if path == root / "session.py":
+            helper = next(n for n in tree.body
+                          if isinstance(n, ast.FunctionDef)
+                          and n.name == "local_frame")
+            allowed = {id(n) for n in ast.walk(helper)}
+        offenders += [f"{path.relative_to(root)}:{n.lineno}"
+                      for n in ast.walk(tree)
+                      if isinstance(n, ast.Attribute)
+                      and n.attr == "createDataFrame"
+                      and id(n) not in allowed]
+    assert not offenders, offenders
 
 
 def test_triple_scan_predicate_pushdown(spark, tmp_path):

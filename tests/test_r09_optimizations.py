@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from geonames_rdf_spark.operators import build, dedup, graph, preshape
 from geonames_rdf_spark.pipeline import corpus, mentions
+from geonames_rdf_spark.session import local_frame
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,6 +57,47 @@ def test_transitive_closure_local_matches_shuffle(spark):
                                      frontier="shuffle").collect()}
     assert fast == slow == {("a", 0), ("b", 1), ("c", 2), ("d", 2),
                             ("e", 3)}
+
+
+@pytest.mark.parametrize("edge_rows,seed,expected", [
+    # bigint nodes: a chain with a branch, node keeps the seed's type
+    ([(1, 2), (2, 3), (2, 4), (9, 1)], 1, {(1, 0), (2, 1), (3, 2), (4, 2)}),
+    ([], 1, {(1, 0)}),  # empty edge list
+    ([(1, 2), (2, 3)], 3, {(3, 0)}),  # seed with no out-edges
+])
+def test_transitive_closure_routes_agree_on_edge_cases(spark, edge_rows,
+                                                       seed, expected):
+    edges = local_frame(spark, edge_rows, "src bigint, dst bigint")
+    seeds = local_frame(spark, [(seed,)], "node bigint")
+    for frontier in ("local", "shuffle"):
+        got = graph.transitive_closure(edges, seeds, frontier=frontier)
+        assert got.schema.simpleString() == "struct<node:bigint,depth:int>"
+        assert not got.schema["depth"].nullable, frontier
+        assert {(r["node"], r["depth"]) for r in got.collect()} == expected
+
+
+def test_transitive_closure_local_over_bound_runs_shuffle(spark,
+                                                          monkeypatch):
+    """An edge list longer than LOCAL_EDGE_BOUND is not pulled whole: the
+    bounded pull sees BOUND + 1 rows and the closure runs distributed,
+    with the same result as under the bound."""
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")],
+                                  ["src", "dst"])
+    seeds = spark.createDataFrame([("a",)], ["node"])
+    expected = {("a", 0), ("b", 1), ("c", 2), ("d", 3)}
+    calls = []
+    shuffle = graph._closure_shuffle
+
+    def spy(*args):
+        calls.append(args)
+        return shuffle(*args)
+
+    monkeypatch.setattr(graph, "_closure_shuffle", spy)
+    for bound, routed in ((3, 0), (2, 1)):
+        monkeypatch.setattr(graph, "LOCAL_EDGE_BOUND", bound)
+        got = graph.transitive_closure(edges, seeds)
+        assert {(r["node"], r["depth"]) for r in got.collect()} == expected
+        assert len(calls) == routed, bound
 
 
 def test_transitive_closure_nonconvergence_still_raises(spark):
