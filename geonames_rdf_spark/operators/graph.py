@@ -15,10 +15,17 @@ from pyspark.sql import functions as F
 
 from geonames_rdf_spark.session import local_frame
 
-# Largest edge list the 'local' closure holds on the driver.  Past it the
-# closure runs distributed.  The driver keeps each edge as two Python
-# strings plus an adjacency-list slot, a few hundred bytes, so the bound
-# caps that copy at a few hundred MB beside the JVM heap.
+# Largest edge list the 'local' closure pulls to the driver; a longer one
+# runs the distributed route.  Memory sets it, not time.  Measured on a
+# 4-core host (Python 3.11, tree-shaped lists of ~33-byte URIs, a seed
+# that reaches every node): at 1M-2M edges the driver's Python side
+# peaks at 340-400 bytes per edge, ~400 MB at this bound, an eighth of
+# what ``session.driver_memory`` leaves beside the heap when 6.4 GB are
+# available.  The local route was still the faster one at 1M and 2M
+# edges (12 s and 15 s against 16 s and 23 s).  A longer list, such as
+# the full gazetteer hierarchy (one edge per feature, over 10M; 4 GB or
+# more on the driver), pays one discarded pull of 1M+1 edges (3.0-3.6 s,
+# ~300 MB) before the distributed route runs.
 LOCAL_EDGE_BOUND = 1_000_000
 
 
@@ -54,28 +61,26 @@ def transitive_closure(
     ``edges``: (src, dst).  ``seeds``: (node).  Returns (node, depth) with
     minimal depth; seeds have depth 0.  Equivalent of the SPARQL property
     path ``gn:parentFeature*`` (web/queries/hierarchy.rq:10,
-    graph_administrative_subdivisions.rq:10) evaluated as an iterative
-    join-to-fixpoint; the EDGE list stays distributed in both modes.
+    graph_administrative_subdivisions.rq:10) evaluated as a BFS to
+    fixpoint.
 
-    ``frontier`` picks the execution shape — the r09 optimization
-    insight (guide §8: decide with small rows) is that for the
-    hierarchy closures this operator serves, BOTH the closure state and
-    the edge list are dimension-sized (one parentFeature edge per
-    gazetteer feature — the same ~25M-row dimension the pipeline
-    already collects whole for the broadcast matcher), while the
-    per-level distributed loop pays several scheduler round-trips per
-    level regardless of data size:
+    ``frontier`` picks the execution shape.  For the hierarchy closures
+    this operator serves, the closure is a handful of nodes and the edge
+    list is one parentFeature edge per feature, while the per-level
+    distributed loop pays several scheduler round-trips per level
+    regardless of data size:
 
     * ``'local'`` (default) — pull at most ``LOCAL_EDGE_BOUND + 1``
-      edges in one Arrow ``toPandas`` job, run the BFS itself on the
-      driver, and return the (node, depth) closure as a local relation
-      (``session.local_frame``, a ``LocalTableScan``).  That pull is the
-      only Spark job: the seeds are collected from their own relation
-      (no job when they are local rows, as the workload's seeds are),
-      and consumers re-read the closure without starting Python
-      workers.  When the pull comes back with more than
-      ``LOCAL_EDGE_BOUND`` rows the edge list is not driver-sized, and
-      the call runs ``'shuffle'`` instead.
+      edges to the driver in one Arrow ``toPandas`` job, run the BFS
+      there, and return the (node, depth) closure through
+      ``session.local_frame`` (a ``LocalTableScan`` up to Spark's
+      local-relation threshold, Arrow batches in the JVM past it).  That
+      pull is the only Spark job: the seeds are collected from their own
+      relation (no job when they are local rows, as the workload's seeds
+      are), and consumers re-read the closure without starting Python
+      workers.  When more than ``LOCAL_EDGE_BOUND`` rows come back the
+      pull is discarded and the call runs ``'shuffle'``; the full
+      gazetteer hierarchy (over 10M edges) takes that route.
     * ``'shuffle'`` — fully distributed join-to-fixpoint with per-level
       ``localCheckpoint`` lineage cuts: the mode for graphs too large
       to hold on the driver (general reachability at corpus scale).

@@ -379,15 +379,6 @@ def q_all_code_labels(triples: DataFrame) -> DataFrame:
     )
 
 
-def code_label_table(spark) -> DataFrame:
-    """Static ontology label dimension — the checked-in concept table
-    (sources/ontology.py, mirroring ontology_v3.3 skos:prefLabel@en)."""
-    from geonames_rdf_spark.sources import ontology
-
-    return local_frame(spark, ontology.concept_labels(),
-                       "code_iri string, label string")
-
-
 def q_code_labels_in_kg(triples: DataFrame) -> DataFrame:
     """C12 against the ontology block INSIDE the triple table: feature
     codes self-join to the skos:prefLabel@en concept rows that build_kg

@@ -98,17 +98,21 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, data, schema) -> DataFrame:
-    """A relation built from driver-side rows, planned as a ``LocalTableScan``.
+    """A relation built from driver-side rows, held in the JVM as Arrow data.
 
     ``data`` is a sequence of row tuples or a pandas DataFrame; ``schema``
     a ``StructType`` or DDL string, whose types and nullability the
     result keeps.  The rows become one pyarrow Table, handed to Spark
-    whole: the plan holds them as a local relation, so no job that reads
-    it starts Python workers.  ``createDataFrame(<rows>)`` would instead
-    plan ``Scan ExistingRDD`` over a pickled Python RDD, and the pandas
-    route silently falls back to that when Arrow conversion fails.  The
-    Arrow-table route has no fallback: a value that does not convert to
-    its column's type, or a null in a NOT NULL column, raises here.
+    whole.  Spark plans it as a ``LocalTableScan`` while its Arrow size is
+    under ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+    default) and as ``Scan ExistingRDD arrow``, an RDD of Arrow batches
+    kept in the JVM, above it; no job that reads either starts Python
+    workers.  ``createDataFrame(<rows>)`` would instead plan
+    ``Scan ExistingRDD`` over a pickled Python RDD, and the pandas route
+    silently falls back to that when Arrow conversion fails.  The
+    Arrow-table route has no fallback: a row or frame whose fields differ
+    from the schema's, a value that does not convert to its column's
+    type, or a null in a NOT NULL column raises here.
     """
     import pandas as pd
     import pyarrow as pa
@@ -119,10 +123,17 @@ def local_frame(spark: SparkSession, data, schema) -> DataFrame:
         schema = _parse_datatype_string(schema)
     arrow_schema = to_arrow_schema(schema)
     if isinstance(data, pd.DataFrame):
+        if list(data.columns) != schema.names:
+            raise ValueError(f"local_frame: columns {list(data.columns)}"
+                             f" differ from the schema's {schema.names}")
         table = pa.Table.from_pandas(data, schema=arrow_schema,
                                      preserve_index=False)
     else:
-        columns = list(zip(*data)) or [()] * len(arrow_schema)
+        columns = (list(zip(*data, strict=True)) if len(data)
+                   else [()] * len(arrow_schema))
+        if len(columns) != len(arrow_schema):
+            raise ValueError(f"local_frame: rows have {len(columns)} fields,"
+                             f" the schema has {len(arrow_schema)}")
         table = pa.Table.from_arrays(
             [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
             schema=arrow_schema)

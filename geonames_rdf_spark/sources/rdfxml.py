@@ -16,8 +16,8 @@ It is NOT a general RDF/XML implementation (no reification, no
 raise rather than mis-parse.
 
 Ontology files are dimension-sized (thousands of triples), so a
-driver-side parse + local relation (``session.local_frame``) / parquet
-fixture is the right scale shape; page-scale RDF stays on the N-Triples path
+driver-side parse into a parquet fixture (``scripts/gen_ontology_fixture.py``)
+is the right scale shape; page-scale RDF stays on the N-Triples path
 (``sources/ntriples.py``), which is line-splittable and fully
 distributed.
 """
@@ -43,11 +43,6 @@ RDF_TYPE = RDF_NS + "type"
 RDF_FIRST = RDF_NS + "first"
 RDF_REST = RDF_NS + "rest"
 RDF_NIL = RDF_NS + "nil"
-
-# triple row layout shared with operators/places.py TRIPLE_SCHEMA
-TRIPLE_SCHEMA = ("subj string, pred string, obj string, obj_is_iri boolean,"
-                 " obj_lang string, obj_dt string")
-
 
 def _expand(tag: str) -> str:
     """ElementTree '{ns}local' -> 'nslocal' (RDF predicate/type IRI)."""
@@ -188,10 +183,3 @@ def parse_rdfxml(text: str, base: str | None = None) -> list[tuple]:
 def read_rdfxml_file(path: str, base: str | None = None) -> list[tuple]:
     with open(path, encoding="utf-8") as f:
         return parse_rdfxml(f.read(), base=base)
-
-
-def rdfxml_to_df(spark, path: str, base: str | None = None):
-    """Parse an RDF/XML file into a (dimension-sized) triple DataFrame."""
-    from geonames_rdf_spark.session import local_frame
-
-    return local_frame(spark, read_rdfxml_file(path, base=base), TRIPLE_SCHEMA)

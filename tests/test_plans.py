@@ -109,6 +109,25 @@ def test_local_frame_is_a_local_relation_that_fails_loudly(spark):
         local_frame(spark, [("a", "x")], schema)
     with pytest.raises(ValueError, match="NOT NULL"):
         local_frame(spark, [("a", None)], schema)
+    with pytest.raises(ValueError, match="3 fields"):
+        local_frame(spark, [("a", 1, "extra")], schema)
+    with pytest.raises(ValueError, match="1 fields"):
+        local_frame(spark, [("a",)], schema)
+    with pytest.raises(ValueError):  # ragged rows
+        local_frame(spark, [("a", 1), ("b", 2, "extra")], schema)
+    with pytest.raises(ValueError, match="differ"):
+        local_frame(spark, pd.DataFrame({"k": ["a"], "n": [1], "x": [0]}),
+                    schema)
+    # past the local-relation threshold the rows stay Arrow batches in the
+    # JVM: still no pickled Python RDD
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    spark.conf.set(key, "64b")
+    try:
+        df = local_frame(spark, [(str(i), i) for i in range(100)], schema)
+        assert "Scan ExistingRDD arrow" in plan_of(df), plan_of(df)
+        assert df.count() == 100
+    finally:
+        spark.conf.unset(key)
 
 
 def test_package_builds_no_relation_outside_local_frame():
