@@ -103,37 +103,23 @@ def gazetteer_tables(spark: SparkSession, sf_dir: str,
         raw = gaz["features"].cache()
         raw.createOrReplaceTempView("features")
         gaz["features"] = raw
-        gaz["features_plus"] = spark.sql(synth.TABLE_SQL["features_plus"])
-    features = gaz["features_plus"]
-    alt = preshape.semi_join_alt_names(gaz["alt_names"], features)
-    best = preshape.best_names(alt)
-    features_bn = preshape.with_best_name(features, best)
-    country_codes = preshape.derive_country_codes(gaz["features"])
-    lookups = {lvl: preshape.derive_admin_lookup(gaz["features"], lvl) for lvl in (1, 2, 3, 4)}
-    hierarchy = preshape.filter_country_hierarchy(gaz["hierarchy_raw"], country_codes)
-    tables = {
-        "features": features_bn,
-        "alt_names": alt,
-        "country_codes": country_codes,
-        "admin_lookups": lookups,
-        "hierarchy": hierarchy,
-        "ags_map": gaz["ags_map"],
-    }
+    tables = gazetteer_tables_from_raw(spark, gaz)
     _PLAN_MEMO[key] = (spark, listing, tables)
-    return {**tables, "admin_lookups": dict(lookups)}
+    return {**tables, "admin_lookups": dict(tables["admin_lookups"])}
 
 
 def gazetteer_tables_from_raw(spark: SparkSession,
                               raw: dict[str, DataFrame]) -> dict:
     """Derive the pre-shaped tables from a RAW gazetteer dict
-    (``features``, ``alt_names``, ``hierarchy_raw``, ``ags_map``) —
-    the hook for building a MUTATED dump world (delta/scoped-changelog
-    fixtures) without touching the session temp views.
+    (``features``, ``alt_names``, ``hierarchy_raw``, ``ags_map``) — the
+    one derivation chain: ``gazetteer_tables`` runs it over the
+    registered synthesized world, and delta/scoped-changelog fixtures
+    run it over a MUTATED dump world without touching the session temp
+    views.
 
     The adm1/adm2 derivation mirrors ``synth.FEATURES_PLUS_SQL``
-    (download.sh:87); drift between the two renderings is caught by the
-    ``kg_scoped_changelog`` oracle row, which replays this whole chain
-    in DuckDB."""
+    (download.sh:87), which the DuckDB oracles replay; drift between the
+    two renderings is caught by the kg oracle rows."""
     features_raw = raw["features"]
     features_plus = features_raw.selectExpr(
         "*",
@@ -156,13 +142,6 @@ def gazetteer_tables_from_raw(spark: SparkSession,
         "hierarchy": hierarchy,
         "ags_map": raw["ags_map"],
     }
-
-
-def feature_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = gazetteer_tables(spark, sf_dir)
-    return places.feature_entities(
-        t["features"], t["country_codes"], t["admin_lookups"], t["hierarchy"]
-    )
 
 
 def build_kg(

@@ -65,12 +65,3 @@ def consolidate_triples(triples: DataFrame) -> DataFrame:
         )
     )
     return t.filter(keep).drop("is_pcli", "is_adm1")
-
-
-def sorted_output(triples: DataFrame) -> DataFrame:
-    """B30: global subject sort (consolidate.rq:66) — range-partitioned.
-
-    Only needed for byte-stable golden files; the queryable sink does not
-    require a total order.
-    """
-    return triples.orderBy("subj", "pred", "obj")

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from geonames_rdf_spark.session import local_frame
 
-# Largest edge list the 'local' closure pulls to the driver; a longer one
-# runs the distributed route.  Memory sets it, not time.  Measured on a
+# Largest edge list ``transitive_closure`` runs on the driver; a longer
+# one runs the distributed route.  Memory sets it, not time.  Measured on a
 # 4-core host (Python 3.11, tree-shaped lists of ~33-byte URIs, a seed
 # that reaches every node): at 1M-2M edges the driver's Python side
 # peaks at 340-400 bytes per edge, ~400 MB at this bound, an eighth of
@@ -54,7 +54,6 @@ def transitive_closure(
     seeds: DataFrame,
     max_iter: int = 30,
     on_max_iter: str = "raise",
-    frontier: str = "local",
 ) -> DataFrame:
     """BFS closure: nodes reachable from ``seeds`` following ``edges``.
 
@@ -64,27 +63,27 @@ def transitive_closure(
     graph_administrative_subdivisions.rq:10) evaluated as a BFS to
     fixpoint.
 
-    ``frontier`` picks the execution shape.  For the hierarchy closures
-    this operator serves, the closure is a handful of nodes and the edge
-    list is one parentFeature edge per feature, while the per-level
+    The edge count picks the route.  For the hierarchy closures this
+    operator serves, the closure is a handful of nodes and the edge list
+    is one parentFeature edge per feature, while the per-level
     distributed loop pays several scheduler round-trips per level
-    regardless of data size:
+    regardless of data size.  So the call first pulls at most
+    ``LOCAL_EDGE_BOUND + 1`` edges to the driver in one Arrow
+    ``toPandas`` job:
 
-    * ``'local'`` (default) — pull at most ``LOCAL_EDGE_BOUND + 1``
-      edges to the driver in one Arrow ``toPandas`` job, run the BFS
-      there, and return the (node, depth) closure through
+    * up to ``LOCAL_EDGE_BOUND`` edges, the BFS runs on the driver and
+      the (node, depth) closure is returned through
       ``session.local_frame`` (a ``LocalTableScan`` up to Spark's
       local-relation threshold, Arrow batches in the JVM past it).  That
       pull is the only Spark job: the seeds are collected from their own
       relation (no job when they are local rows, as the workload's seeds
       are), and consumers re-read the closure without starting Python
-      workers.  When more than ``LOCAL_EDGE_BOUND`` rows come back the
-      pull is discarded and the call runs ``'shuffle'``; the full
-      gazetteer hierarchy (over 10M edges) takes that route.
-    * ``'shuffle'`` — fully distributed join-to-fixpoint with per-level
-      ``localCheckpoint`` lineage cuts: the mode for graphs too large
-      to hold on the driver (general reachability at corpus scale).
-      Equivalence is pytest-pinned.
+      workers.
+    * past the bound, the pull is discarded and ``_closure_shuffle``
+      runs: a fully distributed join-to-fixpoint with per-level
+      ``localCheckpoint`` lineage cuts, for graphs too large to hold on
+      the driver.  The full gazetteer hierarchy (over 10M edges) takes
+      this route.  Equivalence of the two routes is pytest-pinned.
 
     Both routes return ``node`` with the seed column's type and
     ``depth`` as a non-null int.
@@ -93,16 +92,6 @@ def transitive_closure(
     non-empty after ``max_iter`` rounds (a deeper-than-expected hierarchy
     must fail loudly, not return a silently truncated closure).
     """
-    if frontier == "local":
-        return _closure_local(edges, seeds, max_iter, on_max_iter)
-    if frontier == "shuffle":
-        return _closure_shuffle(edges, seeds, max_iter, on_max_iter)
-    raise ValueError(f"frontier must be 'local' or 'shuffle', got"
-                     f" {frontier!r}")
-
-
-def _closure_local(edges: DataFrame, seeds: DataFrame, max_iter: int,
-                   on_max_iter: str) -> DataFrame:
     from pyspark.sql import types as T
 
     pdf = edges.select("src", "dst").limit(LOCAL_EDGE_BOUND + 1).toPandas()

@@ -318,7 +318,3 @@ def melt_feature_triples(wide: DataFrame, consolidate: bool = True,
     if include_docs:
         em = em + _document_emissions()
     return _melt(wide, em)
-
-
-def document_triples(wide: DataFrame) -> DataFrame:
-    return _melt(wide, _document_emissions())

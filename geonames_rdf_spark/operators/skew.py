@@ -14,13 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds ``threshold`` (the skew head)."""
-    return (
-        df.groupBy(key).count().filter(F.col("count") > threshold).select(key)
-    )
-
-
 def salt_expr(df: DataFrame, salt_buckets: int):
     """Deterministic per-row salt: hash over ALL columns (see
     ``salted_join`` docstring for why it must not be key-derived)."""

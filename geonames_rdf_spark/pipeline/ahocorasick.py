@@ -17,15 +17,12 @@ from collections import deque
 class AhoCorasick:
     """Classic trie + failure-link automaton over unicode strings."""
 
-    def __init__(self, patterns: dict[str, list[int]]):
-        """``patterns``: surface form -> payload (candidate entity ids)."""
-        self.n_patterns = sum(1 for p in patterns if p)
+    def __init__(self, patterns):
+        """``patterns``: iterable of surface forms."""
         self.goto: list[dict[str, int]] = [{}]
-        # (``__len__`` below returns n_patterns — the cross-backend
-        # matcher-size contract used by the stale-broadcast guards)
-        self.out: list[list[tuple[str, list[int]]]] = [[]]
+        self.out: list[list[str]] = [[]]
         self.fail: list[int] = [0]
-        for pat, payload in patterns.items():
+        for pat in dict.fromkeys(patterns):
             if not pat:
                 continue
             state = 0
@@ -38,7 +35,7 @@ class AhoCorasick:
                     nxt = len(self.goto) - 1
                     self.goto[state][ch] = nxt
                 state = nxt
-            self.out[state].append((pat, payload))
+            self.out[state].append(pat)
         # BFS failure links
         q: deque[int] = deque()
         for s in self.goto[0].values():
@@ -54,11 +51,8 @@ class AhoCorasick:
                 self.fail[s] = self.goto[f].get(ch, 0) if self.goto[f].get(ch, 0) != s else 0
                 self.out[s] = self.out[s] + self.out[self.fail[s]]
 
-    def __len__(self) -> int:
-        return self.n_patterns
-
-    def scan(self, text: str) -> list[tuple[int, str, list[int]]]:
-        """Yield (start_offset, surface, payload) for every match with
+    def scan(self, text: str) -> list[tuple[int, str]]:
+        """(start_offset, surface) for every match with
         word-boundary guards (a toponym inside a longer word is noise).
 
         Hot loop: local bindings + empty-output fast path (~30% faster
@@ -81,8 +75,8 @@ class AhoCorasick:
             nxt_ok = i + 1 >= n or not text[i + 1].isalnum()
             if not nxt_ok:
                 continue
-            for pat, payload in matches:
+            for pat in matches:
                 start = i - len(pat) + 1
                 if start == 0 or not text[start - 1].isalnum():
-                    append((start, pat, payload))
+                    append((start, pat))
         return res

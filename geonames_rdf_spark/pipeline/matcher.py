@@ -1,12 +1,14 @@
 """Multi-pattern matcher backends for the mention scan.
 
-Three interchangeable backends behind ``build_matcher``:
+Three interchangeable backends behind ``build_matcher``.  A matcher holds
+surface strings only; ``scan(text)`` returns ``(start, surface)`` pairs and
+the caller looks the surface up in its own map:
 
 1. ``pyahocorasick`` (C extension) when importable — fastest, any size.
 2. ``TrieRegexMatcher`` — the pattern set compiled into a TRIE-STRUCTURED
    regular expression (shared prefixes become nested groups), scanned by
-   CPython's C regex engine with a zero-width lookahead so overlapping
-   starts are visited.  The engine's greedy nested-optional walk finds the
+   CPython's C regex engine; each search restarts one character past the
+   previous match start, so overlapping starts are visited.  The engine's greedy nested-optional walk finds the
    LONGEST pattern at each position; shorter patterns at the same start
    are exactly the trie-terminal prefixes of that longest match, recovered
    from a precomputed prefix-chain.  Word-boundary guards are applied in
@@ -21,8 +23,8 @@ tests/test_matcher.py over adversarial nesting/overlap cases.
 
 Scale note (SURVEY §2, DESIGN.md): the matcher is built once on the
 driver and broadcast; per-executor memory is the binding constraint at
-the 13M-surface gazetteer scale — the regex program is ~10x smaller than
-the dict-trie (measured in DESIGN.md), pyahocorasick smaller still.
+the 13M-surface gazetteer scale — the regex program takes about half the
+dict-trie's memory (measured in DESIGN.md), pyahocorasick less still.
 """
 
 from __future__ import annotations
@@ -63,10 +65,10 @@ def _trie_regex(node: _TrieNode) -> str:
 class TrieRegexMatcher:
     """Exact Aho-Corasick semantics via one trie-structured regex scan."""
 
-    def __init__(self, patterns: dict[str, list]):
-        self._payload = {p: v for p, v in patterns.items() if p}
+    def __init__(self, patterns):
+        pats = dict.fromkeys(p for p in patterns if p)
         root = _TrieNode()
-        for pat in self._payload:
+        for pat in pats:
             node = root
             for ch in pat:
                 node = node.children.setdefault(ch, _TrieNode())
@@ -74,7 +76,7 @@ class TrieRegexMatcher:
         # every pattern that is a proper prefix of ``pat`` (the only other
         # patterns that can match at the same start position)
         self._prefix_chain: dict[str, list[str]] = {}
-        for pat in self._payload:
+        for pat in pats:
             node, chain = root, []
             for i, ch in enumerate(pat[:-1]):
                 node = node.children[ch]
@@ -85,20 +87,16 @@ class TrieRegexMatcher:
         # its first-charset skip between attempts — the inter-match gap is
         # scanned at C memchr speed instead of one VM attempt per offset.
         # Overlap is recovered by restarting the search at start+1.
-        self._re = re.compile(_trie_regex(root)) if self._payload else None
+        self._re = re.compile(_trie_regex(root)) if pats else None
 
-    def __len__(self) -> int:
-        return len(self._payload)
-
-    def scan(self, text: str) -> list[tuple[int, str, list]]:
-        """(start, pattern, payload) triples, word-boundary-guarded —
-        identical set to ``AhoCorasick.scan`` (order: by start, then
-        pattern length ascending)."""
+    def scan(self, text: str) -> list[tuple[int, str]]:
+        """(start, pattern) pairs, word-boundary-guarded — identical set
+        to ``AhoCorasick.scan`` (order: by start, then pattern length
+        ascending)."""
         if self._re is None or not text:
             return []
         res = []
         n = len(text)
-        payload = self._payload
         chain = self._prefix_chain
         append = res.append
         search = self._re.search
@@ -115,45 +113,42 @@ class TrieRegexMatcher:
             for pat in chain[longest]:
                 end = start + len(pat)
                 if end >= n or not text[end].isalnum():
-                    append((start, pat, payload[pat]))
+                    append((start, pat))
             end = start + len(longest)
             if end >= n or not text[end].isalnum():
-                append((start, longest, payload[longest]))
+                append((start, longest))
 
 
 class _PyAhoCorasickMatcher:
     """Wrapper over the pyahocorasick C extension (same scan contract)."""
 
-    def __init__(self, patterns: dict[str, list]):
+    def __init__(self, patterns):
         import ahocorasick  # noqa: F401 — optional C extension
 
         self._auto = ahocorasick.Automaton()
-        for pat, val in patterns.items():
+        for pat in patterns:
             if pat:
-                self._auto.add_word(pat, (pat, val))
+                self._auto.add_word(pat, pat)
         self._auto.make_automaton()
 
-    def __len__(self) -> int:
-        return len(self._auto)
-
-    def scan(self, text: str) -> list[tuple[int, str, list]]:
+    def scan(self, text: str) -> list[tuple[int, str]]:
         if not text:
             return []
         res = []
         n = len(text)
-        for end_idx, (pat, val) in self._auto.iter(text):
+        for end_idx, pat in self._auto.iter(text):
             start = end_idx - len(pat) + 1
             if start > 0 and text[start - 1].isalnum():
                 continue
             if end_idx + 1 < n and text[end_idx + 1].isalnum():
                 continue
-            res.append((start, pat, val))
+            res.append((start, pat))
         return res
 
 
 def scored_fingerprint(scored_map: dict[str, list]) -> tuple[int, int]:
     """Content fingerprint of a surface map: (count, order-independent sum
-    of per-(key, payload) hashes).  Covers keys AND payloads — two maps
+    of per-(key, candidates) hashes).  Covers keys AND candidates — two maps
     with identical surfaces but different candidate ids or priors must not
     compare equal (a scan would silently match from the stale broadcast).
     Built-in ``hash`` is process-seeded, which is right here: both sides
@@ -166,25 +161,22 @@ def scored_fingerprint(scored_map: dict[str, list]) -> tuple[int, int]:
     return (n, acc)
 
 
-def build_matcher(patterns: dict[str, list], backend: str = "auto"):
-    """Best available matcher: C extension > trie-regex > pure Python.
+def build_matcher(surfaces):
+    """Matcher over the non-empty strings of ``surfaces`` (any iterable;
+    a surface map passes its keys): pyahocorasick when the C extension
+    imports, else the trie-regex up to ``REGEX_MAX_PATTERNS`` patterns,
+    else the pure-Python automaton.
 
-    An empty (or all-empty-key) pattern set short-circuits to the regex
-    backend, whose scan returns [] — pyahocorasick leaves a wordless
-    automaton un-constructed and its iter() raises at scan time."""
-    if not any(patterns):
-        return TrieRegexMatcher({})
-    if backend in ("auto", "c"):
-        try:
-            return _PyAhoCorasickMatcher(patterns)
-        except ImportError:
-            if backend == "c":
-                raise
-    if backend in ("auto", "regex") and len(patterns) <= REGEX_MAX_PATTERNS:
-        return TrieRegexMatcher(patterns)
-    if backend == "regex":
-        raise ValueError(
-            f"{len(patterns)} patterns exceed REGEX_MAX_PATTERNS"
-            f" ({REGEX_MAX_PATTERNS}); use backend='python'"
-        )
-    return AhoCorasick(patterns)
+    An empty pattern set short-circuits to the regex backend, whose scan
+    returns [] — pyahocorasick leaves a wordless automaton
+    un-constructed and its iter() raises at scan time."""
+    pats = dict.fromkeys(p for p in surfaces if p)
+    if not pats:
+        return TrieRegexMatcher(())
+    try:
+        return _PyAhoCorasickMatcher(pats)
+    except ImportError:
+        pass
+    if len(pats) <= REGEX_MAX_PATTERNS:
+        return TrieRegexMatcher(pats)
+    return AhoCorasick(pats)

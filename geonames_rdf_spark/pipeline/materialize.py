@@ -9,21 +9,17 @@ by url-hash buckets for the lineage/resume layer.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geonames_rdf_spark import vocab
 from geonames_rdf_spark.functions.terms import feature_uri, iri, nt_term
 from geonames_rdf_spark.operators import build
-from geonames_rdf_spark.pipeline import corpus, extract, link, mentions
+from geonames_rdf_spark.pipeline import corpus, extract, mentions
 
 GN_LOCATED_IN = vocab.GN + "locatedIn"
-N_BUCKETS = 32
-
-
-def with_bucket(pages: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
-    """url-hash partitioning key (north_rule: partitioned by url-hash)."""
-    return pages.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)))
 
 
 def mention_triples(linked: DataFrame) -> DataFrame:
@@ -42,10 +38,10 @@ def mention_triples(linked: DataFrame) -> DataFrame:
 
 
 class PipelineStages(dict):
-    """Lazy stage map: each stage's plan — and, more importantly, its
-    driver-side surface-map ``collect`` — is built on FIRST ACCESS only.
-    A caller that consumes only ``linked`` never pays the staged
-    candidate-map collect that only ``mentions`` needs (and vice versa).
+    """Lazy stage map: each stage's plan — and, more importantly, the
+    driver-side surface-map ``collect`` behind it — is built on FIRST
+    ACCESS only.  A caller that consumes only ``pages`` never pays the
+    collect.
 
     The full mapping protocol sees pending stages too (``in`` / ``get``
     / ``keys`` / ``len``), and a factory that raises stays registered so
@@ -127,8 +123,10 @@ def run_pipeline(
     would otherwise accumulate one features+pages cache pair per run).
 
     The gazetteer is derived ONCE and threaded into ``build_kg`` (it used
-    to be re-derived inside the triple stage); stages are lazy, so each
-    driver-side collect happens only for consumers that need it.
+    to be re-derived inside the triple stage); stages are lazy, and the
+    ``mentions`` and ``linked`` stages share one scored-map collect (and,
+    through the content-keyed memo, one matcher broadcast), made on the
+    first access of either.
     """
     tables = build.gazetteer_tables(spark, sf_dir)
     features = tables["features"]
@@ -150,6 +148,8 @@ def run_pipeline(
         raw_pages = raw_pages.cache()
 
     stages = PipelineStages({})
+    scored_map = functools.cache(
+        lambda: mentions.build_scored_surface_map(features))
 
     def mk_pages() -> DataFrame:
         # the staged S1 output (url, warc_ts, html, lang, text) for
@@ -165,9 +165,8 @@ def run_pipeline(
         # batch (candidate fan-out never shuffles).  The staged operators
         # (detect_mentions + link_mentions) remain available for scoring
         # features that cannot be broadcast; equivalence is test-pinned.
-        linked = mentions.detect_and_link(
-            raw_pages, mentions.build_scored_surface_map(features),
-            from_html=True)
+        linked = mentions.detect_and_link(raw_pages, scored_map(),
+                                          from_html=True)
         if canonicalize_entities:
             # S5: sameAs clustering -> canonical-id rewrite of links
             from geonames_rdf_spark.pipeline import canonicalize
@@ -179,11 +178,9 @@ def run_pipeline(
 
     def mk_mentions() -> DataFrame:
         # candidate-level mention stream via the staged operator (same
-        # fused extraction — identical match set, test-pinned)
-        return mentions.detect_mentions(
-            raw_pages, mentions.build_surface_map(features),
-            carry_lang=True, from_html=True
-        )
+        # fused extraction and map — identical match set, test-pinned)
+        return mentions.detect_mentions(raw_pages, scored_map(),
+                                        carry_lang=True, from_html=True)
 
     def mk_triples() -> DataFrame:
         mt = mention_triples(stages["linked"])

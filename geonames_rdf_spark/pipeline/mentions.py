@@ -1,12 +1,13 @@
 """Toponym mention detection + candidate generation (stage S3).
 
-The Aho-Corasick automaton (surface -> candidate geonameids) is built once
-on the driver from the gazetteer and broadcast; the scan runs inside
-``mapInPandas`` over Arrow batches.  Candidates are emitted inline (the
-surface->candidates map travels WITH the automaton), so the Zipf-skewed
-mention->candidate 'join' never shuffles at all — the classic broadcast
-defeat of join skew.  For gazetteer sides too big to broadcast, use
-``operators.skew.salted_join`` instead.
+One gazetteer serves both scans: the scored surface map
+(``build_scored_surface_map``: surface -> scored candidates) and the
+Aho-Corasick matcher over its surfaces are built once on the driver and
+broadcast together as one ``(matcher, scored_map)`` bundle; the scans run
+inside ``mapInPandas`` over Arrow batches.  Candidates are read from the
+map inline, so the Zipf-skewed mention->candidate 'join' never shuffles
+at all — the classic broadcast defeat of join skew.  For gazetteer sides
+too big to broadcast, use ``operators.skew.salted_join`` instead.
 """
 
 from __future__ import annotations
@@ -14,34 +15,21 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geonames_rdf_spark.pipeline.matcher import build_matcher, scored_fingerprint
 
-MENTION_SCHEMA = (
-    "url string, surface string, begin int, end int, candidate bigint"
-)
-MENTION_SCHEMA_LANG = MENTION_SCHEMA + ", lang string"
-
-
-def build_surface_map(features_with_bestname: DataFrame) -> dict[str, list[int]]:
-    """surface form -> sorted candidate geonameids (driver-side, dimension)."""
-    rows = (
-        features_with_bestname.select("bestName", "geonameid")
-        .groupBy("bestName").agg(F.sort_array(F.collect_set("geonameid")).alias("ids"))
-        .collect()
-    )
-    return {r["bestName"]: list(r["ids"]) for r in rows if r["bestName"]}
-
 
 def detect_mentions(
     pages: DataFrame,
-    surface_map: dict[str, list[int]],
+    scored_map: dict[str, list[tuple[int, float, str]]],
     carry_lang: bool = False,
     from_html: bool = False,
 ) -> DataFrame:
-    """(url, surface, begin, end, candidate[, lang]) — one row per candidate.
+    """(url, surface, begin, end, candidate[, lang]) — one row per candidate
+    of ``scored_map`` (``build_scored_surface_map``), the map
+    ``detect_and_link`` scans with.
 
     ``carry_lang=True`` propagates the page language with each mention so
     the linker's context feature needs NO join back to the (huge) page
@@ -54,19 +42,17 @@ def detect_mentions(
     anti-scales (see BENCH.md).  Extraction semantics are byte-identical
     (same ``extract.extract_text_py`` pure function).
 
-    The matcher broadcast is reused across calls with equal map content
-    (``_memoized_broadcast``).
+    The (matcher, map) broadcast is shared with ``detect_and_link`` and
+    reused across calls with equal map content (``_memoized_broadcast``).
     """
-    bc = _memoized_broadcast(pages.sparkSession, "matcher",
-                             scored_fingerprint(surface_map),
-                             lambda: build_matcher(surface_map))
+    bc = _memoized_broadcast(pages.sparkSession, scored_map)
     text_col = "html" if from_html else "text"
     cols = ["url", text_col] + (["lang"] if carry_lang else [])
     if from_html:
         from geonames_rdf_spark.pipeline.extract import extract_text_py
 
     def scan(batches):
-        ac = bc.value
+        ac, smap = bc.value
         for pdf in batches:
             rows: dict[str, list] = {c: [] for c in
                                      ("url", "surface", "begin", "end",
@@ -83,7 +69,7 @@ def detect_mentions(
                     text = extract_text_py(text) if text is not None else None
                 if not text:
                     continue
-                for start, pat, payload in ac.scan(text):
+                for start, pat in ac.scan(text):
                     # ONE row per match; the candidate fan-out (Zipf-hot
                     # surfaces carry many ids) explodes JVM-side below —
                     # ~|candidates|x less data across the Arrow boundary
@@ -91,7 +77,8 @@ def detect_mentions(
                     rows["surface"].append(pat)
                     rows["begin"].append(start)
                     rows["end"].append(start + len(pat))
-                    rows["candidates"].append(payload)
+                    rows["candidates"].append(
+                        [cid for cid, _, _ in smap[pat]])
                     if carry_lang:
                         rows["lang"].append(lang)
             # a batch without a match has nothing to send: an empty
@@ -110,42 +97,6 @@ def detect_mentions(
         *out_cols)
 
 
-def detect_mentions_sharded(
-    pages: DataFrame,
-    surface_map: dict[str, list[int]],
-    shards: int = 4,
-    carry_lang: bool = False,
-) -> DataFrame:
-    """Mention scan for pattern sets too large for ONE broadcast matcher
-    (DESIGN.md ceiling: ~8M surfaces for the regex backend, ~4M for the
-    dict-trie).  The pattern set splits into ``shards`` deterministic
-    md5-keyed shards, each scanned as its own broadcast pass; the union
-    is narrow (no shuffle added) and equals the single-pass scan exactly
-    because pattern sets are independent in Aho-Corasick semantics —
-    every (start, pattern) occurrence is found by exactly the shard
-    owning that pattern.
-
-    Per-executor memory is bounded by the LARGEST shard, at the cost of
-    scanning the text ``shards`` times — the trade a 13M-surface
-    gazetteer needs when the C-extension backend is unavailable.
-    """
-    import hashlib
-
-    parts: list[dict[str, list[int]]] = [{} for _ in range(shards)]
-    for pat, payload in surface_map.items():
-        h = int.from_bytes(hashlib.md5(pat.encode("utf-8")).digest()[:4], "little")
-        parts[h % shards][pat] = payload
-    out = None
-    for part in parts:
-        if not part:
-            continue
-        scan = detect_mentions(pages, part, carry_lang=carry_lang)
-        out = scan if out is None else out.unionByName(scan)
-    if out is None:
-        return detect_mentions(pages, {}, carry_lang=carry_lang)
-    return out
-
-
 # --- fused scan + link (the 100 TB hot path) -------------------------------
 
 # worker-side bundle cache: (abs path, size, mtime) -> (matcher, scored_map).
@@ -153,28 +104,32 @@ def detect_mentions_sharded(
 # content is reloaded; hit = zero per-job cost after the first task.
 _BUNDLE_CACHE: dict = {}
 
-# Driver-side broadcast memo — the ONE way a matcher broadcast is reused:
-# building the automaton + broadcasting it is a per-CALL fixed cost —
-# driver trie/regex compile + pickle, then every Python worker unpickles
-# AND recompiles the regex program once per broadcast id.  Repeated scans
-# over the same gazetteer (bench passes, incremental micro-batches, the
-# per-bucket resume loop) would pay it every time.  Memoized per kind
-# ("matcher" for detect_mentions, "bundle" for detect_and_link) on
-# ``scored_fingerprint`` — keys AND payloads, so a map whose candidate ids
-# or priors changed broadcasts fresh even when its surfaces did not; one
-# live entry per kind bounds memory.  This reuses a *dimension*
-# broadcast, never results: every scan still computes from its input
-# pages.
+# Driver-side broadcast memo — the ONE way the (matcher, scored_map)
+# bundle broadcast is reused, by both scans: building the automaton +
+# broadcasting it is a per-CALL fixed cost — driver trie/regex compile +
+# pickle, then every Python worker unpickles AND recompiles the regex
+# program once per broadcast id.  Repeated scans over the same gazetteer
+# (bench passes, incremental micro-batches, the per-bucket resume loop,
+# the mentions and linked stages of one pipeline) would pay it every
+# time.  Keyed on ``scored_fingerprint`` — keys AND candidates, so a map
+# whose candidate ids or priors changed broadcasts fresh even when its
+# surfaces did not; one live entry bounds memory.  This reuses a
+# *dimension* broadcast, never results: every scan still computes from
+# its input pages.
 _BC_MEMO: dict = {}
 
 
-def _memoized_broadcast(spark, kind: str, fp: tuple, builder):
+def _memoized_broadcast(spark, scored_map: dict):
+    """Broadcast of ``(build_matcher(scored_map), scored_map)``, reused
+    while the map content and the SparkContext are unchanged."""
     sc = spark.sparkContext
-    hit = _BC_MEMO.get(kind)
-    if hit is not None and hit[0] == fp and hit[2] is sc:
-        return hit[1]
-    bc = sc.broadcast(builder())
-    _BC_MEMO[kind] = (fp, bc, sc)
+    fp = scored_fingerprint(scored_map)
+    hit = _BC_MEMO.get(fp)
+    if hit is not None and hit[1] is sc:
+        return hit[0]
+    bc = sc.broadcast((build_matcher(scored_map), scored_map))
+    _BC_MEMO.clear()
+    _BC_MEMO[fp] = (bc, sc)
     return bc
 
 
@@ -195,7 +150,7 @@ def save_matcher_bundle(scored_map: dict, path: str) -> dict:
     """
     import pickle
 
-    bundle = (build_matcher({k: [] for k in scored_map}), scored_map)
+    bundle = (build_matcher(scored_map), scored_map)
     with open(path, "wb") as f:
         pickle.dump(bundle, f, protocol=pickle.HIGHEST_PROTOCOL)
     return {"bytes": os.path.getsize(path), "surfaces": len(scored_map)}
@@ -289,9 +244,7 @@ def detect_and_link(pages,
                 " content hash).")
         bc = None
     else:
-        bc = _memoized_broadcast(
-            spark, "bundle", scored_fingerprint(scored_map),
-            lambda: (build_matcher({k: [] for k in scored_map}), scored_map))
+        bc = _memoized_broadcast(spark, scored_map)
     text_col = "html" if from_html else "text"
     if from_html:
         from geonames_rdf_spark.pipeline.extract import extract_text_py
@@ -311,7 +264,7 @@ def detect_and_link(pages,
                 if not text:
                     continue
                 bonus_cc = lang_cc.get(lang)
-                for start, pat, _ in ac.scan(text):
+                for start, pat in ac.scan(text):
                     best_id, best_score = None, None
                     for cid, prior, cc in smap[pat]:
                         s = prior + (lang_bonus if cc == bonus_cc else 0.0)

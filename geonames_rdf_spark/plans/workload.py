@@ -10,7 +10,7 @@ property path is the BFS fixpoint in ``operators.graph``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geonames_rdf_spark import vocab
@@ -330,20 +330,6 @@ def q_museums(triples: DataFrame, city_uri: str, limit: int = 100) -> DataFrame:
         F.col("subj").alias("feature"), "name", "latitude", "longitude",
         "distance_in_metre", "wikipediaArticle",
     ).orderBy("distance_in_metre", "feature").limit(limit)
-
-
-def q_code_labels(triples: DataFrame, labels: DataFrame) -> DataFrame:
-    """C12 (hierarchy.rq:17-19): join feature codes to ontology prefLabels.
-
-    ``labels``: (code_iri, label) — static ontology concepts, broadcast.
-    """
-    codes = (
-        triples.filter(F.col("pred") == vocab.GN_FEATURE_CODE)
-        .select(F.col("subj").alias("feature"), F.col("obj").alias("code_iri"))
-    )
-    return codes.join(F.broadcast(labels), "code_iri", "inner").select(
-        "feature", "code_iri", "label"
-    )
 
 
 def q_all_code_labels(triples: DataFrame) -> DataFrame:

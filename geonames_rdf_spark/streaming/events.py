@@ -5,9 +5,9 @@ crawl/event data).
 Batch/stream symmetry: the same windowed-aggregation logic runs as a batch
 DataFrame (oracle-checkable against DuckDB) and as a streaming query with
 watermarked event-time windows (tested via the file source -> memory sink
-round trip).  ``streaming_kg_mentions`` runs the KG mention scan as a
-streaming stage — pages arriving as micro-batches produce the same mention
-stream the batch pipeline yields.
+round trip).  ``run_stream_kg`` and its WARC/catalog variants run the
+fused KG linking scan as a streaming stage — pages arriving as
+micro-batches produce the same mention triples the batch pipeline yields.
 """
 
 from __future__ import annotations
@@ -152,80 +152,6 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.concat_ws("-", F.col("user_id"), F.col("session_seq")),
         )
         .drop("_gap", "_new_session")
-    )
-
-
-def run_stream_mentions(
-    spark: SparkSession,
-    pages_dir: str,
-    surface_map: dict[str, list[int]],
-    query_name: str = "stream_mentions",
-):
-    """KG mention detection as a streaming stage: micro-batched pages ->
-    the same Aho-Corasick mapInPandas scan -> memory sink."""
-    from geonames_rdf_spark.pipeline import mentions as m
-
-    pages = spark.readStream.schema(
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ).parquet(pages_dir)
-    ment = m.detect_mentions(pages, surface_map, carry_lang=True)
-    return (
-        ment.writeStream.outputMode("append")
-        .format("memory").queryName(query_name)
-        .start()
-    )
-
-
-def run_stream_linked(
-    spark: SparkSession,
-    pages_dir: str,
-    scored_map: dict[str, list[tuple[int, float, str]]],
-    query_name: str = "stream_linked",
-):
-    """The FUSED hot path (detect_and_link: extract+match+score+argmax in
-    one Arrow batch) as a streaming stage — micro-batched crawl pages in,
-    resolved entity links out.  Stateless map => append mode, no
-    watermark needed; the batch twin is oracle-checked
-    (pipeline_linked)."""
-    from geonames_rdf_spark.pipeline import mentions as m
-
-    pages = spark.readStream.schema(
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ).parquet(pages_dir)
-    linked = m.detect_and_link(pages, scored_map, from_html=True)
-    return (
-        linked.writeStream.outputMode("append")
-        .format("memory").queryName(query_name)
-        .start()
-    )
-
-
-def run_stream_linked_canonical(
-    spark: SparkSession,
-    pages_dir: str,
-    scored_map: dict[str, list[tuple[int, float, str]]],
-    mapping,
-    query_name: str = "stream_linked_canonical",
-):
-    """Fused streaming linking + S5 canonical rewrite as a STREAM-STATIC
-    join: the canonical map is a dimension (broadcast static side), so
-    the rewrite composes with the append-mode stateless stream — no
-    watermark, no stream-stream state.  This is how a continuously-
-    crawling deployment keeps emitted entity ids canonical without
-    re-running batch canonicalization per micro-batch; the batch twin is
-    oracle-checked (pipeline_linked_canonical)."""
-    from geonames_rdf_spark.pipeline import canonicalize
-    from geonames_rdf_spark.pipeline import mentions as m
-
-    pages = spark.readStream.schema(
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ).parquet(pages_dir)
-    linked = m.detect_and_link(pages, scored_map, from_html=True)
-    linked = canonicalize.rewrite_links(linked, mapping)
-    return (
-        linked.writeStream.outputMode("append")
-        .format("memory").queryName(query_name)
-        .start()
     )
 
 

@@ -174,18 +174,6 @@ TABLE_SQL: dict[str, str] = {
     "ags_map": AGS_MAP_SQL,
 }
 
-BASE_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
-
-def register_base(spark: SparkSession, sf_dir: str, tables=BASE_TABLES) -> None:
-    """Register the driver parquet tables as temp views."""
-    for name in tables:
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
-
-
 def register_gazetteer(spark: SparkSession, sf_dir: str,
                        replicate: int = 1) -> dict[str, DataFrame]:
     """Build the derived gazetteer views; returns name -> DataFrame.

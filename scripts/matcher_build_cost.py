@@ -54,7 +54,7 @@ def main() -> None:
     out["surfaces"] = len(smap)
 
     t0 = time.perf_counter()
-    matcher = build_matcher({k: [] for k in smap})
+    matcher = build_matcher(smap)
     out["matcher_build_s"] = round(time.perf_counter() - t0, 2)
     out["matcher_backend"] = type(matcher).__name__
 

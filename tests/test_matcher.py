@@ -1,14 +1,18 @@
 """TrieRegexMatcher == pure-Python AhoCorasick on adversarial cases.
 
-The regex backend must reproduce the automaton's exact match set:
-overlapping occurrences, nested prefix patterns at one start position,
-word-boundary guards, unicode, punctuation inside patterns.
+The regex backend must reproduce the automaton's exact match set of
+(start, surface) pairs: overlapping occurrences, nested prefix patterns at
+one start position, word-boundary guards, unicode, punctuation inside
+patterns.
 """
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
+from geonames_rdf_spark.pipeline import matcher
 from geonames_rdf_spark.pipeline.ahocorasick import AhoCorasick
 from geonames_rdf_spark.pipeline.matcher import TrieRegexMatcher, build_matcher
 
@@ -21,27 +25,26 @@ def both(patterns, text):
 
 @pytest.mark.parametrize("patterns,text", [
     # nested prefixes all matching at one start
-    ({"ab": [1], "abc": [2], "abcd": [3]}, "zz abcd abc ab zz"),
+    (["ab", "abc", "abcd"], "zz abcd abc ab zz"),
     # prefix blocked by the after-boundary, longer one passes
-    ({"New York": [1], "New York City": [2]},
-     "in New York City and New York."),
+    (["New York", "New York City"], "in New York City and New York."),
     # overlapping starts
-    ({"aba": [1]}, "x ababa aba y"),
+    (["aba"], "x ababa aba y"),
     # boundary guards: alnum-adjacent occurrences are noise
-    ({"Paris": [1]}, "Paris Parising xParis (Paris) Paris2 Paris"),
+    (["Paris"], "Paris Parising xParis (Paris) Paris2 Paris"),
     # punctuation and hyphens inside patterns
-    ({"ort-1": [1], "Gross Ort 1, Alpha": [2]},
+    (["ort-1", "Gross Ort 1, Alpha"],
      "see ort-1 and Gross Ort 1, Alpha; also ort-12"),
     # unicode letters count as word chars for the guard
-    ({"Zürich": [1], "Zü": [2]}, "in Zürich, Zü and Zürichsee"),
+    (["Zürich", "Zü"], "in Zürich, Zü and Zürichsee"),
     # pattern at text start/end (no chars beyond the boundary)
-    ({"abc": [1]}, "abc x abc"),
+    (["abc"], "abc x abc"),
     # patterns sharing long prefixes, branching late
-    ({"AltName 1": [1], "AltName 12": [2], "AltName 13": [3],
-      "AltName 2": [4]}, "AltName 12 and AltName 1 and AltName 13."),
+    (["AltName 1", "AltName 12", "AltName 13", "AltName 2"],
+     "AltName 12 and AltName 1 and AltName 13."),
     # empty text / no hits
-    ({"abc": [1]}, ""),
-    ({"abc": [1]}, "zzz"),
+    (["abc"], ""),
+    (["abc"], "zzz"),
 ])
 def test_regex_matches_automaton(patterns, text):
     a, r = both(patterns, text)
@@ -49,40 +52,46 @@ def test_regex_matches_automaton(patterns, text):
 
 
 def test_regex_matches_automaton_on_corpus_shapes():
-    pats = {f"AltName {i}": [i] for i in range(200)}
-    pats.update({f"Feature {i}": [1000 + i] for i in range(200)})
+    pats = [f"AltName {i}" for i in range(200)]
+    pats += [f"Feature {i}" for i in range(200)]
     text = ("Page 7 reports on AltName 12 and Feature 199 and AltName 1. "
             "Officials said AltName 123 was fine near Feature 19.")
     a, r = both(pats, text)
     assert a == r
-    assert ("Feature 19" in {p for _, p, _ in r}) is True
+    assert ("Feature 19" in {p for _, p in r}) is True
     # 'AltName 12' inside 'AltName 123' must NOT match (boundary)
-    starts = {(s, p) for s, p, _ in r}
     assert all(not (p == "AltName 12" and text[s + 10].isdigit())
-               for s, p in starts)
+               for s, p in r)
 
 
-def test_build_matcher_fallback_selection():
-    m = build_matcher({"ab": [1]}, backend="regex")
-    assert isinstance(m, TrieRegexMatcher)
-    m2 = build_matcher({"ab": [1]}, backend="python")
-    assert isinstance(m2, AhoCorasick)
-    # auto without the C extension lands on the regex backend
-    m3 = build_matcher({"ab": [1]})
-    assert isinstance(m3, (TrieRegexMatcher,)) or hasattr(m3, "_auto")
+def test_build_matcher_fallback_selection(monkeypatch):
+    """Without the C extension, ``build_matcher`` picks the trie-regex up
+    to REGEX_MAX_PATTERNS patterns and the pure-Python automaton past it;
+    both find the same pairs.  A scored map's keys are its surfaces."""
+    monkeypatch.setitem(sys.modules, "ahocorasick", None)  # import fails
+    monkeypatch.setattr(matcher, "REGEX_MAX_PATTERNS", 2)
+    text = "New York!"
+    at_bound = build_matcher({"New": [(2, 0.0, "C0")],
+                              "New York": [(5, 0.0, "C0")], "": []})
+    assert isinstance(at_bound, TrieRegexMatcher)
+    over = build_matcher(["New", "New York", "York"])
+    assert isinstance(over, AhoCorasick)
+    assert at_bound.scan(text) == [(0, "New"), (0, "New York")]
+    assert sorted(over.scan(text)) == [(0, "New"), (0, "New York"),
+                                       (4, "York")]
 
 
 def test_matcher_is_picklable_for_broadcast():
     import pickle
 
-    m = TrieRegexMatcher({"New York": [5], "New": [2]})
+    m = TrieRegexMatcher(["New York", "New"])
     m2 = pickle.loads(pickle.dumps(m))
     assert sorted(m2.scan("New York!")) == sorted(m.scan("New York!"))
-    assert m2.scan("New York!") == [(0, "New", [2]), (0, "New York", [5])]
+    assert m2.scan("New York!") == [(0, "New"), (0, "New York")]
 
 
 def test_build_matcher_empty_pattern_set():
-    for pats in ({}, {"": [1]}):
+    for pats in ({}, {"": []}, [], [""]):
         m = build_matcher(pats)
         assert m.scan("anything at all") == []
 
@@ -101,16 +110,15 @@ try:
         text=st.text(alphabet="ab 1.x", min_size=0, max_size=60),
     )
     def test_regex_equals_automaton_property(pats, text):
-        patterns = {p: [hash(p) % 97] for p in pats}
-        assert (sorted(AhoCorasick(patterns).scan(text))
-                == sorted(TrieRegexMatcher(patterns).scan(text)))
+        assert (sorted(AhoCorasick(pats).scan(text))
+                == sorted(TrieRegexMatcher(pats).scan(text)))
 except ImportError:  # pragma: no cover - hypothesis is baked in here
     pass
 
 
 def test_detect_mentions_sees_changed_candidate_ids(spark):
-    """Same surface, new candidate ids: the matcher memo must not serve
-    the first map's payload to the second scan."""
+    """Same surface, new candidate ids: the broadcast memo must not serve
+    the first map's candidates to the second scan."""
     from geonames_rdf_spark.pipeline import mentions
 
     pages = spark.createDataFrame([("u", "Paris today")],
@@ -120,41 +128,65 @@ def test_detect_mentions_sees_changed_candidate_ids(spark):
         return [r["candidate"] for r in
                 mentions.detect_mentions(pages, smap).collect()]
 
-    assert candidates({"Paris": [111]}) == [111]
-    assert candidates({"Paris": [222]}) == [222]
+    assert candidates({"Paris": [(111, 0.0, "C0")]}) == [111]
+    assert candidates({"Paris": [(222, 0.0, "C0")]}) == [222]
+
+
+def _memo_bc():
+    from geonames_rdf_spark.pipeline import mentions
+
+    assert len(mentions._BC_MEMO) == 1
+    return next(iter(mentions._BC_MEMO.values()))[0]
 
 
 def test_broadcast_memo_content_keyed(spark):
     """The broadcast memo reuses a broadcast only for equal content: an
-    equal-size map of a different surface (matcher) and the same keys
-    with a different prior (scored bundle) each get a fresh broadcast
-    and scan with their own content."""
+    equal-size map of a different surface and the same keys with a
+    different prior each get a fresh broadcast and scan with their own
+    content."""
     from geonames_rdf_spark.pipeline import mentions
 
     pages = spark.createDataFrame(
         [("u", "Alpha visited", "en")], "url string, text string, lang string")
 
-    def memo(kind):
-        return mentions._BC_MEMO[kind][1]
-
-    map_a = {"Alpha": [1]}
-    map_b = {"Betaa": [1]}  # same size, different surface
+    map_a = {"Alpha": [(1, 0.5, "C0")]}
+    map_b = {"Betaa": [(1, 0.5, "C0")]}  # same size, different surface
     assert mentions.detect_mentions(pages, map_a).count() == 1
-    bc_a = memo("matcher")
+    bc_a = _memo_bc()
     assert mentions.detect_mentions(pages, dict(map_a)).count() == 1
-    assert memo("matcher") is bc_a  # equal content in a new dict: reused
+    assert _memo_bc() is bc_a  # equal content in a new dict: reused
     assert mentions.detect_mentions(pages, map_b).count() == 0
-    assert memo("matcher") is not bc_a
+    assert _memo_bc() is not bc_a
 
     def scores(smap):
         return [r["score"] for r in
                 mentions.detect_and_link(pages, smap).collect()]
 
-    scored_a = {"Alpha": [(1, 0.5, "C0")]}
     scored_b = {"Alpha": [(1, 0.9, "C0")]}  # same keys, different prior
-    assert scores(scored_a) == [2.5]  # prior + "en" bonus
-    bundle_a = memo("bundle")
-    assert scores(dict(scored_a)) == [2.5]
-    assert memo("bundle") is bundle_a
+    assert scores(map_a) == [2.5]  # prior + "en" bonus
+    bundle_a = _memo_bc()
+    assert scores(dict(map_a)) == [2.5]
+    assert _memo_bc() is bundle_a
     assert scores(scored_b) == [2.9]
-    assert memo("bundle") is not bundle_a
+    assert _memo_bc() is not bundle_a
+
+
+def test_both_scans_share_one_broadcast(spark, monkeypatch):
+    """``detect_mentions`` and then ``detect_and_link`` over one scored
+    map leave ONE memo entry and scan with the same broadcast."""
+    from geonames_rdf_spark.pipeline import mentions
+
+    monkeypatch.setattr(mentions, "_BC_MEMO", {})
+    pages = spark.createDataFrame(
+        [("u", "Alpha and Beta", "de")],
+        "url string, text string, lang string")
+    smap = {"Alpha": [(1, 0.5, "C0"), (2, 0.5, "C1")],
+            "Beta": [(3, 0.1, "C0")]}
+    got = {(r["surface"], r["candidate"]) for r in
+           mentions.detect_mentions(pages, smap, carry_lang=True).collect()}
+    assert got == {("Alpha", 2), ("Alpha", 1), ("Beta", 3)}
+    bc_id = _memo_bc()._jbroadcast.id()
+    linked = {(r["surface"], r["geonameid"]) for r in
+              mentions.detect_and_link(pages, smap).collect()}
+    assert linked == {("Alpha", 2), ("Beta", 3)}  # "de" favours C1
+    assert _memo_bc()._jbroadcast.id() == bc_id

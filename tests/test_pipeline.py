@@ -40,13 +40,13 @@ def test_extraction_determinism():
 
 
 def test_ahocorasick_matches_and_boundaries():
-    ac = AhoCorasick({"Paris": [1], "Paris Plage": [2], "London": [3]})
+    ac = AhoCorasick(["Paris", "Paris Plage", "London"])
     hits = ac.scan("From Paris Plage to London, not Parisian.")
-    got = {(s, p) for s, p, _ in hits}
+    got = set(hits)
     assert (5, "Paris") in got          # prefix of longer match, boundary ok
     assert (5, "Paris Plage") in got
     assert (20, "London") in got
-    assert not any(p == "Paris" and s == 32 for s, p, _ in hits)  # 'Parisian'
+    assert not any(p == "Paris" and s == 32 for s, p in hits)  # 'Parisian'
 
 
 def test_mentions_skew_head(result):
@@ -124,7 +124,7 @@ def test_lineage_resume_exact(spark, tmp_path):
     catalog.write_table(
         corpus.synthesize_pages(spark, surfaces, 120), corpus_path)
     pages = catalog.read_table(spark, corpus_path)
-    smap = mentions.build_surface_map(tables["features"])
+    smap = mentions.build_scored_surface_map(tables["features"])
 
     def triples_for(subset):
         m = mentions.detect_mentions(subset, smap)
@@ -154,7 +154,7 @@ def test_lineage_concurrent_buckets_exact(spark, tmp_path):
     tables = build.gazetteer_tables(spark, SF)
     surfaces = corpus.gazetteer_surfaces(tables["features"])
     pages = corpus.synthesize_pages(spark, surfaces, 120)
-    smap = mentions.build_surface_map(tables["features"])
+    smap = mentions.build_scored_surface_map(tables["features"])
 
     def triples_for(subset):
         m = mentions.detect_mentions(subset, smap)
@@ -204,12 +204,10 @@ def test_fused_link_equivalence(spark):
     surfaces = corpus.gazetteer_surfaces(feats)
     pages = corpus.synthesize_pages(spark, surfaces, 250).cache()
 
+    smap = mentions.build_scored_surface_map(feats)
     staged = link.link_mentions(
-        mentions.detect_mentions(pages, mentions.build_surface_map(feats),
-                                 carry_lang=True),
-        feats,
-    )
-    fused = mentions.detect_and_link(pages, mentions.build_scored_surface_map(feats))
+        mentions.detect_mentions(pages, smap, carry_lang=True), feats)
+    fused = mentions.detect_and_link(pages, smap)
 
     s = {(r["url"], r["begin"]): (r["geonameid"], r["score"])
          for r in staged.collect()}
@@ -221,25 +219,11 @@ def test_fused_link_equivalence(spark):
         assert abs(s[k][1] - f[k][1]) < 1e-6
 
 
-def test_sharded_scan_equals_single_pass(spark, result):
-    """detect_mentions_sharded == detect_mentions for any shard count
-    (the >8M-surface broadcast-ceiling path, DESIGN.md)."""
-    tables = build.gazetteer_tables(spark, SF)
-    smap = mentions.build_surface_map(tables["features"])
-    pages = result["pages"].limit(60)
-    single = mentions.detect_mentions(pages, smap, carry_lang=True)
-    sharded = mentions.detect_mentions_sharded(pages, smap, shards=5,
-                                               carry_lang=True)
-    assert single.exceptAll(sharded).count() == 0
-    assert sharded.exceptAll(single).count() == 0
-    assert sharded.count() == single.count() > 0
-
-
 def test_from_html_fusion_equals_staged(spark, result):
     """detect_mentions(from_html=True) == extract-then-scan (byte-identity
     extraction fused into the scan batch, one Python hop)."""
     tables = build.gazetteer_tables(spark, SF)
-    smap = mentions.build_surface_map(tables["features"])
+    smap = mentions.build_scored_surface_map(tables["features"])
     pages = result["pages"].limit(50)
     staged = mentions.detect_mentions(pages, smap, carry_lang=True)
     fused = mentions.detect_mentions(

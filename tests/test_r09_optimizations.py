@@ -40,9 +40,8 @@ def test_synthesize_pages_vectorized_parity(spark):
 
 
 def test_transitive_closure_local_matches_shuffle(spark):
-    """frontier='local' (the r09 default, driver-side BFS)
-    computes the same (node, depth) closure as the distributed
-    checkpointed loop, including on cycles and diamonds."""
+    """The driver-side BFS computes the same (node, depth) closure as the
+    distributed checkpointed loop, including on cycles and diamonds."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("b", "d"), ("d", "e"), ("x", "y"),
          ("c", "a"),  # cycle back to the seed
@@ -50,11 +49,9 @@ def test_transitive_closure_local_matches_shuffle(spark):
         ["src", "dst"])
     seeds = spark.createDataFrame([("a",)], ["node"])
     fast = {(r["node"], r["depth"]) for r in
-            graph.transitive_closure(edges, seeds,
-                                     frontier="local").collect()}
+            graph.transitive_closure(edges, seeds).collect()}
     slow = {(r["node"], r["depth"]) for r in
-            graph.transitive_closure(edges, seeds,
-                                     frontier="shuffle").collect()}
+            graph._closure_shuffle(edges, seeds, 30, "raise").collect()}
     assert fast == slow == {("a", 0), ("b", 1), ("c", 2), ("d", 2),
                             ("e", 3)}
 
@@ -65,14 +62,17 @@ def test_transitive_closure_local_matches_shuffle(spark):
     ([], 1, {(1, 0)}),  # empty edge list
     ([(1, 2), (2, 3)], 3, {(3, 0)}),  # seed with no out-edges
 ])
-def test_transitive_closure_routes_agree_on_edge_cases(spark, edge_rows,
-                                                       seed, expected):
+def test_transitive_closure_routes_agree_on_edge_cases(spark, monkeypatch,
+                                                       edge_rows, seed,
+                                                       expected):
     edges = local_frame(spark, edge_rows, "src bigint, dst bigint")
     seeds = local_frame(spark, [(seed,)], "node bigint")
-    for frontier in ("local", "shuffle"):
-        got = graph.transitive_closure(edges, seeds, frontier=frontier)
+    # a bound below any edge count sends the call down the shuffle route
+    for bound in (graph.LOCAL_EDGE_BOUND, -1):  # local, then shuffle
+        monkeypatch.setattr(graph, "LOCAL_EDGE_BOUND", bound)
+        got = graph.transitive_closure(edges, seeds)
         assert got.schema.simpleString() == "struct<node:bigint,depth:int>"
-        assert not got.schema["depth"].nullable, frontier
+        assert not got.schema["depth"].nullable, bound
         assert {(r["node"], r["depth"]) for r in got.collect()} == expected
 
 
@@ -100,16 +100,18 @@ def test_transitive_closure_local_over_bound_runs_shuffle(spark,
         assert len(calls) == routed, bound
 
 
-def test_transitive_closure_nonconvergence_still_raises(spark):
+def test_transitive_closure_nonconvergence_still_raises(spark, monkeypatch):
+    """Both routes raise on a truncated closure and converge, without
+    raising, when given exactly enough iterations."""
     edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")],
                                   ["src", "dst"])
     seeds = spark.createDataFrame([("a",)], ["node"])
-    with pytest.raises(graph.FixpointNotConverged):
-        graph.transitive_closure(edges, seeds, max_iter=1,
-                                 frontier="local")
-    # exactly-enough iterations converge without raising
-    assert graph.transitive_closure(edges, seeds, max_iter=3,
-                                    frontier="local").count() == 4
+    for bound in (graph.LOCAL_EDGE_BOUND, -1):  # local, then shuffle
+        monkeypatch.setattr(graph, "LOCAL_EDGE_BOUND", bound)
+        with pytest.raises(graph.FixpointNotConverged):
+            graph.transitive_closure(edges, seeds, max_iter=1)
+        assert graph.transitive_closure(edges, seeds,
+                                        max_iter=3).count() == 4
 
 
 def test_best_names_minby_matches_window(spark):
@@ -190,15 +192,12 @@ def test_matcher_broadcast_memo_keyed_on_content(spark):
     m1 = {"Alpha": [(1, 0.5, "C0")], "Beta": [(2, 0.1, "C1")]}
     m2 = {"Alpha": [(1, 0.5, "C0")], "Beta": [(2, 0.1, "C1")]}
     m3 = {"Alpha": [(1, 0.9, "C0")], "Beta": [(2, 0.1, "C1")]}  # new prior
-    from geonames_rdf_spark.pipeline.matcher import scored_fingerprint
-    b1 = mentions._memoized_broadcast(
-        spark, "bundle", scored_fingerprint(m1), lambda: ("x", m1))
-    b2 = mentions._memoized_broadcast(
-        spark, "bundle", scored_fingerprint(m2), lambda: ("x", m2))
-    b3 = mentions._memoized_broadcast(
-        spark, "bundle", scored_fingerprint(m3), lambda: ("x", m3))
+    b1 = mentions._memoized_broadcast(spark, m1)
+    b2 = mentions._memoized_broadcast(spark, m2)
+    b3 = mentions._memoized_broadcast(spark, m3)
     assert b1 is b2
     assert b3 is not b1
+    assert b3.value[1] == m3
 
 
 def test_lsh_banding_expr_matches_column_rendering(spark):

@@ -60,31 +60,6 @@ def test_stream_windowed_matches_batch(spark, events, tmp_path):
         q.stop()
 
 
-def test_stream_mentions(spark, tmp_path):
-    from geonames_rdf_spark.operators import build
-    from geonames_rdf_spark.pipeline import corpus, mentions
-
-    tables = build.gazetteer_tables(spark, SF)
-    feats = tables["features"]
-    surfaces = corpus.gazetteer_surfaces(feats)
-    pages = corpus.synthesize_pages(spark, surfaces, 100)
-    src = str(tmp_path / "pages_src")
-    pages.write.parquet(src)
-    smap = mentions.build_surface_map(feats)
-
-    q = ev.run_stream_mentions(spark, src, smap, query_name="tm_mentions")
-    try:
-        q.processAllAvailable()
-        streamed = spark.sql("SELECT * FROM tm_mentions")
-        batch = mentions.detect_mentions(
-            spark.read.parquet(src), smap, carry_lang=True
-        )
-        assert streamed.count() == batch.count()
-        assert streamed.exceptAll(batch).count() == 0
-    finally:
-        q.stop()
-
-
 def test_stateful_counts_across_batches(spark, events, tmp_path):
     """applyInPandasWithState accumulates across micro-batches: feed two
     file drops, final per-user counts must equal the batch aggregate."""
@@ -111,69 +86,6 @@ def test_stateful_counts_across_batches(spark, events, tmp_path):
         for u in want:
             assert final[u][0] == want[u][0]
             assert abs(final[u][1] - want[u][1]) < 0.05
-    finally:
-        q.stop()
-
-
-def test_stream_linked_fused(spark, tmp_path):
-    """Fused detect_and_link as a streaming stage == its batch twin."""
-    from geonames_rdf_spark.operators import build
-    from geonames_rdf_spark.pipeline import corpus, mentions
-
-    tables = build.gazetteer_tables(spark, SF)
-    feats = tables["features"]
-    surfaces = corpus.gazetteer_surfaces(feats)
-    pages = corpus.synthesize_pages(spark, surfaces, 100)
-    src = str(tmp_path / "pages_src2")
-    pages.write.parquet(src)
-    smap_scored = mentions.build_scored_surface_map(feats)
-
-    q = ev.run_stream_linked(spark, src, smap_scored, query_name="tm_linked")
-    try:
-        q.processAllAvailable()
-        streamed = spark.sql("SELECT * FROM tm_linked")
-        batch = mentions.detect_and_link(
-            spark.read.parquet(src), smap_scored, from_html=True)
-        assert streamed.count() == batch.count() > 0
-        assert streamed.exceptAll(batch).count() == 0
-    finally:
-        q.stop()
-
-
-def test_stream_linked_canonical_rewrite(spark, tmp_path):
-    """Stream-static canonical rewrite: streamed links come out already
-    canonicalized, equal to the batch rewrite."""
-    from geonames_rdf_spark.operators import build
-    from geonames_rdf_spark.pipeline import canonicalize, corpus, mentions
-
-    tables = build.gazetteer_tables(spark, SF)
-    feats = tables["features"]
-    surfaces = corpus.gazetteer_surfaces(feats)
-    pages = corpus.synthesize_pages(spark, surfaces, 100)
-    src = str(tmp_path / "pages_src3")
-    pages.write.parquet(src)
-    smap_scored = mentions.build_scored_surface_map(feats)
-    # duplicate world (+5M ids) so the map is non-trivial; shift the
-    # scored candidates the same way so the rewrite has work to do
-    shifted_map = {k: [(cid + 5000000, pr, cc) for cid, pr, cc in v]
-                   for k, v in smap_scored.items()}
-    dup = feats.withColumn("geonameid", F.col("geonameid") + 5000000)
-    mapping = canonicalize.canonical_map(
-        canonicalize.sameas_edges(feats.unionByName(dup)))
-
-    q = ev.run_stream_linked_canonical(
-        spark, src, shifted_map, mapping, query_name="tm_linked_canon")
-    try:
-        q.processAllAvailable()
-        streamed = spark.sql("SELECT * FROM tm_linked_canon")
-        batch = canonicalize.rewrite_links(
-            mentions.detect_and_link(spark.read.parquet(src), shifted_map,
-                                     from_html=True),
-            mapping)
-        assert streamed.count() == batch.count() > 0
-        assert streamed.exceptAll(batch).count() == 0
-        # the rewrite actually fired: every emitted id is back under 5M
-        assert streamed.filter("geonameid >= 5000000").count() == 0
     finally:
         q.stop()
 
