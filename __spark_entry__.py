@@ -20,7 +20,11 @@ from geonames_rdf_spark.plans import workload
 def _ensure_session_defaults(spark: SparkSession) -> None:
     """The driver may hand us a session with different defaults; pin the
     confs correctness depends on (UTC for timestamp<->epoch parity with
-    DuckDB; AQE for the skew/coalesce behaviour the plans assume)."""
+    DuckDB; AQE for the skew/coalesce behaviour the plans assume).
+    ``session.STATIC_CONF`` is not pinned: static confs are fixed when
+    the session is built, so a handed-in session keeps its own
+    generated-class cache size (results are the same; repeated queries
+    recompile more)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -346,6 +350,8 @@ def _q_warc_url_roundtrip(spark, sf_dir):
     hosts and overflows the cap; the others stay under it, so both the
     windowed Zipf-head branch and the shuffle-free tail branch are on
     the hash path)."""
+    import atexit
+    import shutil
     import tempfile
 
     from geonames_rdf_spark.operators import domains, urls
@@ -382,6 +388,8 @@ def _q_warc_url_roundtrip(spark, sf_dir):
         F.encode(F.concat(F.lit("dup "), F.col("text")), "UTF-8")
         .alias("html"))
     out = tempfile.mkdtemp(prefix="warc_oracle_")
+    # the returned frame reads these files lazily: remove them at exit
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
     warc.write_warc(primary.unionByName(dup).repartition(4, "url"), out)
     back = warc.read_warc(spark, out + "/*.warc.gz")
     kept = urls.dedup_pages_by_url(back, url_col="url", ts_col="warc_ts")

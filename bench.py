@@ -29,7 +29,9 @@ from geonames_rdf_spark import oracle  # noqa: E402
 from geonames_rdf_spark.operators import build, dedup, similarity  # noqa: E402
 from geonames_rdf_spark.pipeline import materialize  # noqa: E402
 from geonames_rdf_spark.plans import workload  # noqa: E402
-from geonames_rdf_spark.session import cpus, get_spark  # noqa: E402
+from geonames_rdf_spark.session import (  # noqa: E402
+    codegen_counters, cpus, get_spark,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_PAGES = int(os.environ.get("BENCH_PAGES", "20000"))
@@ -156,6 +158,9 @@ def main() -> None:
         ("web_pipeline", pipeline_run),
     ]
 
+    # compile work of the measured region (everything from here to the
+    # JSON line): Janino classes and HotSpot JIT time
+    codegen0 = codegen_counters(spark)
     timings: dict[str, float] = {}
     counts: dict[str, int] = {}
     for _ in range(reps):
@@ -358,6 +363,8 @@ def main() -> None:
         emb_cl.unpersist()
         emb_r.unpersist()
 
+    codegen = {k: v - codegen0[k]
+               for k, v in codegen_counters(spark).items()}
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "suite_seconds",
@@ -371,6 +378,7 @@ def main() -> None:
         "pages_per_sec": round(N_PAGES / timings["web_pipeline"]),
         "cpus": cpus(),
         "host": {"start": host_start, "end": _host_load()},
+        "codegen": codegen,
     }
     if steady:
         out["steady_state"] = steady

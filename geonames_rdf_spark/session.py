@@ -6,7 +6,8 @@ UTC session timezone (oracle/DuckDB parity), Arrow for the vectorized UDF
 stages, and shuffle partitions sized to cores rather than the 200 default.
 Cores, driver heap and the local scratch dir default to what the host
 offers; ``SPARK_GRAFT_CPUS``, ``SPARK_DRIVER_MEM`` and ``SPARK_LOCAL_DIRS``
-override them.
+override them.  ``STATIC_CONF`` holds the JVM-wide settings that
+``get_spark`` and the ``jobs/`` session builders share.
 """
 
 from __future__ import annotations
@@ -15,6 +16,19 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Static confs: read once per JVM, so they take effect only in a session
+# built with them; a session a caller hands in keeps its own values and
+# ``spark.conf.set`` cannot change them.
+STATIC_CONF = {
+    # Spark's LRU cache of generated classes (default 100 entries).  The
+    # repeated ops need up to ~150 classes (perfbench kg op 149, web op
+    # 93, the sf0.001 test kg op 150); at 100 entries a repeated kg op
+    # recompiles ~110 of them with Janino and JIT-compiles the new
+    # bytecode again, 20-30% of the op's CPU time (DESIGN.md, "Generated
+    # code and the JIT").  1000 holds them with ~6x headroom.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
 
 
 def cpus() -> int:
@@ -91,6 +105,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.bindAddress", "127.0.0.1")
+        .config(map=STATIC_CONF)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -160,3 +175,18 @@ def ensure_parallel(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= par:
         return df
     return df.repartition(par)
+
+
+def codegen_counters(spark: SparkSession) -> dict:
+    """Cumulative compile work in the driver JVM: ``janino_compilations``
+    (generated classes compiled by Janino, from ``CodegenMetrics``) and
+    ``jit_ms`` (HotSpot JIT time, from the ``CompilationMXBean``).  In
+    local mode the tasks run in that JVM too, so this covers all of it;
+    take the difference of two calls around a region."""
+    jvm = spark.sparkContext._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    mx = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return {
+        "janino_compilations": int(codegen.METRIC_COMPILATION_TIME().getCount()),
+        "jit_ms": int(mx.getTotalCompilationTime()),
+    }

@@ -220,7 +220,10 @@ def main() -> None:
     args = build_arg_parser().parse_args()
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("curate").getOrCreate()
+    from geonames_rdf_spark.session import STATIC_CONF
+
+    spark = (SparkSession.builder.appName("curate")
+             .config(map=STATIC_CONF).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     run(spark, args)
     spark.stop()
