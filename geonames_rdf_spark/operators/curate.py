@@ -45,7 +45,6 @@ def curate_corpus(docs: DataFrame, min_quality: float = 0.4,
                   max_top_bigram_share: float | None = None,
                   lm: dict | None = None,
                   max_ppl: float | None = None,
-                  drop_unmeasurable: bool = False,
                   max_pii: int | None = None) -> DataFrame:
     """(doc_id, source, lang, quality) for the curated subset."""
     if id_col != "doc_id":
@@ -79,13 +78,9 @@ def curate_corpus(docs: DataFrame, min_quality: float = 0.4,
         d = d.join(rep.filter(keep).select(id_col), id_col, "left_semi")
     if max_ppl is not None:
         # NULL ppl means "too short to measure" per lm_perplexity's
-        # contract — NOT "bad".  Keep unmeasurable docs unless the caller
-        # explicitly opts into dropping them.
-        keep_ppl = F.col("ppl").isNull() | (F.col("ppl") <= max_ppl)
-        if drop_unmeasurable:
-            keep_ppl = F.col("ppl").isNotNull() & (F.col("ppl") <= max_ppl)
+        # contract — NOT "bad", so unmeasurable docs are kept.
         ok = (textstats.lm_perplexity(d, lm, text_col)
-              .filter(keep_ppl)
+              .filter(F.col("ppl").isNull() | (F.col("ppl") <= max_ppl))
               .select(id_col))
         d = d.join(ok, id_col, "left_semi")
     if max_pii is not None:

@@ -86,27 +86,23 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 
 
 def _guard_oversized_buckets(keyed: DataFrame, key_cols: list[str],
-                             id_col: str, max_bucket: int, mode: str,
-                             observation=None) -> tuple[DataFrame, list[str]]:
+                             id_col: str, max_bucket: int,
+                             observation=None) -> DataFrame:
     """Cap the per-bucket cardinality of an LSH candidate self-join.
 
     One boilerplate-heavy cluster (cookie banners, SEO templates) can put
     10^6+ docs into a single band bucket and turn the within-bucket join
     quadratic.  This guard counts rows per bucket (one extra shuffle,
-    co-partitioned with the candidate join) and either:
-
-    - ``mode='drop'``  — skips oversized buckets entirely (recall loss is
-      confined to documents that ONLY collide in mega-buckets — for
-      near-dup dedup those are exactly the boilerplate clusters exact
-      dedup should collapse first);
-    - ``mode='split'`` — salts each oversized bucket into
-      ``ceil(n/max_bucket)`` groups joined within-group only, bounding
-      work at ~max_bucket^2 per group (cross-group pairs in that bucket
-      are sacrificed — a documented recall cap, never silent work blowup).
+    co-partitioned with the candidate join) and salts each oversized
+    bucket into ``ceil(n/max_bucket)`` groups joined within-group only,
+    bounding work at ~max_bucket^2 per group (cross-group pairs in that
+    bucket are sacrificed — a documented recall cap, never silent work
+    blowup).
 
     ``observation`` (pyspark Observation) rides the next action with
     (oversized_rows, total_rows) so lineage can record what was degraded.
-    Returns (guarded_df, extra_join_key_cols).
+    Returns ``keyed`` plus a ``_salt`` column to join on beside
+    ``key_cols``.
 
     r09 shape: the per-bucket count is a WINDOW over the bucket key —
     one exchange of the keyed rows, after which the candidate self-join
@@ -124,34 +120,24 @@ def _guard_oversized_buckets(keyed: DataFrame, key_cols: list[str],
             F.count_if(F.col("_bn") > max_bucket).alias("oversized_rows"),
             F.count(F.lit(1)).alias("total_rows"),
         )
-    if mode == "drop":
-        return out.filter(F.col("_bn") <= max_bucket).drop("_bn"), []
-    if mode == "split":
-        n_groups = F.greatest(
-            F.ceil(F.col("_bn") / F.lit(max_bucket)), F.lit(1))
-        out = (out.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col).cast("string")), n_groups))
-            .drop("_bn"))
-        return out, ["_salt"]
-    raise ValueError(f"oversize mode must be 'drop' or 'split', got {mode!r}")
+    n_groups = F.greatest(F.ceil(F.col("_bn") / F.lit(max_bucket)), F.lit(1))
+    return (out.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col(id_col).cast("string")), n_groups))
+        .drop("_bn"))
 
 
 DEFAULT_MAX_BUCKET = 100_000
-"""Default per-bucket cardinality cap for the LSH self-joins.  Finite BY
-DEFAULT: an unguarded band bucket turns quadratic the moment one
+"""Default per-bucket cardinality cap for the LSH self-joins.  Always
+finite: an unguarded band bucket turns quadratic the moment one
 boilerplate cluster floods it (10^6 docs in one bucket = 10^12 candidate
-pairs), and a default of ``None`` means every caller that forgets the
-knob ships the pathological path.  100k keeps worst-case within-bucket
-work at ~10^10 comparisons per oversized group under ``oversize='split'``
-— bounded, loud (observe() telemetry), and far above any non-pathological
-bucket.  Pass ``max_bucket=None`` to explicitly opt back into exact,
-unguarded LSH semantics."""
+pairs).  100k keeps worst-case within-bucket work at ~10^10 comparisons
+per oversized group — bounded, loud (observe() telemetry), and far above
+any non-pathological bucket."""
 
 
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
                         n_hashes: int = 64,
-                        max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                        oversize: str = "split",
+                        max_bucket: int = DEFAULT_MAX_BUCKET,
                         guard_observation=None) -> DataFrame:
     """Band the signatures, bucket-join, emit candidate (id_a < id_b) pairs.
 
@@ -189,15 +175,12 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
         for b in range(bands)))
     banded = sigs.select(
         "id", F.posexplode(F.expr(band_sql)).alias("band", "bucket"))
-    join_keys = ["band", "bucket"]
-    if max_bucket is not None:
-        banded, extra = _guard_oversized_buckets(
-            banded, join_keys, "id", max_bucket, oversize, guard_observation)
-        join_keys = join_keys + extra
+    banded = _guard_oversized_buckets(
+        banded, ["band", "bucket"], "id", max_bucket, guard_observation)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
-        a.join(b, join_keys)
+        a.join(b, ["band", "bucket", "_salt"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
@@ -248,8 +231,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
                       text_col: str = "text", id_col: str = "doc_id",
                       k: int = 3, n_hashes: int = 64,
                       bands: int = 16,
-                      max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                      oversize: str = "split",
+                      max_bucket: int = DEFAULT_MAX_BUCKET,
                       guard_observation=None) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: (id_a, id_b, est_jaccard).
 
@@ -270,7 +252,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
        are — only the work shape changes.
     2. **finite default bucket guard** — ``max_bucket`` defaults to
        ``DEFAULT_MAX_BUCKET`` (see there), bounding residual hot buckets
-       of NEAR-but-distinct signatures.  ``None`` opts out.
+       of NEAR-but-distinct signatures.
 
     The member table ``m`` (inside ``collapse_identical_signatures``)
     feeds every consumer and is localCheckpointed there — its one
@@ -281,7 +263,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
     sigs = minhash_signatures(docs, text_col, id_col, k, n_hashes)
     m, vsigs = collapse_identical_signatures(sigs)
     vpairs = lsh_candidate_pairs(vsigs, bands, n_hashes=n_hashes,
-                                 max_bucket=max_bucket, oversize=oversize,
+                                 max_bucket=max_bucket,
                                  guard_observation=guard_observation)
     vsim = (minhash_similarity(vsigs, vpairs)
             .filter(F.col("est_jaccard") >= threshold)
@@ -529,8 +511,7 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id",
                         planes: int = 16,
                         dim: int | None = None,
-                        max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                        oversize: str = "split",
+                        max_bucket: int = DEFAULT_MAX_BUCKET,
                         guard_observation=None) -> DataFrame:
     """Embedding-cosine near-dup via hyperplane-LSH candidates + exact
     cosine verify.  (id_a, id_b, cosine).
@@ -573,14 +554,11 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
     sig = (m.filter(F.col("id") == F.col("vid"))
            .select("id", "v",
                    lsh_bucket(F.col("v"), planes, dim=dim).alias("bucket")))
-    join_keys = ["bucket"]
-    if max_bucket is not None:
-        sig, extra = _guard_oversized_buckets(
-            sig, join_keys, "id", max_bucket, oversize, guard_observation)
-        join_keys = join_keys + extra
+    sig = _guard_oversized_buckets(
+        sig, ["bucket"], "id", max_bucket, guard_observation)
     a, b = sig.alias("a"), sig.alias("b")
     vpairs = (
-        a.join(b, join_keys)
+        a.join(b, ["bucket", "_salt"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("vid_a"), F.col("a.v").alias("va"),
                 F.col("b.id").alias("vid_b"), F.col("b.v").alias("vb"))

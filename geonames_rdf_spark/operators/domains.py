@@ -200,7 +200,7 @@ def cap_per_domain(pages: DataFrame, max_docs: int,
 
     Skew shape — data-driven routing on the pre-aggregated per-domain
     counts (the same raise-or-route discipline as ``pack_sequences``'
-    group guard and the kNN oversize router):
+    group guard):
 
     * under-cap domains — virtually all rows at web scale — are
       flagged kept straight off the over-cap-set anti-join (broadcast

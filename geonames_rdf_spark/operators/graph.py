@@ -33,27 +33,19 @@ class FixpointNotConverged(RuntimeError):
     """An iterative graph operator exhausted ``max_iter`` with work left.
 
     Returning the partial state would be SILENTLY WRONG (an incomplete
-    closure / split components), so the loops below raise by default;
-    pass ``on_max_iter='warn'`` to accept the truncation explicitly."""
+    closure / split components), so the loops below raise instead."""
 
 
-def _handle_nonconverged(op: str, max_iter: int, on_max_iter: str) -> None:
-    msg = (f"{op}: not converged after max_iter={max_iter} iterations —"
-           " the result would be an incomplete fixpoint. Raise max_iter"
-           " or pass on_max_iter='warn' to accept truncation.")
-    if on_max_iter == "warn":
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-        return
-    raise FixpointNotConverged(msg)
+def _handle_nonconverged(op: str, max_iter: int) -> None:
+    raise FixpointNotConverged(
+        f"{op}: not converged after max_iter={max_iter} iterations —"
+        " the result would be an incomplete fixpoint. Raise max_iter.")
 
 
 def transitive_closure(
     edges: DataFrame,
     seeds: DataFrame,
     max_iter: int = 30,
-    on_max_iter: str = "raise",
 ) -> DataFrame:
     """BFS closure: nodes reachable from ``seeds`` following ``edges``.
 
@@ -96,7 +88,7 @@ def transitive_closure(
 
     pdf = edges.select("src", "dst").limit(LOCAL_EDGE_BOUND + 1).toPandas()
     if len(pdf) > LOCAL_EDGE_BOUND:
-        return _closure_shuffle(edges, seeds, max_iter, on_max_iter)
+        return _closure_shuffle(edges, seeds, max_iter)
     adj: dict = {}
     for s, d in zip(pdf["src"], pdf["dst"]):
         adj.setdefault(s, []).append(d)
@@ -121,15 +113,15 @@ def transitive_closure(
         converged = not {d for n in frontier for d in adj.get(n, ())
                          if d not in depth_of}
     if not converged:
-        _handle_nonconverged("transitive_closure", max_iter, on_max_iter)
+        _handle_nonconverged("transitive_closure", max_iter)
     return local_frame(
         edges.sparkSession, list(depth_of.items()),
         T.StructType([T.StructField("node", seeds.schema["node"].dataType),
                       T.StructField("depth", T.IntegerType(), False)]))
 
 
-def _closure_shuffle(edges: DataFrame, seeds: DataFrame, max_iter: int,
-                     on_max_iter: str) -> DataFrame:
+def _closure_shuffle(edges: DataFrame, seeds: DataFrame,
+                     max_iter: int) -> DataFrame:
     from functools import reduce
 
     edges = edges.select("src", "dst").cache()
@@ -172,7 +164,7 @@ def _closure_shuffle(edges: DataFrame, seeds: DataFrame, max_iter: int,
         converged = probe.isEmpty()
     edges.unpersist()
     if not converged:
-        _handle_nonconverged("transitive_closure", max_iter, on_max_iter)
+        _handle_nonconverged("transitive_closure", max_iter)
     return result
 
 
@@ -183,8 +175,7 @@ def parent_edges(triples: DataFrame, pred: str) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50,
-                         on_max_iter: str = "raise") -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Hash-min connected components over undirected (a, b) edges, with
     POINTER DOUBLING so rounds scale as O(log diameter), not O(diameter).
 
@@ -242,5 +233,5 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
             converged = True
             break
     if not converged:
-        _handle_nonconverged("connected_components", max_iter, on_max_iter)
+        _handle_nonconverged("connected_components", max_iter)
     return labels

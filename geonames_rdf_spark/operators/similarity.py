@@ -167,7 +167,6 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
                                  id_col: str = "vec_id",
                                  label_col: str = "label",
                                  max_group_rows: int | None = 200_000,
-                                 on_oversize: str = "raise",
                                  chunk_rows: int | None = None) -> DataFrame:
     """BLAS backend for ``pairwise_topk_per_label``: one Arrow batch per
     label group, cosine as a numpy matmul (X̂ X̂ᵀ), top-k per row — the
@@ -179,20 +178,12 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
     Scale guards (one task materializes the whole label group in one
     Python worker):
 
-    - PRE-FLIGHT COUNT: one narrow groupBy-count job; labels above
-      ``max_group_rows`` are handled per ``on_oversize`` — exact
-      per-label kNN is O(n²d) and a 10^7-row hot label is a worker OOM
-      plus hours of matmul, which must never run silently
-      (``max_group_rows=None`` skips the job for trusted inputs):
-
-      * ``'raise'`` (default) — fail loudly with the offending labels
-        named, pointing at IVF;
-      * ``'column'`` — ROUTE oversized labels through the distributed
-        Column-fold variant (``pairwise_topk_per_label``: a within-label
-        shuffle join — the n² *compute* spreads over the cluster and no
-        single worker materializes the group) while normal labels keep
-        the BLAS fast path; the two variants are output-identical
-        (pytest-pinned), so the union is seamless.
+    - PRE-FLIGHT COUNT: one narrow groupBy-count job; a label above
+      ``max_group_rows`` fails loudly with the offending labels named,
+      pointing at IVF — exact per-label kNN is O(n²d) and a 10^7-row
+      hot label is a worker OOM plus hours of matmul, which must never
+      run silently (``max_group_rows=None`` skips the job for trusted
+      inputs).
 
     - CHUNKED MATMUL: the score matrix is computed in row chunks sized so
       peak memory is ~chunk×n instead of n×n (an 80 GB matrix for a
@@ -202,35 +193,19 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
     import pandas as pd
 
     if max_group_rows is not None:
-        counts = embeddings.groupBy(label_col).agg(
-            F.count(F.lit(1)).alias("_n"))
-        hot_counts = counts.filter(F.col("_n") > max_group_rows)
-        if on_oversize == "raise":
-            hot = hot_counts.orderBy(F.desc("_n")).limit(5).collect()
-            if hot:
-                worst = ", ".join(
-                    f"{r[label_col]!r}({r['_n']} rows)" for r in hot)
-                raise ValueError(
-                    f"pairwise_topk_per_label_blas: label group(s) exceed"
-                    f" max_group_rows={max_group_rows}: {worst} — exact"
-                    " per-label kNN is quadratic; route hot labels through"
-                    " IVF (ann_ivf_topk / write_ivf_index), pass"
-                    " on_oversize='column' to spread them over the"
-                    " cluster, or raise the cap explicitly")
-        elif on_oversize == "column":
-            hot_labels = F.broadcast(hot_counts.select(label_col))
-            cool = embeddings.join(hot_labels, label_col, "left_anti")
-            hot_rows = embeddings.join(hot_labels, label_col, "left_semi")
-            blas = pairwise_topk_per_label_blas(
-                cool, k, vec_col, id_col, label_col,
-                max_group_rows=None, chunk_rows=chunk_rows)
-            routed = pairwise_topk_per_label(
-                hot_rows, k, vec_col, id_col, label_col)
-            return blas.unionByName(routed)
-        else:
+        hot = (embeddings.groupBy(label_col)
+               .agg(F.count(F.lit(1)).alias("_n"))
+               .filter(F.col("_n") > max_group_rows)
+               .orderBy(F.desc("_n")).limit(5).collect())
+        if hot:
+            worst = ", ".join(
+                f"{r[label_col]!r}({r['_n']} rows)" for r in hot)
             raise ValueError(
-                f"on_oversize must be 'raise' or 'column', got"
-                f" {on_oversize!r}")
+                f"pairwise_topk_per_label_blas: label group(s) exceed"
+                f" max_group_rows={max_group_rows}: {worst} — exact"
+                " per-label kNN is quadratic; route hot labels through"
+                " IVF (ann_ivf_topk / write_ivf_index) or raise the cap"
+                " explicitly")
 
     def topk(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np

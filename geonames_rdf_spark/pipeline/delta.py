@@ -1,4 +1,4 @@
-"""Incremental KG maintenance: changelog + bucket-scoped store update.
+"""Incremental KG maintenance: the triple changelog of a dump refresh.
 
 The reference re-runs the FULL converter on every new GeoNames dump
 (run.sh:33-63 — download, transform, merge, replace).  At 10^12-document
@@ -17,21 +17,11 @@ incremental:
 2. ``apply_changelog(old, log)`` — algebraic replay
    (old ⊖ dels ⊕ adds == new, multiset semantics), used by tests and by
    downstream consumers that keep their own materializations.
-3. ``update_triple_store(spark, path, log)`` — rewrites ONLY the
-   subject-hash buckets that contain changed subjects (stage to a temp
-   dir, atomic-rename swap per bucket — same private-directory idempotence
-   as the lineage layer).  Untouched buckets keep their files
-   byte-identical: downstream epoch caches, compaction state, and object
-   store replication all see a delta, not a full rewrite.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_is_iri", "obj_lang", "obj_dt"]
@@ -182,118 +172,3 @@ def apply_changelog(old: DataFrame, changelog: DataFrame) -> DataFrame:
     adds = changelog.filter(F.col("op") == "add").select(*TRIPLE_COLS)
     dels = changelog.filter(F.col("op") == "del").select(*TRIPLE_COLS)
     return old.select(*TRIPLE_COLS).exceptAll(dels).unionByName(adds)
-
-
-def _bucket(col: Column, n_buckets: int) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-
-def write_triple_store(spark: SparkSession, triples: DataFrame, path: str,
-                       n_buckets: int = 64) -> None:
-    """Initial load: subject-hash-bucketed parquet layout (the same
-    ``bucket=K`` directory convention as the lineage/stream stores)."""
-    (triples.select(*TRIPLE_COLS)
-     .withColumn("bucket", _bucket(F.col("subj"), n_buckets))
-     .write.mode("overwrite").partitionBy("bucket").parquet(path))
-
-
-def read_triple_store(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop("bucket")
-
-
-def update_triple_store(spark: SparkSession, path: str,
-                        changelog: DataFrame, new_triples: DataFrame,
-                        n_buckets: int = 64, concurrency: int = 1,
-                        full_rewrite_threshold: float = 0.5) -> dict:
-    """Apply a dump refresh to a bucketed store, rewriting ONLY the
-    buckets that contain changed subjects.  Returns
-    ``{"buckets_rewritten": k, "n_buckets": n, "adds": a, "dels": d}``.
-
-    The per-bucket operation is a SUBJECT-LEVEL REPLACE (drop every
-    triple of an affected subject, insert that subject's full new state
-    from ``new_triples``) — NOT an add/del replay.  Replace is IDEMPOTENT:
-    re-running the same update against a bucket that already carries the
-    new state converges to the same bytes, so a crash between bucket
-    swaps is recovered by simply re-running the whole update (the
-    Iceberg-``replaceWhere`` semantics, emulated with per-bucket staging
-    + atomic rename — the same private-directory idempotence as the
-    lineage layer).  The add/del ``changelog`` contributes the affected
-    subject set and the delta metrics; ``new_triples`` is scanned only
-    for those subjects (broadcast semi-join prune).
-    """
-    # the changelog plan is typically TWO full builds + exceptAll — pin it
-    # once; every bucket job below touches it via the affected set
-    changelog = changelog.localCheckpoint(eager=True)
-    counts = {r["op"]: r["n"] for r in
-              changelog.groupBy("op").agg(
-                  F.count(F.lit(1)).alias("n")).collect()}
-    affected_subj = changelog.select("subj").distinct()
-    state = (new_triples.select(*TRIPLE_COLS)
-             .join(F.broadcast(affected_subj), "subj", "left_semi")
-             .withColumn("bucket", _bucket(F.col("subj"), n_buckets))
-             .localCheckpoint(eager=True))
-    affected_keyed = (affected_subj
-                      .withColumn("bucket", _bucket(F.col("subj"), n_buckets))
-                      .localCheckpoint(eager=True))
-    buckets = sorted(r["bucket"] for r in
-                     affected_keyed.select("bucket").distinct().collect())
-
-    # CUTOVER (measured, BENCH.md): per-bucket jobs pay fixed scheduling
-    # cost each; once most buckets are touched — a broad-but-shallow
-    # change spreads changed subjects over every bucket fast (coupon
-    # collector) — ONE full partitioned write beats N small jobs.  The
-    # delta path is for NARROW updates; this mirrors Iceberg's
-    # copy-on-write-vs-merge decision.
-    if len(buckets) >= full_rewrite_threshold * n_buckets:
-        write_triple_store(spark, new_triples, path, n_buckets=n_buckets)
-        return {"buckets_rewritten": n_buckets, "n_buckets": n_buckets,
-                "mode": "full_rewrite",
-                "adds": int(counts.get("add", 0)),
-                "dels": int(counts.get("del", 0))}
-
-    def do_bucket(b: int) -> None:
-        src = f"{path}/bucket={b}"
-        # CRASH RECOVERY: a previous run may have died between
-        # os.rename(src, backup) and os.rename(staged, src), leaving the
-        # bucket dir missing while its full prior state sits in the
-        # backup.  Without this restore the re-run would take the
-        # "brand-new bucket" branch and silently drop every UNAFFECTED
-        # subject's triples in this bucket.  Restore first, then the
-        # normal idempotent replace applies.
-        backup = f"{path}/_prev_bucket={b}"
-        if not os.path.isdir(src) and os.path.isdir(backup):
-            os.rename(backup, src)
-        subj_b = F.broadcast(
-            affected_keyed.filter(F.col("bucket") == b).select("subj"))
-        state_b = state.filter(F.col("bucket") == b).drop("bucket")
-        if os.path.isdir(src):
-            keep = spark.read.parquet(src).join(subj_b, "subj", "left_anti")
-            new_b = keep.unionByName(state_b)
-        else:  # brand-new bucket (first subjects hashing here)
-            new_b = state_b
-        # underscore prefix: Spark's file listing ignores _-prefixed dirs,
-        # so a reader racing the swap never sees the staging copy
-        staged = tempfile.mkdtemp(prefix=f"_delta_b{b}_",
-                                  dir=os.path.dirname(src))
-        new_b.write.mode("overwrite").parquet(staged)
-        shutil.rmtree(backup, ignore_errors=True)
-        if os.path.isdir(src):
-            os.rename(src, backup)
-        os.rename(staged, src)
-        shutil.rmtree(backup, ignore_errors=True)
-
-    if concurrency <= 1:
-        for b in buckets:
-            do_bucket(b)
-    else:
-        # same private-staging argument as lineage.run_with_lineage: no
-        # shared commit staging, so bucket jobs compose concurrently
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=concurrency) as pool:
-            for fut in [pool.submit(do_bucket, b) for b in buckets]:
-                fut.result()
-    return {"buckets_rewritten": len(buckets), "n_buckets": n_buckets,
-            "mode": "delta",
-            "adds": int(counts.get("add", 0)),
-            "dels": int(counts.get("del", 0))}

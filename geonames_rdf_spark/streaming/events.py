@@ -5,7 +5,7 @@ crawl/event data).
 Batch/stream symmetry: the same windowed-aggregation logic runs as a batch
 DataFrame (oracle-checkable against DuckDB) and as a streaming query with
 watermarked event-time windows (tested via the file source -> memory sink
-round trip).  ``run_stream_kg`` and its WARC/catalog variants run the
+round trip).  ``run_stream_kg`` and its WARC variant run the
 fused KG linking scan as a streaming stage — pages arriving as
 micro-batches produce the same mention triples the batch pipeline yields.
 """
@@ -175,7 +175,6 @@ def run_stream_kg(
     foreachBatch); cross-epoch duplicates are possible by design and
     collapse at read/compaction (``read_stream_kg``).
     """
-    from geonames_rdf_spark.pipeline import materialize
     from geonames_rdf_spark.pipeline import mentions as m
 
     pages = spark.readStream.schema(
@@ -242,105 +241,6 @@ def run_stream_kg_warc(
     return _start_kg_sink(linked, out_dir, n_buckets)
 
 
-def _checkpoint_max_batch(checkpoint_dir: str) -> int:
-    """Largest micro-batch id recorded in a Structured Streaming
-    checkpoint's ``offsets/`` log (-1 when absent/empty).  Spark writes
-    the offset file BEFORE processing a batch, so this is the high
-    watermark of epochs the checkpoint can ever re-deliver."""
-    offsets = os.path.join(checkpoint_dir, "offsets")
-    try:
-        ids = [int(f) for f in os.listdir(offsets) if f.isdigit()]
-    except (FileNotFoundError, NotADirectoryError):
-        return -1
-    return max(ids, default=-1)
-
-
-def run_stream_kg_catalog(
-    spark: SparkSession,
-    warc_dir: str,
-    scored_map: dict[str, list[tuple[int, float, str]]],
-    table_path: str,
-    max_files_per_trigger: int | None = None,
-    on_stale_checkpoint: str = "error",
-    max_chain: int | None = None,
-):
-    """Live-crawl KG maintenance committing each micro-batch as a
-    versioned-catalog APPEND snapshot (``sources.catalog``) instead of
-    an epoch-partitioned directory: every batch's triples land as one
-    immutable snapshot stamped with the micro-batch epoch, readers get
-    snapshot isolation + time travel over the GROWING triple store, and
-    a batch REPLAYED after crash recovery is detected by its epoch
-    stamp (``last_committed_epoch``) and skipped — exactly-once at the
-    catalog-commit level, the Iceberg streaming-sink protocol.
-
-    The epoch guard is SCOPED to the checkpoint lineage (ADVICE r07):
-    epoch ids restart at 0 under a fresh or lost checkpoint, so a new
-    query pointed at an already-written table would silently skip its
-    first ``last_committed_epoch + 1`` batches — dropping genuinely NEW
-    files, not just replays.  This entry therefore refuses to START
-    when the table's committed epoch watermark is ahead of the
-    checkpoint's offset log (the only state that can re-deliver those
-    epochs).  ``on_stale_checkpoint='replay_only'`` overrides the
-    refusal for the one safe case — the source directory holds nothing
-    beyond what the table already committed, so every skipped batch is
-    a true replay (the caller asserts that; it cannot be verified from
-    here).
-
-    Single-writer by construction (one streaming query per table).
-    Compaction policy (``max_chain``): the DEFAULT here is ``None`` —
-    unbounded chain, compaction run OUT of band (a full rewrite with
-    the stream stopped and its checkpoint intact) — because the
-    catalog's inline auto-compaction does O(table) work INSIDE the
-    micro-batch that trips it: on a large table that stalls the
-    trigger for the rewrite's duration, which a latency-sensitive
-    ingest must opt into, not discover.  Pass ``max_chain=N`` to opt
-    in: reader fan-out stays bounded at N roots and the epoch
-    watermark survives the fold (exactly-once preserved across
-    compaction — ``catalog.write_table_versioned``), at the cost of
-    one long batch every N commits.  Replay idempotence and
-    stream==batch equality are pytest-pinned."""
-    from geonames_rdf_spark.pipeline import materialize
-    from geonames_rdf_spark.pipeline import mentions as m
-    from geonames_rdf_spark.sources import catalog
-    from geonames_rdf_spark.sources.warc import read_warc_stream
-
-    if on_stale_checkpoint not in ("error", "replay_only"):
-        raise ValueError("on_stale_checkpoint must be 'error' or"
-                         f" 'replay_only', got {on_stale_checkpoint!r}")
-    ckpt = f"{table_path}/_checkpoint"
-    table_epoch = catalog.last_committed_epoch(table_path)
-    ckpt_epoch = _checkpoint_max_batch(ckpt)
-    if table_epoch > ckpt_epoch and on_stale_checkpoint == "error":
-        raise ValueError(
-            f"stale checkpoint: table {table_path} has committed epoch"
-            f" {table_epoch} but the checkpoint's offset log ends at"
-            f" {ckpt_epoch} — a fresh query would renumber batches from"
-            f" {ckpt_epoch + 1} and the epoch guard would silently skip"
-            " them even if they carry NEW files.  Restore the original"
-            " checkpoint, re-ingest into a fresh table, or — only if the"
-            " source dir contains nothing the table hasn't committed —"
-            " pass on_stale_checkpoint='replay_only'")
-
-    pages = read_warc_stream(
-        spark, warc_dir,
-        max_files_per_trigger=max_files_per_trigger,
-    ).withColumn("lang", F.lit(None).cast("string"))
-    linked = m.detect_and_link(pages, scored_map, from_html=True)
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        if catalog.last_committed_epoch(table_path) >= int(epoch_id):
-            return  # replayed batch: its snapshot already committed
-        catalog.write_table_versioned(
-            materialize.mention_triples(df), table_path,
-            append=True, epoch=int(epoch_id), max_chain=max_chain)
-
-    return (
-        linked.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-
-
 def read_stream_kg(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the streamed triple store, collapsing cross-epoch duplicates
     (the compaction a serving layer runs).
@@ -380,7 +280,7 @@ def compact_stream_kg(spark: SparkSession, out_dir: str) -> None:
 
     src = f"{out_dir}/triples"
     old = f"{out_dir}/_triples_precompact"
-    # CRASH RECOVERY (mirrors pipeline/delta.py): a previous compaction
+    # CRASH RECOVERY: a previous compaction
     # may have died between os.rename(src, old) and os.rename(staged,
     # src), leaving the triples dir absent — which would fail every
     # reader and this compactor with FileNotFound while the data sits

@@ -5,18 +5,13 @@
     spark-submit --master local[32] --py-files pipeline.zip \
         jobs/run_stream_kg.py --drop-dir /data/crawl_drop \
         --out /data/kg_stream --sf-dir /root/testdata/sf0.01 \
-        --sink catalog --max-files-per-trigger 4 [--drain]
+        --max-files-per-trigger 4 [--drain]
 
 Watches ``--drop-dir`` for landing ``.warc.gz`` members (Common Crawl's
 delivery unit), streams them through parse -> fused extract+link, and
-commits triples through one of two exactly-once sinks:
-
-  --sink epochs   epoch-partitioned parquet store (replayed batches
-                  overwrite their own epoch partition; compact with
-                  streaming.events.compact_stream_kg)
-  --sink catalog  versioned-catalog APPEND snapshots (snapshot
-                  isolation + time travel over the growing store;
-                  replayed batches skipped by the epoch stamp)
+commits triples to an epoch-partitioned parquet store under ``--out``:
+a replayed batch overwrites its own epoch partition, so the store is
+exactly-once (compact it with streaming.events.compact_stream_kg).
 
 ``--drain`` processes everything currently in the drop dir and exits
 (batch-of-streams, for tests/backfills); without it the query runs
@@ -33,23 +28,15 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--drop-dir", required=True,
                     help="directory where .warc.gz members land")
-    ap.add_argument("--out", required=True,
-                    help="triple store root (epochs) / table path (catalog)")
+    ap.add_argument("--out", required=True, help="triple store root")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01",
                     help="gazetteer tables for the matcher")
-    ap.add_argument("--sink", choices=("epochs", "catalog"),
-                    default="epochs")
     ap.add_argument("--buckets", type=int, default=16,
-                    help="subj-hash buckets (epochs sink)")
+                    help="subj-hash buckets")
     ap.add_argument("--max-files-per-trigger", type=int, default=None,
                     help="archives per micro-batch (the ingest-rate knob)")
     ap.add_argument("--drain", action="store_true",
                     help="process what is there now, then exit")
-    ap.add_argument("--replay-only", action="store_true",
-                    help="catalog sink: allow starting with a fresh/lost"
-                         " checkpoint against an already-written table"
-                         " — ONLY safe when the drop dir holds nothing"
-                         " the table hasn't committed (pure replay)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -65,16 +52,9 @@ def main() -> None:
 
     feats = build.gazetteer_tables(spark, args.sf_dir)["features"]
     smap = mentions.build_scored_surface_map(feats)
-    if args.sink == "catalog":
-        q = ev.run_stream_kg_catalog(
-            spark, args.drop_dir, smap, args.out,
-            max_files_per_trigger=args.max_files_per_trigger,
-            on_stale_checkpoint=("replay_only" if args.replay_only
-                                 else "error"))
-    else:
-        q = ev.run_stream_kg_warc(
-            spark, args.drop_dir, smap, args.out, n_buckets=args.buckets,
-            max_files_per_trigger=args.max_files_per_trigger)
+    q = ev.run_stream_kg_warc(
+        spark, args.drop_dir, smap, args.out, n_buckets=args.buckets,
+        max_files_per_trigger=args.max_files_per_trigger)
     try:
         if args.drain:
             q.processAllAvailable()
@@ -83,16 +63,8 @@ def main() -> None:
     finally:
         q.stop()
 
-    if args.sink == "catalog":
-        from geonames_rdf_spark.sources import catalog
-
-        n = catalog.read_table_versioned(spark, args.out).count()
-        meta = {"snapshots": len(catalog.table_snapshots(args.out)),
-                "last_epoch": catalog.last_committed_epoch(args.out)}
-    else:
-        n = ev.read_stream_kg(spark, args.out).count()
-        meta = {"buckets": args.buckets}
-    print(json.dumps({"sink": args.sink, "triples": n, **meta}))
+    n = ev.read_stream_kg(spark, args.out).count()
+    print(json.dumps({"triples": n, "buckets": args.buckets}))
     spark.stop()
 
 

@@ -1,14 +1,11 @@
-"""Incremental KG maintenance: changelog exactness + bucket-scoped update.
+"""Incremental KG maintenance: changelog exactness.
 
 The reference re-runs the full converter per dump (run.sh:33-63); the
-delta layer replaces that with an exact changelog and a store update that
-rewrites only the subject-hash buckets containing changed subjects.
+delta layer replaces that with an exact changelog of the triple sets,
+scoped to the subjects a dump diff can affect.
 """
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,8 +13,6 @@ from pyspark.sql import functions as F
 from geonames_rdf_spark.operators import build
 from geonames_rdf_spark.pipeline import delta
 from tests.conftest import SF
-
-N_BUCKETS = 64
 
 
 @pytest.fixture(scope="module")
@@ -67,51 +62,6 @@ def test_delta_changelog_replay_exact(spark, worlds):
     replayed = delta.apply_changelog(old, log)
     assert replayed.exceptAll(new).count() == 0
     assert new.exceptAll(replayed).count() == 0
-
-
-def test_delta_store_update_touches_only_affected_buckets(spark, worlds,
-                                                          tmp_path):
-    old, new = worlds
-    log = delta.triple_changelog(old, new)
-    store = str(tmp_path / "store")
-    delta.write_triple_store(spark, old, store, n_buckets=N_BUCKETS)
-    before = {d: os.path.getmtime(d)
-              for d in glob.glob(f"{store}/bucket=*")}
-
-    stats = delta.update_triple_store(spark, store, log, new,
-                                      n_buckets=N_BUCKETS,
-                                      full_rewrite_threshold=1.1)
-    assert stats["mode"] == "delta"
-    assert 0 < stats["buckets_rewritten"] < N_BUCKETS  # a DELTA, not a rewrite
-    assert stats["adds"] > 0 and stats["dels"] > 0
-
-    got = delta.read_triple_store(spark, store)
-    assert got.exceptAll(new).count() == 0
-    assert new.exceptAll(got).count() == 0
-
-    # untouched bucket directories were not rewritten
-    untouched = [d for d in before
-                 if os.path.isdir(d) and os.path.getmtime(d) == before[d]]
-    assert len(untouched) >= len(before) - stats["buckets_rewritten"]
-
-    # IDEMPOTENT: subject-level replace means re-running the same update
-    # (the crash-recovery path — some buckets swapped, some not) converges
-    # to the same store; run the retry CONCURRENTLY to cover that path too
-    delta.update_triple_store(spark, store, log, new, n_buckets=N_BUCKETS,
-                              concurrency=8, full_rewrite_threshold=1.1)
-    again = delta.read_triple_store(spark, store)
-    assert again.exceptAll(new).count() == 0
-    assert new.exceptAll(again).count() == 0
-
-    # AUTO-CUTOVER: when changed subjects touch most buckets, one full
-    # partitioned write replaces N small jobs (measured faster, BENCH.md)
-    stats2 = delta.update_triple_store(spark, store, log, new,
-                                       n_buckets=N_BUCKETS,
-                                       full_rewrite_threshold=0.0)
-    assert stats2["mode"] == "full_rewrite"
-    full = delta.read_triple_store(spark, store)
-    assert full.exceptAll(new).count() == 0
-    assert new.exceptAll(full).count() == 0
 
 
 def test_delta_scoped_changelog_narrow_update(spark):

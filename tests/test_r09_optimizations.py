@@ -51,7 +51,7 @@ def test_transitive_closure_local_matches_shuffle(spark):
     fast = {(r["node"], r["depth"]) for r in
             graph.transitive_closure(edges, seeds).collect()}
     slow = {(r["node"], r["depth"]) for r in
-            graph._closure_shuffle(edges, seeds, 30, "raise").collect()}
+            graph._closure_shuffle(edges, seeds, 30).collect()}
     assert fast == slow == {("a", 0), ("b", 1), ("c", 2), ("d", 2),
                             ("e", 3)}
 

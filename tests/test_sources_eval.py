@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
 from geonames_rdf_spark import evaluation, synth
@@ -131,235 +129,6 @@ def test_triple_pr_detects_divergence(spark):
     pr = evaluation.triple_pr(raw, kg)
     assert pr["recall"] == 1.0
     assert pr["precision"] < 1.0
-
-
-def test_versioned_catalog_snapshot_commit(spark, tmp_path):
-    """Iceberg-style snapshot semantics on plain parquet: atomic pointer
-    commit, reader isolation across a concurrent commit, time travel,
-    and snapshot expiry."""
-    from geonames_rdf_spark.sources import catalog
-
-    path = str(tmp_path / "vtab")
-    a = spark.range(10).withColumn("x", F.lit("a"))
-    b = spark.range(20).withColumn("x", F.lit("b"))
-    v1 = catalog.write_table_versioned(a, path)
-    pinned = catalog.read_table_versioned(spark, path)  # resolves v1
-    v2 = catalog.write_table_versioned(b, path)
-    assert (v1, v2) == (1, 2)
-    assert catalog.current_snapshot(path) == 2
-    assert catalog.read_table_versioned(spark, path).count() == 20
-    # isolation: the reader that resolved before the commit still sees v1
-    assert pinned.count() == 10
-    # time travel
-    assert catalog.read_table_versioned(spark, path, snapshot=1).count() == 10
-    assert catalog.table_snapshots(path) == [1, 2]
-    # expiry retires old versions, never the current one
-    catalog.write_table_versioned(a, path)
-    assert catalog.expire_snapshots(path, keep=2) == [1]
-    assert catalog.table_snapshots(path) == [2, 3]
-    assert catalog.read_table_versioned(spark, path).count() == 10
-
-
-def test_versioned_catalog_append_chain_and_occ(spark, tmp_path):
-    """Iceberg append snapshots + optimistic-concurrency commits on the
-    parquet emulation: an append commits ONLY its new rows but reads as
-    the full chain; a second writer committing on the same base gets
-    CommitConflict (at most one winner per base); expiry never deletes
-    an ancestor a surviving append chain references."""
-    import os
-
-    import pytest as _pytest
-
-    from geonames_rdf_spark.sources import catalog
-
-    path = str(tmp_path / "vtab_app")
-    v1 = catalog.write_table_versioned(
-        spark.range(10).withColumn("x", F.lit("full")), path)
-    v2 = catalog.write_table_versioned(
-        spark.range(10, 15).withColumn("x", F.lit("ep1")), path,
-        append=True)
-    v3 = catalog.write_table_versioned(
-        spark.range(15, 18).withColumn("x", F.lit("ep2")), path,
-        append=True, base=v2)
-    assert (v1, v2, v3) == (1, 2, 3)
-    # full chain reads; each append dir holds ONLY its epoch's rows
-    assert catalog.read_table_versioned(spark, path).count() == 18
-    assert spark.read.parquet(os.path.join(path, "v=3")).count() == 3
-    # time travel at an intermediate append snapshot
-    assert catalog.read_table_versioned(spark, path, snapshot=2).count() == 15
-
-    # OCC: a second commit on base v3 conflicts after the first wins
-    catalog.write_table_versioned(
-        spark.range(100, 101).withColumn("x", F.lit("w1")), path,
-        append=True, base=v3)
-    with _pytest.raises(catalog.CommitConflict):
-        catalog.write_table_versioned(
-            spark.range(200, 201).withColumn("x", F.lit("w2")), path,
-            append=True, base=v3)
-    assert catalog.read_table_versioned(spark, path).count() == 19
-
-    # expiry: keep=1 would retire v1-v3 blindly, but v4's chain
-    # references them — all stay; a full rewrite breaks the chain
-    assert catalog.expire_snapshots(path, keep=1) == []
-    assert catalog.table_snapshots(path) == [1, 2, 3, 4]
-    catalog.write_table_versioned(
-        spark.range(3).withColumn("x", F.lit("rewrite")), path)
-    assert catalog.expire_snapshots(path, keep=1) == [1, 2, 3, 4]
-    assert catalog.read_table_versioned(spark, path).count() == 3
-
-    # appends never take partition columns (multi-root scans don't
-    # share partition discovery)
-    with _pytest.raises(ValueError, match="append"):
-        catalog.write_table_versioned(
-            spark.range(3).withColumn("x", F.lit("p")), path,
-            partition_cols=("x",), append=True)
-
-    # an append onto a missing base must raise (a silent full write
-    # would commit a snapshot missing the table's history) and release
-    # its claimed version dir
-    before = catalog.table_snapshots(path)
-    with _pytest.raises(ValueError, match="does not exist"):
-        catalog.write_table_versioned(
-            spark.range(3).withColumn("x", F.lit("q")), path,
-            append=True, base=99)
-    assert catalog.table_snapshots(path) == before
-
-
-def test_versioned_catalog_chain_bound_and_crash_residue(spark, tmp_path):
-    """r08 catalog hardening, three invariants:
-
-    1. ``max_chain`` bounds append-chain read amplification: ~100
-       appends under ``max_chain=8`` never resolve more than 8 parquet
-       roots per read, rows and the epoch replay watermark survive
-       every inline compaction, and intermediate chain links become
-       expirable.
-    2. A crashed writer's residue is a ``_staging_*`` dir only —
-       invisible to readers/table_snapshots, never a dead ``v=N``
-       claim that would CommitConflict every future commit on that
-       base; ``expire_snapshots`` sweeps it.
-    3. An EMPTY ``v=N`` dir (a dead claim left by the pre-r08 mkdir
-       protocol) is silently reclaimed by the next commit on that
-       base instead of conflicting forever.
-    """
-    import os
-
-    from geonames_rdf_spark.sources import catalog
-
-    path = str(tmp_path / "vtab_chain")
-    catalog.write_table_versioned(
-        spark.range(5).withColumn("x", F.lit("full")), path, epoch=0)
-    n_appends = 100
-    max_roots = 0
-    for e in range(1, n_appends + 1):
-        catalog.write_table_versioned(
-            spark.range(1000 + e, 1001 + e).withColumn("x", F.lit("a")),
-            path, append=True, epoch=e, max_chain=8)
-        cur = catalog.current_snapshot(path)
-        roots = 1 + len(catalog._parents_of(path, cur))
-        max_roots = max(max_roots, roots)
-        assert roots <= 8, (e, roots)
-        assert catalog.last_committed_epoch(path) == e  # survives compaction
-    assert max_roots == 8  # the bound is actually exercised
-    assert catalog.read_table_versioned(spark, path).count() == 5 + n_appends
-    # compaction broke the chain repeatedly: expiry can retire history
-    assert len(catalog.expire_snapshots(path, keep=8)) > 80
-    assert catalog.read_table_versioned(spark, path).count() == 5 + n_appends
-
-    # (2) crashed writer residue: a staging dir neither blocks commits
-    # nor shows up as a snapshot; expire sweeps it ONLY past the orphan
-    # TTL (a fresh dir may be a live writer mid-write — r08 review)
-    dead = os.path.join(path, catalog._STAGING_PREFIX + "dead")
-    os.makedirs(os.path.join(dead, "part"), exist_ok=True)
-    before = catalog.table_snapshots(path)
-    assert before == catalog.table_snapshots(path)  # residue invisible
-    base = catalog.current_snapshot(path)
-    v = catalog.write_table_versioned(
-        spark.range(1).withColumn("x", F.lit("after-crash")), path,
-        append=True, base=base)
-    assert v == base + 1
-    catalog.expire_snapshots(path, keep=10_000)
-    assert os.path.isdir(dead)  # fresh: inside the live-writer window
-    stale = time.time() - 7200
-    os.utime(dead, (stale, stale))
-    catalog.expire_snapshots(path, keep=10_000)
-    assert not os.path.isdir(dead)  # past the TTL: swept
-
-    # (3) dead EMPTY claim on the next version: reclaimed, not fatal
-    cur = catalog.current_snapshot(path)
-    os.mkdir(os.path.join(path, f"v={cur + 1}"))
-    v2 = catalog.write_table_versioned(
-        spark.range(1).withColumn("x", F.lit("reclaim")), path,
-        append=True, base=cur)
-    assert v2 == cur + 1
-    assert catalog.read_table_versioned(
-        spark, path, snapshot=v2).count() == 5 + n_appends + 2
-
-
-def test_versioned_catalog_concurrent_writer_contention(spark, tmp_path):
-    """LIVE contention on the r08 rename protocol: 6 writers race
-    optimistic commits on the same evolving table.  Invariants — each
-    base admits exactly ONE winner (losers get CommitConflict and
-    retry on the new current), every writer eventually lands exactly
-    one snapshot, no snapshot interleaves rows from two writers, the
-    pointer ends at the newest version, and the final chain reads as
-    the union of all writers' rows."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from geonames_rdf_spark.sources import catalog
-
-    path = str(tmp_path / "vtab_race")
-    catalog.write_table_versioned(
-        spark.range(1).withColumn("w", F.lit(-1)), path)
-
-    n_writers, conflicts = 6, []
-
-    def writer(w: int) -> int:
-        df = (spark.range(w * 100, w * 100 + 10)
-              .withColumn("w", F.lit(w)))
-        while True:
-            base = catalog.current_snapshot(path)
-            try:
-                return catalog.write_table_versioned(
-                    df, path, append=True, base=base)
-            except catalog.CommitConflict:
-                conflicts.append(w)  # list.append is thread-safe
-
-    with ThreadPoolExecutor(max_workers=n_writers) as pool:
-        versions = list(pool.map(writer, range(n_writers)))
-
-    # one snapshot per writer, all distinct, pointer at the newest
-    assert sorted(versions) == list(range(2, 2 + n_writers))
-    assert catalog.current_snapshot(path) == 1 + n_writers
-    # no interleaving: each committed version dir holds ONE writer's
-    # rows exactly (the claim-release window would mix two writers)
-    import os as _os
-
-    for v, w in zip(versions, range(n_writers)):
-        got = spark.read.parquet(_os.path.join(path, f"v={v}")).collect()
-        assert len(got) == 10 and {r["w"] for r in got} == {w}
-    # the final chain is the union of everything
-    final = catalog.read_table_versioned(spark, path)
-    assert final.count() == 1 + 10 * n_writers
-    assert final.groupBy("w").count().count() == n_writers + 1
-    # contention actually happened (6 threads, serialized bases)
-    assert conflicts, "race never contended — test too weak"
-
-
-def test_commit_pointer_raises_on_retry_exhaustion(tmp_path, monkeypatch):
-    """A pointer that keeps regressing (external rewriter) must raise
-    after the retries, not silently strand the committed snapshot
-    behind a stale "current" (VERDICT r07 #5)."""
-    import pytest as _pytest
-
-    from geonames_rdf_spark.sources import catalog
-
-    path = str(tmp_path / "vtab_ptr")
-    import os
-
-    os.makedirs(path)
-    monkeypatch.setattr(catalog, "current_snapshot", lambda p: 0)
-    with _pytest.raises(RuntimeError, match="_CURRENT pointer"):
-        catalog._commit_pointer(path, 1)
 
 
 def test_warc_roundtrip_and_pipeline_ingest(spark, tmp_path):

@@ -221,77 +221,6 @@ def test_stream_kg_kill_restart_resume(spark, tmp_path):
     assert batch.exceptAll(streamed).count() == 0
 
 
-def test_stream_kg_catalog_append_exactly_once(spark, tmp_path):
-    """Micro-batches commit as versioned-catalog APPEND snapshots: the
-    streamed table equals the batch path, every batch left one
-    epoch-stamped snapshot, and re-delivering the batches (fresh
-    checkpoint => Spark replays every file) commits NOTHING — the
-    epoch guard makes the catalog sink exactly-once."""
-    import shutil as _shutil
-
-    from pyspark.sql import functions as F
-
-    from geonames_rdf_spark.operators import build
-    from geonames_rdf_spark.pipeline import corpus, materialize, mentions
-    from geonames_rdf_spark.sources import catalog, warc
-
-    tables = build.gazetteer_tables(spark, SF)
-    feats = tables["features"]
-    surfaces = corpus.gazetteer_surfaces(feats)
-    pages = corpus.synthesize_pages(spark, surfaces, 120)
-    drop = str(tmp_path / "crawl_drop_cat")
-    warc.write_warc(pages.repartition(3, "url"), drop)
-    smap_scored = mentions.build_scored_surface_map(feats)
-    table = str(tmp_path / "kg_table")
-
-    q = ev.run_stream_kg_catalog(spark, drop, smap_scored, table,
-                                 max_files_per_trigger=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    streamed = catalog.read_table_versioned(spark, table)
-    batch_pages = (warc.read_warc(spark, drop + "/*.warc.gz")
-                   .withColumn("lang", F.lit(None).cast("string")))
-    batch = materialize.mention_triples(
-        mentions.detect_and_link(batch_pages, smap_scored, from_html=True))
-    assert streamed.count() == batch.count() > 0
-    assert streamed.exceptAll(batch).count() == 0
-    assert batch.exceptAll(streamed).count() == 0
-
-    # 3 archives, 1 file/trigger => 3 epoch-stamped append snapshots
-    snaps = catalog.table_snapshots(table)
-    assert len(snaps) == 3
-    assert catalog.last_committed_epoch(table) == 2
-    # time travel: the first snapshot holds only its own batch
-    assert 0 < catalog.read_table_versioned(
-        spark, table, snapshot=snaps[0]).count() < streamed.count()
-
-    # lost checkpoint (ADVICE r07): a fresh query would renumber epochs
-    # from 0 and the guard would skip them EVEN IF they carried new
-    # files — the default must refuse to start, not silently drop
-    import pytest as _pytest
-
-    _shutil.rmtree(f"{table}/_checkpoint")
-    with _pytest.raises(ValueError, match="stale checkpoint"):
-        ev.run_stream_kg_catalog(spark, drop, smap_scored, table,
-                                 max_files_per_trigger=1)
-
-    # replay_only: the caller asserts the drop dir holds nothing the
-    # table hasn't committed, so re-delivering EVERY file is pure
-    # replay; the epoch guard skips all — no new snapshots, same rows
-    q2 = ev.run_stream_kg_catalog(spark, drop, smap_scored, table,
-                                  max_files_per_trigger=1,
-                                  on_stale_checkpoint="replay_only")
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    assert catalog.table_snapshots(table) == snaps
-    assert catalog.read_table_versioned(spark, table).count() == batch.count()
-
-
 def _drop_archive(df, drop_dir, name, tmp_path):
     """Stage one single-member .warc.gz and land it in the drop dir
     under a unique name (write_warc names files by partition id, so
@@ -409,45 +338,6 @@ def test_stream_ingest_dedup_watermark_bounds_state(spark, tmp_path):
     assert n_far == 2  # both sightings of the far-apart body stored
 
 
-def test_stream_kg_catalog_inline_compaction_opt_in(spark, tmp_path):
-    """run_stream_kg_catalog(max_chain=2): the opt-in inline compaction
-    keeps reader fan-out bounded at 2 roots across the soak, preserves
-    the epoch watermark through the fold (exactly-once survives), and
-    the final table still equals the batch path."""
-    from pyspark.sql import functions as F
-
-    from geonames_rdf_spark.operators import build
-    from geonames_rdf_spark.pipeline import corpus, materialize, mentions
-    from geonames_rdf_spark.sources import catalog, warc
-
-    feats = build.gazetteer_tables(spark, SF)["features"]
-    surfaces = corpus.gazetteer_surfaces(feats)
-    pages = corpus.synthesize_pages(spark, surfaces, 120)
-    drop = str(tmp_path / "crawl_drop_compact")
-    warc.write_warc(pages.repartition(3, "url"), drop)
-    smap_scored = mentions.build_scored_surface_map(feats)
-    table = str(tmp_path / "kg_table_compact")
-
-    q = ev.run_stream_kg_catalog(spark, drop, smap_scored, table,
-                                 max_files_per_trigger=1, max_chain=2)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    cur = catalog.current_snapshot(table)
-    assert 1 + len(catalog._parents_of(table, cur)) <= 2  # fan-out bound
-    assert catalog.last_committed_epoch(table) == 2  # watermark survives
-
-    batch_pages = (warc.read_warc(spark, drop + "/*.warc.gz")
-                   .withColumn("lang", F.lit(None).cast("string")))
-    batch = materialize.mention_triples(
-        mentions.detect_and_link(batch_pages, smap_scored, from_html=True))
-    streamed = catalog.read_table_versioned(spark, table)
-    assert streamed.count() == batch.count() > 0
-    assert streamed.exceptAll(batch).count() == 0
-
-
 def test_stream_kg_from_warc_drop_dir(spark, tmp_path):
     """Live-crawl shape end to end: .warc.gz members in a drop
     directory -> streaming WARC parse -> fused linking (NULL lang, no
@@ -477,6 +367,49 @@ def test_stream_kg_from_warc_drop_dir(spark, tmp_path):
         q.stop()
     streamed = ev.read_stream_kg(spark, out)
 
+    batch_pages = (warc.read_warc(spark, drop + "/*.warc.gz")
+                   .withColumn("lang", F.lit(None).cast("string")))
+    batch = materialize.mention_triples(
+        mentions.detect_and_link(batch_pages, smap_scored, from_html=True))
+    assert streamed.count() == batch.count() > 0
+    assert streamed.exceptAll(batch).count() == 0
+    assert batch.exceptAll(streamed).count() == 0
+
+
+def test_stream_kg_warc_lost_checkpoint_converges(spark, tmp_path):
+    """A lost checkpoint: a fresh query renumbers its epochs from 0 and
+    meets different batch boundaries (2 archives per trigger instead of
+    1), so each replayed epoch overwrites an epoch partition that held
+    other archives.  Every stale row is still a triple of some archive,
+    so the compacted read stays exactly the batch triples."""
+    import shutil
+
+    from geonames_rdf_spark.operators import build
+    from geonames_rdf_spark.pipeline import corpus, materialize, mentions
+    from geonames_rdf_spark.sources import warc
+
+    feats = build.gazetteer_tables(spark, SF)["features"]
+    surfaces = corpus.gazetteer_surfaces(feats)
+    pages = corpus.synthesize_pages(spark, surfaces, 120)
+    drop = str(tmp_path / "crawl_drop_lost")
+    warc.write_warc(pages.repartition(3, "url"), drop)
+    smap_scored = mentions.build_scored_surface_map(feats)
+    out = str(tmp_path / "warc_kg_lost")
+
+    def drain(files_per_trigger):
+        q = ev.run_stream_kg_warc(spark, drop, smap_scored, out,
+                                  n_buckets=4,
+                                  max_files_per_trigger=files_per_trigger)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    drain(1)
+    shutil.rmtree(f"{out}/_checkpoint")
+    drain(2)
+
+    streamed = ev.read_stream_kg(spark, out)
     batch_pages = (warc.read_warc(spark, drop + "/*.warc.gz")
                    .withColumn("lang", F.lit(None).cast("string")))
     batch = materialize.mention_triples(

@@ -66,8 +66,8 @@ def test_simhash_near_dups(docs):
 def test_lsh_bucket_guard_bounds_pathological_bucket(spark):
     """400 near-identical docs put ALL rows in every band bucket (the
     boilerplate-cluster pathology).  The guard bounds the candidate join:
-    'split' salts the mega-bucket into ~max_bucket-sized groups, 'drop'
-    skips it, and the observation records what was degraded."""
+    it salts the mega-bucket into ~max_bucket-sized groups, and the
+    observation records what was degraded."""
     from pyspark.sql import Observation
 
     d = spark.createDataFrame(
@@ -77,21 +77,18 @@ def test_lsh_bucket_guard_bounds_pathological_bucket(spark):
     sigs = dedup.minhash_signatures(d).localCheckpoint()
     obs = Observation("lsh_guard_test")
     n_split = dedup.lsh_candidate_pairs(
-        sigs, max_bucket=50, oversize="split", guard_observation=obs).count()
+        sigs, max_bucket=50, guard_observation=obs).count()
     # unguarded would emit 400*399/2 = 79800 pairs; 8 salt groups of ~50
     # leave ~8 * C(50,2) = 9800
     assert 0 < n_split < 20000
     assert obs.get["oversized_rows"] > 0
     assert obs.get["total_rows"] == 400 * 16  # 16 bands
-    n_drop = dedup.lsh_candidate_pairs(
-        sigs, max_bucket=50, oversize="drop").count()
-    assert n_drop == 0  # the only bucket was oversized and is skipped
 
 
 def test_guard_telemetry_lands_in_lineage_metrics(spark, tmp_path):
     """VERDICT r05 #4 end to end: a flood run's guard observation is
     PERSISTED to the run's metrics table, so silent recall degradation
-    (split/dropped mega-buckets) is visible in production output, not
+    (salted mega-buckets) is visible in production output, not
     just in a transient Observation object."""
     from pyspark.sql import Observation
 
@@ -104,7 +101,7 @@ def test_guard_telemetry_lands_in_lineage_metrics(spark, tmp_path):
     sigs = dedup.minhash_signatures(d).localCheckpoint()
     obs = Observation("guard_metrics_test")
     dedup.lsh_candidate_pairs(
-        sigs, max_bucket=50, oversize="split", guard_observation=obs).count()
+        sigs, max_bucket=50, guard_observation=obs).count()
     out = str(tmp_path / "run")
     got = lineage.write_guard_metrics(spark, out, "minhash_lsh", obs)
     assert got["oversized_rows"] > 0
@@ -411,26 +408,6 @@ def test_knn_blas_hot_label_guard_raises(emb):
     # cap off => no pre-flight job, runs fine
     assert similarity.pairwise_topk_per_label_blas(
         emb.limit(50), k=3, max_group_rows=None).count() > 0
-
-
-def test_knn_blas_oversize_column_routing(emb):
-    """on_oversize='column' routes hot labels to the distributed
-    Column-fold variant and keeps the BLAS path for the rest — the union
-    must equal the unguarded BLAS output exactly."""
-    want = {(r["id_a"], r["rn"]): (r["id_b"], r["cosine"])
-            for r in similarity.pairwise_topk_per_label_blas(
-                emb, k=3, max_group_rows=None).collect()}
-    # cap 10 => every label hot; cap 50 => a genuine mixed split (label
-    # sizes span 42-63 at this sf)
-    for cap in (10, 50):
-        got = {(r["id_a"], r["rn"]): (r["id_b"], r["cosine"])
-               for r in similarity.pairwise_topk_per_label_blas(
-                   emb, k=3, max_group_rows=cap,
-                   on_oversize="column").collect()}
-        assert got == want, cap
-    with pytest.raises(ValueError, match="on_oversize"):
-        similarity.pairwise_topk_per_label_blas(
-            emb, k=3, max_group_rows=10, on_oversize="typo")
 
 
 def test_knn_blas_chunked_path_equivalence(emb):

@@ -104,11 +104,6 @@ def test_fixpoint_truncation_raises(spark):
     with pytest.raises(graph.FixpointNotConverged):
         graph.connected_components(
             chain.withColumnsRenamed({"src": "a", "dst": "b"}), max_iter=1)
-    # warn mode: explicit opt-in to the truncated result
-    with pytest.warns(RuntimeWarning):
-        out = graph.transitive_closure(chain, seeds, max_iter=3,
-                                       on_max_iter="warn")
-    assert out.count() == 4  # depths 0..3 — the truncation is visible
 
 
 def test_transitive_closure_exact_boundary_converges(spark):
