@@ -21,10 +21,10 @@ def _ensure_session_defaults(spark: SparkSession) -> None:
     """The driver may hand us a session with different defaults; pin the
     confs correctness depends on (UTC for timestamp<->epoch parity with
     DuckDB; AQE for the skew/coalesce behaviour the plans assume).
-    ``session.STATIC_CONF`` is not pinned: static confs are fixed when
-    the session is built, so a handed-in session keeps its own
-    generated-class cache size (results are the same; repeated queries
-    recompile more)."""
+    The static key of ``session.ENGINE_CONF`` is not pinned: static
+    confs are fixed when the session is built, so a handed-in session
+    keeps its own generated-class cache size (results are the same;
+    repeated queries recompile more)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -606,10 +606,8 @@ def _q_events_props(spark, sf_dir):
 def _q_events_approx(spark, sf_dir):
     from geonames_rdf_spark.streaming import events as ev
 
-    # exact-accuracy twin of approx_event_stats: same percentile_approx
-    # operator with accuracy >= group size => value-identical to DuckDB
-    # quantile_disc, so the sketch path is hash-certified (the HLL/GK
-    # low-accuracy variant stays pinned by pytest accuracy bounds)
+    # percentile_approx with accuracy >= group size => value-identical to
+    # DuckDB quantile_disc, so the sketch operator is hash-certified
     return ev.quantile_event_stats(_events(spark, sf_dir))
 
 

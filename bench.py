@@ -97,7 +97,12 @@ def main() -> None:
     def pipeline_run():
         r = materialize.run_pipeline(spark, SF_DIR, n_pages=N_PAGES,
                                      include_feature_triples=False)
-        return r["triples"].count()
+        try:
+            return r["triples"].count()
+        finally:
+            # the features/pages caches are caller-owned: a later run
+            # must build its own, not read this run's
+            r.unpersist()
 
     # guard telemetry (VERDICT r05 #4): the measured dedup run carries an
     # Observation so a corpus that trips the mega-bucket guard shows up
@@ -194,7 +199,10 @@ def main() -> None:
             t0 = time.time()
             r = materialize.run_pipeline(spark, SF_DIR, n_pages=spages,
                                          include_feature_triples=False)
-            web_rows = r["triples"].count()
+            try:
+                web_rows = r["triples"].count()
+            finally:
+                r.unpersist()
             dt = time.time() - t0
             web_s = dt if web_s is None else min(web_s, dt)
         steady = {

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from geonames_rdf_spark.session import ensure_parallel
 
-M64 = (1 << 64) - 1
 # 2^31-1: keeps a*x inside uint64 for the numpy-vectorized hash family
 MERSENNE = (1 << 31) - 1
 

@@ -24,11 +24,10 @@ Group-size guard (VERDICT r05 #1): each bucket materializes as ONE
 pandas frame inside applyInPandas, so group size = corpus/n_buckets rows
 — at 10^12 docs and the default 32 buckets that is a ~3 TB frame in one
 worker.  ``max_group_rows`` bounds it: a pre-flight per-bucket count
-either raises (``on_oversize='raise'``) or deterministically splits each
-stream into ``ceil(max_count/max_group_rows)`` sub-streams keyed by the
-``_ord`` md5 prefix (``on_oversize='split'``, the default).  Split packs
-stay deterministic and exactly-once (every doc packed once, budgets
-respected per sub-stream); only the stream partitioning — and therefore
+deterministically splits each stream into
+``ceil(max_count/max_group_rows)`` sub-streams keyed by the ``_ord`` md5
+prefix.  Split packs stay deterministic and exactly-once (every doc
+packed once, budgets respected per sub-stream); only the stream partitioning — and therefore
 which docs share a pack — changes, which is the same quality trade
 ``n_buckets`` itself makes.  The default threshold (50M rows ≈ 5 GB of
 (id, count, ord) columns) never fires at contract/test scale, so the
@@ -49,8 +48,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
                    n_buckets: int = 32, text_col: str = "text",
                    id_col: str = "doc_id",
                    count_col: str | None = None,
-                   max_group_rows: int = DEFAULT_MAX_GROUP_ROWS,
-                   on_oversize: str = "split") -> DataFrame:
+                   max_group_rows: int = DEFAULT_MAX_GROUP_ROWS) -> DataFrame:
     """Assign every document to a pack: (doc_id, n_tokens, bucket,
     pack_id, oversized).  ``pack_id`` is globally unique
     (stream * 2^40 + local pack seq).
@@ -61,13 +59,6 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
     count the SAME unit by construction (VERDICT r05 #3).
     """
     import pandas as pd
-
-    # validate the mode at entry (ADVICE r06): a typo'd on_oversize must
-    # fail the first small-scale run, not a production-size corpus when
-    # the threshold finally trips
-    if on_oversize not in ("raise", "split"):
-        raise ValueError("on_oversize must be 'raise' or 'split',"
-                         f" got {on_oversize!r}")
 
     # md5-derived bucket (15 hex digits = 60 bits, fits a signed long):
     # like the sampler's uniform_hash, md5 — not xxhash64 — keeps the
@@ -96,21 +87,11 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
 
     # pre-flight guard: ONE map-side-combinable aggregate over the sized
     # projection (cheap next to the Arrow pass it protects)
-    n_splits = 1
-    if max_group_rows is not None:
-        mx_row = (sized.groupBy("bucket")
-                  .agg(F.count(F.lit(1)).alias("n"))
-                  .agg(F.max("n").alias("mx")).collect())
-        mx = int(mx_row[0]["mx"] or 0)
-        if mx > max_group_rows:
-            if on_oversize == "raise":
-                raise ValueError(
-                    f"pack_sequences: largest bucket holds {mx} rows >"
-                    f" max_group_rows={max_group_rows}; raise n_buckets,"
-                    " lower max_group_rows with on_oversize='split', or"
-                    " pass max_group_rows=None to opt into unbounded"
-                    " per-bucket pandas frames")
-            n_splits = -(-mx // max_group_rows)  # ceil
+    mx_row = (sized.groupBy("bucket")
+              .agg(F.count(F.lit(1)).alias("n"))
+              .agg(F.max("n").alias("mx")).collect())
+    mx = int(mx_row[0]["mx"] or 0)
+    n_splits = max(1, -(-mx // max_group_rows))  # ceil
 
     group_keys = ["bucket"]
     if n_splits > 1:

@@ -137,35 +137,6 @@ def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/triples").drop("bucket")
 
 
-# --- guard telemetry (VERDICT r05 #4) --------------------------------------
-
-def write_guard_metrics(spark: SparkSession, out_dir: str, name: str,
-                        observation) -> dict:
-    """Persist a dedup guard ``Observation`` (oversized_rows,
-    total_rows — see ``dedup._guard_oversized_buckets``) as a row of the
-    run's metrics table, ``<out>/metrics/name=<name>/``.
-
-    The LSH guards degrade RECALL silently when they split/drop a
-    mega-bucket; at production scale that must land in the run's
-    persisted metrics, not in a log line nobody reads.  Call AFTER the
-    action that materialized the observed plan (observe() rides the
-    action).  Per-name private directories — the same concurrent-writer
-    safety as the lineage rows.  Returns the metrics dict written.
-    """
-    got = dict(observation.get)
-    row = local_frame(
-        spark,
-        [(int(got.get("oversized_rows", 0)), int(got.get("total_rows", 0)))],
-        "oversized_rows bigint, total_rows bigint")
-    row.coalesce(1).write.mode("overwrite").parquet(
-        f"{out_dir}/metrics/name={name}")
-    return got
-
-
-def read_guard_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/metrics")
-
-
 # --- stage counters (VERDICT r06 #7) ---------------------------------------
 
 def write_stage_counters(spark: SparkSession, out_dir: str, stage: str,
@@ -176,11 +147,12 @@ def write_stage_counters(spark: SparkSession, out_dir: str, stage: str,
     The curation gates (domain cap, line dedup, quality/decontam) each
     report how much corpus they removed; at production scale those
     numbers are run artifacts the NEXT run audits (did the cap suddenly
-    eat 30% of the corpus?), not stdout lines — the same reasoning as
-    ``write_guard_metrics`` for the LSH guards.  Long-only values, one
+    eat 30% of the corpus?), not stdout lines.  An LSH guard
+    ``Observation`` lands here too: pass its ``.get`` (oversized_rows,
+    total_rows — see ``dedup._guard_oversized_buckets``), after the
+    action that materialized the observed plan.  Long-only values, one
     private directory per stage (concurrent-writer safe, partition
-    discoverable).  Separate root from the guard metrics table because
-    the schemas differ.
+    discoverable).
     """
     rows = [(str(k), int(v)) for k, v in counters.items() if v is not None]
     df = local_frame(spark, rows, "metric string, value bigint")

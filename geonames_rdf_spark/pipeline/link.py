@@ -19,19 +19,19 @@ from pyspark.sql import functions as F
 # deterministic page-language -> country-code-digit affinity used by the
 # synthetic corpus; a real deployment derives this from feature country
 LANG_COUNTRY = {"en": 0, "de": 1, "fr": 2}
+# score added to a candidate whose country matches the page language
+LANG_BONUS = 2.0
 
 
 def link_mentions(
     mentions: DataFrame,
     features: DataFrame,
-    pages: DataFrame | None = None,
 ) -> DataFrame:
     """Resolve each (url, begin) mention to its best candidate.
 
     ``features`` needs (geonameid, population, country_code).  Returns
     (url, surface, begin, end, geonameid, score).  Language context comes
-    from a ``lang`` column on ``mentions`` if present, else from ``pages``
-    (joined — the slow path, kept for API compatibility).
+    from a ``lang`` column on ``mentions`` if present.
     """
     attrs = F.broadcast(
         features.select(
@@ -46,15 +46,12 @@ def link_mentions(
     # equivalent paths pick the same candidate even on rounding-boundary
     # populations (argmax compares prior_rounded + bonus in both)
     score = F.round(F.log10(F.col("_pop") + 1), 6)
-    has_lang = "lang" in mentions.columns
-    if has_lang or pages is not None:
-        if not has_lang:
-            m = m.join(pages.select("url", "lang"), "url", "left")
+    if "lang" in mentions.columns:
         lang_map = F.create_map(
             *[x for k, v in LANG_COUNTRY.items() for x in (F.lit(k), F.lit(f"C{v}"))]
         )
         score = score + F.when(
-            F.col("_cc") == lang_map[F.col("lang")], F.lit(2.0)
+            F.col("_cc") == lang_map[F.col("lang")], F.lit(LANG_BONUS)
         ).otherwise(F.lit(0.0))
     m = m.withColumn("_s", score).withColumn("score", F.round(score, 6))
     # argmax: max_by over (score, -candidate) — highest score, then lowest

@@ -107,15 +107,13 @@ def run_pipeline(
     sf_dir: str,
     n_pages: int = 1000,
     include_feature_triples: bool = True,
-    cache: bool = True,
-    canonicalize_entities: bool = False,
 ) -> PipelineStages:
     """Full web-scale KG construction over a synthesized corpus.
 
-    ``cache=True`` persists the dimension-sized feature table and the RAW
-    page corpus (html, no extracted text — extraction is fused into the
-    scan batches): both feed multiple consumers (the surface-map collect +
-    the link scan; mention scan + the lang join).  On a real deployment
+    Persists the dimension-sized feature table and the RAW page corpus
+    (html, no extracted text — extraction is fused into the scan
+    batches): both feed multiple consumers (the surface-map collect + the
+    link scan; mention scan + the lang join).  On a real deployment
     the corpus is a storage table — the re-read is pruned columnar IO —
     but a generated corpus would otherwise be re-synthesized per consumer.
     The caches are CALLER-owned: ``stages.unpersist()`` releases them
@@ -129,10 +127,8 @@ def run_pipeline(
     first access of either.
     """
     tables = build.gazetteer_tables(spark, sf_dir)
-    features = tables["features"]
-    if cache:
-        features = features.cache()
-        tables["features"] = features
+    features = tables["features"].cache()
+    tables["features"] = features
 
     surfaces = corpus.gazetteer_surfaces(features)
     # S1 (extraction) is FUSED into the scan batches below
@@ -143,9 +139,8 @@ def run_pipeline(
     # unchanged — same ``extract.extract_text_py`` pure function runs
     # inside the scan, equivalence test-pinned).  The cache then holds
     # html only, not html + extracted text.
-    raw_pages = corpus.synthesize_pages(spark, surfaces, n_pages).drop("text")
-    if cache:
-        raw_pages = raw_pages.cache()
+    raw_pages = corpus.synthesize_pages(
+        spark, surfaces, n_pages).drop("text").cache()
 
     stages = PipelineStages({})
     scored_map = functools.cache(
@@ -165,16 +160,8 @@ def run_pipeline(
         # batch (candidate fan-out never shuffles).  The staged operators
         # (detect_mentions + link_mentions) remain available for scoring
         # features that cannot be broadcast; equivalence is test-pinned.
-        linked = mentions.detect_and_link(raw_pages, scored_map(),
-                                          from_html=True)
-        if canonicalize_entities:
-            # S5: sameAs clustering -> canonical-id rewrite of links
-            from geonames_rdf_spark.pipeline import canonicalize
-
-            edges = canonicalize.sameas_edges(features)
-            linked = canonicalize.rewrite_links(
-                linked, canonicalize.canonical_map(edges))
-        return linked
+        return mentions.detect_and_link(raw_pages, scored_map(),
+                                        from_html=True)
 
     def mk_mentions() -> DataFrame:
         # candidate-level mention stream via the staged operator (same
@@ -193,8 +180,7 @@ def run_pipeline(
         {"pages": mk_pages, "linked": mk_linked, "mentions": mk_mentions,
          "triples": mk_triples}
     )
-    if cache:
-        stages._cached = [features, raw_pages]
+    stages._cached = [features, raw_pages]
     return stages
 
 

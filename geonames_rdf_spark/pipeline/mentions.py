@@ -199,7 +199,7 @@ def build_scored_surface_map(features) -> dict[str, list[tuple[int, float, str]]
 
 def detect_and_link(pages,
                     scored_map: dict[str, list[tuple[int, float, str]]] | None,
-                    lang_bonus: float = 2.0, from_html: bool = False,
+                    from_html: bool = False,
                     bundle_file: str | None = None):
     """Mention detection + candidate scoring + per-mention argmax, all
     inside the Arrow batch — the candidate fan-out for hot toponyms never
@@ -211,7 +211,7 @@ def detect_and_link(pages,
 
     Returns (url, surface, begin, end, geonameid, score).
     """
-    from geonames_rdf_spark.pipeline.link import LANG_COUNTRY
+    from geonames_rdf_spark.pipeline.link import LANG_BONUS, LANG_COUNTRY
 
     spark = pages.sparkSession
     if bundle_file is not None:
@@ -267,12 +267,12 @@ def detect_and_link(pages,
                 for start, pat in ac.scan(text):
                     best_id, best_score = None, None
                     for cid, prior, cc in smap[pat]:
-                        s = prior + (lang_bonus if cc == bonus_cc else 0.0)
+                        s = prior + (LANG_BONUS if cc == bonus_cc else 0.0)
                         if best_score is None or s > best_score or (
                             s == best_score and cid < best_id
                         ):
                             best_id, best_score = cid, s
-                        elif prior + lang_bonus < best_score:
+                        elif prior + LANG_BONUS < best_score:
                             # candidates sorted by prior desc: nothing later
                             # can beat OR tie best even with the bonus
                             break

@@ -6,8 +6,11 @@ UTC session timezone (oracle/DuckDB parity), Arrow for the vectorized UDF
 stages, and shuffle partitions sized to cores rather than the 200 default.
 Cores, driver heap and the local scratch dir default to what the host
 offers; ``SPARK_GRAFT_CPUS``, ``SPARK_DRIVER_MEM`` and ``SPARK_LOCAL_DIRS``
-override them.  ``STATIC_CONF`` holds the JVM-wide settings that
-``get_spark`` and the ``jobs/`` session builders share.
+override them.  ``ENGINE_CONF`` holds the engine settings that
+``get_spark`` and the ``jobs/`` session builders share; master, cores,
+heap, shuffle partitions and the local/UI/bind settings are
+``get_spark``'s alone (a ``spark-submit`` job takes them from its
+launcher).
 """
 
 from __future__ import annotations
@@ -17,16 +20,26 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Static confs: read once per JVM, so they take effect only in a session
-# built with them; a session a caller hands in keeps its own values and
-# ``spark.conf.set`` cannot change them.
-STATIC_CONF = {
+# Engine confs every session of this package is built with.
+ENGINE_CONF = {
+    # AQE: runtime re-planning (skew joins, partition coalescing)
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # gazetteer id-sets/dimensions are tens of MB — worth broadcasting
+    # well past the 10m default (one copy per executor)
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
+    "spark.sql.session.timeZone": "UTC",
+    # Arrow for the pandas boundary (toPandas, createDataFrame, UDFs)
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Spark's LRU cache of generated classes (default 100 entries).  The
     # repeated ops need up to ~150 classes (perfbench kg op 149, web op
     # 93, the sf0.001 test kg op 150); at 100 entries a repeated kg op
     # recompiles ~110 of them with Janino and JIT-compiles the new
     # bytecode again, 20-30% of the op's CPU time (DESIGN.md, "Generated
-    # code and the JIT").  1000 holds them with ~6x headroom.
+    # code and the JIT").  1000 holds them with ~6x headroom.  A static
+    # conf: read once per JVM, so it takes effect only in a session built
+    # with it; a session a caller hands in keeps its own value.
     "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
@@ -87,14 +100,6 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # gazetteer id-sets/dimensions are tens of MB — worth broadcasting
-        # well past the 10m default (one copy per executor)
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory())
         # disk-backed shuffle/spill dir: a tmpfs one would spend the same
         # RAM the heap and the Python workers need
@@ -105,7 +110,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.bindAddress", "127.0.0.1")
-        .config(map=STATIC_CONF)
+        .config(map=ENGINE_CONF)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

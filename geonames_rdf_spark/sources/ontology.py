@@ -29,9 +29,6 @@ SKOS_CONCEPT_TYPE = vocab.GN + "Code"
 SKOS_NOTATION = vocab.SKOS + "notation"
 SKOS_IN_SCHEME = vocab.SKOS + "inScheme"
 SKOS_PREF_LABEL = vocab.SKOS + "prefLabel"
-SKOS_DEFINITION = vocab.SKOS + "definition"
-GN_CLASS_TYPE = vocab.GN + "Class"
-RDFS_COMMENT = vocab.RDFS + "comment"
 OWL_DATATYPE_PROPERTY = vocab.OWL + "DatatypeProperty"
 
 FIXTURE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),

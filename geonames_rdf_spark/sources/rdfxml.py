@@ -30,7 +30,6 @@ RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 
 _RDF_RDF = f"{{{RDF_NS}}}RDF"
-_RDF_DESCRIPTION = f"{{{RDF_NS}}}Description"
 _RDF_ABOUT = f"{{{RDF_NS}}}about"
 _RDF_RESOURCE = f"{{{RDF_NS}}}resource"
 _RDF_NODEID = f"{{{RDF_NS}}}nodeID"

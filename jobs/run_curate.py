@@ -220,10 +220,10 @@ def main() -> None:
     args = build_arg_parser().parse_args()
     from pyspark.sql import SparkSession
 
-    from geonames_rdf_spark.session import STATIC_CONF
+    from geonames_rdf_spark.session import ENGINE_CONF
 
     spark = (SparkSession.builder.appName("curate")
-             .config(map=STATIC_CONF).getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     run(spark, args)
     spark.stop()

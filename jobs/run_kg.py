@@ -68,11 +68,11 @@ def main() -> None:
     from geonames_rdf_spark.pipeline import (
         corpus, lineage, materialize, mentions,
     )
-    from geonames_rdf_spark.session import STATIC_CONF
+    from geonames_rdf_spark.session import ENGINE_CONF
     from geonames_rdf_spark.sources import catalog
 
     spark = (SparkSession.builder.appName("kg-construct")
-             .config(map=STATIC_CONF).getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     import os

@@ -43,11 +43,11 @@ def main() -> None:
 
     from geonames_rdf_spark.operators import build
     from geonames_rdf_spark.pipeline import mentions
-    from geonames_rdf_spark.session import STATIC_CONF
+    from geonames_rdf_spark.session import ENGINE_CONF
     from geonames_rdf_spark.streaming import events as ev
 
     spark = (SparkSession.builder.appName("stream_kg")
-             .config(map=STATIC_CONF).getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
     feats = build.gazetteer_tables(spark, args.sf_dir)["features"]

@@ -304,7 +304,7 @@ def test_bundle_file_scan_equals_broadcast_scan(spark, tmp_path):
 
 
 def test_run_pipeline_unpersist_releases_caller_owned_caches(spark):
-    """run_pipeline(cache=True) persists features + pages; the caches
+    """run_pipeline persists features + pages; the caches
     are caller-owned and stages.unpersist() must release BOTH (r08 —
     repeated calls in a long-lived session must not accumulate cached
     frames; same contract as the cap_per_domain counts fix)."""

@@ -66,10 +66,10 @@ def test_repeated_kg_op_reuses_generated_classes(spark, tmp_path):
     and others do not (4 new classes in 1 of 7 measured second passes,
     0 in the rest)."""
     from geonames_rdf_spark import oracle
-    from geonames_rdf_spark.session import STATIC_CONF, codegen_counters
+    from geonames_rdf_spark.session import ENGINE_CONF, codegen_counters
 
     key = "spark.sql.codegen.cache.maxEntries"
-    assert spark.conf.get(key) == STATIC_CONF[key] == "1000"
+    assert spark.conf.get(key) == ENGINE_CONF[key] == "1000"
     out = str(tmp_path / "kg")
 
     def kg_op() -> None:
@@ -187,6 +187,41 @@ def test_package_builds_no_relation_outside_local_frame():
                       if isinstance(n, ast.Attribute)
                       and n.attr == "createDataFrame"
                       and id(n) not in allowed]
+    assert not offenders, offenders
+
+
+def test_jobs_build_sessions_with_engine_conf():
+    """Every ``SparkSession.builder`` chain in ``jobs/`` applies
+    ``session.ENGINE_CONF`` (``.config(map=ENGINE_CONF)``): a bare
+    builder runs with Arrow off, 200 shuffle partitions, a 10 MB
+    broadcast threshold and a 100-entry generated-class cache."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "jobs"
+    chains, offenders = 0, []
+    for path in sorted(root.glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for n in ast.walk(tree):
+            if not (isinstance(n, ast.Attribute) and n.attr == "builder"
+                    and isinstance(n.value, ast.Name)
+                    and n.value.id == "SparkSession"):
+                continue
+            chains += 1
+            # the chain applies the dict when some .config(map=ENGINE_CONF)
+            # call has this builder inside its receiver
+            applies = any(
+                isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Attribute)
+                and c.func.attr == "config"
+                and any(k.arg == "map" and isinstance(k.value, ast.Name)
+                        and k.value.id == "ENGINE_CONF"
+                        for k in c.keywords)
+                and any(x is n for x in ast.walk(c))
+                for c in ast.walk(tree))
+            if not applies:
+                offenders.append(f"{path.name}:{n.lineno}")
+    assert chains >= 3
     assert not offenders, offenders
 
 

@@ -87,7 +87,7 @@ def test_lsh_bucket_guard_bounds_pathological_bucket(spark):
 
 def test_guard_telemetry_lands_in_lineage_metrics(spark, tmp_path):
     """VERDICT r05 #4 end to end: a flood run's guard observation is
-    PERSISTED to the run's metrics table, so silent recall degradation
+    PERSISTED to the run's stage metrics table, so silent recall degradation
     (salted mega-buckets) is visible in production output, not
     just in a transient Observation object."""
     from pyspark.sql import Observation
@@ -103,15 +103,21 @@ def test_guard_telemetry_lands_in_lineage_metrics(spark, tmp_path):
     dedup.lsh_candidate_pairs(
         sigs, max_bucket=50, guard_observation=obs).count()
     out = str(tmp_path / "run")
-    got = lineage.write_guard_metrics(spark, out, "minhash_lsh", obs)
+    got = obs.get
+    lineage.write_stage_counters(spark, out, "minhash_lsh", got)
     assert got["oversized_rows"] > 0
-    rows = {r["name"]: r for r in
-            lineage.read_guard_metrics(spark, out).collect()}
-    assert rows["minhash_lsh"]["oversized_rows"] == got["oversized_rows"]
-    assert rows["minhash_lsh"]["total_rows"] == 400 * 16
-    # idempotent per-name overwrite (re-run converges, no dup rows)
-    lineage.write_guard_metrics(spark, out, "minhash_lsh", obs)
-    assert lineage.read_guard_metrics(spark, out).count() == 1
+
+    def stored():
+        return [r for r in lineage.read_stage_counters(spark, out).collect()
+                if r["stage"] == "minhash_lsh"]
+
+    rows = {r["metric"]: r["value"] for r in stored()}
+    assert rows["oversized_rows"] == got["oversized_rows"]
+    assert rows["total_rows"] == 400 * 16
+    # idempotent per-stage overwrite (re-run converges: one row per metric)
+    lineage.write_stage_counters(spark, out, "minhash_lsh", got)
+    assert sorted(r["metric"] for r in stored()) == [
+        "oversized_rows", "total_rows"]
 
 
 def test_simhash_blocking_stays_linear_on_hot_chunk(spark):
@@ -784,12 +790,10 @@ def test_chunk_then_pack_composition_margin_1x(spark):
 
 def test_pack_sequences_group_size_guard(spark):
     """VERDICT r05 #1: a bucket must never materialize unboundedly as
-    one pandas frame.  raise mode fails loudly; split mode bounds every
-    applyInPandas group at ~max_group_rows while keeping packing
-    exactly-once, budget-respecting, deterministic, and pack-id-unique
-    across sub-streams."""
-    import pytest as _pt
-
+    one pandas frame.  The split bounds every applyInPandas group at
+    ~max_group_rows while keeping packing exactly-once,
+    budget-respecting, deterministic, and pack-id-unique across
+    sub-streams."""
     from geonames_rdf_spark.operators import packing
 
     # n_buckets=1: the pathological single-stream corpus
@@ -797,10 +801,6 @@ def test_pack_sequences_group_size_guard(spark):
         F.col("id").alias("doc_id"),
         F.concat(F.lit("tok "), F.lit("word "), F.col("id").cast("string"))
         .alias("text"))
-    with _pt.raises(ValueError, match="max_group_rows"):
-        packing.pack_sequences(docs, seq_len=16, n_buckets=1,
-                               max_group_rows=500, on_oversize="raise")
-
     packed = packing.pack_sequences(docs, seq_len=16, n_buckets=1,
                                     max_group_rows=500)
     assert packed.count() == 2000                       # exactly-once
@@ -1241,18 +1241,6 @@ def test_dedup_spans_c4_duck_parity(spark, duck):
     # + partial — 2 spans, both unique, both kept
     assert rows[5]["n_lines_removed"] == 0 and "\x0b" in rows[5]["text"]
     assert rows[6]["n_lines_removed"] == 0 and rows[6]["n_lines_kept"] == 2
-
-
-def test_pack_sequences_validates_on_oversize_at_entry(spark):
-    """A typo'd on_oversize fails immediately — not only when the
-    group-size threshold finally trips on a production corpus."""
-    import pytest as _pytest
-
-    from geonames_rdf_spark.operators import packing
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
-    with _pytest.raises(ValueError, match="on_oversize"):
-        packing.pack_sequences(docs, on_oversize="typo")  # guard not tripped
 
 
 def test_cap_per_domain_salt_invariant_vs_window(spark):
