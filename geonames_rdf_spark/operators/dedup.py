@@ -43,7 +43,54 @@ def _shingles(text: str, k: int) -> set[str]:
     toks = text.split()
     if len(toks) < k:
         return {" ".join(toks)} if toks else set()
-    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+    return set(map(" ".join, zip(*(toks[i:] for i in range(k)))))
+
+
+CHUNK_ITEMS = 8192
+"""Item instances (shingles or tokens) per signature chunk.  Each chunk
+hashes its distinct items once and gathers one row per instance, so
+the bound caps a Python worker's working set at a few MB whatever the
+Arrow batch size.  A chunk closes at the first document that reaches
+the bound, so it holds at most ``CHUNK_ITEMS`` plus one document."""
+
+
+def _reduce_per_doc(groups, rows_of, ufunc, empty):
+    """One reduced row per document, computed chunk by chunk.
+
+    ``groups`` yields each document's items (strings).  Per chunk of
+    about ``CHUNK_ITEMS`` instances, every distinct item is md5-hashed
+    once (``_h64``), ``rows_of(h)`` maps the uint64 hashes to one row per
+    distinct item, and each document's row is ``ufunc.reduceat`` over
+    its run of instance rows.  A document without items gets ``empty``,
+    a row whose dtype is also the reduction's.  Returns an
+    ``(n_docs, width)`` array.
+    """
+    import numpy as np
+
+    def reduce_chunk(flat, starts):
+        codes, uniq = pd.factorize(np.array(flat, dtype=object))
+        h = np.fromiter(map(_h64, uniq), dtype=np.uint64, count=len(uniq))
+        rows = rows_of(h)
+        starts = np.array(starts, dtype=np.intp)
+        res = np.empty((len(starts), len(empty)), dtype=empty.dtype)
+        # a document's run ends where the next non-empty one starts
+        has = np.diff(starts, append=len(flat)) > 0
+        res[~has] = empty
+        if flat:
+            res[has] = ufunc.reduceat(rows[codes], starts[has], axis=0,
+                                      dtype=empty.dtype)
+        return res
+
+    out, flat, starts = [], [], []
+    for items in groups:
+        starts.append(len(flat))
+        flat.extend(items)
+        if len(flat) >= CHUNK_ITEMS:
+            out.append(reduce_chunk(flat, starts))
+            flat, starts = [], []
+    if starts or not out:
+        out.append(reduce_chunk(flat, starts))
+    return np.concatenate(out)
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
@@ -52,7 +99,9 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     """(id, sig array<long>) — MinHash over word k-shingles.
 
     Universal-hash family a*x+b mod p with (a, b) derived from md5 of the
-    seed index — identical on every executor, every run.
+    seed index — identical on every executor, every run.  x is a
+    shingle's md5 mod p; a document without shingles (empty or NULL
+    text) hashes as x = 0.
     """
     params = [
         (1 | _h64(f"minhash-a-{i}") % MERSENNE, _h64(f"minhash-b-{i}") % MERSENNE)
@@ -62,22 +111,25 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     def sig(batches):
         import numpy as np
 
-        A = np.array([p[0] for p in params], dtype=np.uint64)[:, None]
-        B = np.array([p[1] for p in params], dtype=np.uint64)[:, None]
+        A = np.array([p[0] for p in params], dtype=np.uint64)
+        B = np.array([p[1] for p in params], dtype=np.uint64)
         P = np.uint64(MERSENNE)
+
+        def family(h):
+            # (a*x + b) mod p over (n_distinct, n_hashes), in place; a,
+            # x < 2^31 so a*x fits in uint64, and the result fits in
+            # uint32, whose row-wise minimum runs about twice as fast
+            v = (h % P)[:, None] * A
+            v += B
+            v %= P
+            return v.astype(np.uint32)
+
         for pdf in batches:
-            out_ids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = _shingles(text or "", k)
-                base = np.fromiter(
-                    ((_h64(s) % MERSENNE) for s in sh), dtype=np.uint64,
-                    count=len(sh),
-                ) if sh else np.zeros(1, dtype=np.uint64)
-                # (a*x + b) mod p, vectorized over (n_hashes, n_shingles);
-                # a, x < 2^31 so a*x fits in uint64
-                sigs.append(((A * base + B) % P).min(axis=1).astype("int64").tolist())
-                out_ids.append(did)
-            yield pd.DataFrame({"id": out_ids, "sig": sigs})
+            sigs = _reduce_per_doc(
+                (_shingles(t or "", k) for t in pdf[text_col]),
+                family, np.minimum, B.astype(np.uint32))  # x = 0 hashes to b
+            yield pd.DataFrame({"id": pdf[id_col].to_numpy(),
+                                "sig": list(sigs.astype(np.int64))})
 
     return ensure_parallel(
         docs.select(F.col(id_col), F.col(text_col))
@@ -319,23 +371,22 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
         import numpy as np
 
         shifts = np.arange(bits, dtype=np.uint64)
+
+        def signs(h):
+            # +1 where a token's hash bit is set, -1 where it is clear;
+            # int8 rows summed into int32 gather and add fastest
+            return ((h[:, None] >> shifts) & np.uint64(1)).astype(np.int8) * 2 - 1
+
         for pdf in batches:
-            ids, out = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = (text or "").split()
-                if toks:
-                    H = np.fromiter((_h64(t) for t in toks), dtype=np.uint64,
-                                    count=len(toks))
-                    bitmat = (H[:, None] >> shifts) & np.uint64(1)
-                    acc = (2 * bitmat.astype(np.int64) - 1).sum(axis=0)
-                else:
-                    acc = np.full(bits, -1, dtype=np.int64)
-                v = int(((acc > 0).astype(np.uint64) << shifts).sum(dtype=np.uint64))
-                if v >= 1 << 63:  # store as signed 64-bit
-                    v -= 1 << 64
-                ids.append(did)
-                out.append(v)
-            yield pd.DataFrame({"id": ids, "simhash": out})
+            # every token instance counts: the sign sums run over the
+            # document's token list, not its distinct tokens
+            acc = _reduce_per_doc(((t or "").split() for t in pdf[text_col]),
+                                  signs, np.add, np.full(bits, -1, np.int32))
+            v = ((acc > 0).astype(np.uint64) << shifts).sum(
+                axis=1, dtype=np.uint64)
+            # stored as signed 64-bit
+            yield pd.DataFrame({"id": pdf[id_col].to_numpy(),
+                                "simhash": v.view(np.int64)})
 
     return ensure_parallel(
         docs.select(F.col(id_col), F.col(text_col))

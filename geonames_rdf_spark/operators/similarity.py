@@ -166,7 +166,7 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
                                  vec_col: str = "embedding",
                                  id_col: str = "vec_id",
                                  label_col: str = "label",
-                                 max_group_rows: int | None = 200_000,
+                                 max_group_rows: int = 200_000,
                                  chunk_rows: int | None = None) -> DataFrame:
     """BLAS backend for ``pairwise_topk_per_label``: one Arrow batch per
     label group, cosine as a numpy matmul (X̂ X̂ᵀ), top-k per row — the
@@ -182,8 +182,7 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
       ``max_group_rows`` fails loudly with the offending labels named,
       pointing at IVF — exact per-label kNN is O(n²d) and a 10^7-row
       hot label is a worker OOM plus hours of matmul, which must never
-      run silently (``max_group_rows=None`` skips the job for trusted
-      inputs).
+      run silently.
 
     - CHUNKED MATMUL: the score matrix is computed in row chunks sized so
       peak memory is ~chunk×n instead of n×n (an 80 GB matrix for a
@@ -192,20 +191,19 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
     """
     import pandas as pd
 
-    if max_group_rows is not None:
-        hot = (embeddings.groupBy(label_col)
-               .agg(F.count(F.lit(1)).alias("_n"))
-               .filter(F.col("_n") > max_group_rows)
-               .orderBy(F.desc("_n")).limit(5).collect())
-        if hot:
-            worst = ", ".join(
-                f"{r[label_col]!r}({r['_n']} rows)" for r in hot)
-            raise ValueError(
-                f"pairwise_topk_per_label_blas: label group(s) exceed"
-                f" max_group_rows={max_group_rows}: {worst} — exact"
-                " per-label kNN is quadratic; route hot labels through"
-                " IVF (ann_ivf_topk / write_ivf_index) or raise the cap"
-                " explicitly")
+    hot = (embeddings.groupBy(label_col)
+           .agg(F.count(F.lit(1)).alias("_n"))
+           .filter(F.col("_n") > max_group_rows)
+           .orderBy(F.desc("_n")).limit(5).collect())
+    if hot:
+        worst = ", ".join(
+            f"{r[label_col]!r}({r['_n']} rows)" for r in hot)
+        raise ValueError(
+            f"pairwise_topk_per_label_blas: label group(s) exceed"
+            f" max_group_rows={max_group_rows}: {worst} — exact"
+            " per-label kNN is quadratic; route hot labels through"
+            " IVF (ann_ivf_topk / write_ivf_index) or raise the cap"
+            " explicitly")
 
     def topk(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np

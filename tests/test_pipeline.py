@@ -121,8 +121,7 @@ def test_lineage_resume_exact(spark, tmp_path):
     tables = build.gazetteer_tables(spark, SF)
     surfaces = corpus.gazetteer_surfaces(tables["features"])
     corpus_path = str(tmp_path / "pages_store")
-    catalog.write_table(
-        corpus.synthesize_pages(spark, surfaces, 120), corpus_path)
+    corpus.synthesize_pages(spark, surfaces, 120).write.parquet(corpus_path)
     pages = catalog.read_table(spark, corpus_path)
     smap = mentions.build_scored_surface_map(tables["features"])
 
