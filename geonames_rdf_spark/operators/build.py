@@ -12,28 +12,25 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from geonames_rdf_spark import synth
+from geonames_rdf_spark import memo, synth
 from geonames_rdf_spark.operators import altnames, places, preshape
 
-# Prepared-plan memo (optimization r09): the gazetteer derivation and the
-# full-KG plan are PURE functions of (session, sf_dir, flags) — lazy
-# DataFrames, no data.  Re-deriving them per call re-runs temp-view
-# registration, SQL parsing and eager per-transformation ANALYSIS of a
-# multi-thousand-node tree on the driver (~0.5 s for the tables, ~2 s for
-# the full build plan — measured, OPTIMIZATION_r09.md) while EXECUTION of
-# the same plan is what actually scans the parquet.  Memoizing the plan —
-# the prepared-statement pattern — removes that fixed driver cost from
-# every repeated build in a long-lived session.  NO EXECUTION STATE is
-# shared: ``build_kg`` hands every caller a FRESH Dataset over the stored
-# analyzed plan (``_fresh_over``), because returning the same Dataset
-# object would let Spark silently reuse its shuffle files and broadcast
-# futures across actions (stage skipping) — which would turn a repeated,
-# timed build into a shuffle replay instead of a recomputation from the
-# parquet inputs.  Entries are validated against the owning session and
-# keyed by every argument that shapes the plan plus the identity of the
-# input files (``_listing``): a file replaced under ``sf_dir`` mid-session
-# is a miss, never a stale plan.
-_PLAN_MEMO: dict = {}
+# Prepared plans (the memo sites "gazetteer" and "kg", see ``memo``): the
+# gazetteer derivation and the full-KG plan are PURE functions of
+# (session, sf_dir, flags) — lazy DataFrames, no data.  Re-deriving them
+# per call re-runs temp-view registration, SQL parsing and eager
+# per-transformation ANALYSIS of a multi-thousand-node tree on the driver
+# (~0.5 s for the tables, ~2 s for the full build plan — measured,
+# OPTIMIZATION_r09.md) while EXECUTION of the same plan is what actually
+# scans the parquet.  NO EXECUTION STATE is shared: ``build_kg`` hands
+# every caller a FRESH Dataset over the stored analyzed plan
+# (``_fresh_over``), because returning the same Dataset object would let
+# Spark silently reuse its shuffle files and broadcast futures across
+# actions (stage skipping) — which would turn a repeated, timed build
+# into a shuffle replay instead of a recomputation from the parquet
+# inputs.  Entries are keyed by every argument that shapes the plan, and
+# their token is the identity of the input files (``_listing``): a file
+# replaced under ``sf_dir`` mid-session is a miss, never a stale plan.
 
 
 def _listing(sf_dir: str) -> tuple:
@@ -63,48 +60,34 @@ def _fresh_over(df: DataFrame) -> DataFrame:
     return df.select("*")
 
 
-def _memo_session_ok(spark: SparkSession) -> bool:
-    try:
-        return not spark.sparkContext._jsc.sc().isStopped()
-    except Exception:  # noqa: BLE001 — any broken handle means rebuild
-        return False
-
-
 def gazetteer_tables(spark: SparkSession, sf_dir: str,
-                     replicate: int = 1,
-                     cache_dims: bool = True) -> dict[str, DataFrame]:
+                     replicate: int = 1) -> dict[str, DataFrame]:
     """Derive every pre-shaped table from the raw synthesized inputs.
 
-    ``cache_dims`` persists the raw feature table: five consumers read it
+    The raw feature table is persisted: five consumers read it
     (features_plus, four admin lookups, countries) and the derivation
     chain would otherwise be recomputed per broadcast build.  Dimension
     tables are cache-sized by definition (GeoNames ~13M rows vs 10^12
     pages).
 
-    The derived PLAN dict is memoized per (session, sf_dir, input files,
-    replicate, cache_dims) — see ``_PLAN_MEMO``; a shallow copy is
-    returned so callers that swap entries (``run_pipeline`` re-binds
-    ``features`` to a cached frame) cannot leak into later calls.
+    The derived PLAN dict is memoized (site "gazetteer", key (sf_dir,
+    replicate), token the input listing); a shallow copy is returned so
+    callers that swap entries (``run_pipeline`` re-binds ``features`` to
+    a cached frame) cannot leak into later calls.
     """
-    key = ("gaz", sf_dir, replicate, cache_dims)
-    listing = _listing(sf_dir)
-    hit = _PLAN_MEMO.get(key)
-    if hit is not None and hit[0] is spark and _memo_session_ok(spark):
-        if hit[1] == listing:
-            out = dict(hit[2])
-            out["admin_lookups"] = dict(out["admin_lookups"])
-            return out
-        # an input changed under sf_dir: the cached raw features (and any
-        # other cached scan of the old files) would be matched by plan
-        # and served again — refresh them before rebuilding
-        spark.catalog.refreshByPath(sf_dir)
-    gaz = synth.register_gazetteer(spark, sf_dir, replicate=replicate)
-    if cache_dims:
+    def derive() -> dict:
+        gaz = synth.register_gazetteer(spark, sf_dir, replicate=replicate)
         raw = gaz["features"].cache()
         raw.createOrReplaceTempView("features")
         gaz["features"] = raw
-    tables = gazetteer_tables_from_raw(spark, gaz)
-    _PLAN_MEMO[key] = (spark, listing, tables)
+        return gazetteer_tables_from_raw(spark, gaz)
+
+    # an input changed under sf_dir: the cached raw features (and any
+    # other cached scan of the old files) would be matched by plan and
+    # served again — refresh them before rebuilding
+    tables = memo.get(spark, "gazetteer", (sf_dir, replicate),
+                      _listing(sf_dir), derive,
+                      on_stale=lambda: spark.catalog.refreshByPath(sf_dir))
     return {**tables, "admin_lookups": dict(tables["admin_lookups"])}
 
 
@@ -166,25 +149,27 @@ def build_kg(
     pre-shaping chain isn't re-derived per consumer (run_pipeline used to
     pay it twice).
 
-    The assembled PLAN is memoized per (session, sf_dir, input files,
-    flags) when ``tables`` is None — see ``_PLAN_MEMO``: the returned
-    DataFrame is an immutable lazy plan, and re-assembling it costs ~2 s
-    of driver-side analysis per call; execution always recomputes from
-    the parquet."""
-    memo_key = None
-    if tables is not None:
-        if replicate != 1:
-            raise ValueError("replicate requires deriving fresh tables")
-        t = tables
-    else:
-        memo_key = ("kg", sf_dir, consolidate, include_docs, include_alt,
-                    include_ags, include_ontology, ags_country, replicate)
-        listing = _listing(sf_dir)
-        hit = _PLAN_MEMO.get(memo_key)
-        if (hit is not None and hit[0] is spark and hit[1] == listing
-                and _memo_session_ok(spark)):
-            return _fresh_over(hit[2])
-        t = gazetteer_tables(spark, sf_dir, replicate=replicate)
+    The assembled PLAN is memoized (site "kg", key (sf_dir, flags),
+    token the input listing) when ``tables`` is None: the returned
+    DataFrame is a fresh wrapper over an immutable lazy plan, and
+    re-assembling it costs ~2 s of driver-side analysis per call;
+    execution always recomputes from the parquet."""
+    if tables is None:
+        key = (sf_dir, consolidate, include_docs, include_alt, include_ags,
+               include_ontology, ags_country, replicate)
+        # the stored Dataset is the PLAN holder only — hand out a fresh
+        # wrapper so no caller's execution state is pinned by the memo
+        return _fresh_over(memo.get(
+            spark, "kg", key, _listing(sf_dir),
+            lambda: build_kg(
+                spark, sf_dir, consolidate=consolidate,
+                include_docs=include_docs, include_alt=include_alt,
+                include_ags=include_ags, include_ontology=include_ontology,
+                ags_country=ags_country,
+                tables=gazetteer_tables(spark, sf_dir, replicate=replicate))))
+    if replicate != 1:
+        raise ValueError("replicate requires deriving fresh tables")
+    t = tables
     wide = places.feature_entities(
         t["features"], t["country_codes"], t["admin_lookups"], t["hierarchy"]
     )
@@ -200,9 +185,4 @@ def build_kg(
         from geonames_rdf_spark.sources import ontology
 
         out = out.unionByName(ontology.ontology_triples(spark))
-    if memo_key is not None:
-        _PLAN_MEMO[memo_key] = (spark, listing, out)
-        # the stored Dataset is the PLAN holder only — hand out a fresh
-        # wrapper so no caller's execution state is pinned by the memo
-        return _fresh_over(out)
     return out

@@ -3,10 +3,10 @@
 The corpus is partitioned by ``pmod(xxhash64(url), N)`` buckets.  Each run
 writes triples under ``out/triples/bucket=K/`` (a per-bucket directory
 OVERWRITE — idempotent per bucket) and a lineage row
-(bucket, n_pages, n_mentions, n_triples, status) under
-``out/lineage/bucket=K/``.  Resume = read the lineage table, skip buckets
-already 'done', process the rest; a re-run after a crash converges to the
-same triple set because the bucket-directory overwrite is idempotent.
+(bucket, n_pages, n_triples, status) under ``out/lineage/bucket=K/``.
+Resume = read the lineage table, skip buckets already 'done', process the
+rest; a re-run after a crash converges to the same triple set because the
+bucket-directory overwrite is idempotent.
 
 Writing each bucket to ITS OWN directory (instead of ``partitionBy`` with
 dynamic-partition overwrite into a shared root) is what makes bucket jobs
@@ -32,9 +32,9 @@ from pyspark.sql import functions as F
 
 from geonames_rdf_spark.session import local_frame
 
-LINEAGE_SCHEMA = (
-    "bucket int, n_pages bigint, n_mentions bigint, n_triples bigint, status string"
-)
+# read with an explicit schema, so tables written before the always-NULL
+# n_mentions column was dropped still read (parquet resolves by name)
+LINEAGE_SCHEMA = "bucket int, n_pages bigint, n_triples bigint, status string"
 
 
 def done_buckets(spark: SparkSession, out_dir: str) -> set[int]:
@@ -67,8 +67,8 @@ def _process_bucket(spark: SparkSession, pages_b: DataFrame,
     # bucket rides the DIRECTORY name (partition discovery), not the file
     # — a data column duplicating the partition column is a read error
     row = local_frame(
-        spark, [(obs_pages.get["n"], None, obs_triples.get["n"], "done")],
-        "n_pages bigint, n_mentions bigint, n_triples bigint, status string",
+        spark, [(obs_pages.get["n"], obs_triples.get["n"], "done")],
+        "n_pages bigint, n_triples bigint, status string",
     )
     row.coalesce(1).write.mode("overwrite").parquet(
         f"{out_dir}/lineage/bucket={b}")

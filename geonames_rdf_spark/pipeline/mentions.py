@@ -12,12 +12,11 @@ too big to broadcast, use ``operators.skew.salted_join`` instead.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark import memo
 from geonames_rdf_spark.pipeline.matcher import build_matcher, scored_fingerprint
 
 
@@ -43,9 +42,9 @@ def detect_mentions(
     (same ``extract.extract_text_py`` pure function).
 
     The (matcher, map) broadcast is shared with ``detect_and_link`` and
-    reused across calls with equal map content (``_memoized_broadcast``).
+    reused across calls with equal map content (``_matcher_broadcast``).
     """
-    bc = _memoized_broadcast(pages.sparkSession, scored_map)
+    bc = _matcher_broadcast(pages.sparkSession, scored_map)
     text_col = "html" if from_html else "text"
     cols = ["url", text_col] + (["lang"] if carry_lang else [])
     if from_html:
@@ -99,80 +98,24 @@ def detect_mentions(
 
 # --- fused scan + link (the 100 TB hot path) -------------------------------
 
-# worker-side bundle cache: (abs path, size, mtime) -> (matcher, scored_map).
-# Keyed on file identity, not just name, so a re-shipped bundle with new
-# content is reloaded; hit = zero per-job cost after the first task.
-_BUNDLE_CACHE: dict = {}
-
-# Driver-side broadcast memo — the ONE way the (matcher, scored_map)
-# bundle broadcast is reused, by both scans: building the automaton +
-# broadcasting it is a per-CALL fixed cost — driver trie/regex compile +
-# pickle, then every Python worker unpickles AND recompiles the regex
-# program once per broadcast id.  Repeated scans over the same gazetteer
-# (bench passes, incremental micro-batches, the per-bucket resume loop,
-# the mentions and linked stages of one pipeline) would pay it every
-# time.  Keyed on ``scored_fingerprint`` — keys AND candidates, so a map
-# whose candidate ids or priors changed broadcasts fresh even when its
-# surfaces did not; one live entry bounds memory.  This reuses a
-# *dimension* broadcast, never results: every scan still computes from
-# its input pages.
-_BC_MEMO: dict = {}
-
-
-def _memoized_broadcast(spark, scored_map: dict):
-    """Broadcast of ``(build_matcher(scored_map), scored_map)``, reused
-    while the map content and the SparkContext are unchanged."""
-    sc = spark.sparkContext
-    fp = scored_fingerprint(scored_map)
-    hit = _BC_MEMO.get(fp)
-    if hit is not None and hit[1] is sc:
-        return hit[0]
-    bc = sc.broadcast((build_matcher(scored_map), scored_map))
-    _BC_MEMO.clear()
-    _BC_MEMO[fp] = (bc, sc)
-    return bc
-
-
-def save_matcher_bundle(scored_map: dict, path: str) -> dict:
-    """Serialize (matcher, scored_map) once to ``path`` for SparkFiles
-    distribution — the build-once alternative to per-job collect +
-    broadcast (VERDICT r04 next-round #4).
-
-    At gazetteer scales where ``build_scored_surface_map`` costs
-    minutes/GBs on the driver (measured: scripts/matcher_build_cost.py,
-    DESIGN.md ceiling table), the deployment shape is: ONE offline job
-    builds the map and writes this bundle; every scan job ships the FILE
-    (``detect_and_link(..., bundle_file=...)``) — no per-job py4j
-    collect, no per-job broadcast ser/deser, and workers reuse the
-    deserialized bundle across jobs via ``_BUNDLE_CACHE``.
-
-    Returns {"bytes": pickled size, "surfaces": len(scored_map)}.
-    """
-    import pickle
-
-    bundle = (build_matcher(scored_map), scored_map)
-    with open(path, "wb") as f:
-        pickle.dump(bundle, f, protocol=pickle.HIGHEST_PROTOCOL)
-    return {"bytes": os.path.getsize(path), "surfaces": len(scored_map)}
-
-
-def _load_bundle_cached(name: str):
-    """Worker-side: resolve a SparkFiles-shipped bundle and memoize the
-    deserialized (matcher, scored_map) per Python worker process."""
-    import pickle
-
-    from pyspark import SparkFiles
-
-    path = SparkFiles.get(name)
-    st = os.stat(path)
-    key = (path, st.st_size, int(st.st_mtime))
-    hit = _BUNDLE_CACHE.get(key)
-    if hit is None:
-        with open(path, "rb") as f:
-            hit = pickle.load(f)
-        _BUNDLE_CACHE.clear()  # one live bundle per worker (they are big)
-        _BUNDLE_CACHE[key] = hit
-    return hit
+def _matcher_broadcast(spark, scored_map: dict):
+    """Broadcast of ``(build_matcher(scored_map), scored_map)`` — the ONE
+    way both scans get their matcher.  Building the automaton and
+    broadcasting it is a per-CALL fixed cost: driver trie/regex compile +
+    pickle, then every Python worker unpickles AND recompiles the regex
+    program once per broadcast id.  Repeated scans over the same
+    gazetteer (bench passes, incremental micro-batches, the per-bucket
+    resume loop, the mentions and linked stages of one pipeline) would pay
+    it every time, so the broadcast is memoized (site "matcher", one
+    constant key, token ``scored_fingerprint`` — keys AND candidates, so a
+    map whose candidate ids or priors changed broadcasts fresh even when
+    its surfaces did not; one live entry bounds memory).  This reuses a
+    *dimension* broadcast, never results: every scan still computes from
+    its input pages."""
+    return memo.get(
+        spark, "matcher", None, scored_fingerprint(scored_map),
+        lambda: spark.sparkContext.broadcast(
+            (build_matcher(scored_map), scored_map)))
 
 
 def build_scored_surface_map(features) -> dict[str, list[tuple[int, float, str]]]:
@@ -198,9 +141,8 @@ def build_scored_surface_map(features) -> dict[str, list[tuple[int, float, str]]
 
 
 def detect_and_link(pages,
-                    scored_map: dict[str, list[tuple[int, float, str]]] | None,
-                    from_html: bool = False,
-                    bundle_file: str | None = None):
+                    scored_map: dict[str, list[tuple[int, float, str]]],
+                    from_html: bool = False):
     """Mention detection + candidate scoring + per-mention argmax, all
     inside the Arrow batch — the candidate fan-out for hot toponyms never
     materializes, so NOTHING shuffles per candidate (the downstream
@@ -213,45 +155,13 @@ def detect_and_link(pages,
     """
     from geonames_rdf_spark.pipeline.link import LANG_BONUS, LANG_COUNTRY
 
-    spark = pages.sparkSession
-    if bundle_file is not None:
-        # SparkFiles path: the bundle was written by save_matcher_bundle;
-        # ship the FILE (torrent-style, once per executor) instead of
-        # collecting + broadcasting per job.  scored_map may be None —
-        # the bundle is the source of truth here.
-        name = os.path.basename(bundle_file)
-        path = os.path.abspath(bundle_file)
-        # keyed by BASENAME, not path: SparkFiles resolves files by
-        # basename, so two different bundles sharing a basename in one
-        # SparkContext would silently serve the first file to workers
-        # (or fail the second addFile) — refuse loudly instead
-        # (ADVICE r05).
-        added = getattr(spark.sparkContext, "_graft_shipped_bundles", None)
-        if added is None:
-            added = {}
-            spark.sparkContext._graft_shipped_bundles = added
-        prev = added.get(name)
-        if prev is None:
-            spark.sparkContext.addFile(bundle_file)
-            added[name] = path
-        elif prev != path:
-            raise ValueError(
-                f"detect_and_link: a different bundle path ({prev}) was"
-                f" already shipped under basename {name!r} in this"
-                " SparkContext; SparkFiles resolves by basename, so the"
-                f" new path ({path}) cannot be distinguished on workers."
-                " Write bundles under unique filenames (e.g. embed a"
-                " content hash).")
-        bc = None
-    else:
-        bc = _memoized_broadcast(spark, scored_map)
+    bc = _matcher_broadcast(pages.sparkSession, scored_map)
     text_col = "html" if from_html else "text"
     if from_html:
         from geonames_rdf_spark.pipeline.extract import extract_text_py
 
     def scan(batches):
-        ac, smap = (_load_bundle_cached(name) if bc is None
-                    else bc.value)
+        ac, smap = bc.value
         lang_cc = {k: f"C{v}" for k, v in LANG_COUNTRY.items()}
         for pdf in batches:
             rows = {c: [] for c in

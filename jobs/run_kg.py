@@ -11,6 +11,9 @@ inside is partition-parallel (no driver-side loops over data).  Writes:
   <out>/triples/bucket=K/   mention+feature triples, url-hash partitioned
   <out>/lineage/            per-bucket lineage rows (resume keys)
   <out>/ntriples/           canonical N-Triples text
+
+Rerunning the same command into the same --out resumes: buckets the
+lineage table marks done are skipped, the rest are (re)written.
 """
 
 from __future__ import annotations
@@ -37,8 +40,6 @@ def main() -> None:
                          " >1 keeps the cluster busy across bucket tails"
                          " — each bucket writes to a private directory so"
                          " concurrent jobs never share commit staging")
-    ap.add_argument("--resume", action="store_true",
-                    help="skip buckets already marked done in the lineage table")
     ap.add_argument("--canonicalize", action="store_true",
                     help="S5: rewrite linked entities through the sameAs"
                          " connected-components canonical map before"
@@ -48,14 +49,6 @@ def main() -> None:
                     help="final serialization: splittable N-Triples"
                          " (default) or the reference's Turtle form"
                          " (each part file a valid document, concat-safe)")
-    ap.add_argument("--matcher-bundle", default=None,
-                    help="path to a matcher bundle: if the file exists it"
-                         " is SHIPPED via SparkFiles (skipping the per-job"
-                         " driver collect + broadcast — measured 156s /"
-                         " +2.2GB at x256 gazetteer scale, BENCH.md); if"
-                         " it does not exist yet, this job builds the map"
-                         " once and WRITES the bundle there for the next"
-                         " job (the build-once deployment shape)")
     ap.add_argument("--replicate", type=int, default=1,
                     help="replicate the gazetteer xN (scale harness only:"
                          " makes the matcher-prep cost measurable at"
@@ -75,31 +68,17 @@ def main() -> None:
              .config(map=ENGINE_CONF).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 
-    import os
     import time
 
     tables = build.gazetteer_tables(spark, args.sf_dir,
                                     replicate=args.replicate)
     feats = tables["features"].cache()
     surfaces = corpus.gazetteer_surfaces(feats)
-    smap, bundle_file = None, None
     t_prep = time.perf_counter()
-    if args.matcher_bundle and os.path.exists(args.matcher_bundle):
-        # build-once path: ship the pre-built bundle file (SparkFiles,
-        # once per executor) — no driver collect, no per-job broadcast
-        bundle_file = args.matcher_bundle
-    else:
-        smap = mentions.build_scored_surface_map(feats)
-        if args.matcher_bundle:
-            # first job: persist the bundle so every LATER job skips the
-            # collect (run the same command again to use it)
-            info = mentions.save_matcher_bundle(smap, args.matcher_bundle)
-            print(json.dumps({"matcher_bundle_written": args.matcher_bundle,
-                              **info}))
-    # matcher-prep = everything a SECOND job would skip with a prebuilt
-    # bundle (driver collect + dict build; the broadcast itself is made at
-    # the first bucket's scan); printed so the
-    # BENCH.md A/B is read off the job output, not stopwatched
+    smap = mentions.build_scored_surface_map(feats)
+    # matcher-prep = the driver collect + dict build (the broadcast itself
+    # is made at the first bucket's scan); printed so the prep cost is
+    # read off the job output, not stopwatched
     matcher_prep_s = round(time.perf_counter() - t_prep, 3)
 
     if args.pages_table:
@@ -127,8 +106,7 @@ def main() -> None:
         # (a fresh broadcast per scan re-pays the per-worker
         # unpickle/compile); extraction is FUSED into the scan (one
         # Python hop per task slot — the measured production shape)
-        linked = mentions.detect_and_link(subset, smap, from_html=True,
-                                          bundle_file=bundle_file)
+        linked = mentions.detect_and_link(subset, smap, from_html=True)
         if mapping is not None:
             from geonames_rdf_spark.pipeline import canonicalize
 
@@ -165,7 +143,6 @@ def main() -> None:
         "mention_triples": int(obs_m.get["n"]),
         "buckets": args.buckets,
         "matcher_prep_s": matcher_prep_s,
-        "matcher_path": "bundle" if bundle_file else "collect+broadcast",
     }))
     spark.stop()
 

@@ -132,11 +132,13 @@ def test_detect_mentions_sees_changed_candidate_ids(spark):
     assert candidates({"Paris": [(222, 0.0, "C0")]}) == [222]
 
 
-def _memo_bc():
-    from geonames_rdf_spark.pipeline import mentions
+def _matcher_counts():
+    """(hits, misses) of the matcher memo site, which holds one broadcast."""
+    from geonames_rdf_spark import memo
 
-    assert len(mentions._BC_MEMO) == 1
-    return next(iter(mentions._BC_MEMO.values()))[0]
+    got = memo.stats()["matcher"]
+    assert got["entries"] == 1
+    return got["hits"], got["misses"]
 
 
 def test_broadcast_memo_content_keyed(spark):
@@ -152,11 +154,12 @@ def test_broadcast_memo_content_keyed(spark):
     map_a = {"Alpha": [(1, 0.5, "C0")]}
     map_b = {"Betaa": [(1, 0.5, "C0")]}  # same size, different surface
     assert mentions.detect_mentions(pages, map_a).count() == 1
-    bc_a = _memo_bc()
+    hits, misses = _matcher_counts()
     assert mentions.detect_mentions(pages, dict(map_a)).count() == 1
-    assert _memo_bc() is bc_a  # equal content in a new dict: reused
+    # equal content in a new dict: reused
+    assert _matcher_counts() == (hits + 1, misses)
     assert mentions.detect_mentions(pages, map_b).count() == 0
-    assert _memo_bc() is not bc_a
+    assert _matcher_counts() == (hits + 1, misses + 1)
 
     def scores(smap):
         return [r["score"] for r in
@@ -164,19 +167,18 @@ def test_broadcast_memo_content_keyed(spark):
 
     scored_b = {"Alpha": [(1, 0.9, "C0")]}  # same keys, different prior
     assert scores(map_a) == [2.5]  # prior + "en" bonus
-    bundle_a = _memo_bc()
+    hits, misses = _matcher_counts()
     assert scores(dict(map_a)) == [2.5]
-    assert _memo_bc() is bundle_a
+    assert _matcher_counts() == (hits + 1, misses)
     assert scores(scored_b) == [2.9]
-    assert _memo_bc() is not bundle_a
+    assert _matcher_counts() == (hits + 1, misses + 1)
 
 
-def test_both_scans_share_one_broadcast(spark, monkeypatch):
+def test_both_scans_share_one_broadcast(spark):
     """``detect_mentions`` and then ``detect_and_link`` over one scored
     map leave ONE memo entry and scan with the same broadcast."""
     from geonames_rdf_spark.pipeline import mentions
 
-    monkeypatch.setattr(mentions, "_BC_MEMO", {})
     pages = spark.createDataFrame(
         [("u", "Alpha and Beta", "de")],
         "url string, text string, lang string")
@@ -185,8 +187,8 @@ def test_both_scans_share_one_broadcast(spark, monkeypatch):
     got = {(r["surface"], r["candidate"]) for r in
            mentions.detect_mentions(pages, smap, carry_lang=True).collect()}
     assert got == {("Alpha", 2), ("Alpha", 1), ("Beta", 3)}
-    bc_id = _memo_bc()._jbroadcast.id()
+    hits, misses = _matcher_counts()
     linked = {(r["surface"], r["geonameid"]) for r in
               mentions.detect_and_link(pages, smap).collect()}
     assert linked == {("Alpha", 2), ("Beta", 3)}  # "de" favours C1
-    assert _memo_bc()._jbroadcast.id() == bc_id
+    assert _matcher_counts() == (hits + 1, misses)

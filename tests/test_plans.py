@@ -225,6 +225,73 @@ def test_jobs_build_sessions_with_engine_conf():
     assert not offenders, offenders
 
 
+def test_memoized_state_lives_only_in_the_memo_module():
+    """``memo`` is the one place that keeps state across calls: no other
+    module under ``geonames_rdf_spark/`` or ``jobs/`` binds a module-level
+    cache (an empty container filled later, a name saying memo or cache,
+    an ``lru_cache``/``cache``-decorated function) or sets an attribute on
+    a SparkContext."""
+    import ast
+    import pathlib
+
+    import geonames_rdf_spark
+
+    pkg = pathlib.Path(geonames_rdf_spark.__file__).parent
+    paths = sorted(pkg.rglob("*.py")) + sorted(
+        (pkg.parent / "jobs").glob("*.py"))
+    containers = {"dict", "set", "list", "OrderedDict", "defaultdict",
+                  "Counter", "WeakKeyDictionary", "WeakValueDictionary"}
+
+    def name_of(node):
+        return (node.id if isinstance(node, ast.Name) else
+                node.attr if isinstance(node, ast.Attribute) else "")
+
+    def is_sc(node):  # ``<x>.sparkContext`` or a name ``sc``
+        return name_of(node) in {"sparkContext", "sc", "_sc"}
+
+    def top_level(body):  # module statements, also under if/try/with
+        for n in body:
+            yield n
+            if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                for field in ("body", "orelse", "handlers", "finalbody"):
+                    yield from top_level(getattr(n, field, []))
+
+    offenders = []
+    for path in paths:
+        if path == pkg / "memo.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        where = str(path.relative_to(pkg.parent))
+        for n in top_level(tree.body):
+            if isinstance(n, (ast.Assign, ast.AnnAssign)) and n.value:
+                targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+                v = n.value
+                empty = ((isinstance(v, ast.Dict) and not v.keys)
+                         or (isinstance(v, ast.List) and not v.elts)
+                         or (isinstance(v, ast.Call)
+                             and name_of(v.func) in containers))
+                named = any(w in name_of(t).lower() for t in targets
+                            for w in ("memo", "cache"))
+                if empty or named:
+                    offenders.append(f"{where}:{n.lineno}")
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for d in n.decorator_list:
+                    f = d.func if isinstance(d, ast.Call) else d
+                    if name_of(f) in {"lru_cache", "cache"}:
+                        offenders.append(f"{where}:{n.lineno}")
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+                targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+                if any(isinstance(t, ast.Attribute) and is_sc(t.value)
+                       for t in targets):
+                    offenders.append(f"{where}:{n.lineno}")
+            if (isinstance(n, ast.Call) and name_of(n.func) == "setattr"
+                    and n.args and is_sc(n.args[0])):
+                offenders.append(f"{where}:{n.lineno}")
+    assert not offenders, offenders
+
+
 def test_triple_scan_predicate_pushdown(spark, tmp_path):
     path = str(tmp_path / "triples_parquet")
     build.build_kg(spark, SF).write.parquet(path)

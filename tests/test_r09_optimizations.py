@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from geonames_rdf_spark import memo
 from geonames_rdf_spark.operators import build, dedup, graph, preshape
 from geonames_rdf_spark.pipeline import corpus, mentions
 from geonames_rdf_spark.session import local_frame
@@ -130,13 +131,20 @@ def test_best_names_minby_matches_window(spark):
     assert g == e and len(g) > 0
 
 
+def _counts(site: str) -> tuple[int, int]:
+    got = memo.stats().get(site, {})
+    return got.get("hits", 0), got.get("misses", 0)
+
+
 def test_build_kg_plan_memo_returns_fresh_datasets(spark):
     """The prepared-plan memo must hand out DISTINCT Dataset objects
     (identical objects would share shuffle/broadcast execution state
     across actions — a silent cross-run intermediate cache), with
     identical content."""
     df1 = build.build_kg(spark, SF)
+    hits, misses = _counts("kg")
     df2 = build.build_kg(spark, SF)
+    assert _counts("kg") == (hits + 1, misses)  # the plan was reused
     assert df1 is not df2
     assert df1.schema == df2.schema
     assert df1.count() == df2.count()
@@ -166,21 +174,27 @@ def test_build_kg_plan_memo_sees_replaced_input(spark, tmp_path):
 
     before = build.build_kg(spark, sf).count()
     assert before == expected()
+    kg, gaz = _counts("kg"), _counts("gazetteer")
     path = os.path.join(sf, "customer.parquet")
     table = pq.read_table(path)
     os.chmod(path, 0o644)
     pq.write_table(table.slice(0, table.num_rows // 2), path)
     after = build.build_kg(spark, sf).count()
+    # both plan sites miss on the changed listing
+    assert _counts("kg") == (kg[0], kg[1] + 1)
+    assert _counts("gazetteer") == (gaz[0], gaz[1] + 1)
     assert after == expected()
     assert after < before
 
 
 def test_gazetteer_tables_memo_isolated_from_caller_mutation(spark):
     t1 = build.gazetteer_tables(spark, SF)
+    hits, misses = _counts("gazetteer")
     marker = t1["features"].limit(1)
     t1["features"] = marker
     t1["admin_lookups"][1] = marker
     t2 = build.gazetteer_tables(spark, SF)
+    assert _counts("gazetteer") == (hits + 1, misses)  # a memo hit
     assert t2["features"] is not marker
     assert t2["admin_lookups"][1] is not marker
 
@@ -192,12 +206,13 @@ def test_matcher_broadcast_memo_keyed_on_content(spark):
     m1 = {"Alpha": [(1, 0.5, "C0")], "Beta": [(2, 0.1, "C1")]}
     m2 = {"Alpha": [(1, 0.5, "C0")], "Beta": [(2, 0.1, "C1")]}
     m3 = {"Alpha": [(1, 0.9, "C0")], "Beta": [(2, 0.1, "C1")]}  # new prior
-    b1 = mentions._memoized_broadcast(spark, m1)
-    b2 = mentions._memoized_broadcast(spark, m2)
-    b3 = mentions._memoized_broadcast(spark, m3)
+    b1 = mentions._matcher_broadcast(spark, m1)
+    b2 = mentions._matcher_broadcast(spark, m2)
+    b3 = mentions._matcher_broadcast(spark, m3)
     assert b1 is b2
     assert b3 is not b1
     assert b3.value[1] == m3
+    assert memo.stats()["matcher"]["entries"] == 1
 
 
 def test_lsh_banding_expr_matches_column_rendering(spark):
