@@ -11,7 +11,8 @@ entry, so a site with a constant key never holds two.
 
 Only driver-side objects are kept — lazy plans and broadcast handles,
 never results: every action still executes from its inputs.  ``stats()``
-counts hits and misses per site; ``clear()`` drops every entry and count.
+counts hits and misses per site (``counters()`` flattens them for the
+lineage stage-metrics table); ``clear()`` drops every entry and count.
 """
 
 from __future__ import annotations
@@ -61,6 +62,13 @@ def stats() -> dict[str, dict[str, int]]:
         return {s: {"hits": _hits.get(s, 0), "misses": _misses.get(s, 0),
                     "entries": sum(1 for k in _entries if k[0] == s)}
                 for s in sorted(sites)}
+
+
+def counters() -> dict[str, int]:
+    """``stats()`` flattened to ``{"<site>.hits" | ".misses" | ".entries":
+    n}``, the shape ``lineage.write_stage_counters`` stores."""
+    return {f"{site}.{name}": n for site, c in stats().items()
+            for name, n in c.items()}
 
 
 def clear() -> None:

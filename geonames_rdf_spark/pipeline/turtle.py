@@ -114,10 +114,14 @@ def to_turtle_blocks(triples: DataFrame) -> DataFrame:
 def to_turtle(triples: DataFrame, sort: bool = False) -> DataFrame:
     """Turtle block lines; ``sort=True`` pins a global subject order
     (the reference's ORDER BY ?uri in consolidate.rq:66 — use only for
-    golden comparisons, it forces a range-partition sort)."""
+    golden comparisons, it forces a range-partition sort) in ONE
+    partition, so the output does not depend on the input's partitioning."""
     blocks = to_turtle_blocks(triples)
     if sort:
-        blocks = blocks.orderBy("_subj")
+        # the range partitioner's bounds are sampled per input partition,
+        # so a multi-partition sort would cut part files (each with its
+        # own header) at places that follow the input's partitioning
+        blocks = blocks.orderBy("_subj").coalesce(1)
     return blocks.select("line")
 
 

@@ -4,6 +4,12 @@ Local mode here, but every setting is chosen to also be correct on a large
 cluster: AQE for runtime re-planning (skew joins, partition coalescing),
 UTC session timezone (oracle/DuckDB parity), Arrow for the vectorized UDF
 stages, and shuffle partitions sized to cores rather than the 200 default.
+Two parallelism floors keep small data on every core: ``ensure_parallel``
+on the scan side (an input with fewer splits than cores, such as one
+parquet file) and, on the shuffle side, ``ENGINE_CONF``'s 1-byte
+``coalescePartitions.minPartitionSize``, under which AQE coalesces a
+small shuffle down to ``defaultParallelism`` partitions, not to one or
+two.
 Cores, driver heap and the local scratch dir default to what the host
 offers; ``SPARK_GRAFT_CPUS``, ``SPARK_DRIVER_MEM`` and ``SPARK_LOCAL_DIRS``
 override them.  ``ENGINE_CONF`` holds the engine settings that
@@ -26,6 +32,13 @@ ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Shuffle-side parallelism floor.  AQE's coalescing target is
+    # max(min(shuffle bytes / defaultParallelism, 64m advisory), this);
+    # at the 1m default a shuffle under 1 MB per core collapses to one or
+    # two tasks (the LSH band self-join, similarity and expansion joins
+    # ran as 2 on 4 cores).  At 1b a small shuffle keeps one task per
+    # core; one over 1 MB per core plans as before.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
     # gazetteer id-sets/dimensions are tens of MB — worth broadcasting
     # well past the 10m default (one copy per executor)
     "spark.sql.autoBroadcastJoinThreshold": "64m",

@@ -11,6 +11,7 @@ inside is partition-parallel (no driver-side loops over data).  Writes:
   <out>/triples/bucket=K/   mention+feature triples, url-hash partitioned
   <out>/lineage/            per-bucket lineage rows (resume keys)
   <out>/ntriples/           canonical N-Triples text
+  <out>/stage_metrics/stage=memo/   memo hits/misses/entries per site
 
 Rerunning the same command into the same --out resumes: buckets the
 lineage table marks done are skipped, the rest are (re)written.
@@ -57,6 +58,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from geonames_rdf_spark import memo
     from geonames_rdf_spark.operators import build
     from geonames_rdf_spark.pipeline import (
         corpus, lineage, materialize, mentions,
@@ -137,6 +139,8 @@ def main() -> None:
         turtle.write_turtle(all_triples, f"{args.out}/turtle")
     else:
         materialize.write_ntriples(all_triples, f"{args.out}/ntriples")
+    # this run's memo hits/misses/entries per site, one row each
+    lineage.write_stage_counters(spark, args.out, "memo", memo.counters())
 
     print(json.dumps({
         "feature_triples": int(obs_kg.get["n"]),

@@ -137,3 +137,26 @@ def test_memo_concurrent_gets_build_once_and_count_every_call():
     assert len(made) == 1 and all(v is made[0] for v in got)
     assert memo.stats()["test.threads"] == {
         "hits": n_threads * n_calls - 1, "misses": 1, "entries": 1}
+
+
+def test_memo_counters_round_trip_through_stage_metrics(spark, tmp_path):
+    """``jobs/run_kg.py`` stores ``memo.counters()`` as stage ``memo`` of
+    the lineage stage-metrics table: one row per site and count."""
+    from geonames_rdf_spark.pipeline import lineage
+
+    s = _Session()
+    build, _ = _builder()
+    memo.clear()
+    for token in (1, 1, 2):
+        memo.get(s, "test.a", "k", token, build)
+    memo.get(s, "test.b", "k", 1, build)
+    flat = memo.counters()
+    assert flat == {"test.a.hits": 1, "test.a.misses": 2,
+                    "test.a.entries": 1, "test.b.hits": 0,
+                    "test.b.misses": 1, "test.b.entries": 1}
+    memo.clear()
+    out = str(tmp_path / "run")
+    lineage.write_stage_counters(spark, out, "memo", flat)
+    rows = lineage.read_stage_counters(spark, out).collect()
+    assert {r.stage for r in rows} == {"memo"}
+    assert {r.metric: r.value for r in rows} == flat

@@ -90,6 +90,56 @@ def test_repeated_kg_op_reuses_generated_classes(spark, tmp_path):
     assert compiled <= 8, f"second pass compiled {compiled} classes"
 
 
+def test_small_shuffles_keep_one_task_per_core(spark):
+    """The shuffle-side parallelism floor: AQE coalesces a small shuffle
+    down to ``defaultParallelism`` tasks, not to one or two.  The corpus
+    (800 docs) moves well under 1 MB per shuffle, so at Spark's 1 MB
+    ``minPartitionSize`` the post-signature stages of
+    ``minhash_near_dups`` collapse to one or two tasks; at the
+    ``ENGINE_CONF`` value every stage runs at least one task per core
+    (its input is parallelized to the core count, so the scan stages do
+    too), and the pairs are the same both ways."""
+    from geonames_rdf_spark.operators import dedup
+    from geonames_rdf_spark.session import ENGINE_CONF
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    assert spark.conf.get(key) == ENGINE_CONF[key] == "1b"
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    rows = [(i, f"document {i} about topic {i % 37} with words {i * 7}"
+                f" and {i * 13} here today") for i in range(600)]
+    rows += [(10000 + i, f"document {i} about topic {i % 37} with words"
+                         f" {i * 7} and {i * 13} here tomorrow")
+             for i in range(0, 600, 3)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+
+    def run(group: str):
+        sc.setJobGroup(group, group)
+        try:
+            pairs = sorted(tuple(r) for r in
+                           dedup.minhash_near_dups(docs, 0.5).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        stages = {sid for j in tracker.getJobIdsForGroup(group)
+                  for sid in tracker.getJobInfo(j).stageIds}
+        # skipped stages (a reused shuffle) have no info
+        tasks = [info.numTasks for info in map(tracker.getStageInfo, stages)
+                 if info is not None]
+        return pairs, tasks
+
+    pairs, tasks = run("shuffle_floor")
+    assert len(pairs) == 200
+    assert min(tasks) >= par, f"stage task counts {tasks}"
+    try:
+        spark.conf.set(key, "1m")
+        default_pairs, default_tasks = run("shuffle_floor_1m")
+    finally:
+        spark.conf.set(key, ENGINE_CONF[key])
+    assert min(default_tasks) < par, "corpus too large to show the floor"
+    assert default_pairs == pairs
+
+
 def test_c8_hierarchy_report_exchange_budget(stored_kg):
     """c8 over a stored KG plans at most four exchanges — two shuffles
     (the per-node aggregate, the final sort) and two broadcasts."""
