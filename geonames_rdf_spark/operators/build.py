@@ -98,17 +98,9 @@ def gazetteer_tables_from_raw(spark: SparkSession,
     one derivation chain: ``gazetteer_tables`` runs it over the
     registered synthesized world, and delta/scoped-changelog fixtures
     run it over a MUTATED dump world without touching the session temp
-    views.
-
-    The adm1/adm2 derivation mirrors ``synth.FEATURES_PLUS_SQL``
-    (download.sh:87), which the DuckDB oracles replay; drift between the
-    two renderings is caught by the kg oracle rows."""
+    views."""
     features_raw = raw["features"]
-    features_plus = features_raw.selectExpr(
-        "*",
-        "country_code || '.' || admin1_code AS adm1",
-        "CASE WHEN admin2_code <> '' THEN country_code || '.' ||"
-        " admin1_code || '.' || admin2_code ELSE 'NONE' END AS adm2")
+    features_plus = preshape.add_admin_keys(features_raw)
     alt = preshape.semi_join_alt_names(raw["alt_names"], features_plus)
     best = preshape.best_names(alt)
     features_bn = preshape.with_best_name(features_plus, best)

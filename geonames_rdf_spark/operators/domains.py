@@ -36,7 +36,11 @@ Scale notes (10^12 pages):
   very skew it exists to fix.  It therefore pre-aggregates counts and
   only runs the window on domains actually OVER the cap (a semi-join
   scoped to the Zipf head); the under-cap tail — virtually all rows —
-  passes through shuffle-free on the kept side.
+  is flagged off an anti-join and never enters the window's exchange.
+  The window holds one over-cap domain per reducer task: measured at
+  local[32] (DESIGN.md), a single 20M-row domain ranks in ~100 s, and
+  a 10^9-page host would hold its reducer for hours.  No job, query or
+  benchmark has a domain near that size.
 """
 
 from __future__ import annotations
@@ -47,10 +51,6 @@ from pyspark.sql import Window
 
 from geonames_rdf_spark.operators.psl_snapshot import (
     EXCEPTION2, SUFFIX2, SUFFIX3, WILDCARD_TLD)
-from geonames_rdf_spark.session import local_frame
-
-# backwards-compat alias (pre-r07 the 20-entry table lived here)
-_SUFFIX2 = SUFFIX2
 
 
 def host_expr(url: Column) -> Column:
@@ -142,201 +142,60 @@ def domain_stats(pages: DataFrame, url_col: str = "url",
     per = pages.select(dom, *( [F.col(size_col)] if size_col else [] )) \
         .groupBy("domain").agg(*aggs)
     # corpus total from the (dimension-sized) per-domain aggregate — no
-    # second scan of pages; broadcast 1-row constant join
+    # second scan of pages; a global aggregate plans as one row, so the
+    # cross join broadcasts it without a hint
     total = per.agg(F.sum("n_docs").alias("_total"))
-    return (per.join(F.broadcast(total))
+    return (per.crossJoin(total)
             .withColumn("share", (F.col("n_docs") /
                                   F.col("_total")).cast("double"))
             .drop("_total"))
 
 
-#: Route a domain to the salted-threshold path once its row count
-#: exceeds this — below it, one reducer's spillable rank-only window is
-#: both exact and CHEAPER (the salted path pays ~3 extra scans/shuffles:
-#: measured 4.5 s vs 1.2 s on a 500 k-row hot domain, scripts/
-#: domain_cap_ab.py).  10^7 rows sort in ~10 s on one core; a 10^9-row
-#: domain would hold a reducer for ~hours, which is what the salted
-#: path bounds.
-DEFAULT_WINDOW_MAX_ROWS = 10_000_000
-
-#: Hint broadcast for an over-cap domain set only below this many
-#: domains.  The over-cap set is the Zipf head BY DOMAIN COUNT, which is
-#: unbounded: at 10^12 pages with a small cap, tens of millions of
-#: registered domains exceed it, and a forced broadcast of that set hits
-#: Spark's broadcast ceiling / the driver heap — exactly the failure the
-#: per-domain routing exists to avoid.  1M domains × ~40 B of string +
-#: hashed-relation overhead ≈ low hundreds of MB, comfortably inside a
-#: production driver/executor; above the bound the joins are left
-#: unhinted (AQE still converts at runtime if the set turns out small).
-#: Measured at sandbox scale (scripts/domain_cap_ab.py --broadcast-ab,
-#: 2M over-cap domains / 6M rows): r07's in-place-persist design put
-#: the shuffle fallback at ~1.1x the hinted plan (9.4 vs 8.7 s); under
-#: the r08 leak-free design the forced-broadcast leg additionally pays
-#: the driver round-trip (18.3 s vs 11.2 s unhinted at 2x the bound —
-#: re-measured r08), so above the bound the unhinted route is now
-#: strictly better, which is exactly the route the bound selects.  At
-#: or below the bound the Arrow pull + local-relation rebuild costs a
-#: few seconds at the 1M worst case (measured 1.2 s + 3.4 s) in
-#: exchange for zero cache residue — amortized over every downstream
-#: consumer of the routed plan.
-DEFAULT_BROADCAST_MAX_DOMAINS = 1_000_000
-
-
 def cap_per_domain(pages: DataFrame, max_docs: int,
                    url_col: str = "url",
-                   order_col: str = "warc_ts",
-                   salt: int = 16,
-                   window_max_rows: int = DEFAULT_WINDOW_MAX_ROWS,
-                   broadcast_max_domains: int = DEFAULT_BROADCAST_MAX_DOMAINS
-                   ) -> DataFrame:
+                   order_col: str = "warc_ts") -> DataFrame:
     """RefinedWeb-style per-domain cap: keep at most ``max_docs``
     documents per registered domain — earliest ``order_col`` first,
     ties to the lexicographically smallest url.  (``(order_col,
     url_col)`` must be unique per row for a deterministic kept set;
-    after ``dedup_pages_by_url`` the canonical url alone is unique.)
+    after ``dedup_pages_by_url`` the canonical url alone is unique.
+    Duplicate keys still keep exactly ``max_docs`` rows, pytest-pinned.)
     Adds ``domain`` and ``domain_kept`` (rows are FLAGGED, not
     dropped — callers filter on ``domain_kept`` to apply the cap, or
     keep the flag for audit).
 
-    Skew shape — data-driven routing on the pre-aggregated per-domain
-    counts (the same raise-or-route discipline as ``pack_sequences``'
-    group guard):
+    One lazy plan — building it runs no Spark job (pytest-pinned):
 
-    * under-cap domains — virtually all rows at web scale — are
-      flagged kept straight off the over-cap-set anti-join (broadcast
-      when the set fits the routing bound), no ranking exchange at
-      all;
-    * over-cap domains up to ``window_max_rows`` take ONE rank-only
-      window (streamed, spillable sort — measured 4x cheaper than the
-      threshold machinery at sandbox scale, scripts/domain_cap_ab.py);
-    * monster domains above the bound — the 10^9-page hosts that would
-      hold a single reducer for hours — take the salted-threshold
-      path: each ``(domain, salt)`` slice ranks its own
-      top-``max_docs`` in parallel, the ≤ ``salt × max_docs``
-      survivors yield the domain's exact ``max_docs``-th smallest
-      ``(order, url)`` key, and keeping is a per-domain threshold
-      comparison (broadcast-routed like the set joins).  Identical
-      output on every route (salt-invariance
-      and route-equivalence pytest-pinned); AQE's empty-relation
-      propagation skips the monster branch's scans entirely when no
-      domain crosses the bound.
+    * the per-domain counts, filtered to the over-cap domain set;
+    * under-cap rows — virtually all rows at web scale — are flagged
+      kept straight off a ``left_anti`` join against that set, with no
+      ranking exchange;
+    * over-cap rows take a ``left_semi`` join and ONE ``row_number()``
+      window ordered by ``(order_col, url_col)`` (streamed, spillable
+      sort).
+
+    The joins carry no hint: the over-cap set is the Zipf head BY
+    DOMAIN COUNT, unbounded at web scale, and AQE turns it into a
+    broadcast at runtime when it proves small.
 
     Rows whose domain is NULL (unparseable url) are EXEMPT from the
-    cap — flagged kept, pytest-pinned.  Capping "unknown" as one giant
-    pseudo-domain would throw away arbitrary rows for a parsing gap;
-    callers who want them gone should filter on ``domain IS NULL``
+    cap — flagged kept, pytest-pinned: the equi-joins never match a
+    NULL key, so the anti-join keeps them.  Capping "unknown" as one
+    giant pseudo-domain would throw away arbitrary rows for a parsing
+    gap; callers who want them gone should filter on ``domain IS NULL``
     explicitly.
-
-    Broadcast routing (VERDICT r06 #1): the over-cap domain set is
-    joined back against every row three ways (anti for the tail, semi
-    for each head route), and its SIZE is unbounded — the Zipf head by
-    domain count, tens of millions of domains at web scale with a small
-    cap.  So the broadcast is DATA-DRIVEN, the same pre-flight
-    discipline as ``pack_sequences``' group guard: the per-domain count
-    aggregate (persisted for the pre-flight ONLY, always released
-    before returning — r08; the four consuming subtrees are re-pointed
-    at a collected local relation or a lineage-truncated checkpoint)
-    yields the over/window/big set sizes in one action, and
-    each join is hinted broadcast only when its set fits
-    ``broadcast_max_domains``; above that the join is left unhinted —
-    a shuffle join that scales, which AQE still converts to broadcast
-    at runtime if the set proves small.  When the monster route fires,
-    the documented ``(order_col, url_col)`` uniqueness precondition is
-    ENFORCED on the big domains' rows (a cheap duplicate-key probe,
-    only in the rare monster case) instead of living in this docstring:
-    duplicate keys would make the threshold route keep more rows than
-    the window route keeps, silently.
     """
-    from pyspark import StorageLevel
-
     dom = registered_domain_expr(F.col(url_col)).alias("domain")
     with_dom = pages.select("*", dom)
-    counts = (with_dom.groupBy("domain")
-              .agg(F.count(F.lit(1)).alias("_n"))
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    # The persist lives only for the pre-flight (VERDICT r07 #2 — a
-    # leaked cache per call): it is ALWAYS released before returning,
-    # and the four lazy subtrees are re-pointed at a source that no
-    # longer needs it — the collected over-set (common route) or a
-    # lineage-truncated localCheckpoint (monster route, whose blocks
-    # the ContextCleaner reclaims when the returned plan is GC'd).
-    try:
-        over = counts.filter(F.col("_n") > max_docs)
-        # ONE pre-flight action over the persisted dimension aggregate
-        pre = over.agg(
-            F.count(F.lit(1)).alias("n_over"),
-            F.count(F.when(F.col("_n") <= window_max_rows, 1))
-            .alias("n_win"),
-        ).collect()[0]
-        n_over = int(pre["n_over"] or 0)
-        n_win_doms = int(pre["n_win"] or 0)
-        n_big_doms = n_over - n_win_doms
-        if n_over <= broadcast_max_domains:
-            # the over-cap set fits the broadcast bound, so it is by
-            # definition driver-sized: pull it once (Arrow batch — at
-            # the 1M-domain bound a row-wise collect would cost minutes
-            # of py4j serialization, toPandas measures 1.2 s) and rebuild
-            # the three route sets as local-relation frames — zero cache
-            # residue, zero re-aggregation in the consuming subtrees
-            spark = pages.sparkSession
-            over = local_frame(spark, over.toPandas(),
-                               "domain string, _n bigint")
-        else:
-            # monster over-set: too big to collect; truncate lineage so
-            # the subtrees never re-run the counts aggregate, then drop
-            # the explicit cache (checkpoint blocks are GC-managed)
-            over = over.localCheckpoint(eager=True)
-    finally:
-        counts.unpersist(blocking=False)
-
-    def _route(df: DataFrame, n_domains: int) -> DataFrame:
-        return F.broadcast(df) if n_domains <= broadcast_max_domains else df
-
-    tail = (with_dom.join(_route(over.select("domain"), n_over),
-                          "domain", "left_anti")
+    over = (with_dom.groupBy("domain")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > max_docs)
+            .select("domain"))
+    tail = (with_dom.join(over, "domain", "left_anti")
             .withColumn("domain_kept", F.lit(True)))
-
-    key = F.struct(F.col(order_col).alias("o"),
-                   F.col(url_col).alias("u")).alias("_key")
-    win_doms = over.filter(F.col("_n") <= window_max_rows).select("domain")
-    big_doms = over.filter(F.col("_n") > window_max_rows).select("domain")
-
     w = (Window.partitionBy("domain").orderBy(F.col(order_col).asc(),
                                               F.col(url_col).asc()))
-    head_win = (with_dom.join(_route(win_doms, n_win_doms), "domain")
-                .withColumn("domain_kept",
-                            F.row_number().over(w) <= F.lit(max_docs)))
-
-    head_big = with_dom.join(_route(big_doms, n_big_doms), "domain")
-    if n_big_doms:
-        dup = (head_big.groupBy("domain", order_col, url_col)
-               .agg(F.count(F.lit(1)).alias("_d"))
-               .filter(F.col("_d") > 1).limit(1).collect())
-        if dup:
-            r = dup[0]
-            raise ValueError(
-                "cap_per_domain: duplicate (order, url) key"
-                f" ({r[order_col]!r}, {r[url_col]!r}) in over-"
-                f"{window_max_rows}-row domain {r['domain']!r} — the"
-                " salted-threshold route needs unique keys for an exact"
-                " cap; dedup first (urls.dedup_pages_by_url) or add a"
-                " unique tiebreaker column as order_col")
-    cand = (head_big.select("domain", key,
-                            F.pmod(F.xxhash64(F.col(url_col)),
-                                   F.lit(salt)).alias("_s"))
-            .withColumn("_rn", F.row_number().over(
-                Window.partitionBy("domain", "_s")
-                .orderBy(F.col("_key").asc())))
-            .filter(F.col("_rn") <= max_docs))
-    # exact per-domain threshold from the salted candidates (a
-    # dimension-sized frame: <= salt * max_docs rows per big domain)
-    thr = (cand.withColumn("_gn", F.row_number().over(
-                Window.partitionBy("domain")
-                .orderBy(F.col("_key").asc())))
-           .filter(F.col("_gn") == max_docs)
-           .select("domain", F.col("_key").alias("_thr")))
-    head_big = (head_big.join(_route(thr, n_big_doms), "domain")
-                .withColumn("domain_kept", key <= F.col("_thr"))
-                .drop("_thr"))
-    return (tail.unionByName(head_win.select(*tail.columns))
-            .unionByName(head_big.select(*tail.columns)))
+    head = (with_dom.join(over, "domain", "left_semi")
+            .withColumn("domain_kept",
+                        F.row_number().over(w) <= F.lit(max_docs)))
+    return tail.unionByName(head)

@@ -17,18 +17,22 @@ def add_admin_keys(features: DataFrame) -> DataFrame:
     adm1 = country_code "." admin1_code  (unconditionally)
     adm2 = country_code "." admin1_code "." admin2_code, or "NONE" if the
            admin2 code is empty.
+
+    One ``select`` appending both columns; ``synth.FEATURES_PLUS_SQL`` is
+    the DuckDB oracles' rendering of the same rule, and drift between the
+    two is caught by the kg oracle rows.
     """
-    return features.withColumn(
-        "adm1", F.concat(F.col("country_code"), F.lit("."), F.col("admin1_code"))
-    ).withColumn(
-        "adm2",
+    return features.select(
+        "*",
+        F.concat(F.col("country_code"), F.lit("."), F.col("admin1_code"))
+        .alias("adm1"),
         F.when(
             F.col("admin2_code") != "",
             F.concat(
                 F.col("country_code"), F.lit("."), F.col("admin1_code"),
                 F.lit("."), F.col("admin2_code"),
             ),
-        ).otherwise(F.lit("NONE")),
+        ).otherwise(F.lit("NONE")).alias("adm2"),
     )
 
 

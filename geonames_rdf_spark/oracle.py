@@ -761,7 +761,7 @@ def _warc_url_roundtrip_sql() -> str:
     cap; the twin states what must come out.  WARC fidelity (headers,
     Content-Length framing, gzip, HTTP preamble), the full
     canonicalizer chain (including the r06 %XX-case and query-sort
-    rules), the _SUFFIX2 public-suffix boundary, and the cap's
+    rules), the SUFFIX2 public-suffix boundary, and the cap's
     deterministic (ts, url) ordering are all on the hash path."""
     from geonames_rdf_spark.operators.domains import domain_oracle_expr
     from geonames_rdf_spark.operators.urls import url_oracle_expr

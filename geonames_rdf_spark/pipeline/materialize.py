@@ -55,8 +55,7 @@ class PipelineStages(dict):
     def unpersist(self, blocking: bool = False) -> None:
         """Release the frames ``run_pipeline`` persisted for this run
         (caller-owned cache lifecycle, r08 — the library must not leak
-        a cache per call in a long-lived session; cf. the
-        ``cap_per_domain`` counts-leak fix).  Call when done consuming
+        a cache per call in a long-lived session).  Call when done consuming
         the stages; consuming a stage afterwards recomputes instead of
         failing."""
         for df in self._cached:

@@ -148,10 +148,12 @@ def run_stream_kg_warc(
         t = materialize.mention_triples(df)
         # dynamic overwrite scoped to THIS writer (a session-conf mutation
         # would silently change every later partitioned overwrite in the
-        # same session)
+        # same session); the repartition puts each bucket in one write
+        # task, so an epoch writes one file per bucket, not one per task
         (t.withColumn("bucket",
                       F.pmod(F.xxhash64("subj"), F.lit(n_buckets)))
           .withColumn("epoch", F.lit(int(epoch_id)))
+          .repartition("bucket")
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("epoch", "bucket")

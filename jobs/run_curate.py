@@ -70,9 +70,8 @@ def build_arg_parser() -> argparse.ArgumentParser:
     ap.add_argument("--pack-buckets", type=int, default=32)
     ap.add_argument("--max-per-domain", type=int, default=None,
                     help="keep at most N docs per registered domain"
-                         " (requires a url column; earliest doc_id wins"
-                         " — the salted-threshold cap, no full-domain"
-                         " sort)")
+                         " (requires a url column; earliest doc_id wins;"
+                         " only over-cap domains are ranked)")
     ap.add_argument("--dedup-lines", type=int, default=None,
                     metavar="MIN_CHARS",
                     help="C4-style cross-corpus line dedup before"

@@ -289,7 +289,7 @@ def test_run_pipeline_unpersist_releases_caller_owned_caches(spark):
     """run_pipeline persists features + pages; the caches
     are caller-owned and stages.unpersist() must release BOTH (r08 —
     repeated calls in a long-lived session must not accumulate cached
-    frames; same contract as the cap_per_domain counts fix)."""
+    frames)."""
     jsc = spark.sparkContext._jsc.sc()
     # warm-up call: gazetteer_tables' RAW dimension cache is a
     # session-singleton (CacheManager dedupes the identical plan across

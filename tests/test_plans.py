@@ -275,6 +275,66 @@ def test_jobs_build_sessions_with_engine_conf():
     assert not offenders, offenders
 
 
+#: Every driver pull in the package (``oracle.py``, the test oracle,
+#: aside): (module, top-level function) -> what bounds the rows it pulls.
+DRIVER_PULLS = {
+    ("operators/dedup.py", "embedding_near_dups"):
+        "one row: the vector size of the first non-NULL embedding",
+    ("operators/graph.py", "transitive_closure"):
+        "LOCAL_EDGE_BOUND + 1 edges; the seeds only when the edges fit",
+    ("operators/packing.py", "pack_sequences"):
+        "one row: the largest bucket's row count",
+    ("operators/similarity.py", "pairwise_topk_per_label_blas"):
+        "at most 5 over-bound labels, for the error message",
+    ("operators/similarity.py", "train_ivf_centroids"):
+        "k seed vectors, then k cell means per round",
+    ("operators/textstats.py", "train_char_lm"):
+        "top_k n-gram counts per order",
+    ("pipeline/corpus.py", "gazetteer_surfaces"):
+        "at most limit distinct names",
+    ("pipeline/lineage.py", "done_buckets"):
+        "one row per done bucket",
+    ("pipeline/mentions.py", "build_scored_surface_map"):
+        "one row per gazetteer feature: the dimension table, not pages",
+}
+
+
+def test_driver_pulls_are_allowlisted():
+    """Every ``.collect()``, ``.toPandas()``, ``.first()`` and ``.take(``
+    call under ``geonames_rdf_spark/`` sits in a (module, function) pair
+    of ``DRIVER_PULLS``, which names what bounds its rows, and every pair
+    there still pulls: no default path collects an unbounded result to
+    the driver unseen."""
+    import ast
+    import pathlib
+
+    import geonames_rdf_spark
+
+    pkg = pathlib.Path(geonames_rdf_spark.__file__).parent
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "oracle.py":
+            continue
+        module = str(path.relative_to(pkg))
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for top in tree.body:
+            func = (top.name if isinstance(top, (ast.FunctionDef,
+                                                 ast.AsyncFunctionDef))
+                    else "<module>")
+            for n in ast.walk(top):
+                if (isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr in {"collect", "toPandas",
+                                            "first", "take"}
+                        # F.first is the aggregate, not a pull
+                        and not (isinstance(n.func.value, ast.Name)
+                                 and n.func.value.id == "F")):
+                    found.setdefault((module, func), []).append(n.lineno)
+    unlisted = {k: v for k, v in found.items() if k not in DRIVER_PULLS}
+    assert not unlisted, unlisted
+    assert not set(DRIVER_PULLS) - set(found), set(DRIVER_PULLS) - set(found)
+
+
 def test_memoized_state_lives_only_in_the_memo_module():
     """``memo`` is the one place that keeps state across calls: no other
     module under ``geonames_rdf_spark/`` or ``jobs/`` binds a module-level
@@ -495,41 +555,24 @@ def test_registered_domain_no_shuffle_no_python(spark):
     assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_cap_per_domain_routes_overcap_set_off_broadcast(spark):
-    """The over-cap domain set is unbounded (the Zipf head by domain
-    count), so its three joins must NOT force a broadcast above the
-    routing bound: with autoBroadcastJoinThreshold disabled — so the
-    ONLY way a broadcast can appear is the operator's own hint — a
-    many-over-cap-domains corpus under a tiny bound plans zero
-    broadcast joins, while the same corpus under the default bound
-    plans all of them broadcast.  Kept sets identical either way."""
+def test_cap_per_domain_plan_starts_no_job(spark):
+    """Building ``cap_per_domain``'s plan runs no Spark job: the counts,
+    the over-cap set's joins and the window are all lazy, so the cap
+    costs nothing until the caller runs the plan it returns."""
     from geonames_rdf_spark.operators import domains
 
-    # 300 window-route domains (4 rows each) + 20 monster-route domains
-    # (6 rows each, over window_max_rows=5): every routed set — over,
-    # window, big — exceeds the tiny bound, so NO join may broadcast
-    rows = [(f"https://d{i}.com/p{j}", f"2026-01-{j + 1:02d}")
-            for i in range(300) for j in range(4)]
-    rows += [(f"https://m{i}.com/p{j}", f"2026-01-{j + 1:02d}")
-             for i in range(20) for j in range(6)]
-    pages = spark.createDataFrame(rows, "url string, warc_ts string")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    pages = spark.createDataFrame(
+        [(f"https://d{i % 8}.com/p{i}", f"2026-01-{i % 28 + 1:02d}")
+         for i in range(80)],
+        "url string, warc_ts string")
+    sc = spark.sparkContext
+    sc.setJobGroup("cap_plan", "cap_plan")
     try:
-        routed = domains.cap_per_domain(pages, max_docs=2,
-                                        window_max_rows=5,
-                                        broadcast_max_domains=10)
-        assert "BroadcastHashJoin" not in plan_of(routed), plan_of(routed)
-        assert "BroadcastNestedLoopJoin" not in plan_of(routed)
-        hinted = domains.cap_per_domain(pages, max_docs=2,
-                                        window_max_rows=5)
-        assert "SortMergeJoin" not in plan_of(hinted), plan_of(hinted)
-        assert "BroadcastHashJoin" in plan_of(hinted)
-        a = sorted(r["url"] for r in routed.collect() if r["domain_kept"])
-        b = sorted(r["url"] for r in hinted.collect() if r["domain_kept"])
-        assert a == b and len(a) == 640
+        capped = domains.cap_per_domain(pages, max_docs=3)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("cap_plan")) == []
+    assert capped.filter("domain_kept").count() == 8 * 3
 
 
 def test_dedup_lines_winner_exchange_carries_keys_not_text(spark):

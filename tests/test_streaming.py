@@ -179,6 +179,13 @@ def test_stream_kg_from_warc_drop_dir(spark, tmp_path):
     assert len(exchanges) == 1, plan
     assert exchanges[0].strip().startswith("bucket"), exchanges
 
+    # each epoch writes one file per bucket, however many tasks the
+    # micro-batch's shuffles ran
+    bucket_dirs = glob.glob(f"{out}/triples/epoch=*/bucket=*")
+    assert bucket_dirs
+    for d in bucket_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
     # WRITE-side compaction: epochs collapse to epoch=0, the compacted
     # store reads identically, and the raw store itself is now dup-free
     ev.compact_stream_kg(spark, out)

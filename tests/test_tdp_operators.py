@@ -978,7 +978,7 @@ def test_normalize_url_duck_parity(spark, duck):
 
 def test_registered_domain_duck_parity(spark, duck):
     """domains.registered_domain_expr == the DuckDB rendering of the
-    same _SUFFIX2 table on adversarial hosts; cap_per_domain keeps the
+    same SUFFIX2 table on adversarial hosts; cap_per_domain keeps the
     earliest max_docs per registered domain, deterministically."""
     import pandas as pd
 
@@ -1327,11 +1327,10 @@ def test_dedup_spans_c4_duck_parity(spark, duck):
     assert rows[6]["n_lines_removed"] == 0 and rows[6]["n_lines_kept"] == 2
 
 
-def test_cap_per_domain_salt_invariant_vs_window(spark):
-    """The salted-threshold cap (no full-domain sort) must equal the
-    naive one-window-per-domain formulation for EVERY salt value —
-    that equality is what makes the skew-safe path a pure physical
-    rewrite."""
+def test_cap_per_domain_matches_whole_domain_window(spark):
+    """The cap (counts, anti-join for the under-cap tail, one window over
+    the over-cap rows only) equals the naive formulation that ranks every
+    row over its whole domain."""
     from pyspark.sql import Window as W
 
     from geonames_rdf_spark.operators import domains
@@ -1350,8 +1349,8 @@ def test_cap_per_domain_salt_invariant_vs_window(spark):
                      f"2026-01-0{(i % 3) + 1} 12:00:0{i}"))
     rows += [("https://small.net/a", "2026-02-01 00:00:00"),
              ("https://tiny.io/b", "2026-02-02 00:00:00"),
-             # NULL order value inside an over-cap domain: both routes
-             # must place it identically (nulls first under asc)
+             # NULL order value inside an over-cap domain: ranked like
+             # the reference (nulls first under asc)
              ("https://x.mega.com/null-ts", None)]
     pages = spark.createDataFrame(rows, "url string, warc_ts string")
 
@@ -1365,37 +1364,25 @@ def test_cap_per_domain_salt_invariant_vs_window(spark):
     want = [(r["url"], r["domain"], r["domain_kept"])
             for r in ref.collect()]
 
-    # window_max_rows=0 forces every over-cap domain down the salted
-    # threshold route; the default routes them all through the plain
-    # window — both must equal the naive reference for every salt
-    for wmax in (0, domains.DEFAULT_WINDOW_MAX_ROWS):
-        for salt in (1, 3, 16):
-            got = (domains.cap_per_domain(pages, max_docs=5, salt=salt,
-                                          window_max_rows=wmax)
-                   .orderBy("url", "warc_ts"))
-            assert [(r["url"], r["domain"], r["domain_kept"])
-                    for r in got.collect()] == want, (wmax, salt)
+    got = domains.cap_per_domain(pages, max_docs=5).orderBy("url", "warc_ts")
+    assert [(r["url"], r["domain"], r["domain_kept"])
+            for r in got.collect()] == want
 
 
-def test_cap_per_domain_big_route_enforces_unique_keys(spark):
-    """The salted-threshold route's exactness precondition — unique
-    (order, url) per row within a monster domain — is ENFORCED when
-    that route fires (duplicate keys would make `key <= threshold` keep
-    more than max_docs rows, silently), and NOT probed on the window
-    route, whose row_number stays exact under ties."""
-    import pytest as _pytest
-
+def test_cap_per_domain_ties_keep_exactly_max_docs(spark):
+    """Duplicate (order, url) keys break the documented uniqueness
+    precondition, but the cap stays exact: row_number numbers tied rows
+    apart, so a domain keeps exactly max_docs rows."""
     from geonames_rdf_spark.operators import domains
 
     rows = ([("https://dupe.com/same", "2026-01-01")] * 3
             + [(f"https://dupe.com/p{i}", f"2026-01-{i + 2:02d}")
                for i in range(5)])
     pages = spark.createDataFrame(rows, "url string, warc_ts string")
-    with _pytest.raises(ValueError, match="duplicate \\(order, url\\)"):
-        domains.cap_per_domain(pages, max_docs=2, window_max_rows=0)
-    # window route: exact count even with the duplicate keys present
-    out = domains.cap_per_domain(pages, max_docs=2)
-    assert sum(r["domain_kept"] for r in out.collect()) == 2
+    out = domains.cap_per_domain(pages, max_docs=2).collect()
+    kept = [r["url"] for r in out if r["domain_kept"]]
+    assert len(out) == 8
+    assert kept == ["https://dupe.com/same"] * 2
 
 
 def test_cap_per_domain_releases_counts_cache(spark):
