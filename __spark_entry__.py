@@ -392,7 +392,7 @@ def _q_warc_url_roundtrip(spark, sf_dir):
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     warc.write_warc(primary.unionByName(dup).repartition(4, "url"), out)
     back = warc.read_warc(spark, out + "/*.warc.gz")
-    kept = urls.dedup_pages_by_url(back, url_col="url", ts_col="warc_ts")
+    kept = urls.dedup_pages_by_url(back)
     capped = domains.cap_per_domain(kept, max_docs=oracle._DOMAIN_CAP,
                                     url_col="url_canonical",
                                     order_col="warc_ts")
@@ -507,7 +507,7 @@ def _q_knn_label(spark, sf_dir):
 
     # BLAS backend (applyInPandas matmul): 9x the Column-fold version,
     # pytest-pinned equal output (test_knn_blas_backend_equivalence)
-    return similarity.pairwise_topk_per_label_blas(_emb(spark, sf_dir), k=3)
+    return similarity.pairwise_topk_per_label_blas(_emb(spark, sf_dir))
 
 
 def _q_ann_ivf(spark, sf_dir):

@@ -159,7 +159,7 @@ def main() -> None:
         ("dedup_minhash_lsh", lambda: minhash_observed()),
         ("dedup_lines", lambda: dedup_lines_run()),
         ("ann_knn_per_label",
-         lambda: similarity.pairwise_topk_per_label_blas(emb, k=3).count()),
+         lambda: similarity.pairwise_topk_per_label_blas(emb).count()),
         ("web_pipeline", pipeline_run),
     ]
 

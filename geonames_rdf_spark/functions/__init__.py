@@ -2,7 +2,6 @@ from geonames_rdf_spark.functions.terms import (  # noqa: F401
     feature_uri,
     haversine_m,
     iri,
-    lit_typed,
     nt_term,
     slugify,
 )

@@ -44,18 +44,6 @@ def escape_literal(value: Column) -> Column:
     return esc
 
 
-def lit_typed(value: Column, dtype: str | None = None, lang: Column | None = None) -> Column:
-    """Render a literal as canonical N-Triples: ``"v"``, ``"v"@lang``, ``"v"^^<dt>``."""
-    base = F.concat(F.lit('"'), escape_literal(value), F.lit('"'))
-    if lang is not None:
-        return F.when(
-            lang.isNotNull(), F.concat(base, F.lit("@"), lang)
-        ).otherwise(base)
-    if dtype is not None:
-        return F.concat(base, F.lit("^^<"), F.lit(dtype), F.lit(">"))
-    return base
-
-
 def nt_term(obj: Column, obj_is_iri: Column, obj_lang: Column, obj_dt: Column) -> Column:
     """Canonical N-Triples term from the 4-column object representation."""
     quoted = F.concat(F.lit('"'), escape_literal(obj), F.lit('"'))

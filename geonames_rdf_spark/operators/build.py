@@ -127,12 +127,12 @@ def build_kg(
     include_alt: bool = True,
     include_ags: bool = True,
     include_ontology: bool = True,
-    ags_country: str = "C0",
     replicate: int = 1,
     tables: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Full triple table: features ∪ documents ∪ alternate names ∪ AGS
-    ∪ static ontology/property-definition block (the reference merges the
+    (of the synthesized AGS country ``C0``) ∪ static
+    ontology/property-definition block (the reference merges the
     ontology and property-definitions.ttl into its final output —
     consolidate.rq:60-64, docker-compose.yml:33-35).
 
@@ -148,7 +148,7 @@ def build_kg(
     execution always recomputes from the parquet."""
     if tables is None:
         key = (sf_dir, consolidate, include_docs, include_alt, include_ags,
-               include_ontology, ags_country, replicate)
+               include_ontology, replicate)
         # the stored Dataset is the PLAN holder only — hand out a fresh
         # wrapper so no caller's execution state is pinned by the memo
         return _fresh_over(memo.get(
@@ -157,7 +157,6 @@ def build_kg(
                 spark, sf_dir, consolidate=consolidate,
                 include_docs=include_docs, include_alt=include_alt,
                 include_ags=include_ags, include_ontology=include_ontology,
-                ags_country=ags_country,
                 tables=gazetteer_tables(spark, sf_dir, replicate=replicate))))
     if replicate != 1:
         raise ValueError("replicate requires deriving fresh tables")
@@ -171,7 +170,7 @@ def build_kg(
     if include_alt:
         out = out.unionByName(altnames.alt_name_triples(t["alt_names"]))
     if include_ags:
-        ags = preshape.ags_lookup(t["features"], t["ags_map"], country=ags_country)
+        ags = preshape.ags_lookup(t["features"], t["ags_map"], country="C0")
         out = out.unionByName(altnames.ags_triples(ags))
     if include_ontology:
         from geonames_rdf_spark.sources import ontology

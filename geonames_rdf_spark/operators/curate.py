@@ -37,8 +37,6 @@ from geonames_rdf_spark.operators.dedup import exact_dedup
 def curate_corpus(docs: DataFrame, min_quality: float = 0.4,
                   rates: dict[str, float] | None = None,
                   default_rate: float = 1.0,
-                  text_col: str = "text",
-                  id_col: str = "doc_id",
                   decontam_benchmark: DataFrame | None = None,
                   decontam_ngram: int = 13,
                   max_dup_line_frac: float | None = None,
@@ -46,50 +44,43 @@ def curate_corpus(docs: DataFrame, min_quality: float = 0.4,
                   lm: dict | None = None,
                   max_ppl: float | None = None,
                   max_pii: int | None = None) -> DataFrame:
-    """(doc_id, source, lang, quality) for the curated subset."""
-    if id_col != "doc_id":
-        # textstats.quality_score keys its output on doc_id; renaming
-        # support would silently join wrong columns, so refuse instead
-        raise ValueError("curate_corpus requires id_col='doc_id'"
-                         " (quality_score contract)")
+    """(doc_id, source, lang, quality) for the curated subset of a
+    documents table ``(doc_id, text, source, lang)``."""
     if max_ppl is not None and lm is None:
         raise ValueError("max_ppl requires a trained lm"
                          " (textstats.train_char_lm)")
-    survivors = (exact_dedup(docs, text_col, id_col)
-                 .select(F.col("keep_id").alias(id_col)))
-    d = docs.join(survivors, id_col, "left_semi")
-    q = textstats.quality_score(d, text_col)
-    d = (d.join(q, id_col)
+    survivors = exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
+    d = docs.join(survivors, "doc_id", "left_semi")
+    q = textstats.quality_score(d)
+    d = (d.join(q, "doc_id")
          .filter(F.col("quality") >= min_quality))
     if decontam_benchmark is not None:
         from geonames_rdf_spark.operators.dedup import decontaminate
 
-        clean = (decontaminate(d, decontam_benchmark, n=decontam_ngram,
-                               text_col=text_col, id_col=id_col)
-                 .filter(~F.col("contaminated")).select(id_col))
-        d = d.join(clean, id_col, "left_semi")
+        clean = (decontaminate(d, decontam_benchmark, n=decontam_ngram)
+                 .filter(~F.col("contaminated")).select("doc_id"))
+        d = d.join(clean, "doc_id", "left_semi")
     if max_dup_line_frac is not None or max_top_bigram_share is not None:
-        rep = textstats.repetition_stats(d, text_col)
+        rep = textstats.repetition_stats(d)
         keep = F.lit(True)
         if max_dup_line_frac is not None:
             keep = keep & (F.col("dup_line_frac") <= max_dup_line_frac)
         if max_top_bigram_share is not None:
             keep = keep & (F.col("top_bigram_share") <= max_top_bigram_share)
-        d = d.join(rep.filter(keep).select(id_col), id_col, "left_semi")
+        d = d.join(rep.filter(keep).select("doc_id"), "doc_id", "left_semi")
     if max_ppl is not None:
         # NULL ppl means "too short to measure" per lm_perplexity's
         # contract — NOT "bad", so unmeasurable docs are kept.
-        ok = (textstats.lm_perplexity(d, lm, text_col)
+        ok = (textstats.lm_perplexity(d, lm)
               .filter(F.col("ppl").isNull() | (F.col("ppl") <= max_ppl))
-              .select(id_col))
-        d = d.join(ok, id_col, "left_semi")
+              .select("doc_id"))
+        d = d.join(ok, "doc_id", "left_semi")
     if max_pii is not None:
         from geonames_rdf_spark.operators.privacy import redact_pii
 
-        ok = (redact_pii(d, text_col, id_col)
-              .filter(F.col("n_pii") <= max_pii).select(id_col))
-        d = d.join(ok, id_col, "left_semi")
+        ok = (redact_pii(d)
+              .filter(F.col("n_pii") <= max_pii).select("doc_id"))
+        d = d.join(ok, "doc_id", "left_semi")
     if rates:
-        d = sampling.sample_stratified(d, rates, id_col=id_col,
-                                       default_rate=default_rate)
-    return d.select(id_col, "source", "lang", "quality")
+        d = sampling.sample_stratified(d, rates, default_rate=default_rate)
+    return d.select("doc_id", "source", "lang", "quality")

@@ -28,14 +28,13 @@ def _h64(s: str) -> int:
     return struct.unpack("<Q", hashlib.md5(s.encode("utf-8")).digest()[:8])[0]
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """(text_hash, keep_id, n_dups): one row per distinct text; keep_id =
-    min id (deterministic survivor), n_dups = cluster size."""
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """(text_hash, keep_id, n_dups): one row per distinct ``text``; keep_id
+    = min ``doc_id`` (deterministic survivor), n_dups = cluster size."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        docs.select(F.md5("text").alias("text_hash"), "doc_id")
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dups"))
     )
 
 
@@ -93,10 +92,13 @@ def _reduce_per_doc(groups, rows_of, ufunc, empty):
     return np.concatenate(out)
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 3,
-                       n_hashes: int = 64) -> DataFrame:
-    """(id, sig array<long>) — MinHash over word k-shingles.
+N_HASHES = 64
+"""MinHash signature width: 16 LSH bands of 4 rows."""
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(id, sig array<long>) — MinHash over the word 3-shingles of
+    ``text``, ``N_HASHES`` wide, keyed by ``doc_id``.
 
     Universal-hash family a*x+b mod p with (a, b) derived from md5 of the
     seed index — identical on every executor, every run.  x is a
@@ -105,7 +107,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     """
     params = [
         (1 | _h64(f"minhash-a-{i}") % MERSENNE, _h64(f"minhash-b-{i}") % MERSENNE)
-        for i in range(n_hashes)
+        for i in range(N_HASHES)
     ]
 
     def sig(batches):
@@ -116,7 +118,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
         P = np.uint64(MERSENNE)
 
         def family(h):
-            # (a*x + b) mod p over (n_distinct, n_hashes), in place; a,
+            # (a*x + b) mod p over (n_distinct, N_HASHES), in place; a,
             # x < 2^31 so a*x fits in uint64, and the result fits in
             # uint32, whose row-wise minimum runs about twice as fast
             v = (h % P)[:, None] * A
@@ -126,18 +128,17 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
 
         for pdf in batches:
             sigs = _reduce_per_doc(
-                (_shingles(t or "", k) for t in pdf[text_col]),
+                (_shingles(t or "", 3) for t in pdf["text"]),
                 family, np.minimum, B.astype(np.uint32))  # x = 0 hashes to b
-            yield pd.DataFrame({"id": pdf[id_col].to_numpy(),
+            yield pd.DataFrame({"id": pdf["doc_id"].to_numpy(),
                                 "sig": list(sigs.astype(np.int64))})
 
-    return ensure_parallel(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).mapInPandas(sig, schema="id bigint, sig array<bigint>")
+    return ensure_parallel(docs.select("doc_id", "text")).mapInPandas(
+        sig, schema="id bigint, sig array<bigint>")
 
 
 def _guard_oversized_buckets(keyed: DataFrame, key_cols: list[str],
-                             id_col: str, max_bucket: int,
+                             max_bucket: int,
                              observation=None) -> DataFrame:
     """Cap the per-bucket cardinality of an LSH candidate self-join.
 
@@ -173,7 +174,7 @@ def _guard_oversized_buckets(keyed: DataFrame, key_cols: list[str],
         )
     n_groups = F.greatest(F.ceil(F.col("_bn") / F.lit(max_bucket)), F.lit(1))
     return (out.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col).cast("string")), n_groups))
+        "_salt", F.pmod(F.xxhash64(F.col("id").cast("string")), n_groups))
         .drop("_bn"))
 
 
@@ -187,7 +188,7 @@ any non-pathological bucket."""
 
 
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
-                        n_hashes: int = 64,
+                        n_hashes: int = N_HASHES,
                         max_bucket: int = DEFAULT_MAX_BUCKET,
                         guard_observation=None) -> DataFrame:
     """Band the signatures, bucket-join, emit candidate (id_a < id_b) pairs.
@@ -227,7 +228,7 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
     banded = sigs.select(
         "id", F.posexplode(F.expr(band_sql)).alias("band", "bucket"))
     banded = _guard_oversized_buckets(
-        banded, ["band", "bucket"], "id", max_bucket, guard_observation)
+        banded, ["band", "bucket"], max_bucket, guard_observation)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -279,10 +280,6 @@ def collapse_identical_signatures(
 
 
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      k: int = 3, n_hashes: int = 64,
-                      bands: int = 16,
-                      max_bucket: int = DEFAULT_MAX_BUCKET,
                       guard_observation=None) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: (id_a, id_b, est_jaccard).
 
@@ -301,9 +298,9 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
        uncollapsed pipeline — banding is a pure function of the
        signature, so two docs are candidates iff their signature values
        are — only the work shape changes.
-    2. **finite default bucket guard** — ``max_bucket`` defaults to
-       ``DEFAULT_MAX_BUCKET`` (see there), bounding residual hot buckets
-       of NEAR-but-distinct signatures.
+    2. **finite bucket guard** — ``lsh_candidate_pairs`` caps buckets
+       at ``DEFAULT_MAX_BUCKET`` (see there), bounding residual hot
+       buckets of NEAR-but-distinct signatures.
 
     The member table ``m`` (inside ``collapse_identical_signatures``)
     feeds every consumer and is localCheckpointed there — its one
@@ -311,11 +308,8 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
     so a second checkpoint layer on the raw signatures would only add a
     physical-planning pass and an extra block copy (removed r09).
     """
-    sigs = minhash_signatures(docs, text_col, id_col, k, n_hashes)
-    m, vsigs = collapse_identical_signatures(sigs)
-    vpairs = lsh_candidate_pairs(vsigs, bands, n_hashes=n_hashes,
-                                 max_bucket=max_bucket,
-                                 guard_observation=guard_observation)
+    m, vsigs = collapse_identical_signatures(minhash_signatures(docs))
+    vpairs = lsh_candidate_pairs(vsigs, guard_observation=guard_observation)
     vsim = (minhash_similarity(vsigs, vpairs)
             .filter(F.col("est_jaccard") >= threshold)
             .withColumnRenamed("id_a", "vid_a")
@@ -339,8 +333,7 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.6,
     return cross.unionByName(within)
 
 
-def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
-                      id_b: str = "id_b") -> DataFrame:
+def near_dup_clusters(pairs: DataFrame) -> DataFrame:
     """Consolidate pairwise near-dup hits into CLUSTERS: (doc_id,
     cluster) for every document appearing in a pair, with ``cluster`` =
     the smallest doc_id in its connected component — the deterministic
@@ -358,19 +351,19 @@ def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
     """
     from geonames_rdf_spark.operators.graph import connected_components
 
-    edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    edges = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     return connected_components(edges).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster"))
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 64) -> DataFrame:
-    """(id, simhash bigint) — sign-sum of md5 word hashes."""
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """(id, simhash bigint) — sign-sum of the md5 hashes of the words of
+    ``text``, keyed by ``doc_id``."""
 
     def sig(batches):
         import numpy as np
 
-        shifts = np.arange(bits, dtype=np.uint64)
+        shifts = np.arange(64, dtype=np.uint64)
 
         def signs(h):
             # +1 where a token's hash bit is set, -1 where it is clear;
@@ -380,17 +373,16 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
         for pdf in batches:
             # every token instance counts: the sign sums run over the
             # document's token list, not its distinct tokens
-            acc = _reduce_per_doc(((t or "").split() for t in pdf[text_col]),
-                                  signs, np.add, np.full(bits, -1, np.int32))
+            acc = _reduce_per_doc(((t or "").split() for t in pdf["text"]),
+                                  signs, np.add, np.full(64, -1, np.int32))
             v = ((acc > 0).astype(np.uint64) << shifts).sum(
                 axis=1, dtype=np.uint64)
             # stored as signed 64-bit
-            yield pd.DataFrame({"id": pdf[id_col].to_numpy(),
+            yield pd.DataFrame({"id": pdf["doc_id"].to_numpy(),
                                 "simhash": v.view(np.int64)})
 
-    return ensure_parallel(
-        docs.select(F.col(id_col), F.col(text_col))
-    ).mapInPandas(sig, schema="id bigint, simhash bigint")
+    return ensure_parallel(docs.select("doc_id", "text")).mapInPandas(
+        sig, schema="id bigint, simhash bigint")
 
 
 def _simhash_chunk_exprs(col, n_blocks: int) -> list:
@@ -412,9 +404,8 @@ def _simhash_chunk_exprs(col, n_blocks: int) -> list:
 
 
 def simhash_candidate_values(values: DataFrame, max_hamming: int = 3,
-                             n_blocks: int | None = None,
-                             sim_col: str = "simhash") -> DataFrame:
-    """Candidate pairs of DISTINCT simhash values (sh_a < sh_b) via
+                             n_blocks: int | None = None) -> DataFrame:
+    """Candidate pairs of DISTINCT ``simhash`` values (sh_a < sh_b) via
     Manku-style combinatorial blocking (Manku/Jain/Das Sarma, WWW'07).
 
     The 64 bits split into ``n_blocks`` disjoint chunks; a pair within
@@ -449,7 +440,7 @@ def simhash_candidate_values(values: DataFrame, max_hamming: int = 3,
             f"n_blocks ({n_blocks}) must exceed max_hamming ({max_hamming})"
             " for the pigeonhole guarantee")
     n_blocks = min(n_blocks, 64)
-    chunks = _simhash_chunk_exprs(F.col(sim_col), n_blocks)
+    chunks = _simhash_chunk_exprs(F.col("simhash"), n_blocks)
     combos = list(itertools.combinations(range(n_blocks),
                                          n_blocks - max_hamming))
     if len(combos) > 512:
@@ -461,7 +452,7 @@ def simhash_candidate_values(values: DataFrame, max_hamming: int = 3,
             f" (n_blocks={n_blocks}, max_hamming={max_hamming});"
             " reduce n_blocks")
     keys = values.select(
-        F.col(sim_col),
+        "simhash",
         F.posexplode(F.array(*[
             F.xxhash64(F.concat_ws(
                 ",", *[chunks[j].cast("string") for j in combo]))
@@ -471,16 +462,14 @@ def simhash_candidate_values(values: DataFrame, max_hamming: int = 3,
     a, b = keys.alias("a"), keys.alias("b")
     return (
         a.join(b, ["ck", "key"])
-        .filter(F.col(f"a.{sim_col}") < F.col(f"b.{sim_col}"))
-        .select(F.col(f"a.{sim_col}").alias("sh_a"),
-                F.col(f"b.{sim_col}").alias("sh_b"))
+        .filter(F.col("a.simhash") < F.col("b.simhash"))
+        .select(F.col("a.simhash").alias("sh_a"),
+                F.col("b.simhash").alias("sh_b"))
         .distinct()
     )
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      n_blocks: int | None = None) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dups by SimHash: (id_a, id_b, hamming), id_a < id_b.
 
     Scale shape (the two defenses a 10^9+-doc corpus needs):
@@ -497,10 +486,9 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
        pigeonhole-guaranteed, so the verified output is IDENTICAL to an
        all-pairs popcount scan.
     """
-    sigs = simhash_signatures(docs, text_col, id_col).localCheckpoint(
-        eager=False)
+    sigs = simhash_signatures(docs).localCheckpoint(eager=False)
     values = sigs.select("simhash").distinct()
-    vcand = simhash_candidate_values(values, max_hamming, n_blocks)
+    vcand = simhash_candidate_values(values, max_hamming)
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
     vpairs = (vcand.withColumn("hamming", hamming)
               .filter(F.col("hamming") <= max_hamming))
@@ -521,18 +509,16 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
     return cross.unionByName(within)
 
 
-def ngram_jaccard(docs: DataFrame, pairs: DataFrame, k: int = 3,
-                  text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def ngram_jaccard(docs: DataFrame, pairs: DataFrame, k: int = 3) -> DataFrame:
     """Exact word-k-gram Jaccard for candidate pairs (verification stage).
 
     Texts join to the (small) candidate pair set; the set intersection
     runs in an Arrow batch.  (id_a, id_b, jaccard)."""
-    t = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
     joined = (
-        pairs.join(t.withColumnRenamed("_id", "id_a")
-                     .withColumnRenamed("_text", "text_a"), "id_a")
-        .join(t.withColumnRenamed("_id", "id_b")
-               .withColumnRenamed("_text", "text_b"), "id_b")
+        pairs.join(docs.select(F.col("doc_id").alias("id_a"),
+                               F.col("text").alias("text_a")), "id_a")
+        .join(docs.select(F.col("doc_id").alias("id_b"),
+                          F.col("text").alias("text_b")), "id_b")
     )
 
     import math
@@ -557,12 +543,8 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame, k: int = 3,
 
 
 def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id",
                         planes: int = 16,
-                        dim: int | None = None,
-                        max_bucket: int = DEFAULT_MAX_BUCKET,
-                        guard_observation=None) -> DataFrame:
+                        dim: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup via hyperplane-LSH candidates + exact
     cosine verify.  (id_a, id_b, cosine).
 
@@ -574,9 +556,8 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
     pairs are expanded back afterwards (within-group pairs carry the
     self-cosine — 1.0 for any non-degenerate vector — and cross-group
     pairs inherit the representative cosine EXACTLY, because cosine is
-    a function of the vectors alone).  Plus the finite default
-    ``max_bucket`` guard for residual hot buckets of near-but-distinct
-    vectors.
+    a function of the vectors alone).  Plus the ``DEFAULT_MAX_BUCKET``
+    guard for residual hot buckets of near-but-distinct vectors.
 
     ``dim`` defaults to sampling one row (tiny setup job); pass it
     explicitly in pipelines where the width is known.  ``lsh_bucket``
@@ -590,22 +571,21 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
         # sample from a NON-NULL row: a NULL leading embedding would make
         # size() NULL and int(None) raise, defeating lsh_bucket's own
         # null-row tolerance (one bad row must not kill the pass)
-        row = (embeddings.filter(F.col(vec_col).isNotNull())
-               .select(F.size(vec_col).alias("d")).first())
+        row = (embeddings.filter(F.col("embedding").isNotNull())
+               .select(F.size("embedding").alias("d")).first())
         if row is None:
             dim = 0  # no non-null rows: any dim yields an empty result
         else:
             dim = int(row["d"])
-    base = embeddings.select(F.col(id_col).alias("id"),
-                             F.col(vec_col).alias("v"))
+    base = embeddings.select(F.col("vec_id").alias("id"),
+                             F.col("embedding").alias("v"))
     m = base.withColumn(
         "vid", F.min("id").over(Window.partitionBy("v"))
     ).localCheckpoint(eager=False)
     sig = (m.filter(F.col("id") == F.col("vid"))
            .select("id", "v",
                    lsh_bucket(F.col("v"), planes, dim=dim).alias("bucket")))
-    sig = _guard_oversized_buckets(
-        sig, ["bucket"], "id", max_bucket, guard_observation)
+    sig = _guard_oversized_buckets(sig, ["bucket"], DEFAULT_MAX_BUCKET)
     a, b = sig.alias("a"), sig.alias("b")
     vpairs = (
         a.join(b, ["bucket", "_salt"])
@@ -651,11 +631,11 @@ def word_ngram_expr(text, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  bench_text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame,
+                  n: int = 13) -> DataFrame:
     """Benchmark decontamination: flag training documents that share any
-    word ``n``-gram with an evaluation set (the standard 13-gram rule).
+    word ``n``-gram of its ``text`` with the ``text`` of an evaluation set
+    (the standard 13-gram rule).
 
     Returns one row per doc: (doc_id, n_contaminated, contaminated) where
     ``n_contaminated`` counts DISTINCT leaked n-grams.
@@ -667,7 +647,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
     map-side combinable).  Everything stays JVM-side (no UDF)."""
     bench_grams = (
         benchmark.select(
-            F.explode(word_ngram_expr(F.col(bench_text_col), n)).alias("g"))
+            F.explode(word_ngram_expr(F.col("text"), n)).alias("g"))
         .select(F.xxhash64("g").alias("gh")).distinct()
     )
     # plain explode (no _outer): a doc with zero n-grams contributes no
@@ -675,16 +655,16 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 13,
     # constant hash that a pathological benchmark gram could collide with;
     # the left join below still returns every doc with a zero count
     doc_grams = docs.select(
-        F.col(id_col),
-        F.explode(word_ngram_expr(F.col(text_col), n)).alias("g"),
-    ).select(id_col, F.xxhash64("g").alias("gh"))
+        "doc_id",
+        F.explode(word_ngram_expr(F.col("text"), n)).alias("g"),
+    ).select("doc_id", F.xxhash64("g").alias("gh"))
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "gh", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("gh").alias("n_contaminated"))
     )
     return (
-        docs.select(id_col).join(hits, id_col, "left")
+        docs.select("doc_id").join(hits, "doc_id", "left")
         .fillna({"n_contaminated": 0})
         .withColumn("contaminated", F.col("n_contaminated") > 0)
     )

@@ -129,18 +129,14 @@ def domain_oracle_expr(col_sql: str) -> str:
             f" ELSE ({last2}) END")
 
 
-def domain_stats(pages: DataFrame, url_col: str = "url",
-                 size_col: str | None = None) -> DataFrame:
-    """Per-registered-domain composition report: document count, share
-    of the corpus, and (optionally) a size sum.  One hash aggregation;
-    the corpus total rides the same pass as a grouping-set-free
-    window-over-nothing would not — it is a broadcast scalar join."""
+def domain_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
+    """Per-registered-domain composition report: document count and share
+    of the corpus.  One hash aggregation; the corpus total rides the same
+    pass as a grouping-set-free window-over-nothing would not — it is a
+    broadcast scalar join."""
     dom = registered_domain_expr(F.col(url_col)).alias("domain")
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if size_col is not None:
-        aggs.append(F.sum(F.col(size_col)).alias("total_size"))
-    per = pages.select(dom, *( [F.col(size_col)] if size_col else [] )) \
-        .groupBy("domain").agg(*aggs)
+    per = pages.select(dom).groupBy("domain").agg(
+        F.count(F.lit(1)).alias("n_docs"))
     # corpus total from the (dimension-sized) per-domain aggregate — no
     # second scan of pages; a global aggregate plans as one row, so the
     # cross join broadcasts it without a hint

@@ -45,8 +45,7 @@ DEFAULT_MAX_GROUP_ROWS = 50_000_000
 
 
 def pack_sequences(docs: DataFrame, seq_len: int = 2048,
-                   n_buckets: int = 32, text_col: str = "text",
-                   id_col: str = "doc_id",
+                   n_buckets: int = 32,
                    count_col: str | None = None,
                    max_group_rows: int = DEFAULT_MAX_GROUP_ROWS) -> DataFrame:
     """Assign every document to a pack: (doc_id, n_tokens, bucket,
@@ -54,7 +53,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
     (stream * 2^40 + local pack seq).
 
     ``count_col``: use a precomputed token-count column as the budget
-    unit instead of re-tokenizing ``text_col`` — the chunk->pack
+    unit instead of re-tokenizing ``text`` — the chunk->pack
     composition passes the chunker's own ``n_tokens`` so both stages
     count the SAME unit by construction (VERDICT r05 #3).
     """
@@ -66,7 +65,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
     # end to end instead of trusting the bucketing step
     bucket_col = F.pmod(
         F.conv(F.substring(
-            F.md5(F.concat(F.lit("packb-"), F.col(id_col).cast("string"))),
+            F.md5(F.concat(F.lit("packb-"), F.col("doc_id").cast("string"))),
             1, 15), 16, 10).cast("long"),
         F.lit(n_buckets)).cast("int")
     if count_col is not None:
@@ -75,13 +74,13 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
     else:
         # belt-and-braces: token_count contracts 0 for NULL, but a NULL
         # count would crash the int loop below, so pin it here too
-        n_tok = F.coalesce(token_count(F.col(text_col)), F.lit(0))
+        n_tok = F.coalesce(token_count(F.col("text")), F.lit(0))
     sized = docs.select(
-        F.col(id_col),
+        "doc_id",
         n_tok.alias("n_tokens"),
         bucket_col.alias("bucket"),
         # deterministic within-bucket order: md5 of the id, not input order
-        F.md5(F.concat(F.lit("pack-"), F.col(id_col).cast("string")))
+        F.md5(F.concat(F.lit("pack-"), F.col("doc_id").cast("string")))
         .alias("_ord"),
     )
 
@@ -129,14 +128,14 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048,
             pack_ids.append(base + cur_pack)
             oversized.append(False)
             cur_fill += n
-        out = pdf[[pdf.columns[0], "n_tokens", "bucket"]].copy()
+        out = pdf[["doc_id", "n_tokens", "bucket"]].copy()
         out["pack_id"] = pd.Series(pack_ids, dtype="int64")
         out["oversized"] = pd.Series(oversized, dtype="bool")
         return out
 
     return (
         sized.groupBy(*group_keys)
-        .applyInPandas(pack, schema=f"{id_col} bigint, n_tokens int,"
+        .applyInPandas(pack, schema="doc_id bigint, n_tokens int,"
                                     " bucket int, pack_id bigint,"
                                     " oversized boolean")
     )
@@ -155,8 +154,7 @@ def pack_stats(packed: DataFrame, seq_len: int = 2048) -> DataFrame:
 
 
 def chunk_documents(docs: DataFrame, max_tokens: int = 128,
-                    overlap: int = 16, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    overlap: int = 16) -> DataFrame:
     """Split documents into overlapping token windows — the
     context-window prep step between curation and packing: (doc_id,
     chunk_id, n_tokens, chunk_text), whitespace tokenization.
@@ -187,9 +185,9 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 128,
             f"chunk_documents: overlap ({overlap}) must be smaller than"
             f" max_tokens ({max_tokens}) or the stride is non-positive")
     stride = max_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     sized = (
-        docs.select(F.col(id_col), toks.alias("toks"))
+        docs.select("doc_id", toks.alias("toks"))
         .withColumn("n", F.size("toks"))
         .filter(F.col("n") > 0)
         # split('') yields [''] (size 1, empty token): drop those rows
@@ -198,12 +196,12 @@ def chunk_documents(docs: DataFrame, max_tokens: int = 128,
     starts = F.sequence(F.lit(0), F.col("n") - 1, F.lit(stride))
     return (
         sized.select(
-            F.col(id_col), "toks", "n",
+            "doc_id", "toks", "n",
             F.posexplode(starts).alias("chunk_id", "start"))
         .filter((F.col("start") == 0)
                 | (F.col("start") + overlap < F.col("n")))
         .select(
-            F.col(id_col), "chunk_id",
+            "doc_id", "chunk_id",
             F.least(F.lit(max_tokens),
                     F.col("n") - F.col("start")).alias("n_tokens"),
             F.array_join(

@@ -28,7 +28,7 @@ Semantics, pinned by tests:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # ordered: applied top to bottom during redaction
@@ -55,57 +55,53 @@ PII_INJECT_SUFFIX = (" contact sam.lee@mail.example.org from 10.1.2.3"
 PII_INJECT_MOD = 7
 
 
-def inject_pii(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
-    """Append ``PII_INJECT_SUFFIX`` to every ``id % PII_INJECT_MOD == 0``
-    document (NULL text stays NULL — ``concat`` propagates)."""
+def inject_pii(docs: DataFrame) -> DataFrame:
+    """Append ``PII_INJECT_SUFFIX`` to the ``text`` of every ``doc_id %
+    PII_INJECT_MOD == 0`` document (NULL text stays NULL — ``concat``
+    propagates)."""
     return docs.withColumn(
-        text_col,
-        F.when(F.col(id_col) % PII_INJECT_MOD == 0,
-               F.concat(F.col(text_col), F.lit(PII_INJECT_SUFFIX)))
-        .otherwise(F.col(text_col)))
+        "text",
+        F.when(F.col("doc_id") % PII_INJECT_MOD == 0,
+               F.concat(F.col("text"), F.lit(PII_INJECT_SUFFIX)))
+        .otherwise(F.col("text")))
 
 
-def inject_pii_sql(table: str = "documents", text_col: str = "text",
-                   id_col: str = "doc_id") -> str:
-    """DuckDB twin of ``inject_pii`` (``||`` propagates NULL like
-    ``concat``) — a derived-table SQL string."""
+def inject_pii_sql() -> str:
+    """DuckDB twin of ``inject_pii`` over the ``documents`` table (``||``
+    propagates NULL like ``concat``) — a derived-table SQL string."""
     sfx = PII_INJECT_SUFFIX.replace("'", "''")
-    return (f"(SELECT * REPLACE (CASE WHEN {id_col} % {PII_INJECT_MOD} = 0"
-            f" THEN {text_col} || '{sfx}' ELSE {text_col} END"
-            f" AS {text_col}) FROM {table})")
+    return (f"(SELECT * REPLACE (CASE WHEN doc_id % {PII_INJECT_MOD} = 0"
+            f" THEN text || '{sfx}' ELSE text END"
+            f" AS text) FROM documents)")
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """(doc_id, text_redacted, n_email, n_ssn, n_ipv4, n_phone, n_pii)
     — one row per input document, sequential count-then-redact per
-    kind (see module docstring)."""
-    text = F.col(text_col)
+    kind of its ``text`` (see module docstring)."""
+    text = F.col("text")
     counts = []
     for kind, pat in PII_PATTERNS.items():
         counts.append(F.coalesce(F.regexp_count(text, F.lit(pat)),
                                  F.lit(0)).alias(f"n_{kind}"))
         text = F.regexp_replace(text, pat, f"<{kind.upper()}>")
-    out = docs.select(F.col(id_col), text.alias("text_redacted"),
-                      *counts)
+    out = docs.select("doc_id", text.alias("text_redacted"), *counts)
     total = sum((F.col(f"n_{k}") for k in PII_PATTERNS), F.lit(0))
     return out.withColumn("n_pii", total)
 
 
-def pii_oracle_sql(table: str = "documents", text_col: str = "text",
-                   id_col: str = "doc_id") -> str:
+def pii_oracle_sql(table: str = "documents") -> str:
     """The DuckDB twin (RE2 dialect, same literal patterns, same
     sequential count-then-redact chain) — used by the pytest parity
     check; written here so the patterns cannot drift from the SQL
     independently."""
-    ctes, prev_t, prev = [], text_col, table
+    ctes, prev_t, prev = [], "text", table
     for i, (k, p) in enumerate(PII_PATTERNS.items()):
         carried = ", ".join(f"n_{kk}" for kk in
                             list(PII_PATTERNS)[:i])
         carried = (carried + ", ") if carried else ""
         ctes.append(
-            f"s{i} AS (SELECT {id_col}, {carried}"
+            f"s{i} AS (SELECT doc_id, {carried}"
             f"CASE WHEN {prev_t} IS NULL THEN 0 ELSE "
             f"len(regexp_extract_all({prev_t}, '{p}')) END AS n_{k}, "
             f"regexp_replace({prev_t}, '{p}', '<{k.upper()}>', 'g')"
@@ -115,5 +111,5 @@ def pii_oracle_sql(table: str = "documents", text_col: str = "text",
     total = " + ".join(f"n_{k}" for k in names)
     cols = ", ".join(f"n_{k}" for k in names)
     return ("WITH " + ",\n".join(ctes) +
-            f"\nSELECT {id_col}, t AS text_redacted, {cols},"
+            f"\nSELECT doc_id, t AS text_redacted, {cols},"
             f" {total} AS n_pii FROM {prev}")

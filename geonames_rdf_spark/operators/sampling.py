@@ -21,14 +21,14 @@ _HEX_DIGITS = 13
 _DENOM = float(16 ** _HEX_DIGITS)
 
 
-def uniform_hash(key: Column, salt: str = "sample") -> Column:
-    """Deterministic uniform draw in [0,1) from md5(salt-key).
+def uniform_hash(key: Column) -> Column:
+    """Deterministic uniform draw in [0,1) from md5('sample-' || key).
 
     ``conv(hex, 16, 10)`` keeps everything in codegen; the 52-bit prefix
     fits a double exactly (no cross-engine rounding at the threshold)."""
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt + "-"), key.cast("string"))),
+            F.md5(F.concat(F.lit("sample-"), key.cast("string"))),
             1, _HEX_DIGITS),
         16, 10,
     )
@@ -36,11 +36,9 @@ def uniform_hash(key: Column, salt: str = "sample") -> Column:
 
 
 def sample_stratified(df: DataFrame, rates: dict[str, float],
-                      stratum_col: str = "source",
-                      id_col: str = "doc_id",
-                      default_rate: float = 1.0,
-                      salt: str = "sample") -> DataFrame:
-    """Keep each row with its stratum's probability (hash-deterministic).
+                      default_rate: float = 1.0) -> DataFrame:
+    """Keep each row with its stratum's probability (hash-deterministic):
+    the stratum is ``source``, the hashed key ``doc_id``.
 
     ``rates``: stratum value -> keep rate in [0,1]; unlisted strata use
     ``default_rate``.  One narrow filter — no shuffle, no RNG state.
@@ -53,13 +51,13 @@ def sample_stratified(df: DataFrame, rates: dict[str, float],
             raise ValueError(f"rate for {k!r} must be in [0,1], got {r}")
     rate = F.lit(float(default_rate))
     for k in sorted(rates):
-        rate = F.when(F.col(stratum_col) == k,
+        rate = F.when(F.col("source") == k,
                       F.lit(float(rates[k]))).otherwise(rate)
     out = df
     if zero:
-        out = out.filter(~F.col(stratum_col).isin(*zero)
-                         | F.col(stratum_col).isNull())
-    return out.filter(uniform_hash(F.col(id_col), salt) < rate)
+        out = out.filter(~F.col("source").isin(*zero)
+                         | F.col("source").isNull())
+    return out.filter(uniform_hash(F.col("doc_id")) < rate)
 
 
 # demo stratification used by the driver query + its DuckDB twin (pinned
@@ -68,8 +66,8 @@ DEMO_RATES = {"src0": 0.25, "src1": 0.5, "src2": 0.0}
 DEMO_DEFAULT_RATE = 0.75
 
 
-def uniform_hash_sql(expr: str, salt: str = "sample") -> str:
+def uniform_hash_sql(expr: str) -> str:
     """The DuckDB twin of ``uniform_hash`` (oracle helper)."""
-    key = f"md5('{salt}-' || CAST({expr} AS VARCHAR))"
+    key = f"md5('sample-' || CAST({expr} AS VARCHAR))"
     return (f"(('0x' || substr({key}, 1, {_HEX_DIGITS}))::UBIGINT::DOUBLE"
             f" / {_DENOM!r})")

@@ -4,7 +4,8 @@ Brute-force cosine top-k in pure higher-order Column functions (JVM-side,
 no UDF) is the correctness baseline; hyperplane-LSH bucketing is the scale
 path (shrinks the candidate set by ~2^planes before the exact re-rank).
 Hyperplanes are deterministic (md5-seeded), so buckets are stable across
-runs and executors.
+runs and executors.  The operators read an embeddings table by its column
+names: ``vec_id``, ``embedding`` and, for the per-label kNN, ``label``.
 """
 
 from __future__ import annotations
@@ -47,19 +48,25 @@ def _query_lit(query_vec: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in query_vec])
 
 
-def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Brute-force cosine top-k: one scan, TakeOrderedAndProject (Spark
-    keeps only k rows per partition then merges — no global sort)."""
+def _rerank(vectors: DataFrame, query_vec: list[float], k: int) -> DataFrame:
+    """Exact cosine top-k of ``vectors`` against the query: (vec_id,
+    cosine), ties by ascending id."""
     q = _query_lit(query_vec)
     return (
-        embeddings.select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
+        vectors.select(
+            "vec_id",
+            F.round(cosine_expr(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def cosine_topk(embeddings: DataFrame, query_vec: list[float],
+                k: int = 10) -> DataFrame:
+    """Brute-force cosine top-k: one scan, TakeOrderedAndProject (Spark
+    keeps only k rows per partition then merges — no global sort)."""
+    return _rerank(embeddings, query_vec, k)
 
 
 def lsh_bucket(vec: Column, planes: int = 16, dim: int = 64) -> Column:
@@ -91,8 +98,7 @@ def lsh_bucket(vec: Column, planes: int = 16, dim: int = 64) -> Column:
 
 
 def ann_lsh_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
-                 planes: int = 8, vec_col: str = "embedding",
-                 id_col: str = "vec_id", probe_hamming: int = 3) -> DataFrame:
+                 planes: int = 8, probe_hamming: int = 3) -> DataFrame:
     """Approximate top-k: restrict the exact re-rank to vectors whose LSH
     bucket is within ``probe_hamming`` bits of the query's bucket
     (multi-probe).  Same output schema as ``cosine_topk``.
@@ -113,35 +119,29 @@ def ann_lsh_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
     dim = len(query_vec)  # the query defines the expected width
     qsig = lsh_bucket(q, planes, dim=dim)
     sig = embeddings.withColumn(
-        "_bucket", lsh_bucket(F.col(vec_col), planes, dim=dim))
+        "_bucket", lsh_bucket(F.col("embedding"), planes, dim=dim))
     near = F.bit_count(
         F.col("_bucket").bitwiseXOR(qsig)
     ) <= probe_hamming
-    return (
-        sig.filter(near)
-        .select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _rerank(sig.filter(near), query_vec, k)
 
 
-def pairwise_topk_per_label(embeddings: DataFrame, k: int = 3,
-                            vec_col: str = "embedding",
-                            id_col: str = "vec_id",
-                            label_col: str = "label") -> DataFrame:
+PER_LABEL_K = 3
+"""Neighbours per vector in the per-label kNN."""
+
+
+def pairwise_topk_per_label(embeddings: DataFrame) -> DataFrame:
     """Per-label k-NN (blocked all-pairs): join within label groups only,
-    exact cosine, window top-k per query vector.  The blocking key bounds
-    the quadratic term — the pattern for 'find my cluster neighbours'."""
+    exact cosine, window top-``PER_LABEL_K`` per query vector.  The
+    blocking key bounds the quadratic term — the pattern for 'find my
+    cluster neighbours'."""
     from pyspark.sql import Window
 
     # pre-normalize once per row (norm is O(dim); doing it inside the
     # pairwise cosine would recompute it O(group_size) times per row)
     base = embeddings.select(
-        F.col(label_col).alias("lbl"), F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("label").alias("lbl"), F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     ).withColumn("nrm", norm_expr(F.col("v")))
     a = base.select(F.col("lbl"), F.col("id").alias("id_a"),
                     F.col("v").alias("va"), F.col("nrm").alias("na"))
@@ -157,15 +157,12 @@ def pairwise_topk_per_label(embeddings: DataFrame, k: int = 3,
     w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= PER_LABEL_K)
         .select("id_a", "id_b", "cosine", "rn")
     )
 
 
-def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
-                                 vec_col: str = "embedding",
-                                 id_col: str = "vec_id",
-                                 label_col: str = "label",
+def pairwise_topk_per_label_blas(embeddings: DataFrame,
                                  max_group_rows: int = 200_000,
                                  chunk_rows: int | None = None) -> DataFrame:
     """BLAS backend for ``pairwise_topk_per_label``: one Arrow batch per
@@ -191,13 +188,13 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
     """
     import pandas as pd
 
-    hot = (embeddings.groupBy(label_col)
+    hot = (embeddings.groupBy("label")
            .agg(F.count(F.lit(1)).alias("_n"))
            .filter(F.col("_n") > max_group_rows)
            .orderBy(F.desc("_n")).limit(5).collect())
     if hot:
         worst = ", ".join(
-            f"{r[label_col]!r}({r['_n']} rows)" for r in hot)
+            f"{r['label']!r}({r['_n']} rows)" for r in hot)
         raise ValueError(
             f"pairwise_topk_per_label_blas: label group(s) exceed"
             f" max_group_rows={max_group_rows}: {worst} — exact"
@@ -214,12 +211,12 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
                                  "rn": []}).astype(
                 {"id_a": "int64", "id_b": "int64",
                  "cosine": "float64", "rn": "int32"})
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)  # ascending-id order makes ties stable
         ids = ids[order]
-        X = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
+        X = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
         Xh = X / np.linalg.norm(X, axis=1, keepdims=True)
-        kk = min(k, n - 1)
+        kk = min(PER_LABEL_K, n - 1)
         # row-chunked scoring: chunk*n*8B (matrix) + ~2x for argsort
         # indices stays ~1.5 GB regardless of n; chunk >= n collapses to
         # the original single-matmul path
@@ -242,34 +239,34 @@ def pairwise_topk_per_label_blas(embeddings: DataFrame, k: int = 3,
             parts, ignore_index=True)
 
     return (
-        embeddings.select(label_col, id_col, vec_col)
-        .groupBy(label_col)
+        embeddings.select("label", "vec_id", "embedding")
+        .groupBy("label")
         .applyInPandas(topk, schema="id_a bigint, id_b bigint,"
                                     " cosine double, rn int")
     )
 
 
-def fixed_centroids(k: int = 8, dim: int = 64, scale: float = 0.25) -> list[list[float]]:
+def fixed_centroids(k: int = 8, dim: int = 64) -> list[list[float]]:
     """Deterministic md5-derived coarse-quantizer centroids (no training).
 
     The IVF *partitioning* doesn't need trained centroids to be correct —
     any fixed point set defines valid cells — and fixed centroids make the
     whole IVF query oracle-expressible (DuckDB replays the same constants).
-    ``scale`` matches the synthetic embedding range (~[-0.5, 0.5]).
+    The 0.25 scale matches the synthetic embedding range (~[-0.5, 0.5]).
     Trained (Lloyd) centroids remain available via ``train_ivf_centroids``.
     """
-    return [[v * scale for v in _unit(1000 + i, dim)] for i in range(k)]
+    return [[v * 0.25 for v in _unit(1000 + i, dim)] for i in range(k)]
 
 
 # --- IVF (inverted-file) ANN: the coarse-quantizer scale path --------------
 
-def ivf_assign(embeddings: DataFrame, centroids: list[list[float]],
-               vec_col: str = "embedding") -> DataFrame:
+def ivf_assign(embeddings: DataFrame,
+               centroids: list[list[float]]) -> DataFrame:
     """Assign each vector to its nearest centroid (squared-L2 argmin over
     a broadcast centroid list — pure Column fold, no UDF)."""
     def sq_dist(c: list[float]) -> Column:
         lit = F.array(*[F.lit(float(x)) for x in c])
-        diff = F.zip_with(F.col(vec_col).cast("array<double>"), lit,
+        diff = F.zip_with(F.col("embedding").cast("array<double>"), lit,
                           lambda a, b: (a - b) * (a - b))
         return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -283,22 +280,21 @@ def ivf_assign(embeddings: DataFrame, centroids: list[list[float]],
     return embeddings.withColumn("_cell", best_idx)
 
 
-def train_ivf_centroids(embeddings: DataFrame, k: int = 8, iters: int = 2,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> list[list[float]]:
+def train_ivf_centroids(embeddings: DataFrame, k: int = 8,
+                        iters: int = 2) -> list[list[float]]:
     """Deterministic Lloyd refinement: seed with the k lowest-id vectors,
     then ``iters`` rounds of assign + per-cell element-wise mean (the mean
     is an array-fold aggregation — one shuffle per round, no MLlib)."""
-    seeds = (embeddings.orderBy(id_col).limit(k)
-             .select(vec_col).collect())
-    centroids = [[float(x) for x in r[vec_col]] for r in seeds]
+    seeds = (embeddings.orderBy("vec_id").limit(k)
+             .select("embedding").collect())
+    centroids = [[float(x) for x in r["embedding"]] for r in seeds]
     dim = len(centroids[0])
     for _ in range(iters):
-        assigned = ivf_assign(embeddings, centroids, vec_col)
+        assigned = ivf_assign(embeddings, centroids)
         means = (
             assigned.groupBy("_cell")
             .agg(
-                *[F.avg(F.col(vec_col)[i].cast("double")).alias(f"m{i}")
+                *[F.avg(F.col("embedding")[i].cast("double")).alias(f"m{i}")
                   for i in range(dim)]
             )
             .collect()
@@ -319,62 +315,41 @@ def nearest_cells(centroids: list[list[float]], query_vec: list[float],
 
 
 def write_ivf_index(embeddings: DataFrame, centroids: list[list[float]],
-                    path: str, vec_col: str = "embedding",
-                    mode: str = "overwrite") -> None:
+                    path: str) -> None:
     """Materialize the IVF assignment as a parquet table PARTITIONED BY
     ``_cell`` — the corpus-scale layout: a probe then reads only the
     ``nprobe`` matching partition directories (partition pruning is a
     METADATA operation; 10^12 vectors across 4096 cells means a 2-probe
     query touches ~0.05% of the files).  ``ann_ivf_topk`` computes the
     same assignment inline for ad-hoc corpora."""
-    (ivf_assign(embeddings, centroids, vec_col)
-     .write.mode(mode).partitionBy("_cell").parquet(path))
+    (ivf_assign(embeddings, centroids)
+     .write.mode("overwrite").partitionBy("_cell").parquet(path))
 
 
 def ann_ivf_topk_stored(spark, path: str, query_vec: list[float],
-                        centroids: list[list[float]], k: int = 10,
-                        nprobe: int = 2, vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
-    """IVF ANN over a stored ``write_ivf_index`` table: the ``_cell``
-    filter prunes to the probed partitions before any IO (plan-asserted
-    in tests/test_plans.py), then the exact cosine re-rank runs on the
-    surviving slice only.  Output schema matches ``cosine_topk``."""
-    probe = nearest_cells(centroids, query_vec, nprobe)
-    q = _query_lit(query_vec)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("_cell").isin(*probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+                        centroids: list[list[float]]) -> DataFrame:
+    """IVF ANN top-10 over a stored ``write_ivf_index`` table, probing the
+    2 cells nearest the query: the ``_cell`` filter prunes to the probed
+    partitions before any IO (plan-asserted in tests/test_plans.py), then
+    the exact cosine re-rank runs on the surviving slice only.  Output
+    schema matches ``cosine_topk``."""
+    probe = nearest_cells(centroids, query_vec, 2)
+    return _rerank(spark.read.parquet(path).filter(F.col("_cell").isin(*probe)),
+                   query_vec, 10)
 
 
 def ann_ivf_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10,
                  centroids: list[list[float]] | None = None,
-                 n_cells: int = 8, nprobe: int = 2,
-                 vec_col: str = "embedding",
-                 id_col: str = "vec_id") -> DataFrame:
+                 nprobe: int = 2) -> DataFrame:
     """IVF ANN: restrict the exact cosine re-rank to the ``nprobe`` cells
     whose centroids are nearest the query.  At corpus scale the cell
     assignment is a stored partition column (partition pruning makes the
-    probe a metadata operation); here it is computed inline.
+    probe a metadata operation); here it is computed inline.  Without
+    ``centroids``, 8 are trained (``train_ivf_centroids``).
     Output schema matches ``cosine_topk``."""
     if centroids is None:
-        centroids = train_ivf_centroids(embeddings, k=n_cells,
-                                        vec_col=vec_col, id_col=id_col)
+        centroids = train_ivf_centroids(embeddings)
     probe = nearest_cells(centroids, query_vec, nprobe)
-    assigned = ivf_assign(embeddings, centroids, vec_col)
-    q = _query_lit(query_vec)
-    return (
-        assigned.filter(F.col("_cell").isin(*probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    assigned = ivf_assign(embeddings, centroids)
+    return _rerank(assigned.filter(F.col("_cell").isin(*probe)),
+                   query_vec, k)

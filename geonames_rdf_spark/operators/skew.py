@@ -28,9 +28,8 @@ def salted_join(
     small: DataFrame,
     key: str,
     salt_buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join ``big ⋈ small`` on ``key`` with salt spreading.
+    """Inner equi-join ``big ⋈ small`` on ``key`` with salt spreading.
 
     big gets a deterministic PER-ROW salt — a hash over ALL its columns,
     NOT just the key: a key-derived salt is a pure function of the join
@@ -47,5 +46,5 @@ def salted_join(
     salted_small = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
     )
-    out = salted_big.join(salted_small, [key, "_salt"], how)
+    out = salted_big.join(salted_small, [key, "_salt"])
     return out.drop("_salt")

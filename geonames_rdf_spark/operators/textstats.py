@@ -3,6 +3,8 @@
 All pure Column expressions (JVM-side, codegen'd — no Python in the hot
 path): token counting, quality scoring, n-gram-heuristic language ID, and
 document fingerprinting.  Each has a DuckDB oracle twin (oracle.py).
+They read a documents table by its column names: ``doc_id``, ``text``
+and, where a language or source matters, ``lang`` and ``source``.
 """
 
 from __future__ import annotations
@@ -64,10 +66,10 @@ def _occurrences(text: Column, needle: str) -> Column:
     ).cast("int")
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-document quality signals: length, token count, mean token
     length, punctuation/digit/uppercase ratios, stopword ratio."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_tok = token_count(t)
     strip = lambda pat: F.length(t) - F.length(F.regexp_replace(t, pat, ""))  # noqa: E731
@@ -87,9 +89,9 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Scalar [0,1] quality score from the feature mix (heuristic weights)."""
-    q = quality_features(docs, text_col)
+    q = quality_features(docs)
     score = (
         F.least(F.col("n_tokens") / F.lit(50.0), F.lit(1.0)) * 0.4
         + (1 - F.least(F.col("punct_ratio") * 5, F.lit(1.0))) * 0.2
@@ -101,11 +103,11 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return q.select("doc_id", F.round(score, 6).alias("quality"))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-n-gram language ID: argmax of per-language marker hits,
     'und' (undetermined) when no marker fires.  Deterministic tie-break
     by language code order."""
-    t = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+    t = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
     scores = {
         lang: sum((_occurrences(t, w) for w in ws), F.lit(0))
         for lang, ws in LANG_MARKERS.items()
@@ -117,27 +119,26 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", expr.alias("lang_pred"), best.alias("marker_hits"))
 
 
-def lang_stopword_ratio(docs: DataFrame, text_col: str = "text",
-                        lang_col: str = "lang") -> DataFrame:
+def lang_stopword_ratio(docs: DataFrame) -> DataFrame:
     """Stopword ratio against the document's OWN language's markers (the
     EN-marker ratio in ``quality_features`` systematically under-scores
     non-English docs — this is the per-language correction a multilingual
     curation pipeline needs).  Languages without a marker set score 0.
     Pure Column CASE cascade — codegen, no UDF."""
-    t = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+    t = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
     hits = F.lit(0)
     for lang in sorted(LANG_MARKERS):
         s = sum((_occurrences(t, w) for w in LANG_MARKERS[lang]), F.lit(0))
-        hits = F.when(F.col(lang_col) == lang, s).otherwise(hits)
-    n_tok = token_count(F.col(text_col))
+        hits = F.when(F.col("lang") == lang, s).otherwise(hits)
+    n_tok = token_count(F.col("text"))
     return docs.select(
-        "doc_id", F.col(lang_col).alias("lang"),
+        "doc_id", "lang",
         hits.alias("marker_hits"),
         F.round(hits / F.greatest(n_tok, F.lit(1)), 4).alias("stopword_ratio"),
     )
 
 
-def corpus_composition(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_composition(docs: DataFrame) -> DataFrame:
     """Per-(source, lang) corpus telemetry: doc count, token total, and
     quality mass — the composition report every curation pipeline tracks
     per shard (what am I training on, and how much of it?).
@@ -147,10 +148,10 @@ def corpus_composition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     between engines/partitionings, integer summation doesn't — the
     report is bit-stable and oracle-replayable.  One map-side-combinable
     groupBy; the quality join is by doc_id on the same scan."""
-    q = quality_score(docs, text_col)
+    q = quality_score(docs)
     base = docs.select(
         "doc_id", "source", "lang",
-        token_count(F.col(text_col)).alias("_tok"),
+        token_count(F.col("text")).alias("_tok"),
     )
     j = base.join(q, "doc_id")
     micro = F.round(F.col("quality") * 1e6).cast("bigint")
@@ -169,8 +170,7 @@ def corpus_composition(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def oov_rate(docs: DataFrame, top_k: int = 500,
-             text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def oov_rate(docs: DataFrame, top_k: int = 500) -> DataFrame:
     """Out-of-vocabulary rate against the corpus's OWN top-``top_k``
     unigram vocabulary — the cheap LM-free fluency signal (gibberish and
     boilerplate-free natural text separate cleanly on OOV mass).
@@ -183,8 +183,8 @@ def oov_rate(docs: DataFrame, top_k: int = 500,
     Returns (doc_id, n_tokens, n_oov, oov_rate); empty/NULL docs score
     (0, 0, 0.0)."""
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))),
+        "doc_id",
+        F.explode(F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))),
                           r"\s+")).alias("tok"),
     ).filter(F.col("tok") != "")
     vocab = (
@@ -195,16 +195,16 @@ def oov_rate(docs: DataFrame, top_k: int = 500,
     )
     per_doc = (
         toks.join(F.broadcast(vocab), "tok", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.count_if(F.col("_in").isNull()).alias("n_oov"),
         )
     )
     return (
-        docs.select(id_col).join(per_doc, id_col, "left")
+        docs.select("doc_id").join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
             F.coalesce("n_oov", F.lit(0)).alias("n_oov"),
             F.round(F.coalesce(F.col("n_oov"), F.lit(0))
@@ -214,25 +214,25 @@ def oov_rate(docs: DataFrame, top_k: int = 500,
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Canonical-form document fingerprint: md5 of the lower-cased,
     whitespace-collapsed text (stable across cosmetic edits)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
-def rolling_fingerprint(docs: DataFrame, k: int = 16,
-                        text_col: str = "text") -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Rolling-window (winnowing-family) fingerprint: the minimum hash
-    over all character k-gram windows of the normalized text — robust to
+    over all character 16-gram windows of the normalized text — robust to
     APPENDS and PREPENDS (any edit outside the minimizing window leaves
     the fingerprint unchanged), unlike the whole-document md5.
 
     Window hashes compare as md5 hex strings (lexicographic min ==
-    numeric min of the big-endian value); texts shorter than ``k`` hash
-    as one window.  Pure Column pipeline: sequence -> transform ->
+    numeric min of the big-endian value); texts shorter than a window
+    hash as one window.  Pure Column pipeline: sequence -> transform ->
     array_min, all codegen."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    k = 16
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     n = F.length(norm)
     starts = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
     windows = F.transform(starts, lambda i: F.md5(norm.substr(i, F.lit(k))))
@@ -253,8 +253,7 @@ def _char_ngram_expr(text: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def train_char_lm(docs: DataFrame, n: int = 3, top_k: int = 50_000,
-                  text_col: str = "text") -> dict:
+def train_char_lm(docs: DataFrame, n: int = 3, top_k: int = 50_000) -> dict:
     """Train a character n-gram language model distributed: ONE map-side-
     combinable groupBy count per order (n and n-1), capped at ``top_k``
     entries each via TakeOrdered with deterministic ties.  Returns a
@@ -266,7 +265,7 @@ def train_char_lm(docs: DataFrame, n: int = 3, top_k: int = 50_000,
     """
     def counts(order: int) -> dict:
         rows = (
-            docs.select(F.explode(_char_ngram_expr(F.col(text_col), order))
+            docs.select(F.explode(_char_ngram_expr(F.col("text"), order))
                         .alias("g"))
             .groupBy("g").agg(F.count(F.lit(1)).alias("c"))
             .orderBy(F.desc("c"), F.asc("g")).limit(top_k)
@@ -277,8 +276,7 @@ def train_char_lm(docs: DataFrame, n: int = 3, top_k: int = 50_000,
     return {"n": n, "ngram": counts(n), "prefix": counts(n - 1), "V": 256}
 
 
-def lm_perplexity(docs: DataFrame, lm: dict,
-                  text_col: str = "text") -> DataFrame:
+def lm_perplexity(docs: DataFrame, lm: dict) -> DataFrame:
     """Score each document with the trained char-LM:
     (doc_id, n_grams, avg_nll, ppl).  Documents shorter than the LM
     order score NULL (no evidence), not 0 — a filter must distinguish
@@ -321,13 +319,11 @@ def lm_perplexity(docs: DataFrame, lm: dict,
             yield pd.DataFrame({"doc_id": ids, "n_grams": cnt,
                                 "avg_nll": nll, "ppl": ppl})
 
-    return ensure_parallel(
-        docs.select("doc_id", F.col(text_col).alias("text"))
-    ).mapInPandas(
+    return ensure_parallel(docs.select("doc_id", "text")).mapInPandas(
         score, schema="doc_id bigint, n_grams int, avg_nll double, ppl double")
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document:
 
     - ``dup_line_frac``  — 1 - distinct/total over non-blank lines (the
@@ -344,9 +340,9 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from geonames_rdf_spark.operators.dedup import word_ngram_expr
 
-    lines = F.filter(F.split(F.col(text_col), "\n"),
+    lines = F.filter(F.split(F.col("text"), "\n"),
                      lambda t: F.trim(t) != "")
-    words = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+    words = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
                      lambda t: t != "")
 
     def dup_frac(arr):
@@ -362,7 +358,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     grams = docs.select(
         "doc_id",
-        F.explode(word_ngram_expr(F.col(text_col), 2)).alias("g"))
+        F.explode(word_ngram_expr(F.col("text"), 2)).alias("g"))
     shares = (
         grams.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")

@@ -128,9 +128,9 @@ def url_oracle_expr(col_sql: str) -> str:
     return f"CASE WHEN {col_sql} IS NULL THEN NULL ELSE {out} END"
 
 
-def dedup_pages_by_url(pages: DataFrame, url_col: str = "url",
-                       ts_col: str = "warc_ts") -> DataFrame:
-    """One row per canonical URL — the earliest capture wins (ties to
+def dedup_pages_by_url(pages: DataFrame) -> DataFrame:
+    """One row per canonical ``url`` — the earliest ``warc_ts`` capture
+    wins (ties to
     the lexicographically smallest raw url, so the survivor is
     deterministic under any partitioning).  Adds ``url_canonical``;
     keeps every input column.  One shuffle keyed by the canonical url.
@@ -143,13 +143,13 @@ def dedup_pages_by_url(pages: DataFrame, url_col: str = "url",
     ordering struct (ts-is-null, ts, raw url) reproduces the former
     ``asc_nulls_last(ts), asc(url)`` orderBy exactly.
     """
-    norm = normalize_url_expr(F.col(url_col)).alias("url_canonical")
+    norm = normalize_url_expr(F.col("url")).alias("url_canonical")
     with_norm = pages.select("*", norm)
     payload = [c for c in with_norm.columns if c != "url_canonical"]
     order_key = F.struct(
-        F.col(ts_col).isNull().cast("int").alias("_null_last"),
-        F.col(ts_col).alias("_ts"),
-        F.col(url_col).alias("_url"),
+        F.col("warc_ts").isNull().cast("int").alias("_null_last"),
+        F.col("warc_ts").alias("_ts"),
+        F.col("url").alias("_url"),
     )
     won = (with_norm.groupBy("url_canonical")
            .agg(F.min_by(F.struct(*[F.col(c) for c in payload]),

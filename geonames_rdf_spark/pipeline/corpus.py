@@ -58,15 +58,16 @@ def wrap_html(i: int, text: str) -> bytes:
     ).encode("utf-8")
 
 
-def gazetteer_surfaces(features_with_bestname: DataFrame, limit: int = 5000) -> list[str]:
-    """Distinct bestName surface forms, deterministic order, driver-side.
+def gazetteer_surfaces(features_with_bestname: DataFrame) -> list[str]:
+    """The first 5000 distinct bestName surface forms, deterministic
+    order, driver-side.
 
     Dimension-sized (GeoNames has ~13M names vs 10^12 pages) — safe to
     collect and broadcast.
     """
     rows = (
         features_with_bestname.select("bestName").distinct()
-        .orderBy("bestName").limit(limit).collect()
+        .orderBy("bestName").limit(5000).collect()
     )
     return [r["bestName"] for r in rows]
 
@@ -75,15 +76,15 @@ def synthesize_pages(
     spark: SparkSession,
     surfaces: list[str],
     n_pages: int,
-    hot: list[str] | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
     """Build the page corpus distributedly: spark.range -> mapInPandas.
 
     The surface list rides the closure once per executor (broadcast-sized);
-    page construction is per-batch pandas, no per-row Python.
+    page construction is per-batch pandas, no per-row Python.  The first
+    two surfaces are the hot head.
     """
-    hot = hot if hot is not None else surfaces[:2]
+    hot = surfaces[:2]
     base = spark.range(n_pages)
     if partitions:
         base = base.repartition(partitions)

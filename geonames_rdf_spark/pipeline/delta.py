@@ -108,9 +108,7 @@ def affected_ids_from_dump_diff(
 
 
 def scoped_changelog(spark: SparkSession, sf_dir: str,
-                     tables_old: dict, tables_new: dict,
-                     affected: DataFrame | None = None,
-                     **build_kw) -> DataFrame:
+                     tables_old: dict, tables_new: dict) -> DataFrame:
     """``triple_changelog`` for a NARROW dump refresh, with both builds
     scoped to the affected-subject superset BEFORE the ``exceptAll`` —
     cost ∝ change size, output identical to the full changelog.
@@ -129,19 +127,18 @@ def scoped_changelog(spark: SparkSession, sf_dir: str,
     """
     from geonames_rdf_spark.operators import build
 
-    if affected is None:
-        # EVERY input table triples depend on feeds the affected set:
-        # features + alt_names (subject-own rows), hierarchy (the
-        # parentFeature join — ADVICE r05: a hierarchy-only refresh was
-        # silently missing from the scope), and ags_map (the P439
-        # admin1_code lookup).  admin_lookups / country_codes are
-        # DERIVED from features, so the feature diff (with its class-A
-        # country closure) already covers them.
-        affected = affected_ids_from_dump_diff(
-            tables_old["features"], tables_new["features"],
-            tables_old.get("alt_names"), tables_new.get("alt_names"),
-            tables_old.get("hierarchy"), tables_new.get("hierarchy"),
-            tables_old.get("ags_map"), tables_new.get("ags_map"))
+    # EVERY input table triples depend on feeds the affected set:
+    # features + alt_names (subject-own rows), hierarchy (the
+    # parentFeature join — ADVICE r05: a hierarchy-only refresh was
+    # silently missing from the scope), and ags_map (the P439
+    # admin1_code lookup).  admin_lookups / country_codes are
+    # DERIVED from features, so the feature diff (with its class-A
+    # country closure) already covers them.
+    affected = affected_ids_from_dump_diff(
+        tables_old["features"], tables_new["features"],
+        tables_old.get("alt_names"), tables_new.get("alt_names"),
+        tables_old.get("hierarchy"), tables_new.get("hierarchy"),
+        tables_old.get("ags_map"), tables_new.get("ags_map"))
     # localCheckpoint: (a) the set is consumed by BOTH scoped builds —
     # without pinning, each build re-runs the whole input diff; (b) its
     # plan references the same ags_map/hierarchy relations the builds
@@ -158,11 +155,10 @@ def scoped_changelog(spark: SparkSession, sf_dir: str,
                                              "left_semi")
         return s
 
-    build_kw.setdefault("include_ontology", False)
-    old = build.build_kg(spark, sf_dir, tables=scope(tables_old),
-                         **build_kw)
-    new = build.build_kg(spark, sf_dir, tables=scope(tables_new),
-                         **build_kw)
+    old = build.build_kg(spark, sf_dir, include_ontology=False,
+                         tables=scope(tables_old))
+    new = build.build_kg(spark, sf_dir, include_ontology=False,
+                         tables=scope(tables_new))
     return triple_changelog(old, new)
 
 

@@ -12,7 +12,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -38,12 +37,9 @@ def extract_text(html: pd.Series) -> pd.Series:
     return html.map(extract_text_py)
 
 
-def with_extracted_text(pages, overwrite: bool = False) -> "pyspark.sql.DataFrame":  # noqa: F821
-    """Recompute ``text`` from ``html``; skip rows that already carry text
-    unless ``overwrite`` (mirrors 'skip if text present', SURVEY.md §7 S1)."""
-    recomputed: Column = extract_text(F.col("html"))
-    if overwrite:
-        return pages.withColumn("text", recomputed)
+def with_extracted_text(pages) -> "pyspark.sql.DataFrame":  # noqa: F821
+    """Compute ``text`` from ``html`` where a row carries none (mirrors
+    'skip if text present', SURVEY.md §7 S1)."""
     return pages.withColumn(
-        "text", F.coalesce(F.col("text"), recomputed)
+        "text", F.coalesce(F.col("text"), extract_text(F.col("html")))
     )

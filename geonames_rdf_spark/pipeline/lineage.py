@@ -80,15 +80,13 @@ def run_with_lineage(
     triples_for: "callable",
     out_dir: str,
     n_buckets: int = 8,
-    fail_after: int | None = None,
     concurrency: int = 1,
 ) -> None:
     """Process bucket-by-bucket with resume.
 
     ``triples_for(pages_subset) -> DataFrame`` produces the triples of a
-    page subset.  ``fail_after`` aborts after that many buckets (test hook
-    simulating a crash mid-run; sequential mode only — a concurrent crash
-    point is nondeterministic).  Already-done buckets are skipped.
+    page subset; it is called once per bucket, in bucket order when
+    sequential.  Already-done buckets are skipped.
 
     ``concurrency > 1`` submits up to that many bucket jobs at once from a
     thread pool: a cluster otherwise idles at every bucket tail (the
@@ -101,19 +99,13 @@ def run_with_lineage(
     ``_temporary`` staging — see module docstring) and lineage rows are
     per-bucket directories too.
     """
-    if fail_after is not None and concurrency != 1:
-        raise ValueError("fail_after (crash simulation) requires"
-                         " concurrency=1 — a concurrent crash point is"
-                         " nondeterministic")
     pages_b = pages.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
     ).cache()
     done = done_buckets(spark, out_dir)
     todo = [b for b in range(n_buckets) if b not in done]
     if concurrency <= 1:
-        for i, b in enumerate(todo):
-            if fail_after is not None and i >= fail_after:
-                raise RuntimeError(f"simulated crash before bucket {b}")
+        for b in todo:
             _process_bucket(spark, pages_b, triples_for, out_dir, b)
     else:
         from concurrent.futures import ThreadPoolExecutor

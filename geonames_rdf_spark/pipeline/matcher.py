@@ -1,11 +1,10 @@
 """Multi-pattern matcher backends for the mention scan.
 
-Three interchangeable backends behind ``build_matcher``.  A matcher holds
+Two interchangeable backends behind ``build_matcher``.  A matcher holds
 surface strings only; ``scan(text)`` returns ``(start, surface)`` pairs and
 the caller looks the surface up in its own map:
 
-1. ``pyahocorasick`` (C extension) when importable — fastest, any size.
-2. ``TrieRegexMatcher`` — the pattern set compiled into a TRIE-STRUCTURED
+1. ``TrieRegexMatcher`` — the pattern set compiled into a TRIE-STRUCTURED
    regular expression (shared prefixes become nested groups), scanned by
    CPython's C regex engine; each search restarts one character past the
    previous match start, so overlapping starts are visited.  The engine's greedy nested-optional walk finds the
@@ -13,10 +12,10 @@ the caller looks the surface up in its own map:
    are exactly the trie-terminal prefixes of that longest match, recovered
    from a precomputed prefix-chain.  Word-boundary guards are applied in
    Python per *match* (matches are sparse; characters are not).
-3. ``AhoCorasick`` (pure Python, pipeline/ahocorasick.py) — the fallback
+2. ``AhoCorasick`` (pure Python, pipeline/ahocorasick.py) — the fallback
    for pattern sets too large to compile as a regex.
 
-All backends emit the same match set as the reference automaton:
+Both backends emit the same match set as the reference automaton:
 every (start, pattern) occurrence where the char before ``start`` and the
 char after the match are not alphanumeric.  Equivalence is pinned by
 tests/test_matcher.py over adversarial nesting/overlap cases.
@@ -24,7 +23,7 @@ tests/test_matcher.py over adversarial nesting/overlap cases.
 Scale note (SURVEY §2, DESIGN.md): the matcher is built once on the
 driver and broadcast; per-executor memory is the binding constraint at
 the 13M-surface gazetteer scale — the regex program takes about half the
-dict-trie's memory (measured in DESIGN.md), pyahocorasick less still.
+dict-trie's memory (measured in DESIGN.md).
 """
 
 from __future__ import annotations
@@ -34,7 +33,7 @@ import re
 from geonames_rdf_spark.pipeline.ahocorasick import AhoCorasick
 
 # above this many patterns, building one giant regex stresses sre's
-# compiler; fall back to the pure-Python automaton (or pyahocorasick)
+# compiler; fall back to the pure-Python automaton
 REGEX_MAX_PATTERNS = 200_000
 
 
@@ -119,33 +118,6 @@ class TrieRegexMatcher:
                 append((start, longest))
 
 
-class _PyAhoCorasickMatcher:
-    """Wrapper over the pyahocorasick C extension (same scan contract)."""
-
-    def __init__(self, patterns):
-        import ahocorasick  # noqa: F401 — optional C extension
-
-        self._auto = ahocorasick.Automaton()
-        for pat in patterns:
-            if pat:
-                self._auto.add_word(pat, pat)
-        self._auto.make_automaton()
-
-    def scan(self, text: str) -> list[tuple[int, str]]:
-        if not text:
-            return []
-        res = []
-        n = len(text)
-        for end_idx, pat in self._auto.iter(text):
-            start = end_idx - len(pat) + 1
-            if start > 0 and text[start - 1].isalnum():
-                continue
-            if end_idx + 1 < n and text[end_idx + 1].isalnum():
-                continue
-            res.append((start, pat))
-        return res
-
-
 def scored_fingerprint(scored_map: dict[str, list]) -> tuple[int, int]:
     """Content fingerprint of a surface map: (count, order-independent sum
     of per-(key, candidates) hashes).  Covers keys AND candidates — two maps
@@ -163,20 +135,10 @@ def scored_fingerprint(scored_map: dict[str, list]) -> tuple[int, int]:
 
 def build_matcher(surfaces):
     """Matcher over the non-empty strings of ``surfaces`` (any iterable;
-    a surface map passes its keys): pyahocorasick when the C extension
-    imports, else the trie-regex up to ``REGEX_MAX_PATTERNS`` patterns,
-    else the pure-Python automaton.
-
-    An empty pattern set short-circuits to the regex backend, whose scan
-    returns [] — pyahocorasick leaves a wordless automaton
-    un-constructed and its iter() raises at scan time."""
+    a surface map passes its keys): the trie-regex up to
+    ``REGEX_MAX_PATTERNS`` patterns, else the pure-Python automaton.  An
+    empty pattern set gets the regex backend, whose scan returns []."""
     pats = dict.fromkeys(p for p in surfaces if p)
-    if not pats:
-        return TrieRegexMatcher(())
-    try:
-        return _PyAhoCorasickMatcher(pats)
-    except ImportError:
-        pass
     if len(pats) <= REGEX_MAX_PATTERNS:
         return TrieRegexMatcher(pats)
     return AhoCorasick(pats)

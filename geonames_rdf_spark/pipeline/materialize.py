@@ -197,5 +197,5 @@ def to_ntriples(triples: DataFrame) -> DataFrame:
     )
 
 
-def write_ntriples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
-    to_ntriples(triples).write.mode(mode).text(path)
+def write_ntriples(triples: DataFrame, path: str) -> None:
+    to_ntriples(triples).write.mode("overwrite").text(path)

@@ -279,8 +279,7 @@ def read_turtle(spark, path: str) -> DataFrame:
             .mapInPandas(parse, TRIPLE_SCHEMA))
 
 
-def write_turtle(triples: DataFrame, path: str, mode: str = "overwrite",
-                 sort: bool = False) -> None:
+def write_turtle(triples: DataFrame, path: str, sort: bool = False) -> None:
     """Write part files that are each a complete Turtle document (header
     per partition) and whose concatenation is also valid Turtle."""
     hdr = turtle_header()
@@ -297,4 +296,4 @@ def write_turtle(triples: DataFrame, path: str, mode: str = "overwrite",
 
     (to_turtle(triples, sort=sort)
      .mapInPandas(add_header, "line string")
-     .write.mode(mode).text(path))
+     .write.mode("overwrite").text(path))

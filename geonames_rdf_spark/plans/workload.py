@@ -36,14 +36,14 @@ def entity_table(triples: DataFrame, preds: dict[str, str]) -> DataFrame:
     return t.groupBy("subj").agg(*aggs)
 
 
-def q_all_limit(triples: DataFrame, n: int = 10) -> DataFrame:
-    """C1 (all.rq): full scan + LIMIT — made deterministic by total order."""
-    return triples.select("subj", "pred", "obj").orderBy("subj", "pred", "obj").limit(n)
+def q_all_limit(triples: DataFrame) -> DataFrame:
+    """C1 (all.rq): full scan + LIMIT 10 — made deterministic by total
+    order."""
+    return triples.select("subj", "pred", "obj").orderBy("subj", "pred", "obj").limit(10)
 
 
-def q_population(triples: DataFrame, threshold: int = 500_000,
-                 limit: int | None = None) -> DataFrame:
-    """C2 (population.rq): ADM4 features, population > threshold, sorted.
+def q_population(triples: DataFrame, limit: int | None = None) -> DataFrame:
+    """C2 (population.rq): ADM4 features, population > 500000, sorted.
 
     With ``limit`` the sort becomes TakeOrderedAndProject (per-partition
     top-k + merge — no global sort, the scale-safe shape)."""
@@ -60,7 +60,7 @@ def q_population(triples: DataFrame, threshold: int = 500_000,
     out = (
         e.filter(F.col("feature_code") == vocab.GN + "A.ADM4")
         .withColumn("population", F.col("population").cast("long"))
-        .filter(F.col("population") > threshold)
+        .filter(F.col("population") > 500_000)
         .select(
             F.col("subj").alias("feature"), "name", "population",
             "latitude", "longitude",
@@ -272,9 +272,10 @@ def q_hierarchy_report(triples: DataFrame, seed_uri: str) -> DataFrame:
     ).orderBy("depth")
 
 
-def q_museums(triples: DataFrame, city_uri: str, limit: int = 100) -> DataFrame:
-    """C9-C11 (museums.rq): museums with the pinned city as parent, ordered
-    by great-circle distance to the city centre, optional en-wikipedia link.
+def q_museums(triples: DataFrame, city_uri: str) -> DataFrame:
+    """C9-C11 (museums.rq): the first 100 museums with the pinned city as
+    parent, ordered by great-circle distance to the city centre, optional
+    en-wikipedia link.
 
     geof:distance -> native haversine Column expression (no GeoSPARQL
     engine); distance rounded to whole metres for stable comparison.
@@ -329,7 +330,7 @@ def q_museums(triples: DataFrame, city_uri: str, limit: int = 100) -> DataFrame:
     return museums.select(
         F.col("subj").alias("feature"), "name", "latitude", "longitude",
         "distance_in_metre", "wikipediaArticle",
-    ).orderBy("distance_in_metre", "feature").limit(limit)
+    ).orderBy("distance_in_metre", "feature").limit(100)
 
 
 def q_all_code_labels(triples: DataFrame) -> DataFrame:

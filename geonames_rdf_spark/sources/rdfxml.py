@@ -159,9 +159,10 @@ class _Parser:
                 self._emit_iri(cur, RDF_REST, RDF_NIL)
 
 
-def parse_rdfxml(text: str, base: str | None = None) -> list[tuple]:
+def parse_rdfxml(text: str) -> list[tuple]:
     """RDF/XML document -> list of 6-tuples
-    (subj, pred, obj, obj_is_iri, obj_lang, obj_dt).
+    (subj, pred, obj, obj_is_iri, obj_lang, obj_dt), references resolved
+    against the root's ``xml:base`` (none: ``""``).
 
     Blank nodes get deterministic ``_:b0, _:b1, ...`` labels in document
     order, so repeated parses (and the DuckDB oracle fixture) agree
@@ -170,15 +171,12 @@ def parse_rdfxml(text: str, base: str | None = None) -> list[tuple]:
     root = ET.fromstring(text)
     if root.tag != _RDF_RDF:
         raise ValueError(f"rdfxml: expected rdf:RDF root, got {root.tag}")
-    doc_base = root.get(_XML_BASE) if base is None else base
-    if doc_base is None:
-        doc_base = ""
-    p = _Parser(doc_base)
+    p = _Parser(root.get(_XML_BASE, ""))
     for el in root:
         p.node(el)
     return p.triples
 
 
-def read_rdfxml_file(path: str, base: str | None = None) -> list[tuple]:
+def read_rdfxml_file(path: str) -> list[tuple]:
     with open(path, encoding="utf-8") as f:
-        return parse_rdfxml(f.read(), base=base)
+        return parse_rdfxml(f.read())

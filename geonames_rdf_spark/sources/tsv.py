@@ -72,19 +72,18 @@ HIERARCHY_SCHEMA = T.StructType([
 ])
 
 
-def read_tsv(spark: SparkSession, path: str, schema: T.StructType,
-             header: bool = False) -> DataFrame:
+def read_tsv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Reference-faithful TSV scan: tab-delimited, '' == NULL, explicit
-    schema, optional header row.  Handles .gz/.bz2 transparently (A2)."""
+    schema, no header row.  Handles .gz/.bz2 transparently (A2)."""
     return spark.read.csv(
-        path, sep="\t", schema=schema, header=header,
+        path, sep="\t", schema=schema, header=False,
         nullValue="", emptyValue="", mode="PERMISSIVE",
     )
 
 
 def read_tsv_zip(spark: SparkSession, path: str, schema: T.StructType,
-                 header: bool = False, member_suffix: str | None = None,
-                 encoding: str = "utf-8") -> DataFrame:
+                 header: bool = False,
+                 member_suffix: str | None = None) -> DataFrame:
     """TSV scan over ZIP archives (A2 — the reference's dump container,
     download.sh:62-83): ``binaryFile`` source -> stdlib ``zipfile`` member
     extraction in an Arrow batch -> ``from_csv`` with the SAME options as
@@ -93,7 +92,7 @@ def read_tsv_zip(spark: SparkSession, path: str, schema: T.StructType,
 
     ``member_suffix`` filters archive members (e.g. ``'.txt'`` skips the
     readme the GeoNames dumps bundle); ``header`` drops the first line of
-    EACH member.
+    EACH member.  Members are UTF-8.
 
     Scale shape: zip's central directory makes the format non-splittable,
     so one archive == one task — parallelism comes from the archive COUNT
@@ -131,7 +130,7 @@ def read_tsv_zip(spark: SparkSession, path: str, schema: T.StructType,
                             continue  # directory entry
                         if member_suffix and not m.endswith(member_suffix):
                             continue
-                        lines = _jvm_splitlines(zf.read(m).decode(encoding))
+                        lines = _jvm_splitlines(zf.read(m).decode("utf-8"))
                         if header:
                             lines = lines[1:]
                         yield pd.DataFrame({"line": lines})
@@ -148,7 +147,7 @@ def read_tsv_zip(spark: SparkSession, path: str, schema: T.StructType,
     ).select("r.*")
 
 
-def write_tsv(df: DataFrame, path: str, header: bool = False) -> None:
+def write_tsv(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").csv(
-        path, sep="\t", header=header, nullValue="", emptyValue=""
+        path, sep="\t", header=False, nullValue="", emptyValue=""
     )

@@ -109,8 +109,12 @@ def _parse_mapper(batch_bytes: int):
     return parse
 
 
+BATCH_BYTES = 64 << 20
+"""Body payload per emitted record batch: the decoders' memory bound."""
+
+
 def read_warc(spark: SparkSession, path: str,
-              batch_bytes: int = 64 << 20) -> DataFrame:
+              batch_bytes: int = BATCH_BYTES) -> DataFrame:
     """(url, warc_ts timestamp, html binary) from the ``response``
     records of WARC archives at ``path`` (glob ok; ``.gz`` handled).
 
@@ -125,12 +129,10 @@ def read_warc(spark: SparkSession, path: str,
 
 
 def read_warc_stream(spark: SparkSession, path: str,
-                     batch_bytes: int = 64 << 20,
-                     glob: str = "*.warc.gz",
                      max_files_per_trigger: int | None = None) -> DataFrame:
     """STREAMING WARC source: a Structured Streaming DataFrame of
-    (url, warc_ts, html) over archives LANDING in ``path`` — the shape
-    of a live crawl: the crawler drops finished ``.warc.gz`` members
+    (url, warc_ts, html) over ``*.warc.gz`` archives LANDING in ``path``
+    — the shape of a live crawl: the crawler drops finished members
     into a directory (Common Crawl's own delivery unit) and each
     micro-batch ingests the new files.  Same incremental record parser
     and per-task memory bound as ``read_warc``; per-archive parallelism
@@ -143,24 +145,23 @@ def read_warc_stream(spark: SparkSession, path: str,
     reader = (spark.readStream.format("binaryFile")
               .schema("path string, modificationTime timestamp,"
                       " length long, content binary")
-              .option("pathGlobFilter", glob))
+              .option("pathGlobFilter", "*.warc.gz"))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger",
                                str(max_files_per_trigger))
     bins = reader.load(path).select("path", "content")
-    return bins.mapInPandas(_parse_mapper(batch_bytes),
+    return bins.mapInPandas(_parse_mapper(BATCH_BYTES),
                             schema=_PAGE_SCHEMA)
 
 
-def write_warc(pages: DataFrame, path: str, gz: bool = True,
-               url_col: str = "url", ts_col: str = "warc_ts",
-               html_col: str = "html") -> None:
-    """Write pages as one WARC archive per input partition under
-    ``path`` (``part-N.warc[.gz]``) — the sink side of the format, used
-    for fixtures and for archiving a processed slice.
+def write_warc(pages: DataFrame, path: str) -> None:
+    """Write pages ``(url, warc_ts, html)`` as one gzip'd WARC archive
+    per input partition under ``path`` (``part-N.warc.gz``) — the sink
+    side of the format, used for fixtures and for archiving a processed
+    slice.
 
     Streaming write, mirroring ``read_warc``'s bound: records are
-    encoded and written (through ``gzip.GzipFile`` when ``gz``) per
+    encoded and written (through ``gzip.GzipFile``) per
     Arrow batch — the sink never holds more than one input batch plus
     the gzip window, so archiving a multi-GB partition is flat-memory.
     """
@@ -181,14 +182,14 @@ def write_warc(pages: DataFrame, path: str, gz: bool = True,
             nonlocal out, raw
             if out is None:
                 pid = TaskContext.get().partitionId()
-                name = f"part-{pid:05d}.warc" + (".gz" if gz else "")
-                raw = open(os.path.join(path, name), "wb")
-                out = gzip.GzipFile(fileobj=raw, mode="wb") if gz else raw
+                raw = open(os.path.join(path, f"part-{pid:05d}.warc.gz"),
+                           "wb")
+                out = gzip.GzipFile(fileobj=raw, mode="wb")
             return out
 
         for pdf in batches:
-            for url, ts, html in zip(pdf[url_col], pdf[ts_col],
-                                     pdf[html_col]):
+            for url, ts, html in zip(pdf["url"], pdf["warc_ts"],
+                                     pdf["html"]):
                 body = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
                         b"\r\n" + bytes(html))
                 ts = pd.Timestamp(ts)
@@ -204,9 +205,8 @@ def write_warc(pages: DataFrame, path: str, gz: bool = True,
                 sink().write(head + body + b"\r\n\r\n")
         if out is not None:
             out.close()
-            if raw is not out:
-                raw.close()
+            raw.close()
         yield pd.DataFrame({"_": pd.Series([], dtype="int64")})
 
-    pages.select(url_col, ts_col, html_col).mapInPandas(
+    pages.select("url", "warc_ts", "html").mapInPandas(
         writer, schema="_ bigint").count()

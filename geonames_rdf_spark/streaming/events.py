@@ -18,13 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def windowed_event_stats(events: DataFrame, minutes: int = 60) -> DataFrame:
-    """Per (event_type, ``minutes``-long event-time window) stats.
+def windowed_event_stats(events: DataFrame) -> DataFrame:
+    """Per (event_type, one-hour event-time window) stats.
 
     Uses date_trunc-style bucketing so the DuckDB oracle matches exactly;
     decimals for the sum to keep cross-engine float determinism.
     """
-    bucket = F.window("ts", f"{minutes} minutes")
+    bucket = F.window("ts", "60 minutes")
     return (
         events.groupBy(bucket.alias("w"), "event_type")
         .agg(
@@ -62,14 +62,14 @@ def props_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def quantile_event_stats(events: DataFrame,
-                         accuracy: int = 1_000_000) -> DataFrame:
+def quantile_event_stats(events: DataFrame) -> DataFrame:
     """Per event type: exact distinct users and the 50/95/99% quantiles
-    of ``value``.  With ``accuracy`` >= group size the GK sketch behind
-    ``percentile_approx`` is *exact* and returns the discrete quantile
-    (== DuckDB ``quantile_disc``), so the driver's hash-compare certifies
-    the sketch operator end to end; a smaller ``accuracy`` is the same
-    physical plan at sketch cost."""
+    of ``value``.  With an accuracy (10^6) >= group size the GK sketch
+    behind ``percentile_approx`` is *exact* and returns the discrete
+    quantile (== DuckDB ``quantile_disc``), so the driver's hash-compare
+    certifies the sketch operator end to end; a smaller accuracy is the
+    same physical plan at sketch cost."""
+    accuracy = 1_000_000
     return events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
         F.percentile_approx("value", 0.5, accuracy).alias("q50"),
@@ -79,10 +79,10 @@ def quantile_event_stats(events: DataFrame,
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Batch sessionization: lag + cumulative gap-count window — the
     classic Spark formulation (session id = user_id + running count of
-    gaps > threshold)."""
+    gaps > 30 minutes)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -94,7 +94,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         events.withColumn("_gap", gap)
         .withColumn(
             "_new_session",
-            (F.col("_gap").isNull() | (F.col("_gap") > gap_minutes * 60)).cast("int"),
+            (F.col("_gap").isNull() | (F.col("_gap") > 30 * 60)).cast("int"),
         )
         .withColumn("session_seq", F.sum("_new_session").over(
             w.rowsBetween(Window.unboundedPreceding, 0)))

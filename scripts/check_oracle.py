@@ -6,12 +6,14 @@ sf0.01, compare row counts, schemas (by sorted column name) and values.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from geonames_rdf_spark.session import get_spark  # noqa: E402

@@ -8,8 +8,6 @@ patterns.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
 from geonames_rdf_spark.pipeline import matcher
@@ -65,10 +63,9 @@ def test_regex_matches_automaton_on_corpus_shapes():
 
 
 def test_build_matcher_fallback_selection(monkeypatch):
-    """Without the C extension, ``build_matcher`` picks the trie-regex up
-    to REGEX_MAX_PATTERNS patterns and the pure-Python automaton past it;
-    both find the same pairs.  A scored map's keys are its surfaces."""
-    monkeypatch.setitem(sys.modules, "ahocorasick", None)  # import fails
+    """``build_matcher`` picks the trie-regex up to REGEX_MAX_PATTERNS
+    patterns and the pure-Python automaton past it; both find the same
+    pairs.  A scored map's keys are its surfaces."""
     monkeypatch.setattr(matcher, "REGEX_MAX_PATTERNS", 2)
     text = "New York!"
     at_bound = build_matcher({"New": [(2, 0.0, "C0")],

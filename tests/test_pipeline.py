@@ -112,6 +112,20 @@ def test_canonicalize_rewrites_links(spark):
     assert vals["u2"] == 3       # unmapped id untouched
 
 
+def crash_on_third_call(triples_for):
+    """``triples_for`` that raises when bucket 3's plan is built: a
+    sequential run crashes with two buckets done."""
+    calls = []
+
+    def crashing(subset):
+        calls.append(subset)
+        if len(calls) == 3:
+            raise RuntimeError("simulated crash")
+        return triples_for(subset)
+
+    return crashing
+
+
 def test_lineage_resume_exact(spark, tmp_path):
     """Kill after k buckets, resume, final triple set == one-shot run —
     reading the corpus from a STORED table path (the production shape
@@ -135,8 +149,9 @@ def test_lineage_resume_exact(spark, tmp_path):
 
     out2 = str(tmp_path / "resumed")
     with pytest.raises(RuntimeError, match="simulated crash"):
-        lineage.run_with_lineage(spark, pages, triples_for, out2,
-                                 n_buckets=4, fail_after=2)
+        lineage.run_with_lineage(spark, pages,
+                                 crash_on_third_call(triples_for), out2,
+                                 n_buckets=4)
     done = lineage.done_buckets(spark, out2)
     assert len(done) == 2
     # a lineage row in the layout written before n_mentions was dropped
@@ -183,16 +198,14 @@ def test_lineage_concurrent_buckets_exact(spark, tmp_path):
     # crash sequentially, resume CONCURRENTLY: same converged set
     res = str(tmp_path / "resumed_conc")
     with pytest.raises(RuntimeError, match="simulated crash"):
-        lineage.run_with_lineage(spark, pages, triples_for, res,
-                                 n_buckets=4, fail_after=2)
+        lineage.run_with_lineage(spark, pages,
+                                 crash_on_third_call(triples_for), res,
+                                 n_buckets=4)
+    assert len(lineage.done_buckets(spark, res)) == 2
     lineage.run_with_lineage(spark, pages, triples_for, res, n_buckets=4,
                              concurrency=4)
     c = lineage.read_triples(spark, res)
     assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
-
-    with pytest.raises(ValueError, match="concurrency=1"):
-        lineage.run_with_lineage(spark, pages, triples_for, res,
-                                 n_buckets=4, fail_after=1, concurrency=2)
 
 
 def test_ntriples_sink_roundtrip(spark, tmp_path, result):

@@ -291,7 +291,7 @@ DRIVER_PULLS = {
     ("operators/textstats.py", "train_char_lm"):
         "top_k n-gram counts per order",
     ("pipeline/corpus.py", "gazetteer_surfaces"):
-        "at most limit distinct names",
+        "at most 5000 distinct names",
     ("pipeline/lineage.py", "done_buckets"):
         "one row per done bucket",
     ("pipeline/mentions.py", "build_scored_surface_map"):
@@ -333,6 +333,127 @@ def test_driver_pulls_are_allowlisted():
     unlisted = {k: v for k, v in found.items() if k not in DRIVER_PULLS}
     assert not unlisted, unlisted
     assert not set(DRIVER_PULLS) - set(found), set(DRIVER_PULLS) - set(found)
+
+
+#: Defaulted parameters of public package functions that no call sets to
+#: another value, kept anyway: (module, function, parameter) -> why.
+UNSET_PARAMS_ALLOWED = {
+    ("operators/lines.py", "dedup_spans_sql", "n_sentences"):
+        "the DuckDB twin keeps the parameters of dedup_spans, which"
+        " jobs/run_curate.py sets",
+}
+
+
+def test_every_defaulted_parameter_is_set_somewhere():
+    """Each defaulted parameter of a public top-level function under
+    ``geonames_rdf_spark/`` (``oracle.py`` aside) is passed a value other
+    than its default by at least one call in the repository: the package,
+    ``__spark_entry__.py``, ``bench.py``, ``jobs/``, ``scripts/``,
+    ``perfbench/`` or ``tests/``.  A value nothing varies is a constant,
+    not an option.  Calls match functions by name (``f(...)``,
+    ``m.f(...)``, ``partial(f, ...)``, import aliases).  Passing the
+    caller's own defaulted parameter through counts only when that
+    parameter is set in turn; ``*``/``**`` arguments set nothing.  The
+    exceptions in ``UNSET_PARAMS_ALLOWED`` must still be unset."""
+    import ast
+    import itertools
+    import pathlib
+
+    import geonames_rdf_spark
+
+    pkg = pathlib.Path(geonames_rdf_spark.__file__).parent
+    root = pkg.parent
+    paths = [root / "__spark_entry__.py", root / "bench.py"] + [
+        p for d in (pkg, root / "jobs", root / "scripts", root / "perfbench",
+                    root / "tests") for p in sorted(d.rglob("*.py"))]
+
+    def value_key(node):  # ``mod.X`` and ``X`` compare equal
+        if isinstance(node, (ast.Name, ast.Attribute)):
+            return getattr(node, "id", None) or node.attr
+        try:
+            return repr(ast.literal_eval(node))
+        except ValueError:
+            return ast.dump(node)
+
+    def name_of(node):
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    funcs, by_name, public, calls = {}, {}, [], []
+
+    def visit(node, scope, path, aliases):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = scope + [child]
+                if not scope or not isinstance(scope[-1], ast.ClassDef):
+                    a = child.args  # module functions and closures
+                    pos = [p.arg for p in a.posonlyargs + a.args]
+                    defaults = dict(zip(pos[len(pos) - len(a.defaults):],
+                                        a.defaults))
+                    defaults.update((p.arg, d) for p, d in
+                                    zip(a.kwonlyargs, a.kw_defaults)
+                                    if d is not None)
+                    funcs[child] = (pos, defaults, set(pos) | {
+                        p.arg for p in a.kwonlyargs})
+                    by_name.setdefault(child.name, []).append(child)
+                if (not scope and pkg in path.parents
+                        and path.name != "oracle.py"
+                        and not child.name.startswith("_")):
+                    public.append((str(path.relative_to(pkg)), child))
+            elif isinstance(child, ast.ClassDef):
+                inner = scope + [child]
+            elif isinstance(child, ast.Call):
+                args = list(child.args)
+                name = name_of(child.func)
+                if name == "partial" and args:
+                    name = name_of(args.pop(0))
+                args = list(itertools.takewhile(
+                    lambda x: not isinstance(x, ast.Starred), args))
+                calls.append((aliases.get(name, name), args,
+                              child.keywords, scope))
+            visit(child, inner, path, aliases)
+
+    for path in paths:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        aliases = {a.asname: a.name for n in ast.walk(tree)
+                   if isinstance(n, ast.ImportFrom) for a in n.names
+                   if a.asname}
+        visit(tree, [], path, aliases)
+
+    def bound_by(scope, var):
+        """The enclosing tracked function that takes ``var`` as a
+        parameter; None for a local, a global or a method's parameter."""
+        for fn in reversed(scope):
+            if isinstance(fn, ast.ClassDef):
+                return None
+            if fn in funcs and var in funcs[fn][2]:
+                return fn
+        return None
+
+    is_set, changed = set(), True
+    while changed:
+        changed = False
+        for name, args, keywords, scope in calls:
+            for fn in by_name.get(name, ()):
+                pos, defaults, _ = funcs[fn]
+                passed = list(zip(pos, args)) + [
+                    (k.arg, k.value) for k in keywords if k.arg]
+                for p, v in passed:
+                    if (p not in defaults or (fn, p) in is_set
+                            or value_key(v) == value_key(defaults[p])):
+                        continue
+                    outer = isinstance(v, ast.Name) and bound_by(scope, v.id)
+                    if (outer and v.id in funcs[outer][1]
+                            and (outer, v.id) not in is_set):
+                        continue  # the caller's own default, passed on
+                    is_set.add((fn, p))
+                    changed = True
+    unset = {(module, fn.name, p) for module, fn in public
+             for p in funcs[fn][1] if (fn, p) not in is_set}
+    allowed = set(UNSET_PARAMS_ALLOWED)
+    assert not unset - allowed, (len(unset - allowed),
+                                 sorted(unset - allowed))
+    assert not allowed - unset, sorted(allowed - unset)
 
 
 def test_memoized_state_lives_only_in_the_memo_module():
@@ -455,7 +576,7 @@ def test_ivf_stored_index_partition_pruning(spark, tmp_path):
     path = str(tmp_path / "ivf_index")
     similarity.write_ivf_index(emb, cents, path)
     q = [0.1] * len(cents[0])
-    probed = similarity.ann_ivf_topk_stored(spark, path, q, cents, nprobe=2)
+    probed = similarity.ann_ivf_topk_stored(spark, path, q, cents)
     plan = plan_of(probed)
     # the _cell predicate must be a PARTITION filter (metadata), not a
     # pushed data filter

@@ -58,17 +58,31 @@ def test_minhash_flood_candidate_stage_stays_linear(spark):
     assert m.count() == n + 1
 
 
-def test_lsh_guards_default_on():
+def test_lsh_guards_default_on(spark, monkeypatch):
     """The bucket-cardinality guards must be armed BY DEFAULT — an
     unguarded default ships the quadratic path to every caller that
-    forgets the knob (VERDICT r04 #1)."""
+    forgets the knob (VERDICT r04 #1): ``lsh_candidate_pairs`` defaults
+    its cap to ``DEFAULT_MAX_BUCKET``, and both near-dup pipelines, which
+    take no cap, build their guard with it."""
     import inspect
 
-    for fn in (dedup.lsh_candidate_pairs, dedup.minhash_near_dups,
-               dedup.embedding_near_dups):
-        default = inspect.signature(fn).parameters["max_bucket"].default
-        assert default == dedup.DEFAULT_MAX_BUCKET, fn.__name__
+    default = inspect.signature(
+        dedup.lsh_candidate_pairs).parameters["max_bucket"].default
+    assert default == dedup.DEFAULT_MAX_BUCKET
     assert isinstance(dedup.DEFAULT_MAX_BUCKET, int)
+
+    caps, guard = [], dedup._guard_oversized_buckets
+
+    def spy(keyed, key_cols, max_bucket, *rest):
+        caps.append(max_bucket)
+        return guard(keyed, key_cols, max_bucket, *rest)
+
+    monkeypatch.setattr(dedup, "_guard_oversized_buckets", spy)
+    dedup.minhash_near_dups(spark.createDataFrame(
+        [(1, "a b c d")], "doc_id bigint, text string"))
+    dedup.embedding_near_dups(spark.createDataFrame(
+        [(1, [0.1, 0.2])], "vec_id bigint, embedding array<float>"), dim=2)
+    assert caps == [dedup.DEFAULT_MAX_BUCKET] * 2
 
 
 def test_stream_compact_crash_recovery(spark, tmp_path):

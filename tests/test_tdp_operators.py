@@ -486,9 +486,9 @@ def test_knn_blas_backend_equivalence(emb):
     """The BLAS applyInPandas backend must produce EXACTLY the Column
     version's output (same rounding, same tie order)."""
     a = {(r["id_a"], r["rn"]): (r["id_b"], r["cosine"])
-         for r in similarity.pairwise_topk_per_label(emb, k=3).collect()}
+         for r in similarity.pairwise_topk_per_label(emb).collect()}
     b = {(r["id_a"], r["rn"]): (r["id_b"], r["cosine"])
-         for r in similarity.pairwise_topk_per_label_blas(emb, k=3).collect()}
+         for r in similarity.pairwise_topk_per_label_blas(emb).collect()}
     assert a == b
 
 
@@ -497,7 +497,7 @@ def test_knn_blas_hot_label_guard_raises(emb):
     label (one worker would otherwise materialize an n×n cosine matrix)
     instead of silently attempting the quadratic job."""
     with pytest.raises(ValueError, match="max_group_rows"):
-        similarity.pairwise_topk_per_label_blas(emb, k=3, max_group_rows=10)
+        similarity.pairwise_topk_per_label_blas(emb, max_group_rows=10)
 
 
 def test_knn_blas_chunked_path_equivalence(emb):
@@ -506,10 +506,10 @@ def test_knn_blas_chunked_path_equivalence(emb):
     self-exclusion at chunk boundaries and tie order."""
     one = {(r["id_a"], r["rn"]): (r["id_b"], r["cosine"])
            for r in similarity.pairwise_topk_per_label_blas(
-               emb, k=3).collect()}
+               emb).collect()}
     chunked = {(r["id_a"], r["rn"]): (r["id_b"], r["cosine"])
                for r in similarity.pairwise_topk_per_label_blas(
-                   emb, k=3, chunk_rows=7).collect()}
+                   emb, chunk_rows=7).collect()}
     assert one == chunked
 
 
